@@ -2,7 +2,7 @@ package graft.operators
 
 import java.util.UUID
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -20,10 +20,13 @@ import org.apache.spark.sql.functions._
   * same guarantee from Postgres's transactional upsert,
   * `aggregators/base.py:155-238`).
   *
-  * Scale: only partitions holding new data OR existing versions of the
-  * batch's keys are rewritten; the watermark reads just the latest
-  * partition's files straight off the manifest — no directory listing, no
-  * full-sink scan.
+  * Scale: one upsert is O(touched partitions), not O(sink). The batch is
+  * evaluated once; the existing rows read are only the live files under the
+  * batch's own `p_date=` partitions, picked off the manifest (no directory
+  * listing), and the watermark comes from manifest stats. The one exception:
+  * when `tsCol` is not part of the key, a revision can move a key across
+  * dates, so a semi-join of the batch keys against the whole sink finds the
+  * partitions holding their stale copies.
   */
 object Incremental {
 
@@ -86,8 +89,7 @@ object Incremental {
         source.filter(col(tsCol) > lit(w) - expr(s"INTERVAL $overlap"))
       case None => source
     }
-    mergeAndCommit(newData, sinkPath, keyCols, seqCols, tsCol,
-      sinkExists = wm.isDefined)
+    mergeAndCommit(newData, sinkPath, keyCols, seqCols, tsCol)
   }
 
   /** Upsert WITHOUT the watermark filter — the gap-repair path
@@ -99,84 +101,109 @@ object Incremental {
   def backfill(source: DataFrame, sinkPath: String,
                keyCols: Seq[String], seqCols: Seq[String],
                tsCol: String): SyncStats =
-    mergeAndCommit(source, sinkPath, keyCols, seqCols, tsCol,
-      sinkExists = ManifestTable.currentVersion(source.sparkSession, sinkPath).isDefined)
+    mergeAndCommit(source, sinkPath, keyCols, seqCols, tsCol)
 
+  /** One pass per upsert. The batch (with `p_date`) is persisted and read
+    * by every step below, so the source — an aggregation over every visible
+    * trade, or a paged API refetch — is evaluated exactly once: one
+    * `distinct p_date` job over it, then the write. `inserted`/`updated`
+    * ride that write as an [[Observation]] instead of costing count jobs.
+    */
   private def mergeAndCommit(newData: DataFrame, sinkPath: String,
                              keyCols: Seq[String], seqCols: Seq[String],
-                             tsCol: String, sinkExists: Boolean): SyncStats = {
+                             tsCol: String): SyncStats = {
     val spark = newData.sparkSession
-    val withDate = newData.withColumn("p_date", to_date(col(tsCol)))
-    val lwwWindow = Window.partitionBy(keyCols.map(col): _*)
-      .orderBy(seqCols.map(c => col(c).desc): _*)
-    def lww(df: DataFrame): DataFrame =
-      df.withColumn("__rn", row_number().over(lwwWindow))
-        .filter(col("__rn") === 1).drop("__rn")
+    val batch = newData.withColumn("p_date", to_date(col(tsCol))).persist()
+    try {
+      val batchDates = datesOf(batch)
+      // nothing to upsert: no staging, no commit (a re-detected natural gap
+      // refetches empty on every repair tick)
+      if (batchDates.isEmpty) return SyncStats(0L, 0L, 0L)
 
-    val (merged, updatedCount, touchedDates) =
-      if (sinkExists) {
-        val sink = readSink(spark, sinkPath)
-        val batchKeys = withDate.select(keyCols.map(col): _*).distinct()
-        // partitions to rewrite: those with new data PLUS those holding an
-        // existing version of a batch key (a revision may move a row across
-        // the date boundary — the stale copy must not survive elsewhere)
-        val affectedDates = sink
-          .join(broadcast(batchKeys), keyCols, "left_semi")
-          .select(col("p_date")).distinct()
-        val touched = withDate.select(col("p_date")).distinct()
-          .union(affectedDates).distinct()
-        val existing = sink.join(broadcast(touched), Seq("p_date"), "left_semi")
-        val upd = batchKeys
-          .join(existing.select(keyCols.map(col): _*).distinct(), keyCols)
-          .count()
-        val dates = touched.collect().map(_.getDate(0).toString).toSeq
-        (lww(existing.unionByName(withDate)), upd, dates)
-      } else {
-        // first tick still needs LWW: the batch itself can carry key dups
-        (lww(withDate), 0L,
-          withDate.select(col("p_date")).distinct()
-            .collect().map(_.getDate(0).toString).toSeq)
-      }
+      val live = ManifestTable.liveFiles(spark, sinkPath)
+      def read(files: Seq[String]): DataFrame =
+        spark.read.option("basePath", ManifestTable.dataDir(sinkPath))
+          .parquet(files.map(f => s"${ManifestTable.dataDir(sinkPath)}/$f"): _*)
+      // partitions to rewrite: the batch's own dates, plus — only when the
+      // key does not pin the date — those holding an existing version of a
+      // batch key (a revision may move a row across the date boundary, and
+      // the stale copy must not survive elsewhere). That probe is the one
+      // full-sink read left; keyed-on-ts sinks never pay it.
+      val touchedDates =
+        if (live.isEmpty || keyCols.contains(tsCol)) batchDates
+        else (batchDates ++ datesOf(read(live)
+          .join(broadcast(batch.select(keyCols.map(col): _*).distinct()),
+            keyCols, "left_semi"))).distinct
+      val touched = touchedDates.map(d => s"p_date=$d")
 
-    // stage → publish → one atomic manifest rename. A partition whose rows
-    // all merged away produces no staged files but is still listed as
-    // replaced, so its stale files drop out of the new snapshot.
-    val staging = s"$sinkPath/_staging/${UUID.randomUUID()}"
-    // INT64-micros timestamps (scoped; INT96 is parquet-deprecated and
-    // carries no footer stats, which would disable both the manifest
-    // watermark fast path and ts file skipping)
-    val prevTsType = spark.conf.get("spark.sql.parquet.outputTimestampType")
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    try merged.write.mode(SaveMode.Overwrite).partitionBy("p_date").parquet(staging)
-    finally spark.conf.set("spark.sql.parquet.outputTimestampType", prevTsType)
-    val added = ManifestTable.publishFiles(spark, sinkPath, staging)
-    // row counts AND tsCol min/max from the parquet FOOTERS of the
-    // published files — one concurrent metadata read per file, not a
-    // second full scan of the merged slice; the stats ride the manifest so
-    // later watermark reads and range scans are metadata-only
-    val meta = ManifestTable.footerMeta(spark,
-      ManifestTable.dataDir(sinkPath), added, Seq(tsCol))
-    val n = meta.map(_._2).sum
-    val newKeys = withDate.select(keyCols.map(col): _*).distinct().count()
-    // loud, never silent: a non-empty batch merges to a non-empty slice
-    // (LWW keeps at least one row per key), so zero published files means
-    // the staged write vanished before the publish (external cleanup or a
-    // concurrent writer's deep vacuum racing this tick) — committing would
-    // REPLACE the touched partitions with nothing and lose their rows
-    require(added.nonEmpty || newKeys == 0,
-      s"staged sink files vanished before publish at $sinkPath — is " +
-        "another writer's housekeeping running against this sink?")
-    if (added.nonEmpty || touchedDates.nonEmpty) {
-      ManifestTable.commitEntries(spark, sinkPath,
-        touchedDates.map(d => s"p_date=$d"), meta.map(_._1))
+      // existing rows of the touched partitions only, straight off the
+      // manifest's live-file list — untouched partitions are never opened
+      val existing = live.filter(f => touched.exists(p => f.startsWith(p + "/")))
+      val fromBatch = batch.withColumn("__new", lit(true))
+      val rows =
+        if (existing.isEmpty) fromBatch
+        else read(existing).withColumn("__new", lit(false)).unionByName(fromBatch)
+
+      // LWW per key, with presence flags over the whole key group: a key
+      // the batch carries is an update when the sink already held it
+      val lwwWindow = Window.partitionBy(keyCols.map(col): _*)
+        .orderBy(seqCols.map(c => col(c).desc): _*)
+      val keyGroup = lwwWindow.rowsBetween(Window.unboundedPreceding,
+        Window.unboundedFollowing)
+      val counts = Observation()
+      val merged = rows
+        .withColumn("__rn", row_number().over(lwwWindow))
+        .withColumn("__in_batch", max(col("__new")).over(keyGroup))
+        .withColumn("__in_sink", !min(col("__new")).over(keyGroup))
+        .filter(col("__rn") === 1)
+        .observe(counts,
+          count(when(col("__in_batch") && !col("__in_sink"), 1)).as("inserted"),
+          count(when(col("__in_batch") && col("__in_sink"), 1)).as("updated"))
+        .drop("__rn", "__new", "__in_batch", "__in_sink")
+
+      // stage → publish → one atomic manifest rename. A partition whose rows
+      // all merged away produces no staged files but is still listed as
+      // replaced, so its stale files drop out of the new snapshot.
+      val staging = s"$sinkPath/_staging/${UUID.randomUUID()}"
+      // INT64-micros timestamps (scoped; INT96 is parquet-deprecated and
+      // carries no footer stats, which would disable both the manifest
+      // watermark fast path and ts file skipping)
+      val prevTsType = spark.conf.get("spark.sql.parquet.outputTimestampType")
+      spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+      // one file per touched partition: the layout is independent of how
+      // the LWW shuffle happened to split the keys
+      try merged.repartition(col("p_date"))
+        .write.mode(SaveMode.Overwrite).partitionBy("p_date").parquet(staging)
+      finally spark.conf.set("spark.sql.parquet.outputTimestampType", prevTsType)
+      val added = ManifestTable.publishFiles(spark, sinkPath, staging)
+      // loud, never silent: a non-empty batch merges to a non-empty slice
+      // (LWW keeps at least one row per key), so zero published files means
+      // the staged write vanished before the publish (external cleanup or a
+      // concurrent writer's deep vacuum racing this tick) — committing would
+      // REPLACE the touched partitions with nothing and lose their rows
+      require(added.nonEmpty,
+        s"staged sink files vanished before publish at $sinkPath — is " +
+          "another writer's housekeeping running against this sink?")
+      // row counts AND tsCol min/max from the parquet FOOTERS of the
+      // published files — one concurrent metadata read per file, not a
+      // second full scan of the merged slice; the stats ride the manifest so
+      // later watermark reads and range scans are metadata-only
+      val meta = ManifestTable.footerMeta(spark,
+        ManifestTable.dataDir(sinkPath), added, Seq(tsCol))
+      ManifestTable.commitEntries(spark, sinkPath, touched, meta.map(_._1))
       // cheap tier: per-tick reclamation stays manifest arithmetic. Crash
       // orphans (published by a tick that died before its commit) wait
       // for the sink's maintenance pass — [[Layout.compactTable]] runs
       // the deep (listing) vacuum when it rewrites the sink's files
       ManifestTable.vacuum(spark, sinkPath, deep = false)
-    }
 
-    SyncStats(n, newKeys - updatedCount, updatedCount)
+      val observed = counts.get
+      SyncStats(meta.map(_._2).sum,
+        observed("inserted").asInstanceOf[Long], observed("updated").asInstanceOf[Long])
+    } finally batch.unpersist()
   }
+
+  private def datesOf(df: DataFrame): Seq[String] =
+    df.select(col("p_date")).distinct().collect().map(_.getDate(0).toString).toSeq
 
 }

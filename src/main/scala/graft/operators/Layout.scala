@@ -10,7 +10,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * run and reading co-located buckets.
   *
   * (Date-partitioned layout — the other axis — is exercised by
-  * [[Incremental.syncTick]]'s dynamic partition overwrite.)
+  * [[Incremental.syncTick]]'s manifest commit, which replaces the touched
+  * `p_date=` partitions in one atomic [[ManifestTable]] snapshot.)
   */
 object Layout {
 

@@ -101,8 +101,9 @@ object Orchestrator {
       * outages from natural quiet stretches), then refetch the gap ranges
       * and [[Incremental.backfill]] them (NOT syncTick: repaired rows are
       * behind the watermark by construction). Re-detected natural gaps
-      * refetch empty and no-op. Returns None when the sink is absent or
-      * gapless.
+      * refetch empty, and an empty refetch is a one-job no-op: the backfill
+      * finds no dates to touch and neither stages nor commits. Returns None
+      * when the sink is absent or gapless.
       */
     def repair1m(tick: Timestamp): Option[FlowRun] =
       if (ManifestTable.currentVersion(spark, bars1mPath).isEmpty) None

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Incremental, ManifestTable}
@@ -17,6 +19,18 @@ class IncrementalSpec extends SparkSpec {
   private def rows(data: (Long, String, Double, String)*) =
     data.map { case (id, ts, v, b) => (id, sqlTs(ts), v, b) }
       .toDF("key", "ts", "value", "batch")
+
+  // a distributed source (not a driver-local relation) whose every row
+  // evaluation bumps `evals` — the stand-in for a paged API refetch
+  private lazy val evals = spark.sparkContext.longAccumulator("source_row_evals")
+  private def counted(data: (Long, String, Double, String)*) = {
+    val acc = evals // a local, so the closure does not capture the suite
+    val bump = udf((k: Long) => { acc.add(1L); k }).asNondeterministic()
+    spark.sparkContext.parallelize(
+      data.map { case (id, ts, v, b) => (id, sqlTs(ts), v, b) }, 2)
+      .toDF("key", "ts", "value", "batch")
+      .withColumn("key", bump(col("key")))
+  }
 
   test("two overlapping ticks converge to last-write-wins; replay is idempotent") {
     val sink = Files.createTempDirectory("graft_sink").toString + "/t"
@@ -71,12 +85,109 @@ class IncrementalSpec extends SparkSpec {
       rows((5L, "2024-01-01 23:50:00", 100.0, "a")),
       sink, Seq("key"), Seq("batch"), "ts", "2 HOURS")
     // revised ts lands on 2024-01-02 but the old copy lives in 2024-01-01
-    Incremental.syncTick(
+    val stats = Incremental.syncTick(
       rows((5L, "2024-01-02 00:10:00", 200.0, "b")),
       sink, Seq("key"), Seq("batch"), "ts", "2 HOURS")
+    // the moved key is found by the whole-sink probe: a revision, not a new key
+    assert(stats.updated == 1L && stats.inserted == 0L && stats.written == 1L)
     val out = Incremental.readSink(spark, sink).collect()
     assert(out.length == 1)
     assert(out.head.getAs[Double]("value") == 200.0)
+  }
+
+  test("each upsert evaluates its source once and leaves nothing cached") {
+    val sink = Files.createTempDirectory("graft_once").toString + "/t"
+    Incremental.syncTick(
+      rows((1L, "2024-01-01 10:00:00", 100.0, "a"),
+        (2L, "2024-01-02 10:00:00", 200.0, "a")),
+      sink, Seq("key"), Seq("batch"), "ts", "2 HOURS")
+    evals.reset()
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
+
+    // revises key 2, adds key 3; the first row falls behind the overlap
+    val tick = Incremental.syncTick(
+      counted((1L, "2024-01-01 10:00:00", 111.0, "b"),
+        (2L, "2024-01-02 10:00:00", 222.0, "b"),
+        (3L, "2024-01-02 11:00:00", 300.0, "b")),
+      sink, Seq("key"), Seq("batch"), "ts", "2 HOURS")
+    assert(evals.value == 3L, s"tick source rows evaluated ${evals.value} times")
+    assert(tick.inserted == 1L && tick.updated == 1L)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == cachedBefore)
+
+    evals.reset()
+    val repair = Incremental.backfill(
+      counted((1L, "2024-01-01 10:00:00", 111.0, "c"),
+        (4L, "2024-01-01 12:00:00", 400.0, "c")),
+      sink, Seq("key"), Seq("batch"), "ts")
+    assert(evals.value == 2L, s"backfill source rows evaluated ${evals.value} times")
+    assert(repair.inserted == 1L && repair.updated == 1L)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == cachedBefore)
+
+    val out = Incremental.readSink(spark, sink)
+      .select("key", "value").orderBy("key").as[(Long, Double)].collect().toSeq
+    assert(out == Seq((1L, 111.0), (2L, 222.0), (3L, 300.0), (4L, 400.0)))
+  }
+
+  test("a tick on a ts-keyed sink never opens an untouched partition") {
+    val sink = Files.createTempDirectory("graft_touched").toString + "/t"
+    val key = Seq("key", "ts") // the date is part of the key: no key can move
+    Incremental.syncTick(
+      rows((1L, "2024-01-01 10:00:00", 100.0, "a"),
+        (2L, "2024-01-02 10:00:00", 200.0, "a")),
+      sink, key, Seq("batch"), "ts", "2 HOURS")
+    val v1 = ManifestTable.currentVersion(spark, sink).get
+
+    // take the untouched day's data away for the duration of the tick: any
+    // read of it (a full-sink scan or semi-join) fails the tick
+    val data = java.nio.file.Paths.get(ManifestTable.dataDir(sink))
+    val untouched = ManifestTable.liveFiles(spark, sink)
+      .filter(_.startsWith("p_date=2024-01-01/"))
+    assert(untouched.size == 1)
+    val aside = Files.createTempDirectory("graft_aside").resolve("f.parquet")
+    Files.move(data.resolve(untouched.head), aside)
+    val stats =
+      try Incremental.syncTick(
+        rows((2L, "2024-01-02 10:00:00", 222.0, "b"),
+          (3L, "2024-01-02 11:00:00", 300.0, "b")),
+        sink, key, Seq("batch"), "ts", "2 HOURS")
+      finally Files.move(aside, data.resolve(untouched.head))
+
+    assert(ManifestTable.currentVersion(spark, sink).get == v1 + 1)
+    assert(stats == Incremental.SyncStats(2L, 1L, 1L))
+    val out = Incremental.readSink(spark, sink)
+      .select("key", "value", "batch").orderBy("key")
+      .as[(Long, Double, String)].collect().toSeq
+    assert(out == Seq((1L, 100.0, "a"), (2L, 222.0, "b"), (3L, 300.0, "b")))
+  }
+
+  test("an empty batch neither stages nor commits") {
+    val sink = Files.createTempDirectory("graft_empty").toString + "/t"
+    Incremental.syncTick(
+      rows((1L, "2024-01-01 10:00:00", 100.0, "a")),
+      sink, Seq("key"), Seq("batch"), "ts", "2 HOURS")
+    val v1 = ManifestTable.currentVersion(spark, sink)
+    val root = java.nio.file.Paths.get(sink)
+    def tree(): Set[String] = {
+      val walk = Files.walk(root)
+      try walk.iterator().asScala.map(p => root.relativize(p).toString).toSet
+      finally walk.close()
+    }
+    val before = tree()
+
+    // a gap refetch that came back empty, and a tick whose one row falls
+    // behind the watermark's overlap (evaluated once, then filtered away)
+    assert(Incremental.backfill(counted(), sink, Seq("key"), Seq("batch"), "ts") ==
+      Incremental.SyncStats(0L, 0L, 0L))
+    evals.reset()
+    assert(Incremental.syncTick(
+      counted((1L, "2023-12-31 10:00:00", 999.0, "z")),
+      sink, Seq("key"), Seq("batch"), "ts", "2 HOURS") ==
+      Incremental.SyncStats(0L, 0L, 0L))
+    assert(evals.value == 1L, s"stale tick source evaluated ${evals.value} times")
+
+    assert(ManifestTable.currentVersion(spark, sink) == v1)
+    assert(tree() == before) // no manifest, no data file, no _staging/ entry
+    assert(!before.exists(_.startsWith("_staging/")))
   }
 
   test("a writer killed anywhere before the manifest rename loses nothing") {
