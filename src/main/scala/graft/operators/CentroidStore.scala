@@ -8,7 +8,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 /** Materialized k-means model staging — "train once, serve everywhere" for
   * every centroid consumer ([[Similarity.ivfAssign]] assignment,
   * [[Similarity.annIvf]] multi-probe search, [[Similarity.semDedup]]),
-  * mirroring [[SignatureStore]]/[[QuantStore]].
+  * mirroring [[QuantStore]].
   *
   * The self-contained query forms each run the full Lloyd training in-query
   * (deliberately, so every query is reproducible from raw inputs alone); in
@@ -69,7 +69,7 @@ object CentroidStore {
     }, retainLast)
   }
 
-  /** One INCREMENTAL model tick — the [[SignatureStore.ingestBatch]]
+  /** One INCREMENTAL model tick — the [[CorpusStore.tick]]
     * pattern for the k-means model: a mini-batch Lloyd round (Sculley
     * 2010, spherical form) updates the staged centroids from a NEW batch
     * alone, weighted by the mass each centroid already represents:

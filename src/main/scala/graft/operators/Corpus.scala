@@ -16,8 +16,8 @@ import org.apache.spark.sql.functions._
   * chaining, so Catalyst plans it as one DAG — the quality filter prunes
   * before any shingling work, the pair generation only sees surviving
   * documents, and nothing materializes between stages unless the session
-  * chooses to (at 100 TB, stage outputs would be staged tables — see
-  * [[SignatureStore]] — but the declared plan is identical either way).
+  * chooses to (at 100 TB, stage outputs would be staged tables, but the
+  * declared plan is identical either way).
   */
 object Corpus {
 
@@ -26,25 +26,9 @@ object Corpus {
     * engines), so the gate boundary is exact.
     */
   def cleanCorpusStats(docs: DataFrame, minQuality: Double = 0.70): DataFrame =
-    cleanStats(docs, minQuality,
-      deduped => Dedup.minhashLshPairs(deduped))
-
-  /** [[cleanCorpusStats]] off a staged [[SignatureStore]] snapshot: the
-    * near-dup stage reads the materialized (doc_id, shingles, sig_0..15)
-    * rows — restricted to the quality/exact-dedup survivors by one
-    * doc_id-keyed semi-join — instead of re-running tokenize → shingle →
-    * seeded-md5 over the corpus (the most expensive map-side pass of the
-    * whole pipeline, already paid once at `SignatureStore.build`).
-    * Byte-identical output to the self-contained form (spec-asserted):
-    * banding a filtered subset of the staged rows equals banding
-    * signatures computed on that subset, because signatures are per-doc.
-    */
-  def cleanCorpusStatsStaged(docs: DataFrame, staged: DataFrame,
-                             minQuality: Double = 0.70): DataFrame =
-    cleanStats(docs, minQuality,
-      deduped => Dedup.pairsFromShingleSigs(
-        staged.join(deduped.select(col("doc_id")), Seq("doc_id"), "left_semi"),
-        Dedup.NumHashes / Dedup.NumBands, 0.5, Dedup.MaxBucketSize))
+    cleanedSurvivors(docs, minQuality)
+      .groupBy(col("lang"), col("source"))
+      .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("total_chars"))
 
   /** Dedup observability: per (lang, source) — how many documents the
     * exact and near-dup stages each remove, and the survival rate. The
@@ -78,26 +62,18 @@ object Corpus {
         col("n_exact_removed"), col("n_near_removed"), col("survival_rate"))
   }
 
-  private def cleanStats(docs: DataFrame, minQuality: Double,
-                         pairsOf: DataFrame => DataFrame): DataFrame =
-    cleanedSurvivors(docs, minQuality, pairsOf)
-      .groupBy(col("lang"), col("source"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("total_chars"))
-
   /** Quality gate → exact dedup → near-dup canonical survivors, returning
     * the surviving document rows themselves (the stage chain
     * [[cleanCorpusStats]] aggregates and [[corpusPipeline]] continues).
     */
-  private def cleanedSurvivors(docs: DataFrame, minQuality: Double,
-                               pairsOf: DataFrame => DataFrame): DataFrame =
-    survivorStages(docs, minQuality, pairsOf)._3
+  private def cleanedSurvivors(docs: DataFrame, minQuality: Double): DataFrame =
+    survivorStages(docs, minQuality)._3
 
   /** The stage-1 chain with each boundary exposed: (quality-gated,
     * exact-deduped, near-dup survivors) — [[cleanedSurvivors]] consumes
     * only the last; [[pipelineFunnel]] counts all three.
     */
-  private def survivorStages(docs: DataFrame, minQuality: Double,
-                             pairsOf: DataFrame => DataFrame)
+  private def survivorStages(docs: DataFrame, minQuality: Double)
       : (DataFrame, DataFrame, DataFrame) = {
     // inline per-row gate — no metrics self-join; the filter runs inside
     // the scan stage and prunes before any shingling work
@@ -110,7 +86,7 @@ object Corpus {
     // member of each component; docs in no pair never enter the graph and
     // survive by the null branch
     val groups = Dedup.connectedComponents(
-      pairsOf(deduped).select(col("doc_a"), col("doc_b")))
+      Dedup.minhashLshPairs(deduped).select(col("doc_a"), col("doc_b")))
     val survivors = deduped
       .join(groups, deduped("doc_id") === groups("node"), "left")
       .filter(col("node").isNull || col("component") === col("doc_id"))
@@ -165,43 +141,7 @@ object Corpus {
                      nShards: Int = 8,
                      seqBudget: Long = 1024L,
                      seed: String = "graft"): DataFrame =
-    corpusPipelineFrom(docs, deduped => Dedup.minhashLshPairs(deduped),
-      minQuality, perplexityThreshold, flagAt, totalBudget, nShards,
-      seqBudget, seed)
-
-  /** [[corpusPipeline]] off a staged [[SignatureStore]] snapshot — the same
-    * single-substitution amortization as [[cleanCorpusStatsStaged]]: the
-    * near-dup stage (the most expensive map-side pass of the whole build)
-    * reads the materialized signature rows restricted to the
-    * quality/exact-dedup survivors by one doc_id semi-join instead of
-    * re-running tokenize → shingle → seeded-md5 over the corpus.
-    * Byte-identical manifest to the self-contained form (spec-asserted).
-    */
-  def corpusPipelineStaged(docs: DataFrame, staged: DataFrame,
-                           minQuality: Double = 0.70,
-                           perplexityThreshold: Double = 3.5,
-                           flagAt: Double = 0.2,
-                           totalBudget: Long = 20000L,
-                           nShards: Int = 8,
-                           seqBudget: Long = 1024L,
-                           seed: String = "graft"): DataFrame =
-    corpusPipelineFrom(docs,
-      deduped => Dedup.pairsFromShingleSigs(
-        staged.join(deduped.select(col("doc_id")), Seq("doc_id"), "left_semi"),
-        Dedup.NumHashes / Dedup.NumBands, 0.5, Dedup.MaxBucketSize),
-      minQuality, perplexityThreshold, flagAt, totalBudget, nShards,
-      seqBudget, seed)
-
-  private def corpusPipelineFrom(docs: DataFrame,
-                                 pairsOf: DataFrame => DataFrame,
-                                 minQuality: Double,
-                                 perplexityThreshold: Double,
-                                 flagAt: Double,
-                                 totalBudget: Long,
-                                 nShards: Int,
-                                 seqBudget: Long,
-                                 seed: String): DataFrame =
-    pipelineTail(cleanedSurvivors(docs, minQuality, pairsOf),
+    pipelineTail(cleanedSurvivors(docs, minQuality),
       perplexityThreshold, flagAt, totalBudget, nShards, seqBudget, seed)
 
   /** THE INCREMENTAL end-to-end corpus build — the production arrival-order
@@ -209,7 +149,7 @@ object Corpus {
     * (`doc_id % nWaves`, the [[Dedup.sequentialIngest]] convention), each
     * wave is quality-gated and then greedily deduplicated against
     * everything kept so far (first-arrival-wins — the store-backed
-    * [[SignatureStore.ingestBatch]] semantics, spec-identical), and the
+    * [[CorpusStore.tick]] semantics, spec-identical), and the
     * accumulated keepers flow through the SAME stage 2–7 tail as the
     * batch build.
     *
@@ -476,7 +416,7 @@ object Corpus {
     import org.apache.spark.storage.StorageLevel
     require(nShards >= 1, s"nShards must be >= 1, got $nShards")
     val (clean0, deduped0, survivors0) =
-      survivorStages(docs, minQuality, d => Dedup.minhashLshPairs(d))
+      survivorStages(docs, minQuality)
     // persisting AFTER the chain is built still caches for the downstream
     // frames: Spark matches cached data by logical plan, and deduped0/
     // survivors0 embed clean0's exact plan as their child

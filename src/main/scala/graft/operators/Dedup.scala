@@ -97,16 +97,15 @@ object Dedup {
   }
 
   /** The full per-document dedup state — (doc_id, shingles, sig_0..15) — as
-    * one map-side frame: what [[SignatureStore.build]] materializes once per
-    * corpus snapshot so every dedup consumer skips the
+    * one map-side frame: what [[CorpusStore.tick]] computes once per batch
+    * and persists as `band`/`sh` rows, so later ticks skip the
     * tokenize→shingle→16-seeded-md5 recompute.
     */
   def shingleSignatures(docs: DataFrame): DataFrame =
     rawSignatures(docShingles(docs))
 
   /** Banded-LSH pairs + exact-Jaccard verification over a prebuilt
-    * [[shingleSignatures]] frame (in-memory or read back from a
-    * [[SignatureStore]] stage).
+    * [[shingleSignatures]] frame.
     */
   private[operators] def pairsFromShingleSigs(ss: DataFrame, rowsPerBand: Int,
                                               threshold: Double, cap: Int): DataFrame =
@@ -168,8 +167,7 @@ object Dedup {
     * are the most expensive map-side work in their modules; without the
     * persist each reference recomputes them from the scan up. Cache
     * lifecycle: the caller's session owns the entries (Bench/Verify
-    * clearCache between queries; [[SignatureStore]]/staged forms are the
-    * cross-query alternative). Output: distinct (aName < bName) id pairs —
+    * clearCache between queries). Output: distinct (aName < bName) id pairs —
     * ids only, so band explosion never multiplies payload columns.
     */
   private[graft] def bandPairs(buckets: DataFrame, cap: Int,
@@ -252,9 +250,7 @@ object Dedup {
     * tokenize → shingle → seeded-md5. With it (plus the bucket persist in
     * [[bandedCandidates]]) the whole query performs exactly one scan of the
     * input. Cache lifecycle: the caller's session owns the entries —
-    * `Bench`/`Verify` clearCache between queries. The cross-QUERY form of
-    * the same amortization is [[SignatureStore]]: materialize this frame
-    * once per corpus snapshot and feed [[pairsFromShingleSigs]] directly.
+    * `Bench`/`Verify` clearCache between queries.
     */
   private def lshVerifiedPairs(docs: DataFrame, rowsPerBand: Int,
                                threshold: Double, cap: Int): DataFrame = {
@@ -442,7 +438,7 @@ object Dedup {
       // returns driver-collected data and distributedComponents eagerly
       // checkpoints the symmetrized edges as its first step, so the
       // persist is fully consumed by the time either returns — and a
-      // long-running tick loop (CorpusStore/SignatureStore) must not
+      // long-running tick loop (CorpusStore) must not
       // accumulate one cached edge set per tick
       persisted.unpersist()
       result
@@ -517,9 +513,9 @@ object Dedup {
   /** INCREMENTAL near-dup detection — the production shape of LSH dedup at
     * 100 TB: an incoming batch of new documents is checked against an
     * EXISTING corpus whose (doc_id, shingles, sig_0..15) state is already
-    * staged (a [[SignatureStore]] snapshot, or any [[shingleSignatures]]
-    * frame). Output: one row per duplicated new doc — its best corpus match
-    * (highest verified Jaccard, ties → lowest corpus doc_id) with the exact
+    * staged (any [[shingleSignatures]] frame). Output: one row per
+    * duplicated new doc — its best corpus match (highest verified
+    * Jaccard, ties → lowest corpus doc_id) with the exact
     * overlap counts. New docs with no corpus match ≥ `threshold` are absent
     * (they are the keepers).
     *
@@ -546,9 +542,8 @@ object Dedup {
       corpusSigs, threshold, cap)
 
   /** [[incrementalNearDups]] off an already-built (and ideally persisted or
-    * staged) batch signature frame — the form [[ingestTick]] and
-    * [[SignatureStore.ingestBatch]] call so the batch's
-    * tokenize→shingle→md5 pass runs exactly once per tick.
+    * staged) batch signature frame — the form [[ingestTick]] calls so the
+    * batch's tokenize→shingle→md5 pass runs exactly once per tick.
     */
   private[operators] def incrementalNearDupsFromSigs(
       batchSigs: DataFrame, corpusSigs: DataFrame,
@@ -704,9 +699,9 @@ object Dedup {
     * spot preemption) makes them unrecoverable and fails the ingest job
     * instead of recomputing — this in-memory form must not run with
     * dynamic allocation or preemptible executors. The crash-tolerant
-    * production form of the same loop is [[SignatureStore.ingestBatch]]
-    * (store = a staged snapshot, each tick appends — durable by
-    * construction); this in-memory form exists for single-plan use and as
+    * production form of the same loop is [[CorpusStore.tick]]
+    * (each tick appends one atomic commit — durable by construction);
+    * this in-memory form exists for single-plan use and as
     * the oracle-checkable contract the store-backed loop is spec-tested
     * against.
     */

@@ -331,7 +331,7 @@ object ManifestTable {
 
   /** `v{N}` version-directory children of `dir` — the versioned-sidecar
     * layout every model store shares ([[CentroidStore]] model versions,
-    * [[QuantStore]] `_bounds`, [[IvfStore]] postings `_model` refs) —
+    * [[QuantStore]] `_bounds`, [[CorpusStore]] `_models`) —
     * ascending by N. One parser, so the stores cannot drift.
     */
   private[operators] def versionDirs(fs: FileSystem, dir: Path): Seq[(Long, Path)] =

@@ -6,8 +6,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /** Materialized quantized-ANN staging — the cross-query form of
-  * [[Similarity.annQuantized]]'s in-plan staging, mirroring
-  * [[SignatureStore]].
+  * [[Similarity.annQuantized]]'s in-plan staging.
   *
   * At 100 TB the whole point of scalar quantization is that SEARCH never
   * touches the float corpus: quantize ONCE per corpus snapshot into a
@@ -33,9 +32,10 @@ object QuantStore {
   private def boundsPath(root: String, version: Long) = s"$root/_bounds/v$version"
 
   /** Build (or refresh) the staged codes dataset + versioned bounds sidecar
-    * for a corpus snapshot. Atomic snapshot replace, like
-    * [[SignatureStore.build]]; single-writer (the manifest commit is the
-    * linearization point, asserted against the precomputed version).
+    * for a corpus snapshot. Atomic snapshot replace (an empty-prefix
+    * [[ManifestTable.commitReplace]]); single-writer (the manifest commit
+    * is the linearization point, asserted against the precomputed
+    * version).
     * Returns the committed version.
     */
   def build(emb: DataFrame, root: String): Long = {
@@ -63,7 +63,7 @@ object QuantStore {
         "model — snapshot is mispaired, rebuild required")
   }
 
-  /** One incremental ingest tick — the [[SignatureStore.ingestBatch]]
+  /** One incremental ingest tick — the [[CorpusStore.tick]]
     * pattern for the quantized corpus: a NEW batch of embeddings is
     * quantized under the CURRENT snapshot's FROZEN bounds and APPENDED as
     * new files; the existing corpus codes are never re-read, re-quantized,

@@ -555,7 +555,7 @@ object Similarity {
     * plus the per-vector norm of the bin-center dequantized vector — ONE
     * double alongside 1 byte/dimension, everything the asymmetric search
     * needs without ever touching the float corpus again. Materialize this
-    * frame once per corpus snapshot (à la `SignatureStore`) and
+    * frame once per corpus snapshot (à la [[QuantStore]]) and
     * [[annQuantized]]'s scan reads 1/4 the bytes of the float embeddings.
     */
   def quantizeCodes(emb: DataFrame, qb: QuantBounds,

@@ -8,11 +8,12 @@ import graft.operators.CorpusStore.StoreLayout
 
 /** The store's physical-layout machinery: the rebucket migration, the
   * incremental (fragmented-buckets-only) compaction, and the fail-loud
-  * paths of the `_layout` sidecar. These are the proofs behind the
-  * layout-evolution story: a live store's bucket counts can be raised
-  * atomically without changing a row of content or a bit of dedup state,
-  * and every way a reader and writer could disagree about the layout is
-  * an error, never a silent dedup miss.
+  * paths of the layout each commit records in its `#meta:layout` line.
+  * These are the proofs behind the layout-evolution story: a live
+  * store's bucket counts can be raised atomically without changing a row
+  * of content or a bit of dedup state, and every way a reader and writer
+  * could disagree about the layout is an error, never a silent dedup
+  * miss.
   *
   * Reference analog: the writer/reader schema agreement the reference
   * gets from Postgres DDL for free (`/root/reference/src/pipeline/db.py:15-51`);
@@ -34,6 +35,23 @@ class CorpusStoreLayoutSpec extends SparkSpec {
     else Some(spark.read.option("basePath", dd)
       .parquet(files.map(f => s"$dd/$f"): _*))
   }
+
+  /** Rewrite a store file through the hadoop FS (keeps the local-FS crc
+    * sidecar in step — a raw java.nio edit would fail the checksum, not
+    * the parse).
+    */
+  private def rewrite(p: org.apache.hadoop.fs.Path)(f: String => String): Unit = {
+    val hfs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val in = hfs.open(p)
+    val orig = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+    finally in.close()
+    val out = hfs.create(p, true)
+    try out.write(f(orig).getBytes("UTF-8")) finally out.close()
+  }
+
+  private def manifestPath(root: String, v: Long) =
+    new org.apache.hadoop.fs.Path(
+      s"$root/_manifests/v${"%020d".format(v)}.manifest")
 
   private val KindCols = Map(
     "doc" -> Seq("doc_id", "lang", "source", "text", "text_md5", "tick"),
@@ -70,11 +88,11 @@ class CorpusStoreLayoutSpec extends SparkSpec {
         "creation layout did not persist")
 
       // the migration: one atomic commit recomputes every p_b and flips
-      // the sidecar at the same version
+      // the layout in the same commit
       val vBefore = ManifestTable.currentVersion(spark, root).get
       CorpusStore.compact(spark, root, rebucketTo = Some(layoutB))
       assert(CorpusStore.layoutOf(spark, root) == layoutB,
-        "rebucket did not flip the layout sidecar")
+        "rebucket did not flip the committed layout")
       assert(ManifestTable.currentVersion(spark, root).contains(vBefore + 1))
 
       // (a) every kind's ROWS are byte-stable vs the never-rebucketed twin,
@@ -222,9 +240,8 @@ class CorpusStoreLayoutSpec extends SparkSpec {
     } finally spark.catalog.clearCache()
   }
 
-  test("layout sidecar fail-loud: foreign expression version throws at " +
-    "open; a foreign-format root refuses to read; the legacy fallback is " +
-    "pinned to 16/16/16") {
+  test("layout fail-loud: foreign expression version throws at open; a " +
+    "foreign-format root refuses to read") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     val root = java.nio.file.Files.createTempDirectory("graft_laybad").toString
     try {
@@ -234,53 +251,15 @@ class CorpusStoreLayoutSpec extends SparkSpec {
 
       // foreign expression version: reading it would file-prune against
       // wrong directories, so open throws with the migration instruction.
-      // The AUTHORITATIVE channel is the commit's own #meta:layout line
-      // (atomic with the snapshot), so that is what gets tampered first.
-      // Rewrite through the hadoop FS (keeps the local-FS crc sidecar in
-      // step — a raw java.nio edit would fail the checksum, not the parse)
-      val hfs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      def rewrite(p: org.apache.hadoop.fs.Path)(f: String => String): Unit = {
-        val in = hfs.open(p)
-        val orig = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-        val out = hfs.create(p, true)
-        try out.write(f(orig).getBytes("UTF-8")) finally out.close()
-      }
-      val manifest = new org.apache.hadoop.fs.Path(
-        s"$root/_manifests/v${"%020d".format(v)}.manifest")
-      rewrite(manifest)(
+      // The layout's only channel is the commit's own #meta:layout line
+      // (atomic with the snapshot), so that is what gets tampered.
+      rewrite(manifestPath(root, v))(
         _.replace("\"exprVersion\":1", "\"exprVersion\":2"))
       val ex = intercept[IllegalStateException] {
         CorpusStore.layoutOf(spark, root)
       }
       assert(ex.getMessage.contains("bucket-expression version")
         && ex.getMessage.contains("rebucket"), ex.getMessage)
-
-      // PRE-META store (the legacy form): strip the meta line entirely —
-      // resolution falls back to the `_layout/v{N}` sidecar, whose foreign
-      // expression version must throw the same way
-      rewrite(manifest)(_.split("\n")
-        .filterNot(_.startsWith("#meta:")).mkString("\n") + "\n")
-      val sidecar = new org.apache.hadoop.fs.Path(s"$root/_layout/v$v")
-      rewrite(sidecar)(
-        _.replace("\"exprVersion\":1", "\"exprVersion\":2"))
-      val ex1b = intercept[IllegalStateException] {
-        CorpusStore.layoutOf(spark, root)
-      }
-      assert(ex1b.getMessage.contains("bucket-expression version"),
-        ex1b.getMessage)
-
-      // missing sidecar on a pre-meta store = a pre-sidecar store,
-      // necessarily written at the then-constant 16/16/16. PINNED: if
-      // DefaultLayout ever changes, this assertion is the tripwire that
-      // the legacy fallback would silently corrupt old stores.
-      hfs.delete(new org.apache.hadoop.fs.Path(s"$root/_layout"), true)
-      assert(CorpusStore.DefaultLayout == StoreLayout(16, 16, 16),
-        "DefaultLayout changed: pre-sidecar stores were written at " +
-          "16/16/16 and the legacy fallback would now mis-prune them — " +
-          "gate the new default behind a sidecar-only path first")
-      assert(CorpusStore.layoutOf(spark, root) == StoreLayout(16, 16, 16))
 
       // a root whose live files carry no p_kind= prefix is NOT a corpus
       // store: reading it as an empty one would re-ingest everything
@@ -381,35 +360,50 @@ class CorpusStoreLayoutSpec extends SparkSpec {
     } finally spark.catalog.clearCache()
   }
 
-  test("a raced-away current-version layout sidecar walks back to the " +
-    "previous version's identical layout, never to the default") {
+  test("the layout lives only in each commit's meta: no tick, forget or " +
+    "rebucket writes _layout/, and a commit without #meta:layout throws") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-    val lay = StoreLayout(32, 32, 32)
-    val root = java.nio.file.Files.createTempDirectory("graft_laywb").toString
+    val created = StoreLayout(8, 8, 8)
+    val rebucketed = StoreLayout(32, 32, 32)
+    val root = java.nio.file.Files.createTempDirectory("graft_laymeta").toString
+    val layoutDir = new org.apache.hadoop.fs.Path(s"$root/_layout")
+    val fs = layoutDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // after each commit: nothing under _layout/, the commit's meta records
+    // the expected layout, and layoutOf resolves exactly that
+    def assertMetaOnly(v: Long, expect: StoreLayout, what: String): Unit = {
+      assert(ManifestTable.currentVersion(spark, root).contains(v),
+        s"$what did not commit v$v")
+      assert(!fs.exists(layoutDir), s"$what created $layoutDir")
+      assert(ManifestTable.commitMeta(spark, root, v).get("layout")
+        .contains(expect.render), s"$what: v$v meta does not record $expect")
+      assert(CorpusStore.layoutOf(spark, root) == expect,
+        s"$what: layoutOf disagrees with v$v's meta")
+    }
     try {
       CorpusStore.tick(docs.filter(col("doc_id") % 7 === 0), root,
-        tickId = Some("w0"), minQuality = 0.0, layoutIfNew = Some(lay))
+        tickId = Some("w0"), layoutIfNew = Some(created))
+      assertMetaOnly(1L, created, "the creation tick")
       CorpusStore.tick(docs.filter(col("doc_id") % 7 === 1), root,
-        tickId = Some("w1"), minQuality = 0.0)
-      val v = ManifestTable.currentVersion(spark, root).get
-      assert(v >= 2, s"expected two commits, got $v")
-      // the race: concurrent version-dir pruning deleted the sidecar the
-      // current version just wrote. Layouts change only at compact time,
-      // so the previous retained version's sidecar is identical — the
-      // resolution must walk back to it, not silently revert to the
-      // 16-bucket default (= wrong dirs = missed duplicates)
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      assert(fs.delete(new org.apache.hadoop.fs.Path(s"$root/_layout/v$v"),
-        false), "current-version sidecar unexpectedly absent")
-      assert(CorpusStore.layoutOf(spark, root) == lay,
-        "layout silently reverted to the default after a raced sidecar")
-      // the store still functions under the walked-back layout: a
-      // semantic replay of an ingested wave commits nothing
-      val rep = CorpusStore.tick(docs.filter(col("doc_id") % 7 === 1), root,
-        minQuality = 0.0)
-      assert(rep.nKept == 0L,
-        s"replay under the walked-back layout was not a no-op: $rep")
+        tickId = Some("w1"))
+      assertMetaOnly(2L, created, "the second tick")
+      val victim = CorpusStore.docs(spark, root).orderBy("doc_id")
+        .select(org.apache.spark.sql.functions.md5(col("text")))
+        .head().getString(0)
+      val f = CorpusStore.forget(spark, root, Seq(victim))
+      assert(f.nPurgedDocs == 1L, s"forget purged nothing: $f")
+      assertMetaOnly(3L, created, "forget")
+      CorpusStore.compact(spark, root, rebucketTo = Some(rebucketed))
+      assertMetaOnly(4L, rebucketed, "the rebucket compaction")
+
+      // a committed version without its layout is a foreign or tampered
+      // root: resolving it throws instead of guessing DefaultLayout (=
+      // wrong dirs = missed duplicates on this 32-bucket store)
+      rewrite(manifestPath(root, 4L))(_.split("\n")
+        .filterNot(_.startsWith("#meta:")).mkString("\n") + "\n")
+      val ex = intercept[IllegalStateException] {
+        CorpusStore.layoutOf(spark, root)
+      }
+      assert(ex.getMessage.contains("#meta:layout"), ex.getMessage)
     } finally spark.catalog.clearCache()
   }
 

@@ -293,12 +293,36 @@ class CorpusStoreSpec extends SparkSpec {
   test("replayed ticks are byte-stable: marker fast path and semantic no-op") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     val root = java.nio.file.Files.createTempDirectory("graft_corpreplay").toString
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def onDisk(rel: String): Boolean =
+      fs.exists(new org.apache.hadoop.fs.Path(
+        s"${ManifestTable.dataDir(root)}/$rel"))
     try {
       val n = 3
+      var tick0Files = Seq.empty[String]
+      var orphan = Seq.empty[String]
       (0 until n).foreach { i =>
         CorpusStore.tick(docs.filter(col("doc_id") % n === i), root,
           tickId = Some(s"wave$i"))
+        if (i == 0) {
+          tick0Files = ManifestTable.liveFiles(spark, root)
+          // a crash orphan: published by a writer that died before its
+          // commit
+          val staging = s"$root/_staging/${java.util.UUID.randomUUID()}"
+          spark.range(5).toDF("x").coalesce(1)
+            .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(staging)
+          orphan = ManifestTable.publishFiles(spark, root, staging)
+        }
       }
+      // ticks append, never rewrite: the first tick's files are still live
+      val live = ManifestTable.liveFiles(spark, root)
+      assert(tick0Files.nonEmpty && tick0Files.forall(live.contains),
+        "an append tick dropped prior files")
+      // per-tick housekeeping is listing-free: the orphan survives every
+      // tick and falls to compact's deep sweep (asserted below)
+      assert(orphan.nonEmpty && orphan.forall(onDisk),
+        "a tick swept a crash orphan — it must not list data/")
       val before = CorpusStore.read(spark, root)
         .orderBy("doc_id").collect().toSeq
       val vBefore = ManifestTable.currentVersion(spark, root).get
@@ -325,6 +349,8 @@ class CorpusStoreSpec extends SparkSpec {
       val (nb, na) = CorpusStore.compact(spark, root,
         targetBytes = 1L << 30)
       assert(na <= nb, s"compaction grew the file count: $nb -> $na")
+      assert(orphan.forall(f => !onDisk(f)),
+        "compact's deep maintenance left the crash orphan")
       assert(CorpusStore.read(spark, root)
         .orderBy("doc_id").collect().toSeq == before,
         "compaction changed store contents")

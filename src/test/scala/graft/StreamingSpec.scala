@@ -237,38 +237,4 @@ class StreamingSpec extends SparkSpec {
       assert(rows(1).getAs[java.sql.Timestamp]("session_start") == sqlTs("2024-01-01 11:30:00"))
     } finally q.stop()
   }
-
-  test("streaming dedup ingest: batches dedupe vs the growing store; replay commits nothing") {
-    import graft.operators.{ManifestTable, SignatureStore}
-    import graft.streaming.StreamingDedup
-    implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft_sdedup").toString
-    val docCols = Seq("doc_id", "text", "lang", "source", "n_chars")
-    def doc(id: Long, t: String) = (id, t, "en", "src", t.length.toLong)
-    val base = (1 to 40).map(i => s"w$i").mkString(" ")
-    val mem = MemoryStream[(Long, String, String, String, Long)]
-    val q = mem.toDF().toDF(docCols: _*)
-      .writeStream.foreachBatch(StreamingDedup.foreachBatchIngest(root) _)
-      .start()
-    try {
-      // batch 1: a normal doc and a shingle-less one (< 3 tokens)
-      mem.addData(doc(1L, base), doc(2L, "a b"))
-      q.processAllAvailable()
-      // batch 2: near-dup of doc 1 (dropped) + novel doc (kept)
-      mem.addData(
-        doc(3L, (1 to 40).map(i => if (i == 5) "X" else s"w$i").mkString(" ")),
-        doc(4L, (100 to 140).map(i => s"z$i").mkString(" ")))
-      q.processAllAvailable()
-      val kept = SignatureStore.read(spark, root)
-        .select("doc_id").as[Long].collect().sorted.toSeq
-      assert(kept == Seq(1L, 2L, 4L))
-    } finally q.stop()
-    // at-least-once replay of batch 1: id guard drops both rows (content
-    // alone would miss the shingle-less doc 2) -> no commit, no new version
-    val vBefore = ManifestTable.currentVersion(spark, root)
-    StreamingDedup.foreachBatchIngest(root)(
-      Seq(doc(1L, base), doc(2L, "a b")).toDF(docCols: _*), 99L)
-    assert(ManifestTable.currentVersion(spark, root) == vBefore)
-    spark.catalog.clearCache()
-  }
 }
