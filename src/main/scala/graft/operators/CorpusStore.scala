@@ -2,7 +2,7 @@ package graft.operators
 
 import java.util.UUID
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
@@ -15,8 +15,9 @@ import org.apache.spark.storage.StorageLevel
   *   (first arrival wins) → exact-vs-store dedup (md5 anti-join against the
   *   kept md5s AND the dropped-doc tombstones, file-pruned) → near-dup-vs-
   *   store dedup (band prune + exact-Jaccard verification, file-pruned) →
-  *   within-batch near-dup components → ONE atomic append of the keepers'
-  *   rows plus their dedup state; on demand ([[manifest]]): the packed
+  *   within-batch near-dup components → ONE write job of the keepers'
+  *   rows plus their dedup state, made live by ONE atomic commit; on
+  *   demand ([[manifest]]): the packed
   *   per-shard training manifest rebuilt from the accumulated keepers
   *   through the SAME stage 2–7 tail as [[Corpus.corpusPipeline]].
   *
@@ -89,10 +90,18 @@ import org.apache.spark.storage.StorageLevel
   * across however many ticks land in between.
   *
   * Housekeeping: per-tick appends fragment each bucket into batch-sized
-  * files; [[compact]] rewrites the snapshot kind-by-kind to target-size
-  * files in ONE atomic commit (rows, dedup state, and tick markers all
-  * unchanged — spec-asserted). [[Layout.compactTable]] cannot be applied
-  * to this root directly: the kinds carry different schemas.
+  * files; [[compact]] rewrites the fragmented buckets of every kind to
+  * target-size files in ONE write job and ONE atomic commit (rows, dedup
+  * state, and tick markers all unchanged — spec-asserted).
+  * [[Layout.compactTable]] cannot be applied to this root directly: the
+  * kinds carry different schemas.
+  *
+  * Every commit path — [[tick]], [[forget]], [[compact]] — writes through
+  * [[ManifestTable.writeFiles]]: one Spark job whose tasks write each
+  * bucket file and its Bloom sidecar straight into `data/` under a unique
+  * name (no staging dir, no rename, no footer pass, no sidecar job) and
+  * report each file's row count, which the commit checks against the
+  * op's own counts before the manifest makes the files live.
   */
 object CorpusStore {
 
@@ -300,6 +309,17 @@ object CorpusStore {
     StructType(s.fields ++ Seq(
       StructField("p_kind", StringType), StructField("p_b", IntegerType)))
 
+  /** An explicit kind file list WITH its `p_kind`/`p_b` partition columns
+    * — the rewrite reads, which keep each row in its bucket. Explicit
+    * schema: no footer-reading inference job (see [[withPartCols]]).
+    */
+  private def readWithParts(spark: SparkSession, root: String,
+                            files: Seq[String], kind: String): DataFrame = {
+    val dd = ManifestTable.dataDir(root)
+    spark.read.schema(withPartCols(kindSchema(kind))).option("basePath", dd)
+      .parquet(files.map(f => s"$dd/$f"): _*)
+  }
+
   /** Live files of one kind (manifest-listed, no directory walk). */
   private[graft] def kindFiles(spark: SparkSession, root: String,
                                kind: String): Seq[String] =
@@ -328,21 +348,20 @@ object CorpusStore {
   private[graft] def bloomKeyOf(kind: String): Option[String] =
     if (kind == "band") None else BloomKeyOf.get(kind)
 
-  /** Write the Bloom sidecars of freshly-published kind files, for the
-    * probed kinds — ONE job however many kinds (over files this commit
-    * just wrote, batch-bounded, filter bytes executor-side; see
-    * [[ManifestTable.writeFileBloomGroups]]). Runs BEFORE the commit that
-    * makes the files live, so a live file's sidecar always exists; crash
-    * orphans are vacuumed with their data files.
+  /** One kind's rows as a [[ManifestTable.writeFiles]] set: the kind's
+    * columns in its schema order, one file per (`bucket`, `split`) under
+    * `p_kind=<kind>/p_b=<bucket>`, with the kind's Bloom sidecar. Every
+    * store writer (tick, forget, compact) commits through these sets.
     */
-  private def writeKindBlooms(spark: SparkSession, root: String,
-                              byKind: Seq[(String, Seq[String])]): Unit =
-    ManifestTable.writeFileBloomGroups(spark, root,
-      byKind.flatMap { case (kind, fs) =>
-        // the kind schema rides along so the bloom builder's read skips
-        // schema inference (see [[withPartCols]])
-        BloomKeyOf.get(kind).map(c => (fs, c, Some(kindSchema(kind))))
-      })
+  private def kindSet(kind: String, rows: DataFrame, bucket: Column,
+                      split: Column = lit(0)): ManifestTable.WriteSet =
+    ManifestTable.WriteSet(rows, kindSchema(kind).fieldNames.toSeq,
+      concat(lit(s"p_kind=$kind/p_b="), bucket.cast("string")), split,
+      BloomKeyOf.get(kind))
+
+  /** Rows [[ManifestTable.writeFiles]] reported writing for `kind`. */
+  private def rowsOf(written: Seq[(String, Long)], kind: String): Long =
+    written.collect { case (f, n) if f.startsWith(s"p_kind=$kind/") => n }.sum
 
   /** [[prunedKindFiles]] sharpened by the per-file Bloom sidecars: of the
     * batch-touched buckets' files, keep only those whose filter might
@@ -361,20 +380,9 @@ object CorpusStore {
   private[graft] def bloomPrunedKindFiles(spark: SparkSession, root: String,
                                           kind: String,
                                           keysByBucket: Map[Int, Seq[String]])
-      : Seq[String] = {
-    val prefix = s"p_kind=$kind/"
-    val shortlist = ManifestTable.liveFiles(spark, root)
-      .filter(f => f.startsWith(prefix) &&
-        bucketOfPath(f).exists(keysByBucket.contains))
-    val blooms = ManifestTable.readBlooms(spark, root, shortlist)
-    shortlist.filter { f =>
-      val keys = keysByBucket(bucketOfPath(f).get)
-      blooms(f) match {
-        case None     => true
-        case Some(bf) => keys.exists(bf.mightContainString)
-      }
-    }
-  }
+      : Seq[String] =
+    pruneRelFilesByBucket(spark, root, kindFiles(spark, root, kind),
+      keysByBucket)
 
   /** The `p_b` bucket a KEY lands in, computed DRIVER-SIDE for the
     * optimizer's literal-predicate prune ([[graft.plans.StorePruneRule]]).
@@ -769,7 +777,7 @@ object CorpusStore {
     // the winner's keepers must be deduped against, so retrying just the
     // commit would be wrong. Replay markers and the md5/tombstone
     // semantics make re-running safe by construction; the lost attempt's
-    // published files are deleted at the conflict site. Bounded: ticks
+    // written files are deleted at the conflict site. Bounded: ticks
     // are seconds long, so starvation means pathological writer counts —
     // serialize those deployments instead.
     val maxRetries = 5
@@ -800,7 +808,7 @@ object CorpusStore {
     * DATA but leaves the LOGICAL plan intact, and the tick's plans compound
     * multiplicatively (batchSigs embeds the pruned exact chain, the
     * vs-store dup prune embeds batchSigs ~5×, the within-batch fold embeds
-    * the remainder ~5 more, the four bucketed writes embed both ends) — so
+    * the remainder ~5 more, the store write embeds both ends) — so
     * every action's AQE plan-update event re-rendered a multi-megabyte
     * formatted plan string on the DRIVER. Measured: the FIRST sf0.1 store
     * build spent ~70 of its 75 s in `ExplainUtils.collectOperatorsWithID`
@@ -827,6 +835,18 @@ object CorpusStore {
       case _ => ()
     }
 
+  /** Run `body` with every Spark job it starts described as
+    * `tick <stamp>: <name>` — so a tick's jobs read by phase in the UI,
+    * event log and listeners — restoring the caller's description after.
+    */
+  private def phase[T](spark: SparkSession, stamp: String, name: String)
+                      (body: => T): T = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(s"tick $stamp: $name")
+    try body finally sc.setJobDescription(prev)
+  }
+
   private def tickAttempt(rawBatch: DataFrame, root: String,
                           tickId: Option[String],
                           minQuality: Double,
@@ -848,12 +868,15 @@ object CorpusStore {
     // the store's OWN layout (or the creation choice): every bucket
     // expression below — prune side and write side — goes through it
     val layout = resolveLayout(spark, root, layoutIfNew)
+    val stamp = tickId.getOrElse("untracked")
 
-    val nRaw = rawBatch.count()
     // quality gate inside the scan stage, then within-batch exact dedup
     // (first arrival = min doc_id, one md5-keyed window — the
-    // corpusPipelineIncremental stage shapes)
+    // corpusPipelineIncremental stage shapes). The raw row count rides the
+    // gate pass as an observation: no count job of its own
+    val raw = Observation()
     val clean = rawBatch
+      .observe(raw, count(lit(1)).as("n"))
       .filter(TextOps.qualityScore(col("text")) >= minQuality)
       .select(col("doc_id"), col("lang"), col("source"), col("text"),
         md5(col("text")).as("text_md5"))
@@ -862,12 +885,13 @@ object CorpusStore {
     var batchSigs: DataFrame = null
     var dupIds: DataFrame = null
     var rem: DataFrame = null
-    var keepSigs: DataFrame = null
+    var commitRows: DataFrame = null
     // try/finally: an at-least-once caller CATCHES and retries a failed
     // tick, so a mid-tick exception must not strand this attempt's caches
     // in executor storage (the IvfStore.build discipline)
     try {
-      val nQuality = clean.count()
+      val nQuality = phase(spark, stamp, "gate")(clean.count())
+      val nRaw = raw.get("n").asInstanceOf[Long]
       // within-batch exact dedup, skew-immune (see Dedup.keepMinBy)
       val inBatch = Dedup.keepMinBy(clean, col("text_md5"), col("doc_id"))
       // exact-vs-store: the batch's md5 set broadcasts into a map-side
@@ -875,56 +899,102 @@ object CorpusStore {
       // both file-pruned to the buckets the batch's md5s hash to — and the
       // batch anti-joins the (batch-bounded) touched set. The store side
       // never shuffles and never reads untouched buckets.
-      val exact = prev match {
-        case Some(_) =>
-          // the batch's (md5 → bucket) map, ONE collect (batch-bounded,
-          // the broadcast-id sizing contract): buckets drive the dir-level
-          // prune, the md5s themselves drive the per-file bloom probes —
-          // and deriving the bucket via the SAME expression the write side
-          // uses keeps the two prune levels provably consistent
-          val md5ByBucket = inBatch
-            .select(col("text_md5"),
-              md5Bucket(col("text_md5"), layout).as("b"))
-            .distinct().collect()
-            .groupBy(_.getInt(1))
-            .map { case (b, rows) => b -> rows.toSeq.map(_.getString(0)) }
-          val storeMd5 = readKindFiles(spark, root,
-            bloomPrunedKindFiles(spark, root, "doc", md5ByBucket), docSchema)
-            .select(col("text_md5"))
-            .union(readKindFiles(spark, root,
-              bloomPrunedKindFiles(spark, root, "tomb", md5ByBucket),
-              tombSchema)
-              .select(col("text_md5")))
-          val touched = storeMd5.join(
-            broadcast(inBatch.select(col("text_md5")).distinct()),
-            Seq("text_md5"), "left_semi")
-          inBatch.join(broadcast(touched), Seq("text_md5"), "left_anti")
-        case None => inBatch
+      val nExactNew = phase(spark, stamp, "exact") {
+        val exact = prev match {
+          case Some(_) =>
+            // the batch's (md5 → bucket) map, ONE collect (batch-bounded,
+            // the broadcast-id sizing contract): buckets drive the dir-level
+            // prune, the md5s themselves drive the per-file bloom probes —
+            // and deriving the bucket via the SAME expression the write side
+            // uses keeps the two prune levels provably consistent
+            val md5ByBucket = inBatch
+              .select(col("text_md5"),
+                md5Bucket(col("text_md5"), layout).as("b"))
+              .distinct().collect()
+              .groupBy(_.getInt(1))
+              .map { case (b, rows) => b -> rows.toSeq.map(_.getString(0)) }
+            val storeMd5 = readKindFiles(spark, root,
+              bloomPrunedKindFiles(spark, root, "doc", md5ByBucket), docSchema)
+              .select(col("text_md5"))
+              .union(readKindFiles(spark, root,
+                bloomPrunedKindFiles(spark, root, "tomb", md5ByBucket),
+                tombSchema)
+                .select(col("text_md5")))
+            val touched = storeMd5.join(
+              broadcast(inBatch.select(col("text_md5")).distinct()),
+              Seq("text_md5"), "left_semi")
+            inBatch.join(broadcast(touched), Seq("text_md5"), "left_anti")
+          case None => inBatch
+        }
+        // stageCut, not persist, for every multiply-consumed tick frame:
+        // same caching, truncated plans (see [[stageCut]] — the bare
+        // persists left the first sf0.1 store build spending ~70 s
+        // rendering compounded plan strings on the driver)
+        exactP = stageCut(exact)
+        exactP.count()
       }
-      // stageCut, not persist, for every multiply-consumed tick frame:
-      // same caching, truncated plans (see [[stageCut]] — the bare
-      // persists left the first sf0.1 store build spending ~70 s rendering
-      // compounded plan strings on the driver)
-      exactP = stageCut(exact)
-      val nExactNew = exactP.count()
-      batchSigs = stageCut(Dedup.shingleSignatures(exactP))
-      // near-dup-vs-store over the pruned band/shingle kinds, then
-      // within-batch components over the remainder (the ingestTick
-      // bootstrap path — identical composition to the unpruned fold)
-      rem = prev match {
-        case Some(_) =>
-          dupIds = prunedStoreDupIds(batchSigs, root, threshold, cap, layout)
-          stageCut(batchSigs.join(dupIds, Seq("doc_id"), "left_anti"))
-        case None => batchSigs
-      }
-      keepSigs = stageCut(Dedup.ingestTick(rem, None, threshold, cap,
-        releaseIntermediate = true))
+      // a batch the exact stage dropped entirely (a replay) has nothing
+      // to fold or write
+      val (written, keeperIds) =
+        if (nExactNew == 0L) (Seq.empty[(String, Long)], Array.empty[Long])
+        else {
+          // near-dup-vs-store over the pruned band/shingle kinds, then
+          // within-batch components over the remainder (the ingestTick
+          // bootstrap path — identical composition to the unpruned fold)
+          rem = phase(spark, stamp, "near") {
+            batchSigs = stageCut(Dedup.shingleSignatures(exactP))
+            prev match {
+              case Some(_) =>
+                dupIds = prunedStoreDupIds(batchSigs, root, threshold, cap,
+                  layout)
+                stageCut(batchSigs.join(dupIds, Seq("doc_id"), "left_anti"))
+              case None => batchSigs
+            }
+          }
+          // every exact-new doc with its keeper signature row when the fold
+          // kept it (`__kept` non-null): the ONE frame all four kinds are
+          // projected from, cut so the write reads a leaf as a single job
+          val keeperIds = phase(spark, stamp, "fold") {
+            val keepSigs = Dedup.ingestTick(rem, None, threshold, cap,
+              releaseIntermediate = true)
+            commitRows = stageCut(exactP.join(
+              keepSigs.withColumn("__kept", lit(true)), Seq("doc_id"),
+              "left_outer"))
+            if (collectKeeperIds)
+              commitRows.filter(col("__kept").isNotNull)
+                .select(col("doc_id")).collect().map(_.getLong(0))
+            else Array.empty[Long]
+          }
+          // keepers' doc rows + their dedup state (shingles for
+          // verification, band postings for the prune) + the dropped docs'
+          // tombstones: ONE write job straight into data/ (one file per
+          // touched bucket per kind, each with its Bloom sidecar); its row
+          // counts are the tick's keeper and tombstone counts
+          val kept = commitRows.filter(col("__kept").isNotNull)
+          (phase(spark, stamp, "write")(
+            ManifestTable.writeFiles(spark, root, Seq(
+              kindSet("doc", kept.withColumn("tick", lit(stamp)),
+                md5Bucket(col("text_md5"), layout)),
+              kindSet("sh", kept, shingleBucket(col("doc_id"), layout)),
+              kindSet("band",
+                Dedup.explodedBands(kept, Dedup.NumHashes / Dedup.NumBands),
+                bandBucket(col("band_id"), col("band_val"), layout)),
+              kindSet("tomb", commitRows.filter(col("__kept").isNull),
+                md5Bucket(col("text_md5"), layout))))), keeperIds)
+        }
+      val nKept = rowsOf(written, "doc")
+      // the write must account for every doc the exact stage passed: each
+      // is a keeper (one doc and one shingle row) or a tombstone (band is
+      // exempt: shingle-less keepers emit none)
+      require(rowsOf(written, "sh") == nKept &&
+          nKept + rowsOf(written, "tomb") == nExactNew,
+        s"store write inconsistent with the tick (nExactNew=$nExactNew, " +
+          s"written=${Seq("doc", "sh", "band", "tomb")
+            .map(k => s"$k:${rowsOf(written, k)}").mkString(",")})")
       // zero keepers AND zero tombstones commit NOTHING: replay without a
       // marker must leave the version untouched, not mint empty snapshots
-      val nKept = keepSigs.count()
-      val nTomb = nExactNew - nKept
       val version =
-        if (nKept == 0L && nTomb == 0L) {
+        if (written.isEmpty) {
           // a creation tick whose documents ALL dropped still records its
           // explicit layout choice (as the staged layout the first real
           // commit will adopt) — otherwise a later tick without
@@ -934,85 +1004,20 @@ object CorpusStore {
             writeStagedLayout(spark, root, layout)
           prev.getOrElse(0L)
         }
-        else {
-          val stamp = tickId.getOrElse("untracked")
-          val staging = s"$root/_staging/${UUID.randomUUID()}"
-          // keepers' doc rows + their dedup state (shingles for
-          // verification, band postings for the prune) + the dropped
-          // docs' tombstones — four bucketed writes, ONE commit. Each
-          // write repartitions on the bucket column first (batch-bounded
-          // shuffle) so a tick appends at most ONE file per touched
-          // bucket, not one per (task × bucket) — per-tick fragmentation
-          // stays O(touched buckets)
-          exactP.join(keepSigs.select(col("doc_id")), Seq("doc_id"))
-            .withColumn("tick", lit(stamp))
-            .withColumn("p_kind", lit("doc"))
-            .withColumn("p_b", md5Bucket(col("text_md5"), layout))
-            .repartition(col("p_b"))
-            .write.partitionBy("p_kind", "p_b")
-            .mode(SaveMode.Overwrite).parquet(s"$staging/doc")
-          keepSigs.select(col("doc_id"), col("shingles"))
-            .withColumn("p_kind", lit("sh"))
-            .withColumn("p_b", shingleBucket(col("doc_id"), layout))
-            .repartition(col("p_b"))
-            .write.partitionBy("p_kind", "p_b")
-            .mode(SaveMode.Overwrite).parquet(s"$staging/sh")
-          Dedup.explodedBands(keepSigs, Dedup.NumHashes / Dedup.NumBands)
-            .withColumn("p_kind", lit("band"))
-            .withColumn("p_b", bandBucket(col("band_id"), col("band_val"), layout))
-            .repartition(col("p_b"))
-            .write.partitionBy("p_kind", "p_b")
-            .mode(SaveMode.Overwrite).parquet(s"$staging/band")
-          exactP.join(keepSigs.select(col("doc_id")), Seq("doc_id"), "left_anti")
-            .select(col("text_md5"))
-            .withColumn("p_kind", lit("tomb"))
-            .withColumn("p_b", md5Bucket(col("text_md5"), layout))
-            .repartition(col("p_b"))
-            .write.partitionBy("p_kind", "p_b")
-            .mode(SaveMode.Overwrite).parquet(s"$staging/tomb")
-          val byKind = Seq("doc", "sh", "band", "tomb")
-            .map(k => k -> ManifestTable.publishFiles(spark, root,
-              s"$staging/$k"))
-          // the staging→publish handoff must never lose rows SILENTLY: if
-          // anything deleted _staging between the writes and the publish
-          // (a concurrent writer's deep vacuum, an external cleaner), the
-          // tick would otherwise commit an empty snapshot while reporting
-          // keepers. Kinds with a known row count must have published
-          // files (band is exempt: shingle-less keepers emit no band rows)
-          val published = byKind.toMap
-          require((nKept == 0L ||
-              (published("doc").nonEmpty && published("sh").nonEmpty)) &&
-              (nTomb == 0L || published("tomb").nonEmpty),
-            s"published files inconsistent with the tick's counts " +
-              s"(nKept=$nKept, nTomb=$nTomb, " +
-              s"published=${byKind.map { case (k, f) => s"$k:${f.size}" }
-                .mkString(",")}) — staged files vanished before publish; " +
-              "is another writer's housekeeping running against this store?")
-          // bloom sidecars ride ahead of the commit: a committed snapshot
-          // always finds them; a crash right here leaves orphans vacuum
-          // reclaims. The layout rides the commit's own meta.
-          writeKindBlooms(spark, root, byKind)
+        else phase(spark, stamp, "commit") {
+          val files = written.map(_._1)
           val v =
-            try ManifestTable.commitReplace(spark, root, Seq.empty,
-              byKind.flatMap(_._2),
+            try ManifestTable.commitReplace(spark, root, Seq.empty, files,
               expectedVersion = Some(prev.getOrElse(0L)),
               meta = Map("layout" -> layout.render))
             catch {
               case e: CommitConflictException =>
-                // lost the race after publishing: this attempt's data
-                // files are orphans no manifest references — delete them
-                // (and their bloom sidecars) so the retry loop doesn't
+                // lost the race after writing: this attempt's data files
+                // are orphans no manifest references — delete them (and
+                // their bloom sidecars) so the retry loop doesn't
                 // accumulate junk for the deep vacuum to find. The retry
-                // recomputes and re-stages from scratch.
-                val fs = fsOf(spark, root)
-                byKind.flatMap(_._2).foreach { rel =>
-                  try {
-                    fs.delete(new org.apache.hadoop.fs.Path(
-                      s"${ManifestTable.dataDir(root)}/$rel"), false)
-                    fs.delete(new org.apache.hadoop.fs.Path(
-                      s"$root/_blooms/$rel.bloom"), false)
-                  } catch { case scala.util.control.NonFatal(_) => () }
-                }
+                // recomputes and rewrites from scratch.
+                ManifestTable.deleteWritten(spark, root, files)
                 throw e
             }
           // cheap tier only: per-tick reclamation is manifest arithmetic;
@@ -1021,10 +1026,6 @@ object CorpusStore {
           ManifestTable.vacuum(spark, root, retainSnapshots, deep = false)
           v
         }
-      val keeperIds =
-        if (collectKeeperIds && nKept > 0L)
-          keepSigs.select(col("doc_id")).collect().map(_.getLong(0))
-        else Array.empty[Long]
       tickId.foreach(id => writeMarker(spark, root, "_ticks", id))
       (TickReport(version, nRaw, nQuality, nExactNew, nKept,
         replaySkipped = false), keeperIds)
@@ -1035,7 +1036,7 @@ object CorpusStore {
       if (dupIds != null) releaseCut(dupIds)
       // no-op on the bootstrap path (rem aliases batchSigs there)
       if (rem != null && (rem ne batchSigs)) releaseCut(rem)
-      if (keepSigs != null) releaseCut(keepSigs)
+      if (commitRows != null) releaseCut(commitRows)
     }
   }
 
@@ -1157,69 +1158,54 @@ object CorpusStore {
       case "sh"   => target.shingleBuckets
     }
 
-    val staging = s"$root/_staging/compact-${UUID.randomUUID()}"
-    val results = Seq("doc", "sh", "band", "tomb").map { kind =>
+    // per kind: (replaced bucket dirs, its write set, files read)
+    val plans = Seq("doc", "sh", "band", "tomb").flatMap { kind =>
       val files = live.filter(_.startsWith(s"p_kind=$kind/"))
-      if (files.isEmpty) (Seq.empty[String], Seq.empty[String], 0)
-      else {
-        val sized = files.map(f => f -> fs.getFileStatus(
-          new org.apache.hadoop.fs.Path(s"$dd/$f")).getLen)
-        // bucket dir ("p_kind=doc/p_b=3") → its files with sizes
-        val byBucket = sized.groupBy(_._1.split('/').take(2).mkString("/"))
-        def justified(bytes: Long): Long =
-          math.max(1L, (bytes + targetBytes - 1) / targetBytes)
-        val rewrite =
-          if (rebucket) byBucket
-          else byBucket.filter { case (_, bf) =>
-            bf.length > justified(bf.map(_._2).sum)
-          }
-        if (rewrite.isEmpty) (Seq.empty[String], Seq.empty[String], 0)
-        else {
-          val inFiles = rewrite.values.flatten.map(_._1).toSeq
-          // explicit schema: no footer-reading inference job per kind
-          // (see [[withPartCols]])
-          val df0 = spark.read.schema(withPartCols(kindSchema(kind)))
-            .option("basePath", dd)
-            .parquet(inFiles.map(f => s"$dd/$f"): _*)
-          val (df, nSub: Column) =
-            if (rebucket) {
-              // per-target-bucket bytes are unknown until the hash runs;
-              // a uniform estimate sizes the sub-splits (hash buckets are
-              // uniform by construction)
-              val totalBytes = sized.map(_._2).sum
-              val per = totalBytes / math.max(1, targetBucketCount(kind))
-              (df0.withColumn("p_b", bucketExpr(kind)),
-                lit(justified(per)))
-            } else {
-              // exact per-bucket sizing from the live file sizes
-              val pairs = rewrite.toSeq.flatMap { case (dir, bf) =>
-                val b = dir.split("p_b=")(1).toInt
-                Seq(lit(b), lit(justified(bf.map(_._2).sum)))
-              }
-              (df0, element_at(map(pairs: _*), col("p_b")))
-            }
-          df.withColumn("__sub",
-              pmod(xxhash64(subKey(kind)), nSub.cast("bigint")))
-            .repartition(col("p_b"), col("__sub"))
-            .drop("__sub")
-            .write.partitionBy("p_kind", "p_b")
-            .mode(SaveMode.Overwrite).parquet(s"$staging/$kind")
-          // rewritten files get FRESH bloom sidecars (a merged file's
-          // filter is not the union of its inputs' — it is re-sized to
-          // the merged file's row count), so the second-level prune
-          // survives every compaction and rebucket
-          val published = ManifestTable.publishFiles(spark, root,
-            s"$staging/$kind")
-          writeKindBlooms(spark, root, Seq(kind -> published))
-          (rewrite.keys.toSeq, published, inFiles.length)
+      val sized = files.map(f => f -> fs.getFileStatus(
+        new org.apache.hadoop.fs.Path(s"$dd/$f")).getLen)
+      // bucket dir ("p_kind=doc/p_b=3") → its files with sizes
+      val byBucket = sized.groupBy(_._1.split('/').take(2).mkString("/"))
+      def justified(bytes: Long): Long =
+        math.max(1L, (bytes + targetBytes - 1) / targetBytes)
+      val rewrite =
+        if (rebucket) byBucket
+        else byBucket.filter { case (_, bf) =>
+          bf.length > justified(bf.map(_._2).sum)
         }
+      if (rewrite.isEmpty) None
+      else {
+        val inFiles = rewrite.values.flatten.map(_._1).toSeq
+        val df = readWithParts(spark, root, inFiles, kind)
+        val (bucket, nSub: Column) =
+          if (rebucket) {
+            // per-target-bucket bytes are unknown until the hash runs;
+            // a uniform estimate sizes the sub-splits (hash buckets are
+            // uniform by construction)
+            val totalBytes = sized.map(_._2).sum
+            val per = totalBytes / math.max(1, targetBucketCount(kind))
+            (bucketExpr(kind), lit(justified(per)))
+          } else {
+            // exact per-bucket sizing from the live file sizes
+            val pairs = rewrite.toSeq.flatMap { case (dir, bf) =>
+              val b = dir.split("p_b=")(1).toInt
+              Seq(lit(b), lit(justified(bf.map(_._2).sum)))
+            }
+            (col("p_b"), element_at(map(pairs: _*), col("p_b")))
+          }
+        // one file per (bucket, sub-split), each with a FRESH bloom
+        // sidecar (a merged file's filter is not the union of its inputs'
+        // — it is sized to the merged file's row count), so the
+        // second-level prune survives every compaction and rebucket
+        Some((rewrite.keys.toSeq, kindSet(kind, df, bucket,
+          pmod(xxhash64(subKey(kind)), nSub.cast("bigint"))), inFiles.length))
       }
     }
-    val replacedDirs = results.flatMap(_._1)
-    val added = results.flatMap(_._2)
-    val nRewrittenIn = results.map(_._3).sum
+    val replacedDirs = plans.flatMap(_._1)
+    val nRewrittenIn = plans.map(_._3).sum
     if (replacedDirs.isEmpty && !rebucket)
       return (live.length.toLong, live.length.toLong) // nothing fragmented
+    // every rewritten kind in ONE write job, then ONE commit
+    val added = ManifestTable.writeFiles(spark, root, plans.map(_._2)).map(_._1)
     // the layout flips in the SAME commit (its meta line)
     ManifestTable.commitReplace(spark, root,
       if (rebucket) Seq("") else replacedDirs, added,
@@ -1244,8 +1230,10 @@ object CorpusStore {
     * commit: the affected files (located through the same two-level
     * bucket+Bloom index the tick reads use, so a purge touches O(requests)
     * files, never the store) are rewritten without the victim rows and
-    * swapped file-for-file ([[ManifestTable.commitRewriteFiles]]); fresh
-    * Bloom sidecars ride ahead of the commit like every other writer.
+    * swapped file-for-file ([[ManifestTable.commitRewriteFiles]]). The
+    * rewrite and the new tombstones are one write job whose fresh Bloom
+    * sidecars land with their files, ahead of the commit; each kind's
+    * written rows must equal its victim files' rows minus the victims.
     *
     * Semantics a caller must know:
     *   - EXACT copies never return (tombstoned — including md5s the store
@@ -1281,38 +1269,38 @@ object CorpusStore {
       throw new IllegalStateException(s"no committed snapshot at $root"))
     val layout = layoutOf(spark, root)
     requireCurrentExprVersion(layout, "forget")
-    val dd = ManifestTable.dataDir(root)
     def relName(abs: String): String = {
       val i = abs.lastIndexOf("p_kind=")
       require(i >= 0, s"not a store data file: $abs")
       abs.substring(i)
     }
-    // explicit schema (incl. partition cols — the rewrite repartitions on
-    // p_b): no schema-inference job per read (see [[withPartCols]])
-    def readRaw(files: Seq[String], kind: String): DataFrame =
-      spark.read.schema(withPartCols(kindSchema(kind)))
-        .option("basePath", dd)
-        .parquet(files.map(f => s"$dd/$f"): _*)
+    def shortlist(kind: String, ks: Seq[String]): Seq[String] =
+      pruneRelFiles(spark, root, kind, layout, kindFiles(spark, root, kind), ks)
+        .getOrElse(kindFiles(spark, root, kind))
 
-    // victim documents, through the index: (doc_id, text_md5, file)
-    val docShort = pruneRelFiles(spark, root, "doc", layout,
-      kindFiles(spark, root, "doc"), keys)
-      .getOrElse(kindFiles(spark, root, "doc"))
-    val victims =
-      if (docShort.isEmpty) Array.empty[(Long, String, String)]
-      else readKindFiles(spark, root, docShort, docSchema)
-        .filter(col("text_md5").isin(keys: _*))
-        .select(col("doc_id"), col("text_md5"),
-          input_file_name().as("f"))
-        .collect().map(r => (r.getLong(0), r.getString(1), relName(r.getString(2))))
-    val victimIds = victims.map(_._1).toSeq
-    val docVictimFiles = victims.map(_._3).distinct.toSeq
+    /** Of `files`, each one holding a `victim` row: file → (its rows, its
+      * victim rows, the victims' doc_ids). One aggregate per kind — the
+      * rows it counts are what the rewrite must keep.
+      */
+    def victimFiles(files: Seq[String], kind: String, victim: Column)
+        : Map[String, (Long, Long, Seq[Long])] =
+      if (files.isEmpty) Map.empty
+      else readWithParts(spark, root, files, kind)
+        .groupBy(input_file_name().as("f"))
+        .agg(count(lit(1)).as("n"), count(when(victim, 1)).as("nv"),
+          collect_set(when(victim, col("doc_id"))).as("ids"))
+        .filter(col("nv") > 0)
+        .collect().map(r => relName(r.getString(0)) ->
+          (r.getLong(1), r.getLong(2), r.getSeq[Long](3))).toMap
+
+    // victim documents, through the index
+    val docVictim = col("text_md5").isin(keys: _*)
+    val docHits = victimFiles(shortlist("doc", keys), "doc", docVictim)
+    val victimIds = docHits.values.flatMap(_._3).toSeq.distinct
 
     // tombstones to add: every requested md5 not already blocked (kept
     // victims are not in tomb — their md5s get blocked here)
-    val tombShort = pruneRelFiles(spark, root, "tomb", layout,
-      kindFiles(spark, root, "tomb"), keys)
-      .getOrElse(kindFiles(spark, root, "tomb"))
+    val tombShort = shortlist("tomb", keys)
     val already =
       if (tombShort.isEmpty) Set.empty[String]
       else readKindFiles(spark, root, tombShort, tombSchema)
@@ -1324,96 +1312,59 @@ object CorpusStore {
     if (victimIds.isEmpty && newTombs.isEmpty)
       return ForgetReport(prev, 0L, 0L, 0)
 
-    var victimSh: DataFrame = null
-    try {
-      // the victims' dedup state: shingle rows (by doc_id bucket) and the
-      // band postings derived from them with the SAME kernels the tick
-      // used, so the located band rows are exactly the stored ones
-      val shShort =
-        if (victimIds.isEmpty) Seq.empty[String]
-        else pruneRelFiles(spark, root, "sh", layout,
-          kindFiles(spark, root, "sh"), victimIds.map(_.toString))
-          .getOrElse(kindFiles(spark, root, "sh"))
-      victimSh =
-        if (shShort.isEmpty) null
-        else readKindFiles(spark, root, shShort, shSchema)
-          .filter(col("doc_id").isin(victimIds: _*))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-      val shVictimFiles =
-        if (victimSh == null) Seq.empty[String]
-        else readRaw(shShort, "sh").filter(col("doc_id").isin(victimIds: _*))
-          .select(input_file_name().as("f")).distinct()
-          .collect().map(r => relName(r.getString(0))).toSeq
-      val bandKeys =
-        if (victimSh == null) Array.empty[(Int, String)]
-        else Dedup.explodedBands(Dedup.rawSignatures(victimSh),
-          Dedup.NumHashes / Dedup.NumBands)
-          .select(col("band_id"), col("band_val")).distinct()
-          .collect().map(r => (r.getInt(0), r.getString(1)))
-      val bandByBucket: Map[Int, Seq[String]] = bandKeys.toSeq
-        .groupBy { case (id, v) => bandBucketForKey(id, v, layout) }
-        .map { case (b, kvs) => b -> kvs.map(_._2).distinct }
-      val bandShort = pruneRelFilesByBucket(spark, root,
-        kindFiles(spark, root, "band"), bandByBucket)
-      val bandVictimFiles =
-        if (bandShort.isEmpty) Seq.empty[String]
-        else readRaw(bandShort, "band").filter(col("doc_id").isin(victimIds: _*))
-          .select(input_file_name().as("f")).distinct()
-          .collect().map(r => relName(r.getString(0))).toSeq
+    // the victims' dedup state: shingle rows (by doc_id bucket) and the
+    // band postings derived from them with the SAME kernels the tick
+    // used, so the located band rows are exactly the stored ones
+    val idVictim = col("doc_id").isin(victimIds: _*)
+    val shHits =
+      if (victimIds.isEmpty) Map.empty[String, (Long, Long, Seq[Long])]
+      else victimFiles(shortlist("sh", victimIds.map(_.toString)), "sh",
+        idVictim)
+    val bandKeys =
+      if (shHits.isEmpty) Array.empty[(Int, String)]
+      else Dedup.explodedBands(Dedup.rawSignatures(
+          readKindFiles(spark, root, shHits.keys.toSeq, shSchema)
+            .filter(idVictim)),
+        Dedup.NumHashes / Dedup.NumBands)
+        .select(col("band_id"), col("band_val")).distinct()
+        .collect().map(r => (r.getInt(0), r.getString(1)))
+    val bandByBucket: Map[Int, Seq[String]] = bandKeys.toSeq
+      .groupBy { case (id, v) => bandBucketForKey(id, v, layout) }
+      .map { case (b, kvs) => b -> kvs.map(_._2).distinct }
+    val bandHits = victimFiles(pruneRelFilesByBucket(spark, root,
+      kindFiles(spark, root, "band"), bandByBucket), "band", idVictim)
 
-      // rewrite the affected files without the victim rows; tomb additions
-      // ride the same staging → ONE commit flips everything
-      val staging = s"$root/_staging/${UUID.randomUUID()}"
-      val toRewrite = Seq(
-        "doc" -> (docVictimFiles, col("text_md5").isin(keys: _*)),
-        "sh" -> (shVictimFiles, col("doc_id").isin(victimIds: _*)),
-        "band" -> (bandVictimFiles, col("doc_id").isin(victimIds: _*)))
-      val survivorCounts = toRewrite.map { case (kind, (files, victim)) =>
-        if (files.isEmpty) kind -> 0L
-        else {
-          val df = readRaw(files, kind).filter(!victim)
-          df.repartition(col("p_b"))
-            .write.partitionBy("p_kind", "p_b")
-            .mode(SaveMode.Overwrite).parquet(s"$staging/$kind")
-          kind -> df.count()
-        }
-      }.toMap
-      if (newTombs.nonEmpty) {
-        import spark.implicits._
-        newTombs.toDF("text_md5")
-          .withColumn("p_kind", lit("tomb"))
-          .withColumn("p_b", md5Bucket(col("text_md5"), layout))
-          .repartition(col("p_b"))
-          .write.partitionBy("p_kind", "p_b")
-          .mode(SaveMode.Overwrite).parquet(s"$staging/tomb")
-      }
-      val byKind = Seq("doc", "sh", "band", "tomb")
-        .map(k => k -> ManifestTable.publishFiles(spark, root, s"$staging/$k"))
-      // publish integrity, the tick's contract: staged survivors must all
-      // arrive — a purge that silently dropped NON-victim rows on the way
-      // would be data loss wearing a compliance hat
-      byKind.foreach { case (kind, published) =>
-        if (kind != "tomb") {
-          val nPub =
-            if (published.isEmpty) 0L
-            else readRaw(published, kind).count()
-          require(nPub == survivorCounts(kind),
-            s"purge rewrite of kind $kind published $nPub rows, expected " +
-              s"${survivorCounts(kind)} — staged files vanished before " +
-              "publish; is another writer's housekeeping running?")
-        }
-      }
-      writeKindBlooms(spark, root, byKind)
-      val removed = (docVictimFiles ++ shVictimFiles ++ bandVictimFiles).distinct
-      val v = ManifestTable.commitRewriteFiles(spark, root, removed,
-        byKind.flatMap(_._2).map(ManifestTable.FileEntry(_)),
-        meta = Map("layout" -> layout.render))
-      ManifestTable.vacuum(spark, root, retainSnapshots, deep = false)
-      ForgetReport(v, victimIds.size.toLong, newTombs.size.toLong,
-        removed.size)
-    } finally {
-      if (victimSh != null) victimSh.unpersist()
+    // ONE write job: the affected files rewritten without the victim rows
+    // (same buckets) plus the new tombstones, then ONE commit flips all
+    import spark.implicits._
+    val rewrites = Seq(("doc", docHits, docVictim), ("sh", shHits, idVictim),
+      ("band", bandHits, idVictim)).filter(_._2.nonEmpty)
+    val written = ManifestTable.writeFiles(spark, root,
+      rewrites.map { case (kind, hits, victim) =>
+        kindSet(kind, readWithParts(spark, root, hits.keys.toSeq, kind)
+          .filter(!victim), col("p_b"))
+      } ++ (if (newTombs.isEmpty) Nil
+        else Seq(kindSet("tomb", newTombs.toDF("text_md5"),
+          md5Bucket(col("text_md5"), layout)))))
+    // a purge that silently dropped NON-victim rows on the way would be
+    // data loss wearing a compliance hat: every kind's rewrite must hold
+    // exactly its files' rows minus their victim rows
+    rewrites.foreach { case (kind, hits, _) =>
+      val expected = hits.values.map { case (n, nv, _) => n - nv }.sum
+      require(rowsOf(written, kind) == expected,
+        s"purge rewrite of kind $kind wrote ${rowsOf(written, kind)} rows, " +
+          s"expected $expected")
     }
+    require(rowsOf(written, "tomb") == newTombs.size,
+      s"purge wrote ${rowsOf(written, "tomb")} tombstones, expected " +
+        s"${newTombs.size}")
+    val removed = rewrites.flatMap(_._2.keys).distinct
+    val v = ManifestTable.commitRewriteFiles(spark, root, removed,
+      written.map(w => ManifestTable.FileEntry(w._1)),
+      meta = Map("layout" -> layout.render))
+    ManifestTable.vacuum(spark, root, retainSnapshots, deep = false)
+    ForgetReport(v, victimIds.size.toLong, newTombs.size.toLong,
+      removed.size)
   }
 
   /** [[forget]] composed with the vector index [[tickWithIndex]] maintains

@@ -6,7 +6,19 @@ import java.util.UUID
 import scala.collection.mutable.ListBuffer
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.mapreduce.{JobID, TaskAttemptID, TaskID, TaskType}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.ColumnIOFactory
+import org.apache.parquet.schema.{MessageType, PrimitiveType}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetWriteSupport}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.util.sketch.BloomFilter
 
 /** A commit lost its race: the target manifest version was taken (or the
   * store moved past the version the commit was planned against). The
@@ -30,9 +42,11 @@ final class CommitConflictException(msg: String)
   * }}}
   *
   * Protocol (write side):
-  *   1. publish: move freshly-written files into `data/` under their
-  *      partition dirs. File names carry Spark's per-job UUID, so versions
-  *      never collide and published-but-uncommitted files are invisible.
+  *   1. publish: put freshly-written files into `data/` under their
+  *      partition dirs — either [[writeFiles]] writing them there directly
+  *      (one job, sidecars included) or a staged Spark write moved there
+  *      by [[publishFiles]]. File names carry a UUID, so versions never
+  *      collide and published-but-uncommitted files are invisible.
   *   2. commit: write the next manifest to a temp name, then one atomic
   *      `rename` — the ONLY mutation readers can observe. A crash anywhere
   *      before it leaves the previous snapshot fully intact (orphan files
@@ -67,7 +81,7 @@ object ManifestTable {
     * unchanged. Membership metadata (Bloom filters) deliberately does NOT
     * live in the manifest: filter bytes scale with ROW count, a manifest
     * must stay O(file count) to be readable in full by every planner —
-    * see [[writeFileBlooms]] for the sidecar-file form.
+    * see [[writeFiles]] for the sidecar-file form.
     */
   case class FileEntry(path: String, stats: Map[String, (Long, Long)] = Map.empty)
 
@@ -91,24 +105,6 @@ object ManifestTable {
         FileEntry(parts(0), stats)
     }
 
-  /** Java-serializable Hadoop `Configuration` carrier, so a distributed
-    * job's tasks can open the SAME filesystem the driver resolved (with
-    * its credentials/endpoints) — `Configuration` itself is only Writable.
-    */
-  private class SerializableHadoopConf(
-      @transient var value: org.apache.hadoop.conf.Configuration)
-      extends Serializable {
-    private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-      out.defaultWriteObject()
-      value.write(out)
-    }
-    private def readObject(in: java.io.ObjectInputStream): Unit = {
-      in.defaultReadObject()
-      value = new org.apache.hadoop.conf.Configuration(false)
-      value.readFields(in)
-    }
-  }
-
   /** Bloom sidecar of data file `relFile`: `_blooms/<relFile>.bloom`.
     * Membership skipping for point-lookup workloads where min/max stats
     * cannot prune (uniform hashes: the CorpusStore's text_md5 / band_val
@@ -122,82 +118,185 @@ object ManifestTable {
   private def bloomPath(root: String, relFile: String): Path =
     new Path(s"$root/_blooms/$relFile.bloom")
 
-  /** Build and persist the Bloom sidecar of every file in `relFiles`
-    * (paths relative to `data/`), over string key column `column`. ONE
-    * distributed job however many files — (file, key) pairs group by file,
-    * each group STREAMS into a filter pre-sized from the file's footer row
-    * count (never materialized: a compacted file holds millions of keys)
-    * and the TASK writes the sidecar, so filter bytes never funnel through
-    * the driver
-    * (a full-store compaction rewrite would otherwise stream O(store rows)
-    * through it). Sidecars land before the commit that makes their data
-    * files live; a crash in between leaves orphans [[vacuum]] reclaims.
+  /** One set of rows for [[writeFiles]]: `columns` of `rows` are the
+    * files' data columns, in order (their types are the written schema);
+    * `dir`, over any column of `rows`, places each row's file (a
+    * `data/`-relative directory such as `p_kind=doc/p_b=3`, or "" for
+    * `data/` itself), and rows with equal (`dir`, `split`) share one file.
+    * `bloomKey` names the data column each file's Bloom sidecar indexes.
     */
-  def writeFileBlooms(spark: SparkSession, root: String, relFiles: Seq[String],
-                      column: String, fpp: Double = 0.01): Unit =
-    writeFileBloomGroups(spark, root, Seq((relFiles, column, None)), fpp)
+  case class WriteSet(rows: DataFrame, columns: Seq[String], dir: Column,
+                      split: Column, bloomKey: Option[String])
 
-  /** [[writeFileBlooms]] over several (files, key column) groups — e.g. one
-    * commit's doc/tomb/band/sh file sets, each probed by a different
-    * column — as ONE distributed job: the per-group (file, key) streams
-    * union before the group-by-file fold, so a tick pays one job's fixed
-    * overhead for all of its kinds' sidecars instead of one per kind.
-    * Each file's filter is pre-sized from its parquet footer's row count
-    * (one concurrent metadata read per file, the [[footerMeta]] pass) and
-    * the task STREAMS keys into it — a compacted file holds millions of
-    * rows, and materializing its keys before sizing would OOM the task.
+  /** Write `sets` straight into `data/` as ONE Spark job and return every
+    * written file as (path relative to `data/`, rows). Rows shuffle to
+    * their (set, dir, split) group and sort by it; each task streams every
+    * group it holds into one uniquely named `part-<uuid>` file through
+    * Spark's own parquet `OutputWriterFactory` (the encoding and footer
+    * metadata of a `df.write`) and writes the file's Bloom sidecar in the
+    * same task, sized from the exact row count it just wrote (fpp 0.01).
+    * A group's keys are buffered up to [[BloomBufferedKeys]]; a larger
+    * group (a compaction-sized file) builds its filter from a task-local
+    * read-back of the closed file's key column instead ([[readBackKeys]]).
+    * No staging, no rename, no footer pass and no sidecar job: the files
+    * are invisible until a commit lists them. A failed task attempt
+    * deletes the files it wrote; files of a job that fails as a whole, or
+    * of a writer whose commit never happens, are crash orphans the deep
+    * [[vacuum]] reclaims. Each set's plan should be exchange-free (a cut or
+    * a scan) for the write to stay one job.
     */
-  def writeFileBloomGroups(spark: SparkSession, root: String,
-                           groups: Seq[(Seq[String], String,
-                             Option[org.apache.spark.sql.types.StructType])],
-                           fpp: Double = 0.01): Unit = {
-    val nonEmpty = groups.filter(_._1.nonEmpty)
-    if (nonEmpty.isEmpty) return
-    import spark.implicits._
-    val dataRoot = dataDir(root)
-    // qualified through the filesystem so a RELATIVE root still strips
-    // against input_file_name's absolute URI path
-    val dataPath = fsOf(spark, dataRoot)
-      .makeQualified(new Path(dataRoot)).toUri.getPath
-    val bloomRoot = s"$root/_blooms"
-    val conf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
-    val rowsOf: Map[String, Long] =
-      nonEmpty.flatMap { case (relFiles, _, _) =>
-        footerMeta(spark, dataRoot, relFiles, Seq.empty)
-          .map { case (e, n) => e.path -> n }
-      }.toMap
-    val rowsOfB = spark.sparkContext.broadcast(rowsOf)
-    nonEmpty.map { case (relFiles, column, schemaOpt) =>
-      // a supplied schema (callers that own their file schemas, e.g. the
-      // CorpusStore kinds) skips the per-group footer-reading
-      // schema-inference job the bare parquet() read pays
-      val rd = schemaOpt.fold(spark.read)(spark.read.schema)
-      rd.parquet(relFiles.map(f => s"$dataRoot/$f"): _*)
-        .select(org.apache.spark.sql.functions.input_file_name().as("f"),
-          org.apache.spark.sql.functions.col(column).cast("string").as("k"))
-        .as[(String, String)]
-    }
-      .reduce(_ union _)
-      .groupByKey(_._1)
-      .mapGroups { (file, it) =>
-        // input_file_name is a URI; re-relativize against data/. A prefix
-        // mismatch must fail loudly — a silently misplaced sidecar reads
-        // back as "no filter" and disables pruning with no error anywhere
-        val uriPath = new Path(file).toUri.getPath
-        require(uriPath.startsWith(dataPath),
-          s"bloom sidecar path $uriPath escapes data root $dataPath")
-        val rel = uriPath.stripPrefix(dataPath).stripPrefix("/")
-        val bf = org.apache.spark.util.sketch.BloomFilter
-          .create(math.max(rowsOfB.value.getOrElse(rel, 1L << 20), 16L), fpp)
-        it.foreach(kv => bf.putString(kv._2))
-        val dest = new Path(s"$bloomRoot/$rel.bloom")
-        val fs = dest.getFileSystem(conf.value)
-        val out = fs.create(dest, true)
-        try bf.writeTo(out) finally out.close()
-        rel
+  def writeFiles(spark: SparkSession, root: String,
+                 sets: Seq[WriteSet]): Seq[(String, Long)] = {
+    if (sets.isEmpty) return Seq.empty
+    val (dataBase, bloomBase) = writeBases(spark, root)
+    // each set projected to (data columns…, dir, split)
+    val projected = sets.map(s => s.rows.select(s.columns.map(col) ++
+      Seq(s.dir.cast("string"), s.split.cast("int")): _*))
+    val schemas = projected.zip(sets).map { case (p, s) =>
+      StructType(p.schema.fields.take(s.columns.length))
+    }.toArray
+    val keyCols = sets.zip(schemas)
+      .map { case (s, sch) => s.bloomKey.map(sch.fieldIndex).getOrElse(-1) }
+    val format = new ParquetFileFormat()
+    val job = org.apache.hadoop.mapreduce.Job.getInstance(format.getHadoopConf(spark))
+    val factory = format.prepareWrite(spark, job, Map.empty, schemas.head)
+    val conf = new org.apache.spark.util.SerializableConfiguration(job.getConfiguration)
+    val rows = spark.sparkContext.union(projected.zipWithIndex.map { case (p, i) =>
+      val n = schemas(i).length
+      p.queryExecution.toRdd.mapPartitions { it =>
+        // the parquet writer writes every field of the row it is handed
+        val data = UnsafeProjection.create(schemas(i).fields.toSeq.zipWithIndex
+          .map { case (f, j) => BoundReference(j, f.dataType, f.nullable) })
+        it.map(r => ((i, r.getUTF8String(n).toString, r.getInt(n + 1)),
+          data(r).copy()))
       }
-      .collect()  // force the job; result is just the rel paths written
-    rowsOfB.destroy()
+    })
+    rows.repartitionAndSortWithinPartitions(
+        new org.apache.spark.HashPartitioner(spark.sparkContext.defaultParallelism))
+      .mapPartitions { it =>
+        val tc = org.apache.spark.TaskContext.get()
+        val fs = new Path(dataBase).getFileSystem(conf.value)
+        val done = ListBuffer.empty[(String, Long)]
+        var open: String = null // the file being written
+        tc.addTaskFailureListener { (_, _) =>
+          dropFiles(fs, dataBase, bloomBase, (done.map(_._1) ++ Option(open)).toSeq)
+        }
+        // one task-attempt context per set: the set's schema rides its conf
+        val ctx = schemas.indices.map { i =>
+          val c = new org.apache.hadoop.conf.Configuration(conf.value)
+          ParquetWriteSupport.setSchema(schemas(i), c)
+          new TaskAttemptContextImpl(c, new TaskAttemptID(new TaskID(
+            new JobID("graft", tc.stageId()), TaskType.MAP, tc.partitionId()),
+            tc.attemptNumber()))
+        }
+        var set = -1
+        var w: org.apache.spark.sql.execution.datasources.OutputWriter = null
+        var n = 0L
+        var keys = ListBuffer.empty[Array[Byte]] // null past BloomBufferedKeys
+        def finish(): Unit = if (w != null) {
+          w.close()
+          if (keyCols(set) >= 0) {
+            val bf = BloomFilter.create(math.max(n, 16L), 0.01)
+            if (keys != null) keys.foreach(bf.putBinary)
+            else readBackKeys(conf.value, new Path(s"$dataBase/$open"),
+              schemas(set)(keyCols(set)).name)(bf.putBinary)
+            val out = fs.create(new Path(s"$bloomBase/$open.bloom"), true)
+            try bf.writeTo(out) finally out.close()
+          }
+          done += open -> n
+          open = null
+          w = null
+        }
+        var cur: (Int, String, Int) = null
+        it.foreach { case (k, r) =>
+          if (k != cur) {
+            finish()
+            cur = k
+            set = k._1
+            val name = s"part-${UUID.randomUUID()}${factory.getFileExtension(ctx(set))}"
+            open = if (k._2.isEmpty) name else s"${k._2}/$name"
+            w = factory.newInstance(s"$dataBase/$open", schemas(set), ctx(set))
+            n = 0L
+            keys = ListBuffer.empty
+          }
+          w.write(r)
+          n += 1
+          val kc = keyCols(set)
+          if (kc >= 0 && keys != null && !r.isNullAt(kc)) {
+            // the bytes `putString` hashes: a string's UTF-8, else its text
+            keys += (if (schemas(set)(kc).dataType == StringType)
+              r.getUTF8String(kc).getBytes
+            else r.get(kc, schemas(set)(kc).dataType).toString
+              .getBytes(StandardCharsets.UTF_8))
+            if (keys.size > BloomBufferedKeys) keys = null
+          }
+        }
+        finish()
+        done.iterator
+      }
+      .collect().toSeq
+  }
+
+  /** Keys a writer task buffers per file for its Bloom sidecar; a file
+    * with more rows re-reads its key column instead ([[readBackKeys]]).
+    */
+  private val BloomBufferedKeys = 1 << 18
+
+  private def writeBases(spark: SparkSession, root: String): (String, String) = {
+    val fs = fsOf(spark, root)
+    (fs.makeQualified(new Path(dataDir(root))).toString,
+      fs.makeQualified(new Path(s"$root/_blooms")).toString)
+  }
+
+  private def dropFiles(fs: FileSystem, dataBase: String, bloomBase: String,
+                        rels: Seq[String]): Unit =
+    rels.foreach { rel =>
+      try {
+        fs.delete(new Path(s"$dataBase/$rel"), false)
+        fs.delete(new Path(s"$bloomBase/$rel.bloom"), false)
+      } catch { case scala.util.control.NonFatal(_) => () }
+    }
+
+  /** Delete [[writeFiles]] output no commit will list (a lost commit race)
+    * with its sidecars — best effort; the deep [[vacuum]] is the backstop.
+    */
+  def deleteWritten(spark: SparkSession, root: String,
+                    rels: Seq[String]): Unit = {
+    val (dataBase, bloomBase) = writeBases(spark, root)
+    dropFiles(fsOf(spark, root), dataBase, bloomBase, rels)
+  }
+
+  /** Feed `f` the UTF-8 bytes of every non-null `key` value of parquet file
+    * `path` (a string column's bytes, any other type's decimal text — the
+    * `cast("string")` form), reading that one column only — the sidecar's
+    * key stream for a file too large to buffer its keys while writing.
+    */
+  private[graft] def readBackKeys(conf: org.apache.hadoop.conf.Configuration,
+                                  path: Path, key: String)
+                                 (f: Array[Byte] => Unit): Unit = {
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf))
+    try {
+      val file = r.getFooter.getFileMetaData.getSchema
+      val field = file.getType(file.getFieldIndex(key))
+      val proj = new MessageType(file.getName, field)
+      val isBinary = field.asPrimitiveType.getPrimitiveTypeName ==
+        PrimitiveType.PrimitiveTypeName.BINARY
+      r.setRequestedSchema(proj)
+      var pages = r.readNextRowGroup()
+      while (pages != null) {
+        val records = new ColumnIOFactory().getColumnIO(proj)
+          .getRecordReader(pages, new GroupRecordConverter(proj))
+        var i = 0L
+        while (i < pages.getRowCount) {
+          val g = records.read()
+          if (g.getFieldRepetitionCount(0) > 0)
+            f(if (isBinary) g.getBinary(0, 0).getBytes
+              else g.getValueToString(0, 0).getBytes(StandardCharsets.UTF_8))
+          i += 1
+        }
+        pages = r.readNextRowGroup()
+      }
+    } finally r.close()
   }
 
   /** Driver-side sidecar LRU keyed by `root/relFile`, bounded by DECODED
@@ -213,10 +312,8 @@ object ManifestTable {
   private val BloomCacheMaxBytes = 256L << 20
   private var bloomCacheBytes = 0L
   private val bloomCache =
-    new java.util.LinkedHashMap[String,
-        Option[org.apache.spark.util.sketch.BloomFilter]](64, 0.75f, true)
-  private def bloomWeight(
-      v: Option[org.apache.spark.util.sketch.BloomFilter]): Long =
+    new java.util.LinkedHashMap[String, Option[BloomFilter]](64, 0.75f, true)
+  private def bloomWeight(v: Option[BloomFilter]): Long =
     v.map(_.bitSize() / 8 + 64L).getOrElse(64L)
 
   /** The Bloom sidecar of `relFile`, if one exists and decodes. `None`
@@ -225,7 +322,7 @@ object ManifestTable {
     * a healthy filter.
     */
   def readBloom(spark: SparkSession, root: String,
-                relFile: String): Option[org.apache.spark.util.sketch.BloomFilter] = {
+                relFile: String): Option[BloomFilter] = {
     val key = s"$root/$relFile"
     val cached = bloomCache.synchronized(Option(bloomCache.get(key)))
     cached.getOrElse {
@@ -259,7 +356,7 @@ object ManifestTable {
           // re-reading the same bytes on every probe can never succeed and
           // would re-pay the IO forever.
           val loaded = bytes.flatMap { bs =>
-            try Some(org.apache.spark.util.sketch.BloomFilter.readFrom(
+            try Some(BloomFilter.readFrom(
               new java.io.ByteArrayInputStream(bs)))
             catch { case scala.util.control.NonFatal(_) => None }
           }
@@ -288,7 +385,7 @@ object ManifestTable {
     * exactly [[readBloom]]'s, which is thread-safe.
     */
   def readBlooms(spark: SparkSession, root: String, relFiles: Seq[String])
-      : Map[String, Option[org.apache.spark.util.sketch.BloomFilter]] = {
+      : Map[String, Option[BloomFilter]] = {
     val cold = relFiles.filter(f =>
       bloomCache.synchronized(bloomCache.get(s"$root/$f") == null))
     if (cold.size > 1) {
@@ -553,9 +650,8 @@ object ManifestTable {
           relFiles.map { rel =>
             new java.util.concurrent.Callable[(FileEntry, Long)] {
               def call(): (FileEntry, Long) = {
-                val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-                  org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-                    new Path(s"$dataRoot/$rel"), hconf))
+                val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+                  new Path(s"$dataRoot/$rel"), hconf))
                 try {
                   val blocks = r.getFooter.getBlocks.asScala
                   val stats = statCols.flatMap { c =>
@@ -899,7 +995,7 @@ object ManifestTable {
     * overwriting; the loser can re-read and retry (`CommitRaceSpec` pins
     * no-lost-update under concurrent retrying committers). Store-level
     * writers ([[CorpusStore]] ticks) still assume external serialization
-    * for their staging/vacuum housekeeping; this guard is what turns a
+    * for their vacuum housekeeping; this guard is what turns a
     * violated assumption into a loud failure instead of a lost manifest.
     */
   def commitEntries(spark: SparkSession, root: String,

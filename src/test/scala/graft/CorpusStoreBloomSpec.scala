@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SaveMode
-import org.apache.spark.sql.functions.{col, md5}
+import org.apache.spark.sql.functions.{col, lit, md5}
 
 import graft.operators.{CorpusStore, ManifestTable}
 import graft.operators.CorpusStore.StoreLayout
@@ -197,13 +196,15 @@ class CorpusStoreBloomSpec extends SparkSpec {
     "one reads None (always kept); legacy manifest tail fields parse") {
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("graft_bloomrt").toString
-    val staging = s"$root/_staging/${java.util.UUID.randomUUID()}"
-    (0L to 99L).toDF("seq").withColumn("k", md5(col("seq").cast("string")))
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(staging)
-    val added = ManifestTable.publishFiles(spark, root, staging)
-    // sidecars land BEFORE the commit (the writers' protocol — readBloom
-    // caches misses on the strength of it)
-    ManifestTable.writeFileBlooms(spark, root, added, "k")
+    // the writer lands each sidecar with its data file, BEFORE the commit
+    // (the writers' protocol — readBloom caches misses on the strength of it)
+    def write(from: Long, bloomKey: Option[String]): Seq[String] =
+      ManifestTable.writeFiles(spark, root, Seq(ManifestTable.WriteSet(
+        (from to from + 99L).toDF("seq")
+          .withColumn("k", md5(col("seq").cast("string"))),
+        Seq("seq", "k"), lit(""), lit(0), bloomKey))).map(_._1)
+    val added = write(0L, Some("k"))
+    assert(added.size == 1, s"one group must write one file: $added")
     ManifestTable.commitReplace(spark, root, Seq.empty, added)
     val bf = ManifestTable.readBloom(spark, root, added.head)
     assert(bf.nonEmpty, "sidecar did not round-trip")
@@ -222,10 +223,7 @@ class CorpusStoreBloomSpec extends SparkSpec {
 
     // a committed file that never got a sidecar reads None, so the prune
     // keeps it (skipping must be provably safe)
-    val staging2 = s"$root/_staging/${java.util.UUID.randomUUID()}"
-    (100L to 199L).toDF("seq").withColumn("k", md5(col("seq").cast("string")))
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(staging2)
-    val added2 = ManifestTable.publishFiles(spark, root, staging2)
+    val added2 = write(100L, None)
     ManifestTable.commitReplace(spark, root, Seq.empty, added2)
     assert(ManifestTable.readBloom(spark, root, added2.head).isEmpty,
       "phantom sidecar for a file that never wrote one")

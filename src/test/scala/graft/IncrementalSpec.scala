@@ -260,16 +260,16 @@ class IncrementalSpec extends SparkSpec {
   test("two-tier vacuum: the cheap tier reclaims aged-out files (and " +
     "their bloom sidecars) by manifest arithmetic alone; crash orphans " +
     "wait for the deep sweep") {
-    import org.apache.spark.sql.SaveMode
     val root = java.nio.file.Files.createTempDirectory("graft_vac").toString
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // one data file plus its bloom sidecar, written straight into data/
+    def writeFresh(tag: Long): Seq[String] =
+      ManifestTable.writeFiles(spark, root, Seq(ManifestTable.WriteSet(
+        spark.range(tag, tag + 10).toDF("k"), Seq("k"), lit(""), lit(0),
+        Some("k")))).map(_._1)
     def commitFresh(tag: Long): Seq[String] = {
-      val staging = s"$root/_staging/${java.util.UUID.randomUUID()}"
-      spark.range(tag, tag + 10).toDF("k")
-        .coalesce(1).write.mode(SaveMode.Overwrite).parquet(staging)
-      val added = ManifestTable.publishFiles(spark, root, staging)
-      ManifestTable.writeFileBlooms(spark, root, added, "k")
+      val added = writeFresh(tag)
       // empty prefix: each commit REPLACES the whole previous snapshot,
       // so version N's files are referenced by version N alone
       ManifestTable.commitReplace(spark, root, Seq(""), added)
@@ -280,11 +280,8 @@ class IncrementalSpec extends SparkSpec {
         s"${ManifestTable.dataDir(root)}/$rel"))
 
     val v1Files = commitFresh(0L)
-    // a crash orphan: published (sidecar and all) but never committed
-    val orphanStaging = s"$root/_staging/${java.util.UUID.randomUUID()}"
-    spark.range(100L, 110L).toDF("k")
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(orphanStaging)
-    val orphan = ManifestTable.publishFiles(spark, root, orphanStaging)
+    // a crash orphan: written (sidecar and all) but never committed
+    val orphan = writeFresh(100L)
 
     commitFresh(10L)
     val v3Files = commitFresh(20L)
