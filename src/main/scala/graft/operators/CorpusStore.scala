@@ -12,12 +12,16 @@ import org.apache.spark.storage.StorageLevel
   * of [[Orchestrator]]'s market-data loop:
   *
   *   per arriving batch ([[tick]]): quality gate → within-batch exact dedup
-  *   (first arrival wins) → exact-vs-store dedup (md5 anti-join against the
-  *   kept md5s AND the dropped-doc tombstones, file-pruned) → near-dup-vs-
-  *   store dedup (band prune + exact-Jaccard verification, file-pruned) →
-  *   within-batch near-dup components → ONE write job of the keepers'
-  *   rows plus their dedup state, made live by ONE atomic commit; on
-  *   demand ([[manifest]]): the packed
+  *   (first arrival wins) → exact-vs-store dedup (the batch md5s probed
+  *   against the kept md5s AND the dropped-doc tombstones, file-pruned) →
+  *   near-dup-vs-store dedup (band-key probe + exact-Jaccard verification
+  *   of the candidate pairs, file-pruned) → within-batch near-dup
+  *   components → ONE write job of the keepers' rows plus their dedup
+  *   state, made live by ONE atomic commit. Filter then verify: the
+  *   driver decides every document's fate from batch-bounded key sets
+  *   (ids, md5s, band keys, candidate pairs), and Spark only computes the
+  *   batch features, probes the pruned store files and verifies pairs —
+  *   a handful of jobs per tick. On demand ([[manifest]]): the packed
   *   per-shard training manifest rebuilt from the accumulated keepers
   *   through the SAME stage 2–7 tail as [[Corpus.corpusPipeline]].
   *
@@ -48,17 +52,17 @@ import org.apache.spark.storage.StorageLevel
   *     of joining a full corpus-wide shingle scan.
   *
   * Scale shape: per-tick INPUT is O(touched buckets), not O(store) — the
-  * store is never rewritten (appends only), never reshuffled (batch sides
-  * broadcast into semi-joins evaluated inside the pruned scans), and the
-  * text-scale columns (text, shingles) are only read from partitions the
-  * batch actually touches (spec-asserted: every tick scan's file list ⊆
-  * the batch-touched partitions). Per-doc tick cost is O(store/buckets)
-  * bytes instead of O(store); raise the bucket constants for production
-  * stores (they are baked into the directory layout — changing them is a
-  * [[compact]]-with-rebucket, not a config flip). The skew cap stays
-  * EXACT under pruning: the band semi-join keys on the full
-  * (band_id, band_val), so it keeps or drops whole buckets and counting
-  * the surviving rows equals counting the original corpus bucket.
+  * store is never rewritten (appends only), never reshuffled (the batch's
+  * md5s, band keys and candidate ids filter the pruned scans as literal
+  * sets), and the text-scale columns (text, shingles) are only read from
+  * partitions the batch actually touches (spec-asserted: every tick
+  * scan's file list ⊆ the batch-touched partitions). Per-doc tick cost is
+  * O(store/buckets) bytes instead of O(store); raise the bucket constants
+  * for production stores (they are baked into the directory layout —
+  * changing them is a [[compact]]-with-rebucket, not a config flip). The
+  * skew cap stays EXACT under pruning: the prune skips only files that cannot hold a
+  * probed (band_id, band_val), so each probed bucket is read whole and
+  * its count is the store's bucket size.
   *
   * Convergence contract (spec-asserted): driving the doc_id % nWaves wave
   * slices through [[tick]] in arrival order yields a store — and a
@@ -680,90 +684,18 @@ object CorpusStore {
            retainSnapshots: Int = ManifestTable.RetainSnapshots,
            layoutIfNew: Option[StoreLayout] = None): TickReport =
     tickCollecting(rawBatch, root, tickId, minQuality, threshold, cap,
-      collectKeeperIds = false, retainSnapshots, layoutIfNew)._1
+      retainSnapshots, layoutIfNew)._1
 
-  /** Near-dup-vs-store: banded candidates off the store's band postings
-    * (file-pruned to the buckets the batch's band values hash to), skew-
-    * capped on the TRUE corpus bucket sizes, verified against shingle
-    * rows fetched from the candidates' doc_id buckets only. Returns the
-    * distinct duplicated batch doc_ids, PERSISTED and materialized (the
-    * caller unpersists after its downstream consumption) — the
-    * intermediates release before returning, the long-running-loop cache
-    * discipline.
-    */
-  private def prunedStoreDupIds(batchSigs: DataFrame, root: String,
-                                threshold: Double, cap: Int,
-                                layout: StoreLayout): DataFrame = {
-    val spark = batchSigs.sparkSession
-    val rowsPerBand = Dedup.NumHashes / Dedup.NumBands
-    val batchBands = Dedup.explodedBands(batchSigs, rowsPerBand)
-    // persisted: feeds the bucket collect, the semi-join broadcast, and
-    // the candidate join — unpersisted, the 16-hash banding re-runs thrice
-    val batchKeys = batchBands.select(col("band_id"), col("band_val"))
-      .distinct().persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      // (band_val → bucket) map for the two-level prune (dirs, then the
-      // per-file band_val blooms). The bucket already encodes band_id, so
-      // probing by band_val alone within a bucket is exact enough — a
-      // cross-band band_val collision lands in a different bucket dir.
-      val keysByBucket = batchKeys
-        .select(col("band_val"),
-          bandBucket(col("band_id"), col("band_val"), layout).as("b"))
-        .distinct().collect()
-        .groupBy(_.getInt(1))
-        .map { case (b, rows) => b -> rows.toSeq.map(_.getString(0)) }
-      val storeBands = readKindFiles(spark, root,
-        bloomPrunedKindFiles(spark, root, "band", keysByBucket), bandSchema)
-      val touched = storeBands.join(broadcast(batchKeys),
-        Seq("band_id", "band_val"), "left_semi")
-      val capped = Dedup.capBuckets(touched, Seq("band_id", "band_val"), cap)
-      // spreadDistinct: one exchange dedups AND spreads the pair key (the
-      // verifyCandidates contract — the verify stage no longer repartitions)
-      val candidates = Dedup.spreadDistinct(
-        batchBands.as("n")
-          .join(capped.as("c"), Seq("band_id", "band_val"))
-          .select(col("n.doc_id").as("new_id"), col("c.doc_id").as("dup_of")),
-        "new_id", "dup_of").persist(StorageLevel.MEMORY_AND_DISK)
-      try {
-        // the candidates' (doc_id → bucket) map, same two-level prune as
-        // the exact check: bucket dirs bound the shortlist, the per-file
-        // doc_id blooms skip the bucket's files that hold only OTHER
-        // docs' shingle rows. Collect is the same cardinality as the
-        // bucket-only collect this replaced (capped candidate set).
-        val idsByBucket = candidates
-          .select(col("dup_of"), shingleBucket(col("dup_of"), layout).as("b"))
-          .distinct().collect()
-          .groupBy(_.getInt(1))
-          .map { case (b, rows) => b -> rows.toSeq.map(_.getLong(0).toString) }
-        val candShingles = readKindFiles(spark, root,
-          bloomPrunedKindFiles(spark, root, "sh", idsByBucket), shSchema)
-          .join(broadcast(
-            candidates.select(col("dup_of").as("doc_id")).distinct()),
-            Seq("doc_id"), "left_semi")
-        // stageCut, not persist: the dup-id plan embeds the candidate
-        // chain + the pruned shingle read — cut it so the caller's anti
-        // join (and every action after it) plans over a leaf
-        val dup = stageCut(Dedup.verifyCandidates(candidates,
-          batchSigs.select(col("doc_id"), col("shingles")), candShingles,
-          threshold)
-          .select(col("new_id").as("doc_id")).distinct())
-        dup.count()
-        dup
-      } finally candidates.unpersist()
-    } finally batchKeys.unpersist()
-  }
-
-  /** [[tick]] plus the tick's keeper doc_ids collected to the driver
-    * (batch-bounded, the broadcast-id-guard sizing contract) —
-    * [[tickWithIndex]]'s fresh path consumes them so the index step needs
-    * no store scan. Empty when skipped or when nothing was kept.
+  /** [[tick]] plus the tick's keeper doc_ids, which the tick decides on the
+    * driver anyway — [[tickWithIndex]]'s fresh path consumes them so the
+    * index step needs no store scan. Empty when skipped or when nothing
+    * was kept.
     */
   private def tickCollecting(rawBatch: DataFrame, root: String,
                              tickId: Option[String],
                              minQuality: Double,
                              threshold: Double,
                              cap: Int,
-                             collectKeeperIds: Boolean,
                              retainSnapshots: Int = ManifestTable.RetainSnapshots,
                              layoutIfNew: Option[StoreLayout] = None)
       : (TickReport, Array[Long]) = {
@@ -785,7 +717,7 @@ object CorpusStore {
     var last: CommitConflictException = null
     while (attempt <= maxRetries) {
       try return tickAttempt(rawBatch, root, tickId, minQuality, threshold,
-        cap, collectKeeperIds, retainSnapshots, layoutIfNew)
+        cap, retainSnapshots, layoutIfNew)
       catch {
         case e: CommitConflictException =>
           attempt += 1
@@ -802,57 +734,66 @@ object CorpusStore {
   private def logInfo(msg: String): Unit =
     System.err.println(s"[graft.CorpusStore] $msg")
 
-  /** Cache + PLAN-TRUNCATE a multiply-consumed tick frame: lazy
-    * `localCheckpoint` instead of a bare `persist` — the [[Corpus]]
-    * stageCut shape, applied to the tick chain. A bare persist caches the
-    * DATA but leaves the LOGICAL plan intact, and the tick's plans compound
-    * multiplicatively (batchSigs embeds the pruned exact chain, the
-    * vs-store dup prune embeds batchSigs ~5×, the within-batch fold embeds
-    * the remainder ~5 more, the store write embeds both ends) — so
-    * every action's AQE plan-update event re-rendered a multi-megabyte
-    * formatted plan string on the DRIVER. Measured: the FIRST sf0.1 store
-    * build spent ~70 of its 75 s in `ExplainUtils.collectOperatorsWithID`
-    * under exactly those events (thread dumps, r16). The cut truncates each
-    * stage to a LogicalRDD leaf; `eager = false` keeps materialization
-    * inside the action that first consumes the frame (the counts the tick
-    * already takes). Same fault-tolerance trade as the Corpus/Dedup cuts:
-    * truncated lineage is unrecoverable under executor loss — documented
-    * seam, not for preemptible clusters.
-    */
-  private def stageCut(df: DataFrame): DataFrame = df.localCheckpoint(false)
-
-  /** Deterministically release a [[stageCut]] frame's blocks: a
-    * localCheckpoint persists at the RDD level, which `Dataset.unpersist`
-    * (a CacheManager call) cannot see — without this, a long-running tick
-    * loop would hold one checkpoint per tick until GC + ContextCleaner
-    * got around to it (the round-15 ADVICE caveat on the cut's blast
-    * radius). The checkpointed RDD sits in the plan's LogicalRDD leaf.
-    */
-  private def releaseCut(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
   /** Run `body` with every Spark job it starts described as
-    * `tick <stamp>: <name>` — so a tick's jobs read by phase in the UI,
+    * `<op>: <name>` (`tick <id|untracked>: gate`, `forget: locate`,
+    * `compact: write`, …) — so a store op's jobs read by phase in the UI,
     * event log and listeners — restoring the caller's description after.
     */
-  private def phase[T](spark: SparkSession, stamp: String, name: String)
+  private def phase[T](spark: SparkSession, op: String, name: String)
                       (body: => T): T = {
     val sc = spark.sparkContext
     val prev = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(s"tick $stamp: $name")
+    sc.setJobDescription(s"$op: $name")
     try body finally sc.setJobDescription(prev)
   }
 
+  /** The store's band postings among `rows` grouped per (band_id,
+    * band_val), as that bucket's doc_ids when it holds at most `cap` of
+    * them — the skew cap of [[Dedup.capBuckets]] as ONE job (an RDD
+    * aggregate: one shuffle, no AQE map-stage job). Exact under the file
+    * prune: a Bloom prune only skips files that cannot hold the value, so
+    * every posting of a probed bucket is in `rows` and its count is the
+    * store's full bucket size. Over-cap buckets come back absent.
+    */
+  private def cappedBuckets(rows: DataFrame, cap: Int)
+      : Map[(Int, String), Seq[Long]] =
+    rows.select(col("band_id"), col("band_val"), col("doc_id")).rdd
+      .map(r => (r.getInt(0), r.getString(1)) -> r.getLong(2))
+      .aggregateByKey((0L, List.empty[Long]))(
+        { case ((n, ids), id) => (n + 1, if (n >= cap) Nil else id :: ids) },
+        { case ((n1, a), (n2, b)) =>
+          (n1 + n2, if (n1 + n2 > cap) Nil else a ::: b) })
+      .collect { case (k, (n, ids)) if n <= cap => k -> ids }
+      .collect().toMap
+
+  /** One tick, FILTER THEN VERIFY: the driver decides every document's
+    * fate from key sets, and Spark only computes the batch's features,
+    * probes the pruned store files and verifies candidate pairs. The
+    * driver holds ids, md5s, band keys and candidate pairs — batch-bounded
+    * — never text or shingles. Jobs, each described `tick <id>: <phase>`:
+    *
+    *   - gate: ONE persisted batch frame (gated rows + md5, shingles, the
+    *     [[Dedup.NumBands]] band values), materialized by a collect of
+    *     (doc_id, text_md5, band values); the within-batch exact dedup
+    *     (first arrival = min doc_id per md5) then runs on the driver.
+    *   - exact: one scan of the Bloom-pruned doc and tomb files filtered
+    *     by the batch md5s; the touched md5s drop (no job on creation).
+    *   - near: one aggregate of the Bloom-pruned store band postings
+    *     under the batch's band keys (ids of buckets within the cap); the
+    *     candidate pairs form on the driver and one job verifies them
+    *     against the batch frame and the Bloom-pruned shingle rows.
+    *   - fold: within-batch pairs from equal band values among the
+    *     survivors (buckets within the cap, the [[Dedup.bandPairs]] rule),
+    *     verified in one job; a driver union-find keeps each component's
+    *     minimum id.
+    *   - write: ONE [[ManifestTable.writeFiles]] job whose sets filter the
+    *     batch frame by the literal keeper and tombstone id sets.
+    */
   private def tickAttempt(rawBatch: DataFrame, root: String,
                           tickId: Option[String],
                           minQuality: Double,
                           threshold: Double,
                           cap: Int,
-                          collectKeeperIds: Boolean,
                           retainSnapshots: Int,
                           layoutIfNew: Option[StoreLayout])
       : (TickReport, Array[Long]) = {
@@ -869,127 +810,114 @@ object CorpusStore {
     // expression below — prune side and write side — goes through it
     val layout = resolveLayout(spark, root, layoutIfNew)
     val stamp = tickId.getOrElse("untracked")
+    val op = s"tick $stamp"
 
-    // quality gate inside the scan stage, then within-batch exact dedup
-    // (first arrival = min doc_id, one md5-keyed window — the
-    // corpusPipelineIncremental stage shapes). The raw row count rides the
-    // gate pass as an observation: no count job of its own
+    // the quality gate and every per-doc feature in one persisted frame;
+    // the raw row count rides its first pass as an observation
     val raw = Observation()
-    val clean = rawBatch
+    val batch = Dedup.withShingleBands(rawBatch
       .observe(raw, count(lit(1)).as("n"))
       .filter(TextOps.qualityScore(col("text")) >= minQuality)
       .select(col("doc_id"), col("lang"), col("source"), col("text"),
-        md5(col("text")).as("text_md5"))
+        md5(col("text")).as("text_md5")))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var exactP: DataFrame = null
-    var batchSigs: DataFrame = null
-    var dupIds: DataFrame = null
-    var rem: DataFrame = null
-    var commitRows: DataFrame = null
     // try/finally: an at-least-once caller CATCHES and retries a failed
-    // tick, so a mid-tick exception must not strand this attempt's caches
+    // tick, so a mid-tick exception must not strand this attempt's cache
     // in executor storage (the IvfStore.build discipline)
+    val bandCols = (0 until Dedup.NumBands).map(b => col(s"band_$b"))
     try {
-      val nQuality = phase(spark, stamp, "gate")(clean.count())
+      val gated = phase(spark, op, "gate")(
+        batch.select(col("doc_id") +: col("text_md5") +: bandCols: _*).collect())
+      val nQuality = gated.length.toLong
       val nRaw = raw.get("n").asInstanceOf[Long]
-      // within-batch exact dedup, skew-immune (see Dedup.keepMinBy)
-      val inBatch = Dedup.keepMinBy(clean, col("text_md5"), col("doc_id"))
-      // exact-vs-store: the batch's md5 set broadcasts into a map-side
-      // semi-join over the store's kept md5s AND dropped-doc tombstones —
-      // both file-pruned to the buckets the batch's md5s hash to — and the
-      // batch anti-joins the (batch-bounded) touched set. The store side
-      // never shuffles and never reads untouched buckets.
-      val nExactNew = phase(spark, stamp, "exact") {
-        val exact = prev match {
-          case Some(_) =>
-            // the batch's (md5 → bucket) map, ONE collect (batch-bounded,
-            // the broadcast-id sizing contract): buckets drive the dir-level
-            // prune, the md5s themselves drive the per-file bloom probes —
-            // and deriving the bucket via the SAME expression the write side
-            // uses keeps the two prune levels provably consistent
-            val md5ByBucket = inBatch
-              .select(col("text_md5"),
-                md5Bucket(col("text_md5"), layout).as("b"))
-              .distinct().collect()
-              .groupBy(_.getInt(1))
-              .map { case (b, rows) => b -> rows.toSeq.map(_.getString(0)) }
-            val storeMd5 = readKindFiles(spark, root,
-              bloomPrunedKindFiles(spark, root, "doc", md5ByBucket), docSchema)
-              .select(col("text_md5"))
-              .union(readKindFiles(spark, root,
-                bloomPrunedKindFiles(spark, root, "tomb", md5ByBucket),
-                tombSchema)
-                .select(col("text_md5")))
-            val touched = storeMd5.join(
-              broadcast(inBatch.select(col("text_md5")).distinct()),
-              Seq("text_md5"), "left_semi")
-            inBatch.join(broadcast(touched), Seq("text_md5"), "left_anti")
-          case None => inBatch
-        }
-        // stageCut, not persist, for every multiply-consumed tick frame:
-        // same caching, truncated plans (see [[stageCut]] — the bare
-        // persists left the first sf0.1 store build spending ~70 s
-        // rendering compounded plan strings on the driver)
-        exactP = stageCut(exact)
-        exactP.count()
+      // band values per doc (null for a shingle-less doc)
+      val bandsOf = gated.map(r =>
+        r.getLong(0) -> bandCols.indices.map(b => r.getString(2 + b))).toMap
+      // within-batch exact dedup: first arrival (min doc_id) per md5
+      val firstOf =
+        gated.groupMapReduce(_.getString(1))(_.getLong(0))(math.min)
+      // exact-vs-store: every md5 the store kept OR tombstoned drops.
+      // Bucket dirs, then the per-file Bloom sidecars, bound the scan to
+      // files that may hold a batch md5 (the same bucket expression the
+      // write side uses, evaluated driver-side)
+      val exactNew = phase(spark, op, "exact") {
+        lazy val byBucket =
+          firstOf.keys.toSeq.groupBy(bucketForKey("doc", layout, _))
+        val reads = if (prev.isEmpty) Seq.empty else Seq("doc", "tomb")
+          .map(k => k -> bloomPrunedKindFiles(spark, root, k, byBucket))
+          .filter(_._2.nonEmpty)
+          .map { case (k, files) => readKindFiles(spark, root, files,
+            kindSchema(k)).select(col("text_md5")) }
+        val seen = if (reads.isEmpty) Set.empty[String]
+          else reads.reduce(_ union _)
+            .filter(col("text_md5").isin(firstOf.keys.toSeq: _*))
+            .collect().map(_.getString(0)).toSet
+        firstOf.collect { case (m, id) if !seen(m) => id }.toSeq.sorted
       }
-      // a batch the exact stage dropped entirely (a replay) has nothing
-      // to fold or write
-      val (written, keeperIds) =
-        if (nExactNew == 0L) (Seq.empty[(String, Long)], Array.empty[Long])
-        else {
-          // near-dup-vs-store over the pruned band/shingle kinds, then
-          // within-batch components over the remainder (the ingestTick
-          // bootstrap path — identical composition to the unpruned fold)
-          rem = phase(spark, stamp, "near") {
-            batchSigs = stageCut(Dedup.shingleSignatures(exactP))
-            prev match {
-              case Some(_) =>
-                dupIds = prunedStoreDupIds(batchSigs, root, threshold, cap,
-                  layout)
-                stageCut(batchSigs.join(dupIds, Seq("doc_id"), "left_anti"))
-              case None => batchSigs
-            }
-          }
-          // every exact-new doc with its keeper signature row when the fold
-          // kept it (`__kept` non-null): the ONE frame all four kinds are
-          // projected from, cut so the write reads a leaf as a single job
-          val keeperIds = phase(spark, stamp, "fold") {
-            val keepSigs = Dedup.ingestTick(rem, None, threshold, cap,
-              releaseIntermediate = true)
-            commitRows = stageCut(exactP.join(
-              keepSigs.withColumn("__kept", lit(true)), Seq("doc_id"),
-              "left_outer"))
-            if (collectKeeperIds)
-              commitRows.filter(col("__kept").isNotNull)
-                .select(col("doc_id")).collect().map(_.getLong(0))
-            else Array.empty[Long]
-          }
-          // keepers' doc rows + their dedup state (shingles for
-          // verification, band postings for the prune) + the dropped docs'
-          // tombstones: ONE write job straight into data/ (one file per
-          // touched bucket per kind, each with its Bloom sidecar); its row
-          // counts are the tick's keeper and tombstone counts
-          val kept = commitRows.filter(col("__kept").isNotNull)
-          (phase(spark, stamp, "write")(
-            ManifestTable.writeFiles(spark, root, Seq(
-              kindSet("doc", kept.withColumn("tick", lit(stamp)),
-                md5Bucket(col("text_md5"), layout)),
-              kindSet("sh", kept, shingleBucket(col("doc_id"), layout)),
-              kindSet("band",
-                Dedup.explodedBands(kept, Dedup.NumHashes / Dedup.NumBands),
-                bandBucket(col("band_id"), col("band_val"), layout)),
-              kindSet("tomb", commitRows.filter(col("__kept").isNull),
-                md5Bucket(col("text_md5"), layout))))), keeperIds)
+      val nExactNew = exactNew.size.toLong
+      // (band_id, band_val) keys of `ids`; shingle-less docs have none
+      def bandKeys(ids: Seq[Long]): Seq[((Int, String), Long)] =
+        for (id <- ids; (v, b) <- bandsOf(id).zipWithIndex if v != null)
+          yield (b, v) -> id
+      // near-dup-vs-store: candidates from the store's band postings under
+      // the batch's band keys, verified against the candidates' shingle
+      // rows — every store read two-level pruned
+      val nearDups = if (prev.isEmpty || exactNew.isEmpty) Set.empty[Long]
+        else phase(spark, op, "near") {
+          val keys = bandKeys(exactNew)
+          val probes = keys.map(_._1).distinct
+          val files = bloomPrunedKindFiles(spark, root, "band", probes
+            .groupMap { case (b, v) => bandBucketForKey(b, v, layout) }(_._2))
+          val buckets =
+            if (files.isEmpty) Map.empty[(Int, String), Seq[Long]]
+            else cappedBuckets(readKindFiles(spark, root, files, bandSchema)
+              .filter(col("band_val").isin(probes.map(_._2): _*)), cap)
+          val pairs = keys.flatMap { case (k, id) =>
+            buckets.getOrElse(k, Nil).map(id -> _) }.distinct
+          val sh = readKindFiles(spark, root, bloomPrunedKindFiles(spark, root,
+            "sh", pairs.map(_._2).distinct.map(_.toString)
+              .groupBy(bucketForKey("sh", layout, _))), shSchema)
+          Dedup.verifiedPairs(pairs, batch, sh, threshold).map(_._1).toSet
+        }
+      // within-batch near-dup components over the survivors: pairs share a
+      // band bucket of at most `cap` survivors; each verified component
+      // keeps its minimum doc_id
+      val keepers = phase(spark, op, "fold") {
+        val survivors = exactNew.filterNot(nearDups)
+        val pairs = bandKeys(survivors).groupMap(_._1)(_._2).values
+          .filter(_.size <= cap)
+          .flatMap(g => for (a <- g; b <- g if a < b) yield (a, b))
+          .toSeq.distinct
+        val label = Dedup.minLabels(
+          Dedup.verifiedPairs(pairs, batch, batch, threshold))
+        survivors.filter(id => label.getOrElse(id, id) == id)
+      }
+      val tombs = exactNew.filterNot(keepers.toSet)
+      // keepers' doc rows + their dedup state (shingles for verification,
+      // band postings for the prune) + the dropped docs' tombstones: ONE
+      // write job straight into data/ (one file per touched bucket per
+      // kind, each with its Bloom sidecar)
+      val written =
+        if (exactNew.isEmpty) Seq.empty[(String, Long)]
+        else phase(spark, op, "write") {
+          val kept = batch.filter(col("doc_id").isin(keepers: _*))
+          ManifestTable.writeFiles(spark, root, Seq(
+            kindSet("doc", kept.withColumn("tick", lit(stamp)),
+              md5Bucket(col("text_md5"), layout)),
+            kindSet("sh", kept, shingleBucket(col("doc_id"), layout)),
+            kindSet("band", Dedup.explodeBands(kept, bandCols),
+              bandBucket(col("band_id"), col("band_val"), layout)),
+            kindSet("tomb", batch.filter(col("doc_id").isin(tombs: _*)),
+              md5Bucket(col("text_md5"), layout))))
         }
       val nKept = rowsOf(written, "doc")
-      // the write must account for every doc the exact stage passed: each
-      // is a keeper (one doc and one shingle row) or a tombstone (band is
-      // exempt: shingle-less keepers emit none)
-      require(rowsOf(written, "sh") == nKept &&
-          nKept + rowsOf(written, "tomb") == nExactNew,
-        s"store write inconsistent with the tick (nExactNew=$nExactNew, " +
-          s"written=${Seq("doc", "sh", "band", "tomb")
+      // the write must hold exactly the driver's decisions: one doc and
+      // one shingle row per keeper, one tombstone per other exact-new doc
+      // (band is exempt: shingle-less keepers emit none)
+      require(nKept == keepers.size && rowsOf(written, "sh") == nKept &&
+          rowsOf(written, "tomb") == tombs.size,
+        s"store write inconsistent with the tick (keepers=${keepers.size}, " +
+          s"tombstones=${tombs.size}, written=${Seq("doc", "sh", "band", "tomb")
             .map(k => s"$k:${rowsOf(written, k)}").mkString(",")})")
       // zero keepers AND zero tombstones commit NOTHING: replay without a
       // marker must leave the version untouched, not mint empty snapshots
@@ -1004,7 +932,7 @@ object CorpusStore {
             writeStagedLayout(spark, root, layout)
           prev.getOrElse(0L)
         }
-        else phase(spark, stamp, "commit") {
+        else phase(spark, op, "commit") {
           val files = written.map(_._1)
           val v =
             try ManifestTable.commitReplace(spark, root, Seq.empty, files,
@@ -1028,16 +956,8 @@ object CorpusStore {
         }
       tickId.foreach(id => writeMarker(spark, root, "_ticks", id))
       (TickReport(version, nRaw, nQuality, nExactNew, nKept,
-        replaySkipped = false), keeperIds)
-    } finally {
-      clean.unpersist()
-      if (exactP != null) releaseCut(exactP)
-      if (batchSigs != null) releaseCut(batchSigs)
-      if (dupIds != null) releaseCut(dupIds)
-      // no-op on the bootstrap path (rem aliases batchSigs there)
-      if (rem != null && (rem ne batchSigs)) releaseCut(rem)
-      if (commitRows != null) releaseCut(commitRows)
-    }
+        replaySkipped = false), keepers.toArray)
+    } finally batch.unpersist()
   }
 
   /** The FULL platform tick: [[tick]] plus vector-index maintenance in one
@@ -1064,7 +984,7 @@ object CorpusStore {
                     cap: Int = Dedup.MaxBucketSize): TickReport = {
     val spark = rawBatch.sparkSession
     val (r, keeperIds) = tickCollecting(rawBatch, root, Some(tickId),
-      minQuality, threshold, cap, collectKeeperIds = true)
+      minQuality, threshold, cap)
     if (ManifestTable.currentVersion(spark, root).isEmpty) return r
     // composed-tick marker (own `_ticks_ivf/` namespace): IvfStore's guard
     // covers only the CURRENT postings version's marker — enough for the
@@ -1159,7 +1079,8 @@ object CorpusStore {
     }
 
     // per kind: (replaced bucket dirs, its write set, files read)
-    val plans = Seq("doc", "sh", "band", "tomb").flatMap { kind =>
+    def planOf(kind: String)
+        : Option[(Seq[String], ManifestTable.WriteSet, Int)] = {
       val files = live.filter(_.startsWith(s"p_kind=$kind/"))
       val sized = files.map(f => f -> fs.getFileStatus(
         new org.apache.hadoop.fs.Path(s"$dd/$f")).getLen)
@@ -1200,12 +1121,15 @@ object CorpusStore {
           pmod(xxhash64(subKey(kind)), nSub.cast("bigint"))), inFiles.length))
       }
     }
+    val plans = phase(spark, "compact", "plan")(
+      Seq("doc", "sh", "band", "tomb").flatMap(planOf))
     val replacedDirs = plans.flatMap(_._1)
     val nRewrittenIn = plans.map(_._3).sum
     if (replacedDirs.isEmpty && !rebucket)
       return (live.length.toLong, live.length.toLong) // nothing fragmented
     // every rewritten kind in ONE write job, then ONE commit
-    val added = ManifestTable.writeFiles(spark, root, plans.map(_._2)).map(_._1)
+    val added = phase(spark, "compact", "write")(
+      ManifestTable.writeFiles(spark, root, plans.map(_._2))).map(_._1)
     // the layout flips in the SAME commit (its meta line)
     ManifestTable.commitReplace(spark, root,
       if (rebucket) Seq("") else replacedDirs, added,
@@ -1274,6 +1198,7 @@ object CorpusStore {
       require(i >= 0, s"not a store data file: $abs")
       abs.substring(i)
     }
+    def locate[T](body: => T): T = phase(spark, "forget", "locate")(body)
     def shortlist(kind: String, ks: Seq[String]): Seq[String] =
       pruneRelFiles(spark, root, kind, layout, kindFiles(spark, root, kind), ks)
         .getOrElse(kindFiles(spark, root, kind))
@@ -1285,12 +1210,12 @@ object CorpusStore {
     def victimFiles(files: Seq[String], kind: String, victim: Column)
         : Map[String, (Long, Long, Seq[Long])] =
       if (files.isEmpty) Map.empty
-      else readWithParts(spark, root, files, kind)
+      else locate(readWithParts(spark, root, files, kind)
         .groupBy(input_file_name().as("f"))
         .agg(count(lit(1)).as("n"), count(when(victim, 1)).as("nv"),
           collect_set(when(victim, col("doc_id"))).as("ids"))
         .filter(col("nv") > 0)
-        .collect().map(r => relName(r.getString(0)) ->
+        .collect()).map(r => relName(r.getString(0)) ->
           (r.getLong(1), r.getLong(2), r.getSeq[Long](3))).toMap
 
     // victim documents, through the index
@@ -1303,10 +1228,10 @@ object CorpusStore {
     val tombShort = shortlist("tomb", keys)
     val already =
       if (tombShort.isEmpty) Set.empty[String]
-      else readKindFiles(spark, root, tombShort, tombSchema)
+      else locate(readKindFiles(spark, root, tombShort, tombSchema)
         .filter(col("text_md5").isin(keys: _*))
         .select(col("text_md5")).distinct()
-        .collect().map(_.getString(0)).toSet
+        .collect()).map(_.getString(0)).toSet
     val newTombs = keys.filterNot(already.contains)
 
     if (victimIds.isEmpty && newTombs.isEmpty)
@@ -1322,12 +1247,12 @@ object CorpusStore {
         idVictim)
     val bandKeys =
       if (shHits.isEmpty) Array.empty[(Int, String)]
-      else Dedup.explodedBands(Dedup.rawSignatures(
+      else locate(Dedup.explodedBands(Dedup.rawSignatures(
           readKindFiles(spark, root, shHits.keys.toSeq, shSchema)
             .filter(idVictim)),
         Dedup.NumHashes / Dedup.NumBands)
         .select(col("band_id"), col("band_val")).distinct()
-        .collect().map(r => (r.getInt(0), r.getString(1)))
+        .collect()).map(r => (r.getInt(0), r.getString(1)))
     val bandByBucket: Map[Int, Seq[String]] = bandKeys.toSeq
       .groupBy { case (id, v) => bandBucketForKey(id, v, layout) }
       .map { case (b, kvs) => b -> kvs.map(_._2).distinct }
@@ -1339,13 +1264,14 @@ object CorpusStore {
     import spark.implicits._
     val rewrites = Seq(("doc", docHits, docVictim), ("sh", shHits, idVictim),
       ("band", bandHits, idVictim)).filter(_._2.nonEmpty)
-    val written = ManifestTable.writeFiles(spark, root,
-      rewrites.map { case (kind, hits, victim) =>
-        kindSet(kind, readWithParts(spark, root, hits.keys.toSeq, kind)
-          .filter(!victim), col("p_b"))
-      } ++ (if (newTombs.isEmpty) Nil
-        else Seq(kindSet("tomb", newTombs.toDF("text_md5"),
-          md5Bucket(col("text_md5"), layout)))))
+    val written = phase(spark, "forget", "write")(
+      ManifestTable.writeFiles(spark, root,
+        rewrites.map { case (kind, hits, victim) =>
+          kindSet(kind, readWithParts(spark, root, hits.keys.toSeq, kind)
+            .filter(!victim), col("p_b"))
+        } ++ (if (newTombs.isEmpty) Nil
+          else Seq(kindSet("tomb", newTombs.toDF("text_md5"),
+            md5Bucket(col("text_md5"), layout))))))
     // a purge that silently dropped NON-victim rows on the way would be
     // data loss wearing a compliance hat: every kind's rewrite must hold
     // exactly its files' rows minus their victim rows
@@ -1414,6 +1340,12 @@ object CorpusStore {
     * under the session-cache contract — a long-running caller materializes
     * the manifest, then clears the session cache (or runs each refresh in
     * its own session), unlike [[tick]], which releases its own caches.
+    *
+    * Jobs the call runs itself are described `manifest: <phase>`: the
+    * tail's stage cuts run their upstream shuffle stages when planned, so
+    * most of a refresh runs here (`plan`), as do [[manifestCached]]'s
+    * model writes (`models`); the returned frame's last stages run in the
+    * caller's action, under the caller's description.
     */
   def manifest(spark: SparkSession, root: String,
                perplexityThreshold: Double = 3.5,
@@ -1422,8 +1354,8 @@ object CorpusStore {
                nShards: Int = 8,
                seqBudget: Long = 1024L,
                seed: String = "graft"): DataFrame =
-    Corpus.pipelineTail(docs(spark, root), perplexityThreshold, flagAt,
-      totalBudget, nShards, seqBudget, seed)
+    phase(spark, "manifest", "plan")(Corpus.pipelineTail(docs(spark, root),
+      perplexityThreshold, flagAt, totalBudget, nShards, seqBudget, seed))
 
   /** [[manifest]] with the tail's corpus-dependent models STAGED per store
     * snapshot version (the [[CentroidStore]] versioned-sidecar pattern
@@ -1451,16 +1383,16 @@ object CorpusStore {
     val mdir = s"$root/_models/v$v"
     val done = new org.apache.hadoop.fs.Path(s"$mdir/_DONE")
     val staged =
-      if (fs.exists(done))
+      if (fs.exists(done)) phase(spark, "manifest", "plan")(
         Some(Corpus.TailModels(
           spark.read.parquet(s"$mdir/lm_bigrams"),
           spark.read.parquet(s"$mdir/lm_vocab"),
-          spark.read.parquet(s"$mdir/held_shingles")))
+          spark.read.parquet(s"$mdir/held_shingles"))))
       else None
-    val (m, models) = Corpus.pipelineTailWithModels(docs(spark, root),
-      perplexityThreshold, flagAt, totalBudget, nShards, seqBudget, seed,
-      staged)
-    if (staged.isEmpty) {
+    val (m, models) = phase(spark, "manifest", "plan")(
+      Corpus.pipelineTailWithModels(docs(spark, root), perplexityThreshold,
+        flagAt, totalBudget, nShards, seqBudget, seed, staged))
+    if (staged.isEmpty) phase(spark, "manifest", "models") {
       // the model writes run the tail's shared DAG up to `gated`; its
       // stage frames are persisted by the tail itself, so the manifest
       // materialization that follows reuses them, not re-derives
@@ -1500,10 +1432,10 @@ object CorpusStore {
     val files = ManifestTable.filesOf(spark, root, version)
       .filter(_.startsWith("p_kind=doc/"))
     require(files.nonEmpty, s"no doc files in snapshot v$version at $root")
-    Corpus.pipelineTail(
+    phase(spark, "manifest", "plan")(Corpus.pipelineTail(
       readKindFiles(spark, root, files, docSchema)
         .select(col("doc_id"), col("lang"), col("source"), col("text")),
-      perplexityThreshold, flagAt, totalBudget, nShards, seqBudget, seed)
+      perplexityThreshold, flagAt, totalBudget, nShards, seqBudget, seed))
   }
 
   /** [[read]] pinned at a RETAINED snapshot version — the doc rows exactly

@@ -61,21 +61,24 @@ object Dedup {
       .select(cols.map(c => col(s"__r.$c").as(c)): _*)
   }
 
-  private def docShingles(docs: DataFrame): DataFrame =
+  /** `keep` columns of `docs` plus the doc's distinct shingle set. */
+  private def docShingles(docs: DataFrame,
+                          keep: Seq[Column] = Seq(col("doc_id"))): DataFrame =
     // token array staged BEFORE the shingle lambda (the TextOps.tokens()
     // evaluation contract): with the split captured in the lambda, slice
     // re-tokenized per shingle — quadratic per document on THE most
     // expensive corpus-wide pass (measured 40.8 s → ~1 s for 500 docs ×
     // 2000 tokens)
-    docs.select(col("doc_id"), TextOps.tokens(col("text")).as("__toks"))
-      .select(col("doc_id"),
+    docs.select(keep :+ TextOps.tokens(col("text")).as("__toks"): _*)
+      .select(keep :+
         array_distinct(Shingles.shingles(col("__toks"), ShingleK))
-          .as("shingles"))
+          .as("shingles"): _*)
 
-  /** doc_id + shingles + sig_0..sig_{NumHashes-1} from a (doc_id, shingles)
-    * frame. Shingles ride along: every consumer that bands the signatures
-    * also verifies candidates against the exact shingle sets, so the
-    * combined frame is the natural unit to persist or stage.
+  /** The input columns + sig_0..sig_{NumHashes-1} from a frame with a
+    * `shingles` column (a (doc_id, shingles) frame for every caller but
+    * [[withShingleBands]]). Shingles ride along: every consumer that bands
+    * the signatures also verifies candidates against the exact shingle
+    * sets, so the combined frame is the natural unit to persist or stage.
     *
     * Signatures come from the codegen'd `graft_minhash` kernel — ONE array
     * traversal computing all [[NumHashes]] seeded minima (semantically
@@ -93,35 +96,36 @@ object Dedup {
     shingleSets
       .withColumn("__sigs",
         call_function("graft_minhash", col("shingles"), lit(NumHashes)))
-      .select(col("doc_id") +: col("shingles") +: sigs: _*)
+      .select(shingleSets.columns.toSeq.map(col) ++ sigs: _*)
   }
 
   /** The full per-document dedup state — (doc_id, shingles, sig_0..15) — as
-    * one map-side frame: what [[CorpusStore.tick]] computes once per batch
-    * and persists as `band`/`sh` rows, so later ticks skip the
-    * tokenize→shingle→16-seeded-md5 recompute.
+    * one map-side frame.
     */
   def shingleSignatures(docs: DataFrame): DataFrame =
     rawSignatures(docShingles(docs))
+
+  /** `docs` (doc_id, text, …) with its shingle set and the [[NumBands]]
+    * LSH band values `band_0..` appended: the [[shingleSignatures]] and
+    * [[explodedBands]] expressions, one column per band instead of one row
+    * (a shingle-less doc has null bands). The per-batch frame
+    * [[CorpusStore.tick]] persists: every dedup decision after it needs
+    * only ids, md5s and these band keys.
+    */
+  private[operators] def withShingleBands(docs: DataFrame): DataFrame = {
+    val keep = docs.columns.toSeq.map(col)
+    rawSignatures(docShingles(docs, keep)).select(keep ++ (col("shingles") +:
+      (0 until NumBands).map(b =>
+        bandHash(b, NumHashes / NumBands).as(s"band_$b"))): _*)
+  }
 
   /** Banded-LSH pairs + exact-Jaccard verification over a prebuilt
     * [[shingleSignatures]] frame.
     */
   private[operators] def pairsFromShingleSigs(ss: DataFrame, rowsPerBand: Int,
                                               threshold: Double, cap: Int): DataFrame =
-    pairsFromShingleSigsWithHandle(ss, rowsPerBand, threshold, cap)._1
-
-  /** [[pairsFromShingleSigs]] plus the band-cache handle (see
-    * [[bandPairsWithHandle]]) — the tick loop's form.
-    */
-  private def pairsFromShingleSigsWithHandle(ss: DataFrame, rowsPerBand: Int,
-                                             threshold: Double, cap: Int)
-      : (DataFrame, DataFrame) = {
-    val (cand, bands) = bandPairsWithHandle(
-      explodedBands(ss, rowsPerBand), cap, "doc_a", "doc_b")
-    (verifyJaccard(cand, ss.select(col("doc_id"), col("shingles")), threshold),
-      bands)
-  }
+    verifyJaccard(bandPairs(explodedBands(ss, rowsPerBand), cap, "doc_a", "doc_b"),
+      ss.select(col("doc_id"), col("shingles")), threshold)
 
   /** Band hash over `rowsPerBand` consecutive signatures.
     * concat (NOT concat_ws): null sigs — a doc with < ShingleK tokens — must
@@ -171,17 +175,7 @@ object Dedup {
     * ids only, so band explosion never multiplies payload columns.
     */
   private[graft] def bandPairs(buckets: DataFrame, cap: Int,
-                               aName: String, bName: String): DataFrame =
-    bandPairsWithHandle(buckets, cap, aName, bName)._1
-
-  /** [[bandPairs]] plus the persisted band frame itself, for callers that
-    * outlive a per-query cache lifecycle (the store tick loop): once the
-    * pairs are fully consumed, the caller unpersists the handle so a
-    * stream of ticks holds no accumulating band caches.
-    */
-  private def bandPairsWithHandle(buckets: DataFrame, cap: Int,
-                                  aName: String, bName: String)
-      : (DataFrame, DataFrame) = {
+                               aName: String, bName: String): DataFrame = {
     val b = buckets.toDF("id", "band_id", "band_val")
       .filter(col("band_val").isNotNull)
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -199,7 +193,7 @@ object Dedup {
     // cosine verifies) inherits the spread — the post-distinct repartition
     // the verify stages used to pay is gone (guide §2.4: two operations
     // keyed the same way share one exchange)
-    (spreadDistinct(pairs, aName, bName), b)
+    spreadDistinct(pairs, aName, bName)
   }
 
   /** Repartition on the pair key, THEN distinct: the aggregate reuses the
@@ -226,11 +220,16 @@ object Dedup {
     * band values (signature-less docs) are dropped here so no consumer
     * co-buckets them.
     */
-  private[graft] def explodedBands(sigs: DataFrame, rowsPerBand: Int): DataFrame = {
-    val numBands = NumHashes / rowsPerBand
-    val bandCols = (0 until numBands).map(b =>
-      struct(lit(b).as("band_id"), bandHash(b, rowsPerBand).as("band_hash")))
-    sigs.select(col("doc_id"), explode(array(bandCols: _*)).as("band"))
+  private[graft] def explodedBands(sigs: DataFrame, rowsPerBand: Int): DataFrame =
+    explodeBands(sigs,
+      (0 until NumHashes / rowsPerBand).map(bandHash(_, rowsPerBand)))
+
+  /** [[explodedBands]] from per-band value columns (band id = position). */
+  private[operators] def explodeBands(df: DataFrame,
+                                      bands: Seq[Column]): DataFrame = {
+    val bandCols = bands.zipWithIndex.map { case (v, b) =>
+      struct(lit(b).as("band_id"), v.as("band_hash")) }
+    df.select(col("doc_id"), explode(array(bandCols: _*)).as("band"))
       .select(col("doc_id"), col("band.band_id").as("band_id"),
         col("band.band_hash").as("band_val"))
       .filter(col("band_val").isNotNull)
@@ -438,36 +437,42 @@ object Dedup {
       // returns driver-collected data and distributedComponents eagerly
       // checkpoints the symmetrized edges as its first step, so the
       // persist is fully consumed by the time either returns — and a
-      // long-running tick loop (CorpusStore) must not
-      // accumulate one cached edge set per tick
+      // loop of calls must not accumulate one cached edge set per call
       persisted.unpersist()
       result
     } else distributedComponents(edges, maxIter)
   }
 
-  /** Driver-side exact union-find: path halving + union under the smaller
-    * root id, which keeps every set's root equal to its minimum member by
-    * induction — so `find` yields exactly the labels the distributed loop
-    * converges to.
+  /** Driver-side [[connectedComponents]]: the edges collected through
+    * [[minLabels]].
     */
   private def localComponents(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val es = edges.as[(Long, Long)].collect()
+    minLabels(edges.as[(Long, Long)].collect()).toSeq.sorted
+      .toDF("node", "component")
+  }
+
+  /** Exact union-find over an edge list: path halving + union under the
+    * smaller root id, which keeps every set's root equal to its minimum
+    * member by induction — so each node on an edge maps to exactly the
+    * label min-label propagation converges to. Pure; shared by
+    * [[connectedComponents]]' local path and [[CorpusStore.tick]]'s fold.
+    */
+  private[operators] def minLabels(edges: Iterable[(Long, Long)])
+      : Map[Long, Long] = {
     val parent = scala.collection.mutable.Map.empty[Long, Long]
     def find(x: Long): Long = {
       var r = x
       while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
       r
     }
-    es.foreach { case (a, b) =>
+    edges.foreach { case (a, b) =>
       parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
       val (ra, rb) = (find(a), find(b))
       if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
     }
-    parent.keys.toSeq.sorted
-      .map(n => (n, find(n)))
-      .toDF("node", "component")
+    parent.keys.toSeq.map(n => n -> find(n)).toMap
   }
 
   private def distributedComponents(edges: DataFrame, maxIter: Int): DataFrame = {
@@ -588,14 +593,12 @@ object Dedup {
   }
 
   /** Exact-Jaccard verification of asymmetric (new_id, dup_of) candidate
-    * pairs against two (doc_id, shingles) frames — the shared tail of
-    * [[incrementalVerified]] and of [[CorpusStore]]'s pruned tick (which
-    * supplies `corpusShingles` from a file-pruned store read instead of a
-    * full corpus frame). Same null-union guard as the self-join family;
-    * `candidates` must arrive spread on the pair key ([[spreadDistinct]] —
-    * both callers produce it that way), so no second exchange here.
+    * pairs against two (doc_id, shingles) frames — the tail of
+    * [[incrementalVerified]]. Same null-union guard as the self-join
+    * family; `candidates` must arrive spread on the pair key
+    * ([[spreadDistinct]]), so no second exchange here.
     */
-  private[operators] def verifyCandidates(candidates: DataFrame,
+  private def verifyCandidates(candidates: DataFrame,
                                           batchShingles: DataFrame,
                                           corpusShingles: DataFrame,
                                           threshold: Double): DataFrame = {
@@ -612,28 +615,51 @@ object Dedup {
       .filter(col("n_union") > 0 && col("jaccard") >= threshold)
   }
 
+  /** Exact-Jaccard verification of DRIVER-HELD candidate pairs in ONE
+    * Spark job: the (doc_id, shingles) rows of `left` (each pair's first
+    * id) and `right` (its second) are keyed by the pairs they belong to
+    * and joined per pair — an RDD join, one shuffle inside one job, where
+    * a DataFrame join or aggregate adds an AQE map-stage job per exchange.
+    * Same integer set arithmetic and test as [[verifyJaccard]]: shingle
+    * arrays are distinct, so common = |a ∩ b| and union = |a| + |b| −
+    * common, kept when union > 0 and common / union ≥ `threshold`. Only
+    * the verified pairs reach the driver, never a shingle array.
+    */
+  private[operators] def verifiedPairs(pairs: Seq[(Long, Long)],
+                                       left: DataFrame, right: DataFrame,
+                                       threshold: Double): Seq[(Long, Long)] =
+    if (pairs.isEmpty) Seq.empty
+    else {
+      def keyed(side: DataFrame, pairsOf: Map[Long, Seq[(Long, Long)]]) =
+        side.filter(col("doc_id").isin(pairsOf.keys.toSeq: _*))
+          .select(col("doc_id"), col("shingles")).rdd
+          .flatMap { r =>
+            val sh = Option(r.getSeq[String](1)).getOrElse(Seq.empty)
+            pairsOf(r.getLong(0)).map(_ -> sh)
+          }
+      keyed(left, pairs.groupBy(_._1)).join(keyed(right, pairs.groupBy(_._2)),
+          left.sparkSession.sparkContext.defaultParallelism)
+        .filter { case (_, (a, b)) =>
+          val common = b.count(a.toSet)
+          val union = a.size + b.size - common
+          union > 0 && common.toDouble / union >= threshold
+        }
+        .keys.collect().toSeq.distinct
+    }
+
   /** One tick of the dedup-ingest loop: drop batch docs that near-dup the
     * store ([[incrementalNearDupsFromSigs]]), then dedup the survivors
     * AGAINST EACH OTHER (banded pairs + connected components, keep each
     * component's minimum doc_id) — without the within-batch step two copies
     * of a new document would both enter the store. Returns the keepers'
     * full signature rows, ready to append to the store. `storeSigs = None`
-    * is the bootstrap tick (empty store → within-batch dedup only).
-    *
-    * `releaseIntermediate = true` is the LONG-RUNNING caller's form (the
-    * disk-backed store ticks): the internal `rem` persist is released
-    * before returning, with the keepers persisted + materialized in its
-    * place — the caller unpersists the returned frame after its commit,
-    * so a stream of ticks holds no accumulating executor storage. One-shot
-    * query callers keep the default (their session clears caches per
-    * query; the extra materialization pass would be pure cost).
+    * is the bootstrap tick (empty store → within-batch dedup only). Cache
+    * lifecycle: the caller's session owns the `rem` persist.
     */
-  private[operators] def ingestTick(batchSigs: DataFrame,
-                                    storeSigs: Option[DataFrame],
-                                    threshold: Double,
-                                    cap: Int,
-                                    releaseIntermediate: Boolean = false)
-      : DataFrame = {
+  private def ingestTick(batchSigs: DataFrame,
+                         storeSigs: Option[DataFrame],
+                         threshold: Double,
+                         cap: Int): DataFrame = {
     val rem = storeSigs match {
       case Some(store) =>
         // ids only — the best-match ranking of the public operator is
@@ -646,24 +672,12 @@ object Dedup {
           .persist(StorageLevel.MEMORY_AND_DISK)
       case None => batchSigs
     }
-    val (pairs, bands) =
-      pairsFromShingleSigsWithHandle(rem, NumHashes / NumBands, threshold, cap)
-    // connectedComponents is eager (its size probe + local/checkpointed
-    // result), so by the next line the band cache is fully consumed
     val nonCanonical = connectedComponents(
-      pairs.select(col("doc_a"), col("doc_b")))
+      pairsFromShingleSigs(rem, NumHashes / NumBands, threshold, cap)
+        .select(col("doc_a"), col("doc_b")))
       .filter(col("node") =!= col("component"))
       .select(col("node").as("doc_id"))
-    if (releaseIntermediate) bands.unpersist()
-    val keep = rem.join(nonCanonical, Seq("doc_id"), "left_anti")
-    if (releaseIntermediate && storeSigs.nonEmpty) {
-      // rem is this call's own persist (the bootstrap path reuses the
-      // caller's batchSigs) — swap it for the materialized keepers
-      val k = keep.persist(StorageLevel.MEMORY_AND_DISK)
-      k.count()
-      rem.unpersist()
-      k
-    } else keep
+    rem.join(nonCanonical, Seq("doc_id"), "left_anti")
   }
 
   /** Sequential dedup ingest, pure-DataFrame form: split `docs` into
