@@ -57,9 +57,13 @@ import org.apache.spark.storage.StorageLevel
   * sets), and the text-scale columns (text, shingles) are only read from
   * partitions the batch actually touches (spec-asserted: every tick
   * scan's file list ⊆ the batch-touched partitions). Per-doc tick cost is
-  * O(store/buckets) bytes instead of O(store); raise the bucket constants
-  * for production stores (they are baked into the directory layout —
-  * changing them is a [[compact]]-with-rebucket, not a config flip). The
+  * O(store/buckets) bytes instead of O(store). The bucket counts are
+  * sized to the data: a creation tick gives every kind the smallest power
+  * of two of buckets that holds its keepers at [[TargetRowsPerFile]] rows
+  * a file (one bucket for any store below that), so a small store is a
+  * handful of files per commit, not one per bucket; a store that outgrows
+  * its counts raises them with a [[compact]]-with-rebucket (they are baked
+  * into the directory layout, not a config flip). The
   * skew cap stays EXACT under pruning: the prune skips only files that cannot hold a
   * probed (band_id, band_val), so each probed bucket is read whole and
   * its count is the store's bucket size.
@@ -140,8 +144,9 @@ object CorpusStore {
     *   NumBands × this dirs).
     * - `shingleBuckets`: doc_id buckets for the shingle kind.
     *
-    * Raise the counts for production stores at creation (or via one
-    * rebucket compaction) — per-tick scanned bytes scale with
+    * A creation tick without an explicit or staged choice takes
+    * [[sizedLayout]] of its keepers; a growing store raises the counts with
+    * one rebucket compaction — per-tick scanned bytes scale with
     * store/buckets.
     */
   case class StoreLayout(md5Buckets: Int, bandValBuckets: Int,
@@ -154,8 +159,23 @@ object CorpusStore {
         s""""shingleBuckets":$shingleBuckets,"exprVersion":$exprVersion}"""
   }
 
-  /** Layout a store is created with when the creator does not choose. */
-  val DefaultLayout: StoreLayout = StoreLayout(16, 16, 16)
+  /** Rows one bucket file of a kind should hold: about one 128 MB file of
+    * ~2 KB documents. Each kind holds one row per document (the band kind
+    * one per document per band id, in a bucket space per band id), so one
+    * count sizes all three.
+    */
+  private[graft] val TargetRowsPerFile = 1 << 16
+
+  /** The layout a creation tick that keeps `keepers` documents commits when
+    * its caller does not choose: every count the smallest power of two
+    * >= ceil(keepers / [[TargetRowsPerFile]]) — 1/1/1 for any store below
+    * the target.
+    */
+  private[graft] def sizedLayout(keepers: Long): StoreLayout = {
+    val need = math.max(1L, (keepers + TargetRowsPerFile - 1) / TargetRowsPerFile)
+    val n = (1L << (64 - java.lang.Long.numberOfLeadingZeros(need - 1))).toInt
+    StoreLayout(n, n, n)
+  }
 
   private[graft] def md5Bucket(c: Column, l: StoreLayout): Column =
     pmod(conv(substring(c, 1, 4), 16, 10).cast("int"), lit(l.md5Buckets))
@@ -231,38 +251,33 @@ object CorpusStore {
 
   /** The layout governing the CURRENT snapshot — what every tick and
     * pruned read resolves (never a compile-time constant). Before the
-    * first commit it is the staged creation choice, else [[DefaultLayout]];
-    * a layout with a foreign expression version throws (see
-    * [[BucketExprVersion]]).
+    * first commit it is the staged creation choice; a store with neither
+    * has no layout yet (its creation tick sizes one) and throws, as does a
+    * layout with a foreign expression version (see [[BucketExprVersion]]).
     */
   def layoutOf(spark: SparkSession, root: String): StoreLayout =
     ManifestTable.currentVersion(spark, root) match {
-      case None    => readStagedLayout(spark, root).getOrElse(DefaultLayout)
+      case None => readStagedLayout(spark, root).getOrElse(
+        throw new IllegalStateException(s"no layout at $root yet: the " +
+          "creation tick sizes it from its keepers"))
       case Some(v) => committedLayoutAt(spark, root, v)
     }
 
-  /** The layout a tick must use: the persisted one when the store exists;
-    * the caller's choice (or the default) at creation. A caller asserting
-    * a layout against an existing store that disagrees is a configuration
-    * error — the one path that used to be a silent dedup miss.
+  /** The layout version `prev` of the store committed, which a tick must
+    * use (None before the first commit). A caller asserting a layout
+    * against an existing store that disagrees is a configuration error —
+    * the one path that used to be a silent dedup miss.
     */
-  private def resolveLayout(spark: SparkSession, root: String,
-                            ifNew: Option[StoreLayout]): StoreLayout = {
+  private def storedLayout(spark: SparkSession, root: String,
+                           prev: Option[Long],
+                           ifNew: Option[StoreLayout]): Option[StoreLayout] = {
     ifNew.foreach(requireCurrentExprVersion(_, "tick(layoutIfNew)"))
-    ManifestTable.currentVersion(spark, root) match {
-      case Some(v) =>
-        val persisted = committedLayoutAt(spark, root, v)
-        ifNew.foreach(l => require(l == persisted,
-          s"store at $root is laid out as $persisted but the tick asserted " +
-            s"$l; changing a live store's layout is compact(rebucketTo = ...)"))
-        persisted
-      // not yet created: the most recent EXPLICIT choice wins — the
-      // caller's, else the staged choice of an earlier zero-commit
-      // creation tick. There is no data a layout change could corrupt
-      // before the first commit, so last-writer-wins is safe here and
-      // only here.
-      case None => ifNew.orElse(readStagedLayout(spark, root))
-        .getOrElse(DefaultLayout)
+    prev.map { v =>
+      val persisted = committedLayoutAt(spark, root, v)
+      ifNew.foreach(l => require(l == persisted,
+        s"store at $root is laid out as $persisted but the tick asserted " +
+          s"$l; changing a live store's layout is compact(rebucketTo = ...)"))
+      persisted
     }
   }
 
@@ -670,7 +685,8 @@ object CorpusStore {
     * append-only, so old snapshots share all but the newest files).
     *
     * `layoutIfNew` picks the bucket layout WHEN THIS TICK CREATES the
-    * store; on an existing store the persisted layout governs, and
+    * store (without it, the tick sizes one from its keepers —
+    * [[sizedLayout]]); on an existing store the persisted layout governs, and
     * asserting a different one here throws (see [[StoreLayout]]). The
     * choice survives even if this tick's documents all drop (it is staged
     * under `_layout/v1` for the first real commit to adopt), so creation
@@ -806,9 +822,10 @@ object CorpusStore {
     if (tickId.exists(id => markerExists(spark, root, "_ticks", id)))
       return (TickReport(prev.getOrElse(0L), 0L, 0L, 0L, 0L,
         replaySkipped = true), Array.empty)
-    // the store's OWN layout (or the creation choice): every bucket
-    // expression below — prune side and write side — goes through it
-    val layout = resolveLayout(spark, root, layoutIfNew)
+    // the store's OWN layout: every probe's bucket expression goes through
+    // it. A creation tick probes nothing, so it decides its layout at the
+    // write, once its keepers are known
+    val stored = storedLayout(spark, root, prev, layoutIfNew)
     val stamp = tickId.getOrElse("untracked")
     val op = s"tick $stamp"
 
@@ -841,11 +858,11 @@ object CorpusStore {
       // files that may hold a batch md5 (the same bucket expression the
       // write side uses, evaluated driver-side)
       val exactNew = phase(spark, op, "exact") {
-        lazy val byBucket =
-          firstOf.keys.toSeq.groupBy(bucketForKey("doc", layout, _))
-        val reads = if (prev.isEmpty) Seq.empty else Seq("doc", "tomb")
-          .map(k => k -> bloomPrunedKindFiles(spark, root, k, byBucket))
-          .filter(_._2.nonEmpty)
+        val reads = stored.toSeq.flatMap { l =>
+          val byBucket = firstOf.keys.toSeq.groupBy(bucketForKey("doc", l, _))
+          Seq("doc", "tomb")
+            .map(k => k -> bloomPrunedKindFiles(spark, root, k, byBucket))
+        }.filter(_._2.nonEmpty)
           .map { case (k, files) => readKindFiles(spark, root, files,
             kindSchema(k)).select(col("text_md5")) }
         val seen = if (reads.isEmpty) Set.empty[String]
@@ -862,12 +879,12 @@ object CorpusStore {
       // near-dup-vs-store: candidates from the store's band postings under
       // the batch's band keys, verified against the candidates' shingle
       // rows — every store read two-level pruned
-      val nearDups = if (prev.isEmpty || exactNew.isEmpty) Set.empty[Long]
-        else phase(spark, op, "near") {
+      val nearDups = stored match {
+        case Some(l) if exactNew.nonEmpty => phase(spark, op, "near") {
           val keys = bandKeys(exactNew)
           val probes = keys.map(_._1).distinct
           val files = bloomPrunedKindFiles(spark, root, "band", probes
-            .groupMap { case (b, v) => bandBucketForKey(b, v, layout) }(_._2))
+            .groupMap { case (b, v) => bandBucketForKey(b, v, l) }(_._2))
           val buckets =
             if (files.isEmpty) Map.empty[(Int, String), Seq[Long]]
             else cappedBuckets(readKindFiles(spark, root, files, bandSchema)
@@ -876,9 +893,11 @@ object CorpusStore {
             buckets.getOrElse(k, Nil).map(id -> _) }.distinct
           val sh = readKindFiles(spark, root, bloomPrunedKindFiles(spark, root,
             "sh", pairs.map(_._2).distinct.map(_.toString)
-              .groupBy(bucketForKey("sh", layout, _))), shSchema)
+              .groupBy(bucketForKey("sh", l, _))), shSchema)
           Dedup.verifiedPairs(pairs, batch, sh, threshold).map(_._1).toSet
         }
+        case _ => Set.empty[Long]
+      }
       // within-batch near-dup components over the survivors: pairs share a
       // band bucket of at most `cap` survivors; each verified component
       // keeps its minimum doc_id
@@ -893,6 +912,12 @@ object CorpusStore {
         survivors.filter(id => label.getOrElse(id, id) == id)
       }
       val tombs = exactNew.filterNot(keepers.toSet)
+      // a creation tick's layout: the most recent EXPLICIT choice — the
+      // caller's, else an earlier zero-commit creation tick's staged one —
+      // else sized from its keepers. Before the first commit there is no
+      // data a layout change could corrupt, so last-writer-wins is safe
+      val layout = stored.orElse(layoutIfNew).orElse(readStagedLayout(spark, root))
+        .getOrElse(sizedLayout(keepers.size))
       // keepers' doc rows + their dedup state (shingles for verification,
       // band postings for the prune) + the dropped docs' tombstones: ONE
       // write job straight into data/ (one file per touched bucket per
@@ -926,10 +951,9 @@ object CorpusStore {
           // a creation tick whose documents ALL dropped still records its
           // explicit layout choice (as the staged layout the first real
           // commit will adopt) — otherwise a later tick without
-          // layoutIfNew would silently create the store under
-          // DefaultLayout, defeating the creation-time assertion
-          if (prev.isEmpty && layoutIfNew.isDefined)
-            writeStagedLayout(spark, root, layout)
+          // layoutIfNew would silently size the store by the rule,
+          // defeating the creation-time assertion
+          if (prev.isEmpty) layoutIfNew.foreach(writeStagedLayout(spark, root, _))
           prev.getOrElse(0L)
         }
         else phase(spark, op, "commit") {
@@ -1204,19 +1228,21 @@ object CorpusStore {
         .getOrElse(kindFiles(spark, root, kind))
 
     /** Of `files`, each one holding a `victim` row: file → (its rows, its
-      * victim rows, the victims' doc_ids). One aggregate per kind — the
-      * rows it counts are what the rewrite must keep.
+      * victim rows, the victims' doc_ids). One aggregate per kind, as ONE
+      * job (an RDD aggregate: no AQE map-stage job) — the rows it counts
+      * are what the rewrite must keep.
       */
     def victimFiles(files: Seq[String], kind: String, victim: Column)
         : Map[String, (Long, Long, Seq[Long])] =
       if (files.isEmpty) Map.empty
       else locate(readWithParts(spark, root, files, kind)
-        .groupBy(input_file_name().as("f"))
-        .agg(count(lit(1)).as("n"), count(when(victim, 1)).as("nv"),
-          collect_set(when(victim, col("doc_id"))).as("ids"))
-        .filter(col("nv") > 0)
-        .collect()).map(r => relName(r.getString(0)) ->
-          (r.getLong(1), r.getLong(2), r.getSeq[Long](3))).toMap
+        .select(input_file_name(), coalesce(victim, lit(false)), col("doc_id"))
+        .rdd.map { r =>
+          val ids = if (r.getBoolean(1)) List(r.getLong(2)) else Nil
+          r.getString(0) -> (1L, ids.size.toLong, ids) }
+        .reduceByKey((a, b) => (a._1 + b._1, a._2 + b._2, a._3 ::: b._3))
+        .filter(_._2._2 > 0)
+        .collect()).map { case (f, v) => relName(f) -> v }.toMap
 
     // victim documents, through the index
     val docVictim = col("text_md5").isin(keys: _*)
@@ -1224,13 +1250,13 @@ object CorpusStore {
     val victimIds = docHits.values.flatMap(_._3).toSeq.distinct
 
     // tombstones to add: every requested md5 not already blocked (kept
-    // victims are not in tomb — their md5s get blocked here)
+    // victims are not in tomb — their md5s get blocked here). The matches
+    // are request-bounded: collected as they are, deduplicated here
     val tombShort = shortlist("tomb", keys)
     val already =
       if (tombShort.isEmpty) Set.empty[String]
       else locate(readKindFiles(spark, root, tombShort, tombSchema)
         .filter(col("text_md5").isin(keys: _*))
-        .select(col("text_md5")).distinct()
         .collect()).map(_.getString(0)).toSet
     val newTombs = keys.filterNot(already.contains)
 
@@ -1251,8 +1277,8 @@ object CorpusStore {
           readKindFiles(spark, root, shHits.keys.toSeq, shSchema)
             .filter(idVictim)),
         Dedup.NumHashes / Dedup.NumBands)
-        .select(col("band_id"), col("band_val")).distinct()
-        .collect()).map(r => (r.getInt(0), r.getString(1)))
+        .select(col("band_id"), col("band_val"))
+        .collect()).map(r => (r.getInt(0), r.getString(1))).distinct
     val bandByBucket: Map[Int, Seq[String]] = bandKeys.toSeq
       .groupBy { case (id, v) => bandBucketForKey(id, v, layout) }
       .map { case (b, kvs) => b -> kvs.map(_._2).distinct }

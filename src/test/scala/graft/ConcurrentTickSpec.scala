@@ -68,6 +68,10 @@ class ConcurrentTickSpec extends SparkSpec {
         Set("race1", "race2"))
       assert(ManifestTable.currentVersion(spark, root).contains(2L),
         "expected exactly two committed versions")
+      // the loser's recompute adopted the layout the winner created
+      assert(ManifestTable.commitMeta(spark, root, 2L).get("layout") ==
+        ManifestTable.commitMeta(spark, root, 1L).get("layout"),
+        "the losing creator committed a layout of its own")
 
       // exactly one copy of the contested text survived; the loser's copy
       // is tombstoned — i.e. the loser's recompute SAW the winner's keeper

@@ -45,9 +45,11 @@ class CorpusStoreBloomSpec extends SparkSpec {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     val root = java.nio.file.Files.createTempDirectory("graft_bloom").toString
     try {
+      // pinned to 16 buckets a kind: the dir-pruned shortlists the blooms
+      // must shrink are one touched bucket's files, not the whole kind
       (0 until 2).foreach { i =>
         CorpusStore.tick(docs.filter(col("doc_id") % 3 === i), root,
-          tickId = Some(s"w$i"))
+          tickId = Some(s"w$i"), layoutIfNew = Some(StoreLayout(16, 16, 16)))
       }
       val lay = CorpusStore.layoutOf(spark, root)
       val files = ManifestTable.liveFiles(spark, root)
@@ -131,7 +133,7 @@ class CorpusStoreBloomSpec extends SparkSpec {
     try {
       (0 until 3).foreach { i =>
         CorpusStore.tick(docs.filter(col("doc_id") % 3 === i), root,
-          tickId = Some(s"w$i"))
+          tickId = Some(s"w$i"), layoutIfNew = Some(StoreLayout(16, 16, 16)))
       }
       def checkProbes(): Unit = {
         val lay = CorpusStore.layoutOf(spark, root)

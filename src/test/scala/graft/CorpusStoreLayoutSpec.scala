@@ -162,9 +162,10 @@ class CorpusStoreLayoutSpec extends SparkSpec {
       // buckets they touch accumulate extra files and everything else
       // stays cold. threshold≈1 keeps the near-dup gate out of the way —
       // this spec is about files, not dedup decisions.
+      // pinned to 16 buckets a kind: cold buckets need more than one
       def tick(batch: DataFrame, id: String) =
         CorpusStore.tick(batch, root, tickId = Some(id), minQuality = 0.0,
-          threshold = 0.999)
+          threshold = 0.999, layoutIfNew = Some(StoreLayout(16, 16, 16)))
       tick(docs.filter(col("doc_id") % 3 === 0), "w0")
       val lay = CorpusStore.layoutOf(spark, root)
       val rest = docs.filter(col("doc_id") % 3 =!= 0)
@@ -291,12 +292,13 @@ class CorpusStoreLayoutSpec extends SparkSpec {
       assert(ManifestTable.currentVersion(spark, root).isEmpty,
         "a rejected layout still committed a snapshot")
       // at migration: compact(rebucketTo) guards the same way
-      CorpusStore.tick(docs.filter(col("doc_id") % 7 === 0), root,
+      val r = CorpusStore.tick(docs.filter(col("doc_id") % 7 === 0), root,
         tickId = Some("w0"))
       intercept[IllegalArgumentException] {
         CorpusStore.compact(spark, root, rebucketTo = Some(bad))
       }
-      assert(CorpusStore.layoutOf(spark, root) == CorpusStore.DefaultLayout)
+      assert(CorpusStore.layoutOf(spark, root) ==
+        CorpusStore.sizedLayout(r.nKept))
     } finally spark.catalog.clearCache()
   }
 
@@ -317,7 +319,7 @@ class CorpusStoreLayoutSpec extends SparkSpec {
         "zero-commit creation choice not visible to layoutOf")
 
       // the store's ACTUAL creation, with no layout argument at all,
-      // adopts the staged choice — not DefaultLayout
+      // adopts the staged choice — not the sizing rule's
       CorpusStore.tick(docs.filter(col("doc_id") % 7 === 1), root,
         tickId = Some("w1"))
       assert(ManifestTable.currentVersion(spark, root).contains(1L))
@@ -336,6 +338,48 @@ class CorpusStoreLayoutSpec extends SparkSpec {
         CorpusStore.tick(docs.filter(col("doc_id") % 7 === 2), root,
           layoutIfNew = Some(StoreLayout(8, 8, 8)))
       }
+    } finally spark.catalog.clearCache()
+  }
+
+  test("the creation tick sizes the layout from its keepers; later ticks " +
+    "keep it, compact(rebucketTo) grows it, an explicit choice wins") {
+    import spark.implicits._
+    // distinct synthetic documents: every one is kept
+    def wave(w: Int): DataFrame = (0 until 12).map { i =>
+      (w * 100L + i, "en", "web", s"sizing wave $w doc $i " +
+        (0 until 25).map(j => s"t${w}_${i}_$j").mkString(" "))
+    }.toDF("doc_id", "lang", "source", "text")
+    def tick(r: String, w: Int, layout: Option[StoreLayout] = None) =
+      CorpusStore.tick(wave(w), r, tickId = Some(s"w$w"), minQuality = 0.0,
+        layoutIfNew = layout)
+    val root = java.nio.file.Files.createTempDirectory("graft_laysize").toString
+    val pinned = java.nio.file.Files.createTempDirectory("graft_laypin").toString
+    def metaLayout(r: String): Option[String] = ManifestTable.commitMeta(spark,
+      r, ManifestTable.currentVersion(spark, r).get).get("layout")
+    try {
+      val r0 = tick(root, 0)
+      assert(r0.nKept > 0 && CorpusStore.sizedLayout(r0.nKept) ==
+        StoreLayout(1, 1, 1), s"a small creation tick is one bucket: $r0")
+      assert(metaLayout(root).contains(StoreLayout(1, 1, 1).render))
+      // one file per kind (the band kind: one per band id)
+      ManifestTable.liveFiles(spark, root).groupBy(_.split('/').head)
+        .foreach { case (kind, files) =>
+          val cap = if (kind == "p_kind=band") graft.operators.Dedup.NumBands
+            else 1
+          assert(files.size <= cap, s"$kind wrote ${files.size} files")
+        }
+      tick(root, 1)
+      assert(metaLayout(root).contains(StoreLayout(1, 1, 1).render),
+        "a later tick re-sized the committed layout")
+      CorpusStore.compact(spark, root, rebucketTo = Some(StoreLayout(4, 4, 4)))
+      val r2 = tick(root, 2)
+      assert(r2.nKept == 12L && metaLayout(root)
+        .contains(StoreLayout(4, 4, 4).render),
+        s"a tick after the rebucket left the grown layout: $r2")
+
+      tick(pinned, 0, Some(StoreLayout(2, 2, 2)))
+      assert(metaLayout(pinned).contains(StoreLayout(2, 2, 2).render),
+        "an explicit creation layout lost to the sizing rule")
     } finally spark.catalog.clearCache()
   }
 
@@ -396,8 +440,8 @@ class CorpusStoreLayoutSpec extends SparkSpec {
       assertMetaOnly(4L, rebucketed, "the rebucket compaction")
 
       // a committed version without its layout is a foreign or tampered
-      // root: resolving it throws instead of guessing DefaultLayout (=
-      // wrong dirs = missed duplicates on this 32-bucket store)
+      // root: resolving it throws instead of guessing a layout (= wrong
+      // dirs = missed duplicates on this 32-bucket store)
       rewrite(manifestPath(root, 4L))(_.split("\n")
         .filterNot(_.startsWith("#meta:")).mkString("\n") + "\n")
       val ex = intercept[IllegalStateException] {
@@ -416,7 +460,7 @@ class CorpusStoreLayoutSpec extends SparkSpec {
       val n = 3
       (0 until n).foreach { i =>
         CorpusStore.tick(docs.filter(col("doc_id") % n === i), root,
-          tickId = Some(s"w$i"))  // DefaultLayout = 16/16/16
+          tickId = Some(s"w$i"), layoutIfNew = Some(StoreLayout(16, 16, 16)))
       }
       val docsBefore = CorpusStore.docs(spark, root).count()
       val t0 = System.nanoTime()

@@ -14,7 +14,8 @@ import graft.operators.CorpusStore.StoreLayout
   * visible. These specs pin what that must preserve — every live file has
   * a sidecar byte-equal to the filter its own rows define, the committed
   * rows equal the reported counts — and what it must not cost: one write
-  * job per tick, after which the tick reads nothing it wrote.
+  * job per tick, after which the tick reads nothing it wrote, and one job
+  * per forget locate read.
   */
 @graft.tags.Slow
 class CorpusStoreWriteSpec extends SparkSpec {
@@ -161,6 +162,11 @@ class CorpusStoreWriteSpec extends SparkSpec {
           s"$op ran unlabelled jobs: $seen")
         assert(sc.getLocalProperty("spark.job.description") == null,
           s"$op did not restore the caller's job description")
+        // forget's four locate reads (doc victims, tomb hits, victim band
+        // keys, band victims) are one job each
+        val locates = seen.count(_._2 == s"$op: locate")
+        assert(op != "forget" || (locates > 0 && locates <= 4),
+          s"forget: locate ran $locates jobs: $seen")
       }
     } finally spark.catalog.clearCache()
   }

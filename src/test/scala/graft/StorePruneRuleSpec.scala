@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
 import graft.operators.CorpusStore
+import graft.operators.CorpusStore.StoreLayout
 import graft.plans.GraftExtensions
 
 /** The optimizer half of the store's file index ([[graft.plans.StorePruneRule]]):
@@ -16,12 +17,14 @@ import graft.plans.GraftExtensions
   */
 class StorePruneRuleSpec extends SparkSpec {
 
+  // pinned to 16 buckets a kind: the prune assertions need more than one
+  // bucket to prune between (the sizing rule gives this store 1/1/1)
   private lazy val root: String = {
     val r = java.nio.file.Files.createTempDirectory("graft_prune").toString
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     (0 until 2).foreach { i =>
       CorpusStore.tick(docs.filter(col("doc_id") % 2 === i), r,
-        tickId = Some(s"w$i"))
+        tickId = Some(s"w$i"), layoutIfNew = Some(StoreLayout(16, 16, 16)))
     }
     GraftExtensions.install(spark)
     r
