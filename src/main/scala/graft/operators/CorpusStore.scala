@@ -379,8 +379,9 @@ object CorpusStore {
       BloomKeyOf.get(kind))
 
   /** Rows [[ManifestTable.writeFiles]] reported writing for `kind`. */
-  private def rowsOf(written: Seq[(String, Long)], kind: String): Long =
-    written.collect { case (f, n) if f.startsWith(s"p_kind=$kind/") => n }.sum
+  private def rowsOf(written: Seq[(ManifestTable.FileEntry, Long)],
+                     kind: String): Long =
+    written.collect { case (f, n) if f.path.startsWith(s"p_kind=$kind/") => n }.sum
 
   /** [[prunedKindFiles]] sharpened by the per-file Bloom sidecars: of the
     * batch-touched buckets' files, keep only those whose filter might
@@ -923,7 +924,7 @@ object CorpusStore {
       // write job straight into data/ (one file per touched bucket per
       // kind, each with its Bloom sidecar)
       val written =
-        if (exactNew.isEmpty) Seq.empty[(String, Long)]
+        if (exactNew.isEmpty) Seq.empty[(ManifestTable.FileEntry, Long)]
         else phase(spark, op, "write") {
           val kept = batch.filter(col("doc_id").isin(keepers: _*))
           ManifestTable.writeFiles(spark, root, Seq(
@@ -957,7 +958,7 @@ object CorpusStore {
           prev.getOrElse(0L)
         }
         else phase(spark, op, "commit") {
-          val files = written.map(_._1)
+          val files = written.map(_._1.path)
           val v =
             try ManifestTable.commitReplace(spark, root, Seq.empty, files,
               expectedVersion = Some(prev.getOrElse(0L)),
@@ -1153,7 +1154,7 @@ object CorpusStore {
       return (live.length.toLong, live.length.toLong) // nothing fragmented
     // every rewritten kind in ONE write job, then ONE commit
     val added = phase(spark, "compact", "write")(
-      ManifestTable.writeFiles(spark, root, plans.map(_._2))).map(_._1)
+      ManifestTable.writeFiles(spark, root, plans.map(_._2))).map(_._1.path)
     // the layout flips in the SAME commit (its meta line)
     ManifestTable.commitReplace(spark, root,
       if (rebucket) Seq("") else replacedDirs, added,
@@ -1312,7 +1313,7 @@ object CorpusStore {
         s"${newTombs.size}")
     val removed = rewrites.flatMap(_._2.keys).distinct
     val v = ManifestTable.commitRewriteFiles(spark, root, removed,
-      written.map(w => ManifestTable.FileEntry(w._1)),
+      written.map(_._1),
       meta = Map("layout" -> layout.render))
     ManifestTable.vacuum(spark, root, retainSnapshots, deep = false)
     ForgetReport(v, victimIds.size.toLong, newTombs.size.toLong,
@@ -1362,10 +1363,15 @@ object CorpusStore {
     * (identical output to the all-at-once incremental build when the
     * ticks were its arrival waves; spec-asserted).
     *
-    * Cache lifecycle: the tail persists its multiply-consumed stage frames
-    * under the session-cache contract — a long-running caller materializes
-    * the manifest, then clears the session cache (or runs each refresh in
-    * its own session), unlike [[tick]], which releases its own caches.
+    * Cache lifecycle: unlike [[tick]], which releases its own caches, the
+    * tail keeps its multiply-consumed stage frames alive past the call. Its
+    * persisted frames follow the session-cache contract (a long-running
+    * caller materializes the manifest, then clears the session cache or
+    * runs each refresh in its own session), but its stage cuts
+    * (`Corpus.stageCut`, lazy `localCheckpoint` blocks) are NOT dropped
+    * by `spark.catalog.clearCache()`: they stay among the context's
+    * persistent RDDs until GC and the `ContextCleaner` reclaim them once
+    * the frames are unreachable.
     *
     * Jobs the call runs itself are described `manifest: <phase>`: the
     * tail's stage cuts run their upstream shuffle stages when planned, so

@@ -1,8 +1,6 @@
 package graft.operators
 
-import java.util.UUID
-
-import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -13,9 +11,10 @@ import org.apache.spark.sql.functions._
   * semantics (S8/S9) over a date-partitioned sink — the object-storage
   * analog of `ON CONFLICT DO UPDATE`.
   *
-  * Durability: the sink is a [[ManifestTable]] — the merged slice is staged,
-  * published under never-colliding names, and made visible by ONE atomic
-  * manifest rename. There is no delete-before-commit window: a crash at any
+  * Durability: the sink is a [[ManifestTable]] — the merged slice is
+  * written straight into the sink's `data/` under never-colliding names
+  * ([[ManifestTable.writeFiles]]) and made visible by ONE atomic manifest
+  * rename. There is no delete-before-commit window: a crash at any
   * point leaves the previous snapshot fully readable (the reference gets the
   * same guarantee from Postgres's transactional upsert,
   * `aggregators/base.py:155-238`).
@@ -40,8 +39,8 @@ object Incremental {
       .filter(_.startsWith("p_date=")).distinct
 
   /** S6: the sink's resume point. Fast path: when EVERY live file carries
-    * manifest min/max stats for `tsCol` (written by [[mergeAndCommit]]'s
-    * footer pass), the watermark is the max of the file maxes — pure
+    * manifest min/max stats for `tsCol` (taken by [[mergeAndCommit]]'s
+    * writing tasks), the watermark is the max of the file maxes — pure
     * manifest metadata, zero file opens. Any stats-less file could hide a
     * larger ts, so the fallback reads the latest date partition's files
     * (the max always lives there), never the full sink.
@@ -116,7 +115,7 @@ object Incremental {
     val batch = newData.withColumn("p_date", to_date(col(tsCol))).persist()
     try {
       val batchDates = datesOf(batch)
-      // nothing to upsert: no staging, no commit (a re-detected natural gap
+      // nothing to upsert: no write, no commit (a re-detected natural gap
       // refetches empty on every repair tick)
       if (batchDates.isEmpty) return SyncStats(0L, 0L, 0L)
 
@@ -161,44 +160,25 @@ object Incremental {
           count(when(col("__in_batch") && col("__in_sink"), 1)).as("updated"))
         .drop("__rn", "__new", "__in_batch", "__in_sink")
 
-      // stage → publish → one atomic manifest rename. A partition whose rows
-      // all merged away produces no staged files but is still listed as
-      // replaced, so its stale files drop out of the new snapshot.
-      val staging = s"$sinkPath/_staging/${UUID.randomUUID()}"
-      // INT64-micros timestamps (scoped; INT96 is parquet-deprecated and
-      // carries no footer stats, which would disable both the manifest
-      // watermark fast path and ts file skipping)
-      val prevTsType = spark.conf.get("spark.sql.parquet.outputTimestampType")
-      spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // one file per touched partition: the layout is independent of how
-      // the LWW shuffle happened to split the keys
-      try merged.repartition(col("p_date"))
-        .write.mode(SaveMode.Overwrite).partitionBy("p_date").parquet(staging)
-      finally spark.conf.set("spark.sql.parquet.outputTimestampType", prevTsType)
-      val added = ManifestTable.publishFiles(spark, sinkPath, staging)
-      // loud, never silent: a non-empty batch merges to a non-empty slice
-      // (LWW keeps at least one row per key), so zero published files means
-      // the staged write vanished before the publish (external cleanup or a
-      // concurrent writer's deep vacuum racing this tick) — committing would
-      // REPLACE the touched partitions with nothing and lose their rows
-      require(added.nonEmpty,
-        s"staged sink files vanished before publish at $sinkPath — is " +
-          "another writer's housekeeping running against this sink?")
-      // row counts AND tsCol min/max from the parquet FOOTERS of the
-      // published files — one concurrent metadata read per file, not a
-      // second full scan of the merged slice; the stats ride the manifest so
-      // later watermark reads and range scans are metadata-only
-      val meta = ManifestTable.footerMeta(spark,
-        ManifestTable.dataDir(sinkPath), added, Seq(tsCol))
-      ManifestTable.commitEntries(spark, sinkPath, touched, meta.map(_._1))
+      // write → one atomic manifest rename. A partition whose rows all
+      // merged away produces no file but is still listed as replaced, so
+      // its stale files drop out of the new snapshot. One file per touched
+      // partition: the layout is independent of how the LWW shuffle
+      // happened to split the keys. The writing tasks return each file's
+      // row count and tsCol min/max, so later watermark reads and range
+      // scans are metadata-only.
+      val written = ManifestTable.writeFiles(spark, sinkPath, Seq(
+        ManifestTable.WriteSet(merged, merged.columns.filter(_ != "p_date").toSeq,
+          ManifestTable.partitionDir(Seq("p_date")), lit(0), None, Seq(tsCol))))
+      ManifestTable.commitEntries(spark, sinkPath, touched, written.map(_._1))
       // cheap tier: per-tick reclamation stays manifest arithmetic. Crash
-      // orphans (published by a tick that died before its commit) wait
-      // for the sink's maintenance pass — [[Layout.compactTable]] runs
-      // the deep (listing) vacuum when it rewrites the sink's files
+      // orphans (written by a tick that died before its commit) wait for
+      // the sink's maintenance pass — [[Layout.compactTable]] runs the
+      // deep (listing) vacuum when it rewrites the sink's files
       ManifestTable.vacuum(spark, sinkPath, deep = false)
 
       val observed = counts.get
-      SyncStats(meta.map(_._2).sum,
+      SyncStats(written.map(_._2).sum,
         observed("inserted").asInstanceOf[Long], observed("updated").asInstanceOf[Long])
     } finally batch.unpersist()
   }

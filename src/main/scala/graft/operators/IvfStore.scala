@@ -1,8 +1,6 @@
 package graft.operators
 
-import java.util.UUID
-
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Materialized IVF INDEX — model + postings — the piece that makes IVF an
@@ -130,7 +128,7 @@ object IvfStore {
     }
   }
 
-  /** Shared postings commit: stage the cell-partitioned files, attach
+  /** Shared postings commit: write the cell-partitioned files with their
     * vec_id stats (so the self-query fetch file-prunes), record the model
     * version this snapshot's assignments used BEFORE the commit (the
     * single-writer version-pairing discipline of [[QuantStore.build]]),
@@ -142,12 +140,10 @@ object IvfStore {
                              tick: Option[String] = None): Long = {
     val prev = ManifestTable.currentVersion(spark, postingsRoot(root))
       .getOrElse(0L)
-    val staging = s"${postingsRoot(root)}/_staging/${UUID.randomUUID()}"
-    postings.withColumn("p_cell", col("centroid_id"))
-      .write.partitionBy("p_cell").mode(SaveMode.Overwrite).parquet(staging)
-    val added = ManifestTable.publishFiles(spark, postingsRoot(root), staging)
-    val entries = ManifestTable.footerMeta(spark,
-      ManifestTable.dataDir(postingsRoot(root)), added, Seq("vec_id")).map(_._1)
+    val entries = ManifestTable.writeFiles(spark, postingsRoot(root), Seq(
+      ManifestTable.WriteSet(postings.withColumn("p_cell", col("centroid_id")),
+        postings.columns.toSeq, ManifestTable.partitionDir(Seq("p_cell")),
+        spark_partition_id(), None, Seq("vec_id")))).map(_._1)
     // the model↔postings pairing rides INSIDE the manifest commit (atomic
     // with the snapshot through the conditional publisher — no separately
     // written sidecar a racing committer could clobber), and the
@@ -230,21 +226,10 @@ object IvfStore {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val nPurged = touched.join(idsDf, Seq("vec_id"), "left_semi").count()
-      val staging = s"$pr/_staging/${UUID.randomUUID()}"
       val survivors = touched.join(idsDf, Seq("vec_id"), "left_anti")
-      val nSurvivors = survivors.count()
-      survivors.repartition(col("p_cell"))
-        .write.partitionBy("p_cell").mode(SaveMode.Overwrite).parquet(staging)
-      val added = ManifestTable.publishFiles(spark, pr, staging)
-      // publish integrity (the corpus purge's contract): staged survivor
-      // rows must all arrive — silently dropping NON-victim postings would
-      // be index corruption wearing a compliance hat
-      val nPub = if (added.isEmpty) 0L else readRel(added).count()
-      require(nPub == nSurvivors,
-        s"index purge published $nPub surviving postings, expected " +
-          s"$nSurvivors — staged files vanished before publish; is another " +
-          "writer's housekeeping running?")
-      val entries = ManifestTable.footerMeta(spark, dd, added, Seq("vec_id"))
+      val entries = ManifestTable.writeFiles(spark, pr, Seq(ManifestTable.WriteSet(
+        survivors, survivors.columns.filter(_ != "p_cell").toSeq,
+        ManifestTable.partitionDir(Seq("p_cell")), lit(0), None, Seq("vec_id"))))
         .map(_._1)
       // the rewrite changes no assignment, so the new snapshot pairs with
       // the SAME model — the ref rides the commit's own meta lines (atomic

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{lit, spark_partition_id}
 
 /** Small-file compaction of a [[ManifestTable]] sink. Continuous upsert
   * ticks ([[Incremental.syncTick]]) accrue one small file per touched
@@ -11,10 +12,10 @@ import org.apache.spark.sql.{SaveMode, SparkSession}
 object Layout {
 
   /** Compaction of a [[ManifestTable]] sink with a truly atomic cutover:
-    * rewrite the live snapshot into ~`targetBytes` files, publish them, and
-    * flip one manifest. Readers see either the old file set or the new one —
-    * never an empty or half-swapped directory. Returns (files_before,
-    * files_after).
+    * rewrite the live snapshot into ~`targetBytes` files, written straight
+    * into `data/`, and flip one manifest. Readers see either the old file
+    * set or the new one — never an empty or half-swapped directory.
+    * Returns (files_before, files_after).
     */
   def compactTable(spark: SparkSession, root: String,
                    targetBytes: Long = 128L << 20,
@@ -33,19 +34,14 @@ object Layout {
         s"${ManifestTable.dataDir(root)}/$f")).getLen
     }.sum
     val nOut = math.max(1, (totalBytes / targetBytes).toInt)
-    val staging = s"$root/_staging/compact-${java.util.UUID.randomUUID()}"
-    val writer = ManifestTable.read(spark, root).coalesce(nOut)
-      .write.mode(SaveMode.Overwrite)
-    (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*) else writer)
-      .parquet(staging)
-    val added = ManifestTable.publishFiles(spark, root, staging)
+    val rows = ManifestTable.read(spark, root).coalesce(nOut)
+    // one file per (partition dir, coalesced partition): a df.write's layout
+    val added = ManifestTable.writeFiles(spark, root, Seq(ManifestTable.WriteSet(
+      rows, rows.columns.filterNot(partitionCols.contains).toSeq,
+      if (partitionCols.isEmpty) lit("") else ManifestTable.partitionDir(partitionCols),
+      spark_partition_id(), None, statCols)))
     // replace-everything commit: empty prefix matches every live file
-    if (statCols.isEmpty)
-      ManifestTable.commitReplace(spark, root, Seq(""), added)
-    else
-      ManifestTable.commitEntries(spark, root, Seq(""),
-        ManifestTable.footerMeta(spark, ManifestTable.dataDir(root),
-          added, statCols).map(_._1))
+    ManifestTable.commitEntries(spark, root, Seq(""), added.map(_._1))
     // deep on purpose: compaction is the sink's maintenance pass, so it
     // also sweeps crash orphans the per-tick cheap vacuums leave behind
     ManifestTable.vacuum(spark, root, deep = true)

@@ -14,10 +14,13 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.ColumnIOFactory
 import org.apache.parquet.schema.{MessageType, PrimitiveType}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetWriteSupport}
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.sql.functions.{col, concat_ws, lit, udf}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{LongType, StringType, StructType, TimestampNTZType, TimestampType}
 import org.apache.spark.util.sketch.BloomFilter
 
 /** A commit lost its race: the target manifest version was taken (or the
@@ -42,24 +45,23 @@ final class CommitConflictException(msg: String)
   * }}}
   *
   * Protocol (write side):
-  *   1. publish: put freshly-written files into `data/` under their
-  *      partition dirs — either [[writeFiles]] writing them there directly
-  *      (one job, sidecars included) or a staged Spark write moved there
-  *      by [[publishFiles]]. File names carry a UUID, so versions never
-  *      collide and published-but-uncommitted files are invisible.
+  *   1. write: [[writeFiles]] writes fresh files straight into `data/`
+  *      under their partition dirs (one job, sidecars and per-file stats
+  *      included). File names carry a UUID, so versions never collide and
+  *      written-but-uncommitted files are invisible.
   *   2. commit: write the next manifest to a temp name, then one atomic
   *      `rename` — the ONLY mutation readers can observe. A crash anywhere
   *      before it leaves the previous snapshot fully intact (orphan files
-  *      only; `vacuum` reclaims them).
+  *      only; the deep `vacuum` reclaims them).
   *
   * Read side: the manifest IS the file listing — no recursive directory
   * listing, which at 100 TB (millions of files on object storage) is itself
   * the scan-planning bottleneck this format removes. Readers pin a snapshot:
   * a concurrent commit cannot make them see a torn mix of versions.
   *
-  * Single writer assumed for store-level housekeeping (staging sweeps,
-  * vacuum — the reference's collectors are single-flow too), but the COMMIT
-  * itself is conditional: the manifest install fails loudly when the target
+  * Single writer assumed for store-level housekeeping (vacuum — the
+  * reference's collectors are single-flow too), but the COMMIT itself is
+  * conditional: the manifest install fails loudly when the target
   * version already exists — atomically on local filesystems (hard link) and
   * HDFS (conditional rename), best-effort on object stores unless a
   * conditional-write [[commitPublisher]] is plugged in. A racing committer
@@ -111,7 +113,7 @@ object ManifestTable {
     * probes). Kept OUT of the manifest because filter bytes scale with row
     * count — sidecars are read lazily, only for the files a scan already
     * shortlisted, while the manifest stays O(file count). A data file is
-    * immutable once published, so its sidecar is immutable too (rewrites
+    * immutable once written, so its sidecar is immutable too (rewrites
     * produce new file names), which is what makes [[readBloom]]'s cache
     * safe with no invalidation protocol.
     */
@@ -121,32 +123,51 @@ object ManifestTable {
   /** One set of rows for [[writeFiles]]: `columns` of `rows` are the
     * files' data columns, in order (their types are the written schema);
     * `dir`, over any column of `rows`, places each row's file (a
-    * `data/`-relative directory such as `p_kind=doc/p_b=3`, or "" for
-    * `data/` itself), and rows with equal (`dir`, `split`) share one file.
-    * `bloomKey` names the data column each file's Bloom sidecar indexes.
+    * `data/`-relative directory such as `p_kind=doc/p_b=3` — see
+    * [[partitionDir]] — or "" for `data/` itself), and rows with equal
+    * (`dir`, `split`) share one file. `bloomKey` names the data column each
+    * file's Bloom sidecar indexes; `statCols` the INT64 data columns (longs,
+    * timestamps) whose per-file min/max the returned [[FileEntry]] carries.
     */
   case class WriteSet(rows: DataFrame, columns: Seq[String], dir: Column,
-                      split: Column, bloomKey: Option[String])
+                      split: Column, bloomKey: Option[String],
+                      statCols: Seq[String] = Seq.empty)
+
+  /** The directory `df.write.partitionBy(cols)` would put a row in
+    * (`c1=v1/c2=v2`, values escaped, nulls in the default partition) — the
+    * [[WriteSet]] `dir` of a partitioned table; `cols` stay out of its
+    * `columns`, as a partitioned write keeps them out of the files.
+    */
+  def partitionDir(cols: Seq[String]): Column = {
+    val path = udf((c: String, v: String) =>
+      ExternalCatalogUtils.getPartitionPathString(c, v))
+    concat_ws("/", cols.map(c => path(lit(c), col(c).cast("string"))): _*)
+  }
 
   /** Write `sets` straight into `data/` as ONE Spark job and return every
-    * written file as (path relative to `data/`, rows). Rows shuffle to
-    * their (set, dir, split) group and sort by it; each task streams every
-    * group it holds into one uniquely named `part-<uuid>` file through
-    * Spark's own parquet `OutputWriterFactory` (the encoding and footer
-    * metadata of a `df.write`) and writes the file's Bloom sidecar in the
-    * same task, sized from the exact row count it just wrote (fpp 0.01).
-    * A group's keys are buffered up to [[BloomBufferedKeys]]; a larger
-    * group (a compaction-sized file) builds its filter from a task-local
-    * read-back of the closed file's key column instead ([[readBackKeys]]).
-    * No staging, no rename, no footer pass and no sidecar job: the files
-    * are invisible until a commit lists them. A failed task attempt
-    * deletes the files it wrote; files of a job that fails as a whole, or
-    * of a writer whose commit never happens, are crash orphans the deep
-    * [[vacuum]] reclaims. Each set's plan should be exchange-free (a cut or
-    * a scan) for the write to stay one job.
+    * written file as (entry, rows): its path relative to `data/` and the
+    * min/max of the non-null values it holds in each of its set's
+    * `statCols` (a column with none gets no stats). Rows shuffle to their
+    * (set, dir, split) group and sort by it; each task streams every group
+    * it holds into one uniquely named `part-<uuid>` file through Spark's
+    * own parquet `OutputWriterFactory` (the encoding and footer metadata of
+    * a `df.write`, timestamps always as INT64 micros), tracking the stats as
+    * it goes, and writes the file's Bloom sidecar in the same task, sized
+    * from the exact row count it just wrote (fpp 0.01). A group's keys are
+    * buffered up to [[BloomBufferedKeys]]; a larger group (a
+    * compaction-sized file) builds its filter from a task-local read-back
+    * of the closed file's key column instead ([[readBackKeys]]). No
+    * staging, no rename, no footer pass and no sidecar job: the files are
+    * invisible until a commit lists them. A failed task attempt deletes the
+    * files it wrote; files of a job that fails as a whole, or of a writer
+    * whose commit never happens, are crash orphans the deep [[vacuum]]
+    * reclaims. The job runs inside one SQL execution per set, so an
+    * [[org.apache.spark.sql.Observation]] on a set's rows completes (a raw
+    * RDD job would never report it). Each set's plan should be
+    * exchange-free (a cut or a scan) for the write to stay one job.
     */
   def writeFiles(spark: SparkSession, root: String,
-                 sets: Seq[WriteSet]): Seq[(String, Long)] = {
+                 sets: Seq[WriteSet]): Seq[(FileEntry, Long)] = {
     if (sets.isEmpty) return Seq.empty
     val (dataBase, bloomBase) = writeBases(spark, root)
     // each set projected to (data columns…, dir, split)
@@ -157,29 +178,38 @@ object ManifestTable {
     }.toArray
     val keyCols = sets.zip(schemas)
       .map { case (s, sch) => s.bloomKey.map(sch.fieldIndex).getOrElse(-1) }
+    val statIdx = sets.zip(schemas).map { case (s, sch) =>
+      s.statCols.map { c =>
+        require(Seq(LongType, TimestampType, TimestampNTZType)
+          .contains(sch(c).dataType), s"stat column $c is not INT64: ${sch(c)}")
+        sch.fieldIndex(c)
+      }.toArray
+    }.toArray
     val format = new ParquetFileFormat()
     val job = org.apache.hadoop.mapreduce.Job.getInstance(format.getHadoopConf(spark))
     val factory = format.prepareWrite(spark, job, Map.empty, schemas.head)
+    // INT64 micros whatever the session default (INT96, parquet-deprecated)
+    job.getConfiguration.set(SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key, "TIMESTAMP_MICROS")
     val conf = new org.apache.spark.util.SerializableConfiguration(job.getConfiguration)
-    val rows = spark.sparkContext.union(projected.zipWithIndex.map { case (p, i) =>
-      val n = schemas(i).length
-      p.queryExecution.toRdd.mapPartitions { it =>
-        // the parquet writer writes every field of the row it is handed
-        val data = UnsafeProjection.create(schemas(i).fields.toSeq.zipWithIndex
-          .map { case (f, j) => BoundReference(j, f.dataType, f.nullable) })
-        it.map(r => ((i, r.getUTF8String(n).toString, r.getInt(n + 1)),
-          data(r).copy()))
-      }
-    })
-    rows.repartitionAndSortWithinPartitions(
+    def run(): Seq[(FileEntry, Long)] = spark.sparkContext.union(
+      projected.zipWithIndex.map { case (p, i) =>
+        val n = schemas(i).length
+        p.queryExecution.toRdd.mapPartitions { it =>
+          // the parquet writer writes every field of the row it is handed
+          val data = UnsafeProjection.create(schemas(i).fields.toSeq.zipWithIndex
+            .map { case (f, j) => BoundReference(j, f.dataType, f.nullable) })
+          it.map(r => ((i, r.getUTF8String(n).toString, r.getInt(n + 1)),
+            data(r).copy()))
+        }
+      }).repartitionAndSortWithinPartitions(
         new org.apache.spark.HashPartitioner(spark.sparkContext.defaultParallelism))
       .mapPartitions { it =>
         val tc = org.apache.spark.TaskContext.get()
         val fs = new Path(dataBase).getFileSystem(conf.value)
-        val done = ListBuffer.empty[(String, Long)]
+        val done = ListBuffer.empty[(FileEntry, Long)]
         var open: String = null // the file being written
         tc.addTaskFailureListener { (_, _) =>
-          dropFiles(fs, dataBase, bloomBase, (done.map(_._1) ++ Option(open)).toSeq)
+          dropFiles(fs, dataBase, bloomBase, (done.map(_._1.path) ++ Option(open)).toSeq)
         }
         // one task-attempt context per set: the set's schema rides its conf
         val ctx = schemas.indices.map { i =>
@@ -193,6 +223,7 @@ object ManifestTable {
         var w: org.apache.spark.sql.execution.datasources.OutputWriter = null
         var n = 0L
         var keys = ListBuffer.empty[Array[Byte]] // null past BloomBufferedKeys
+        var lo, hi = Array.empty[Long] // per stat column; lo > hi: no value
         def finish(): Unit = if (w != null) {
           w.close()
           if (keyCols(set) >= 0) {
@@ -203,7 +234,10 @@ object ManifestTable {
             val out = fs.create(new Path(s"$bloomBase/$open.bloom"), true)
             try bf.writeTo(out) finally out.close()
           }
-          done += open -> n
+          val stats = statIdx(set).indices.collect { case j if lo(j) <= hi(j) =>
+            schemas(set)(statIdx(set)(j)).name -> (lo(j), hi(j))
+          }.toMap
+          done += FileEntry(open, stats) -> n
           open = null
           w = null
         }
@@ -218,6 +252,8 @@ object ManifestTable {
             w = factory.newInstance(s"$dataBase/$open", schemas(set), ctx(set))
             n = 0L
             keys = ListBuffer.empty
+            lo = Array.fill(statIdx(set).length)(Long.MaxValue)
+            hi = Array.fill(statIdx(set).length)(Long.MinValue)
           }
           w.write(r)
           n += 1
@@ -230,11 +266,25 @@ object ManifestTable {
               .getBytes(StandardCharsets.UTF_8))
             if (keys.size > BloomBufferedKeys) keys = null
           }
+          var j = 0
+          while (j < lo.length) {
+            val c = statIdx(set)(j)
+            if (!r.isNullAt(c)) {
+              val v = r.getLong(c) // longs and timestamps (micros) alike
+              if (v < lo(j)) lo(j) = v
+              if (v > hi(j)) hi(j) = v
+            }
+            j += 1
+          }
         }
         finish()
         done.iterator
       }
       .collect().toSeq
+    // an Observation completes only on a SQL execution's end event
+    projected.foldLeft(() => run()) { (body, p) =>
+      () => SQLExecution.withNewExecutionId(p.queryExecution, Some("writeFiles"))(body())
+    }()
   }
 
   /** Keys a writer task buffers per file for its Bloom sidecar; a file
@@ -379,8 +429,7 @@ object ManifestTable {
   /** [[readBloom]] over many files, loading COLD sidecars from a bounded
     * thread pool — at production counts (thousands of files per touched
     * bucket) a cold tick's serial probe loop pays one filesystem round-trip
-    * per file on the driver, the same reason [[footerMeta]] reads footers
-    * concurrently. Warm entries are served from the cache and never touch
+    * per file on the driver. Warm entries are served from the cache and never touch
     * the pool; per-file semantics (including what is and isn't cached) are
     * exactly [[readBloom]]'s, which is thread-safe.
     */
@@ -515,15 +564,11 @@ object ManifestTable {
     * [[commitEntries]]) via a first-line read — one small RPC instead of a
     * full read+parse — so a store deleted and re-created at the same path
     * (which legitimately restarts version numbers) can never be served the
-    * old root's listing: the recreated manifest carries a fresh token even
-    * when its length and second-granularity mtime happen to collide with
-    * the old one's. Pre-token manifests fall back to (length, mtime) stat
-    * validation, which is exact up to the filesystem's mtime granularity.
+    * old root's listing. A manifest without a token (hand-written; every
+    * commit writes one) is parsed on every read, never cached.
     */
   private val EntryCacheMax = 8
-  private case class CachedEntries(len: Long, mtime: Long,
-                                   token: Option[String],
-                                   entries: Seq[FileEntry])
+  private case class CachedEntries(token: String, entries: Seq[FileEntry])
   private val entryCache =
     new java.util.LinkedHashMap[String, CachedEntries](16, 0.75f, true) {
       override def removeEldestEntry(
@@ -534,28 +579,20 @@ object ManifestTable {
   /** Data files of snapshot `version` with their pruning stats. */
   def entriesOf(spark: SparkSession, root: String, version: Long): Seq[FileEntry] = {
     val key = s"$root@$version"
+    // the token is unique per commit, so a match proves this is
+    // byte-for-byte the manifest that was parsed (a validation failure of
+    // any kind just falls through to a re-read)
     val cached = entryCache.synchronized(Option(entryCache.get(key)))
       .filter { c =>
-        c.token match {
-          // token alone decides: it is unique per commit, so a match proves
-          // this is byte-for-byte the manifest that was parsed (a validation
-          // failure of any kind just falls through to a re-read)
-          case Some(t) =>
-            try headerToken(spark, root, version).contains(t)
-            catch { case scala.util.control.NonFatal(_) => false }
-          case None =>
-            val st = fsOf(spark, root).getFileStatus(manifestPath(root, version))
-            c.len == st.getLen && c.mtime == st.getModificationTime
-        }
+        try headerToken(spark, root, version).contains(c.token)
+        catch { case scala.util.control.NonFatal(_) => false }
       }
     cached.map(_.entries).getOrElse {
-      val st = fsOf(spark, root).getFileStatus(manifestPath(root, version))
       val lines = allLinesOf(spark, root, version)
-      val token = lines.headOption.filter(_.startsWith(TokenPrefix))
       val parsed = lines.filterNot(_.startsWith("#")).map(parseEntry)
-      entryCache.synchronized(
-        entryCache.put(key,
-          CachedEntries(st.getLen, st.getModificationTime, token, parsed)))
+      lines.headOption.filter(_.startsWith(TokenPrefix)).foreach { t =>
+        entryCache.synchronized(entryCache.put(key, CachedEntries(t, parsed)))
+      }
       parsed
     }
   }
@@ -628,84 +665,7 @@ object ManifestTable {
         .parquet(kept.map(e => s"${dataDir(root)}/${e.path}"): _*)
   }
 
-  /** Per-file (rowCount, min/max stats for `statCols`) straight from the
-    * parquet FOOTERS of `relFiles` — one concurrent metadata read per file
-    * (same rationale as the row-count pass in [[Incremental]]: sequential
-    * opens would serialize N round-trips on object storage). Stats are
-    * collected only for top-level INT64 columns (longs, micros timestamps)
-    * whose every block carries non-null min/max; anything else yields no
-    * entry for that column, which [[pruneEntries]] treats as unskippable.
-    */
-  def footerMeta(spark: SparkSession, dataRoot: String, relFiles: Seq[String],
-                 statCols: Seq[String]): Seq[(FileEntry, Long)] =
-    if (relFiles.isEmpty) Seq.empty
-    else {
-      import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-      val hconf = spark.sparkContext.hadoopConfiguration
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(relFiles.size, 16))
-      try {
-        import scala.jdk.CollectionConverters._
-        pool.invokeAll(
-          relFiles.map { rel =>
-            new java.util.concurrent.Callable[(FileEntry, Long)] {
-              def call(): (FileEntry, Long) = {
-                val r = ParquetFileReader.open(HadoopInputFile.fromPath(
-                  new Path(s"$dataRoot/$rel"), hconf))
-                try {
-                  val blocks = r.getFooter.getBlocks.asScala
-                  val stats = statCols.flatMap { c =>
-                    val chunks = blocks.flatMap(_.getColumns.asScala)
-                      .filter(_.getPath.toDotString == c)
-                    val ok = chunks.nonEmpty && chunks.forall { ch =>
-                      ch.getPrimitiveType.getPrimitiveTypeName == PrimitiveTypeName.INT64 &&
-                        ch.getStatistics != null && ch.getStatistics.hasNonNullValue
-                    }
-                    if (!ok) None
-                    else {
-                      val mins = chunks.map(_.getStatistics.genericGetMin
-                        .asInstanceOf[java.lang.Long].longValue)
-                      val maxs = chunks.map(_.getStatistics.genericGetMax
-                        .asInstanceOf[java.lang.Long].longValue)
-                      Some(c -> (mins.min, maxs.max))
-                    }
-                  }.toMap
-                  (FileEntry(rel, stats), r.getRecordCount)
-                } finally r.close()
-              }
-            }
-          }.asJava
-        ).asScala.map(_.get()).toSeq
-      } finally pool.shutdown()
-    }
-
-  /** Step 1 of a commit: move every parquet file under `stagedDir`
-    * (a normal partitioned Spark write) into `data/`, preserving the
-    * partition-relative layout. Returns the relative paths moved. Crash-safe:
-    * moved files are not in any manifest yet, so readers cannot see them.
-    */
-  def publishFiles(spark: SparkSession, root: String, stagedDir: String): Seq[String] = {
-    val fs = fsOf(spark, root)
-    val staged = fs.makeQualified(new Path(stagedDir))
-    val moved = ListBuffer.empty[String]
-    if (fs.exists(staged)) {
-      val it = fs.listFiles(staged, true)
-      while (it.hasNext) {
-        val f = it.next()
-        if (f.getPath.getName.endsWith(".parquet")) {
-          val rel = staged.toUri.relativize(f.getPath.toUri).getPath
-          val dest = new Path(s"${dataDir(root)}/$rel")
-          fs.mkdirs(dest.getParent)
-          require(fs.rename(f.getPath, dest), s"publish failed: $rel")
-          moved += rel
-        }
-      }
-      fs.delete(staged, true)
-    }
-    moved.toList
-  }
-
-  /** Step 2: atomically commit the next snapshot = previous live files minus
+  /** Atomically commit the next snapshot = previous live files minus
     * those under `replacedPartitions` (directory prefixes like
     * `p_date=2024-01-01`; an empty prefix replaces everything), plus
     * `addedFiles`. Returns the committed version.
@@ -1105,20 +1065,14 @@ object ManifestTable {
     * stores, a LIST storm).
     *
     * `deep = true` adds the recursive sweep that also reclaims CRASH
-    * ORPHANS — files published (or sidecars written) by a writer that
-    * died before its commit, plus files whose cheap-tier delete failed
-    * transiently. Orphans are invisible to every reader and bounded by
-    * failed attempts, so the deep sweep is periodic maintenance (e.g.
-    * [[CorpusStore.compact]] time), not a per-commit tax.
-    *
-    * Staged-but-never-published leftovers are swept on the DEEP tier
-    * only: they are crash leftovers by definition (a live publish's
-    * staging dir exists only inside its own tick), and sweeping
-    * `_staging` from the per-commit cheap tier would let one writer's
-    * routine housekeeping silently empty a concurrent writer's in-flight
-    * publish — the write-side twin of the conditional-commit guarantee.
-    * Writer-side housekeeping — run between ticks, not concurrently with
-    * a publish. Returns data files deleted.
+    * ORPHANS — files (and sidecars) written by a writer that died before
+    * its commit, plus files whose cheap-tier delete failed transiently.
+    * Orphans are invisible to every reader and bounded by failed attempts,
+    * so the deep sweep is periodic maintenance (e.g.
+    * [[CorpusStore.compact]] and [[Layout.compactTable]] time), not a
+    * per-commit tax. It must not run concurrently with a writer: files
+    * written but not yet committed look exactly like orphans. Returns data
+    * files deleted.
     */
   def vacuum(spark: SparkSession, root: String,
              retainLast: Int = RetainSnapshots,
@@ -1169,10 +1123,6 @@ object ManifestTable {
         }
         deadSidecars.foreach(fs.delete(_, false))
       }
-      // staged-but-never-published leftovers from a crashed writer (deep
-      // tier only — see the scaladoc's concurrent-writer rationale)
-      val staging = new Path(s"$root/_staging")
-      if (fs.exists(staging)) fs.delete(staging, true)
     }
     removed
   }

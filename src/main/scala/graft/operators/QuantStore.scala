@@ -1,9 +1,8 @@
 package graft.operators
 
-import java.util.UUID
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.{lit, spark_partition_id}
 
 /** Materialized quantized-ANN staging — the cross-query form of
   * [[Similarity.annQuantized]]'s in-plan staging.
@@ -90,8 +89,8 @@ object QuantStore {
     * the version-pairing invariant lives in exactly one place: stage the
     * bounds sidecar under the version the codes commit WILL take (model
     * and snapshot become visible together, at the commit), write the
-    * codes to staging, publish + commit, verify the pairing, then vacuum
-    * and prune expired sidecars.
+    * codes into `data/`, commit, verify the pairing, then vacuum and prune
+    * expired sidecars.
     */
   private def commitCodes(spark: SparkSession, root: String,
                           qb: Similarity.QuantBounds, codes: DataFrame,
@@ -102,10 +101,10 @@ object QuantStore {
     Seq((qb.mns.toSeq, qb.mxs.toSeq)).toDF("mns", "mxs")
       .coalesce(1).write.mode(SaveMode.Overwrite)
       .parquet(boundsPath(root, vNext))
-    val staging = s"$root/_staging/${UUID.randomUUID()}"
-    codes.write.mode(SaveMode.Overwrite).parquet(staging)
-    val added = ManifestTable.publishFiles(spark, root, staging)
-    val version = ManifestTable.commitReplace(spark, root, replaced, added)
+    val added = ManifestTable.writeFiles(spark, root, Seq(ManifestTable.WriteSet(
+      codes, codes.columns.toSeq, lit(""), spark_partition_id(), None)))
+    val version = ManifestTable.commitReplace(spark, root, replaced,
+      added.map(_._1.path))
     verifyModelCommit(spark, root, version, vNext, qb)
     ManifestTable.vacuum(spark, root)
     pruneBounds(spark, root)

@@ -117,14 +117,14 @@ object StoreChangesMirror {
       val inserts = keyed.filter(col("change") === "insert")
         .select(col("doc_id"), col("lang"), col("source"), col("text_md5"),
           col("p_b"))
-      val staging = s"$root/_staging/${java.util.UUID.randomUUID()}"
-      survivors.select(inserts.columns.map(col).toIndexedSeq: _*)
-        .unionByName(inserts)
-        .repartition(col("p_b"))
-        .write.partitionBy("p_b").mode("overwrite").parquet(staging)
-      val added = ManifestTable.publishFiles(spark, root, staging)
-      ManifestTable.commitReplace(spark, root, touchedDirs, added,
-        meta = Map("mirror_buckets" -> n.toString))
+      // one file per touched bucket
+      val added = ManifestTable.writeFiles(spark, root, Seq(ManifestTable.WriteSet(
+        survivors.select(inserts.columns.map(col).toIndexedSeq: _*)
+          .unionByName(inserts),
+        inserts.columns.filter(_ != "p_b").toSeq,
+        ManifestTable.partitionDir(Seq("p_b")), lit(0), None)))
+      ManifestTable.commitReplace(spark, root, touchedDirs,
+        added.map(_._1.path), meta = Map("mirror_buckets" -> n.toString))
       ManifestTable.vacuum(spark, root)
     } finally keyed.unpersist()
   }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.operators.Incremental
+
 /** Structured Streaming re-expression of the reference's micro-batch
   * incremental layer (SURVEY.md §2.9): the reference simulates streaming with
   * 5-second/5-minute cron ticks + trailing-overlap re-reads + upserts
@@ -14,8 +16,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *    watermark + update-mode windowed aggregation (late rows within the
   *    watermark update their hour bucket in place);
   *  - `MAX(ts)` resume point ⟶ checkpointed source offsets;
-  *  - idempotent ON CONFLICT writes ⟶ [[foreachBatchUpsert]] (dedup-by-key
-  *    merge per micro-batch).
+  *  - idempotent ON CONFLICT writes ⟶ [[foreachBatchUpsert]] (each
+  *    micro-batch one last-write-wins upsert into a manifest sink).
   *
   * Works on any streaming DataFrame with (timestamp, instrument_name, price,
   * amount, trade_id) — file source, Kafka, or MemoryStream in tests.
@@ -86,31 +88,21 @@ object StreamingOhlc {
       }
   }
 
-  /** Micro-batch upsert sink: per batch, last-write-wins dedup on `keyCols`
-    * then append — the ON CONFLICT DO UPDATE analog for object storage
-    * (`collectors/binance.py:76-125`). Use from
+  /** Micro-batch upsert sink: each batch is one [[Incremental.backfill]]
+    * into the [[graft.operators.ManifestTable]] sink at `path` (read it
+    * with [[Incremental.readSink]]) — the ON CONFLICT DO UPDATE analog for
+    * object storage (`collectors/binance.py:76-125`), on the same
+    * last-write-wins path as the batch ticks, partitioned by the date of
+    * `timestamp`. The batch id (stored as `__batch_id`) leads `seqCols`,
+    * so a later batch wins a same-key tie and a retried batch
+    * (foreachBatch is at-least-once) replays idempotently. Use from
     * `stream.writeStream.foreachBatch(foreachBatchUpsert(path, Seq("k")))`.
     */
   def foreachBatchUpsert(path: String, keyCols: Seq[String],
                          seqCols: Seq[String] = Seq("timestamp", "trade_id"))
-                        (batch: DataFrame, batchId: Long): Unit = {
-    import org.apache.spark.sql.expressions.Window
-    // seqCols must totally order arrivals — a bare timestamp would make the
-    // surviving row nondeterministic on ties, breaking replay idempotence
-    val w = Window.partitionBy(keyCols.map(col): _*)
-      .orderBy(seqCols.map(c => col(c).desc): _*)
-    batch
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
-      .withColumn("__batch_id", lit(batchId))
-      // partitioned by batch id + dynamic overwrite: foreachBatch is
-      // at-least-once, so a retried batch must REPLACE its own partition,
-      // not append a duplicate copy
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__batch_id")
-      .parquet(path)
-  }
+                        (batch: DataFrame, batchId: Long): Unit =
+    Incremental.backfill(batch.withColumn("__batch_id", lit(batchId)), path,
+      keyCols, "__batch_id" +: seqCols, "timestamp")
 
   /** Stream-stream interval join: each trade with the quotes of the
     * preceding `lookback` on the same instrument. Watermarks on BOTH sides

@@ -204,7 +204,7 @@ class CorpusStoreBloomSpec extends SparkSpec {
       ManifestTable.writeFiles(spark, root, Seq(ManifestTable.WriteSet(
         (from to from + 99L).toDF("seq")
           .withColumn("k", md5(col("seq").cast("string"))),
-        Seq("seq", "k"), lit(""), lit(0), bloomKey))).map(_._1)
+        Seq("seq", "k"), lit(""), lit(0), bloomKey))).map(_._1.path)
     val added = write(0L, Some("k"))
     assert(added.size == 1, s"one group must write one file: $added")
     ManifestTable.commitReplace(spark, root, Seq.empty, added)

@@ -1,7 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, lit}
 
 import graft.operators.{CorpusStore, ManifestTable}
 import graft.operators.CorpusStore.StoreLayout
@@ -266,11 +266,10 @@ class CorpusStoreLayoutSpec extends SparkSpec {
       // store: reading it as an empty one would re-ingest everything
       import spark.implicits._
       val foreign = java.nio.file.Files.createTempDirectory("graft_layfor").toString
-      val staging = s"$foreign/_staging/${java.util.UUID.randomUUID()}"
-      (0L to 9L).toDF("seq").coalesce(1)
-        .write.mode(SaveMode.Overwrite).parquet(staging)
       ManifestTable.commitReplace(spark, foreign, Seq.empty,
-        ManifestTable.publishFiles(spark, foreign, staging))
+        ManifestTable.writeFiles(spark, foreign, Seq(ManifestTable.WriteSet(
+          (0L to 9L).toDF("seq"), Seq("seq"), lit(""), lit(0), None)))
+          .map(_._1.path))
       val ex2 = intercept[IllegalArgumentException] {
         CorpusStore.read(spark, foreign)
       }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit}
 
 import graft.operators.{Corpus, CorpusStore, Dedup, ManifestTable}
 import graft.operators.CorpusStore.StoreLayout
@@ -312,12 +312,11 @@ class CorpusStoreSpec extends SparkSpec {
           tickId = Some(s"wave$i"))
         if (i == 0) {
           tick0Files = ManifestTable.liveFiles(spark, root)
-          // a crash orphan: published by a writer that died before its
+          // a crash orphan: written by a writer that died before its
           // commit
-          val staging = s"$root/_staging/${java.util.UUID.randomUUID()}"
-          spark.range(5).toDF("x").coalesce(1)
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(staging)
-          orphan = ManifestTable.publishFiles(spark, root, staging)
+          orphan = ManifestTable.writeFiles(spark, root, Seq(
+            ManifestTable.WriteSet(spark.range(5).toDF("x"), Seq("x"),
+              lit(""), lit(0), None))).map(_._1.path)
         }
       }
       // ticks append, never rewrite: the first tick's files are still live

@@ -199,7 +199,7 @@ class CorpusStoreWriteSpec extends SparkSpec {
       val written = ManifestTable.writeFiles(spark, root, Seq(
         ManifestTable.WriteSet(rows, rows.columns.toSeq,
           concat(lit("p_kind=doc/p_b="), pmod(col("doc_id"), lit(16))),
-          lit(0), Some("text_md5")))).map(_._1)
+          lit(0), Some("text_md5")))).map(_._1.path)
       assert(written.nonEmpty)
       val orphans = written.flatMap(f => Seq(s"data/$f", s"_blooms/$f.bloom"))
       assert(tree(root) == treeBefore ++ orphans,

@@ -201,15 +201,15 @@ class IncrementalSpec extends SparkSpec {
       .select("key", "value").orderBy("key")
       .as[(Long, Double)].collect().toSeq
 
-    // simulate a tick that dies AFTER staging + publishing its files but
+    // simulate a tick that dies AFTER writing its files into data/ but
     // BEFORE the atomic manifest rename (the widest crash window): in the
     // old delete-then-rename scheme this is exactly where partitions were
-    // already deleted. Here the published files must stay invisible.
-    val staging = s"$sink/_staging/crashed-tick"
-    rows((2L, "2024-01-02 10:00:00", 999.0, "b"))
-      .withColumn("p_date", to_date(col("ts")))
-      .write.partitionBy("p_date").parquet(staging)
-    ManifestTable.publishFiles(spark, sink, staging) // ... and then it dies
+    // already deleted. Here the written files must stay invisible.
+    val crashed = rows((2L, "2024-01-02 10:00:00", 999.0, "b"))
+    ManifestTable.writeFiles(spark, sink, Seq(ManifestTable.WriteSet(
+      crashed.withColumn("p_date", to_date(col("ts"))), crashed.columns.toSeq,
+      ManifestTable.partitionDir(Seq("p_date")), lit(0), None,
+      Seq("ts")))) // ... and then it dies
 
     assert(ManifestTable.currentVersion(spark, sink).get == v1)
     val snapshotAfterCrash = Incremental.readSink(spark, sink)
@@ -267,7 +267,7 @@ class IncrementalSpec extends SparkSpec {
     def writeFresh(tag: Long): Seq[String] =
       ManifestTable.writeFiles(spark, root, Seq(ManifestTable.WriteSet(
         spark.range(tag, tag + 10).toDF("k"), Seq("k"), lit(""), lit(0),
-        Some("k")))).map(_._1)
+        Some("k")))).map(_._1.path)
     def commitFresh(tag: Long): Seq[String] = {
       val added = writeFresh(tag)
       // empty prefix: each commit REPLACES the whole previous snapshot,

@@ -14,13 +14,13 @@ class LayoutSpec extends SparkSpec {
     // 4 append-only commits accrue 4 small files across two partitions
     (1 to 4).foreach { i =>
       val day = if (i <= 2) 1 else 2
-      val staging = s"$sink/_staging/tick$i"
-      Seq((i.toLong, sqlTs(s"2024-01-0$day 1$i:00:00"), i * 1.0, s"b$i"))
-        .toDF("key", "ts", "value", "batch")
-        .withColumn("p_date", to_date(col("ts")))
-        .write.partitionBy("p_date").parquet(staging)
-      val added = ManifestTable.publishFiles(spark, sink, staging)
-      ManifestTable.commitReplace(spark, sink, Seq.empty, added)
+      val added = ManifestTable.writeFiles(spark, sink, Seq(ManifestTable.WriteSet(
+        Seq((i.toLong, sqlTs(s"2024-01-0$day 1$i:00:00"), i * 1.0, s"b$i"))
+          .toDF("key", "ts", "value", "batch")
+          .withColumn("p_date", to_date(col("ts"))),
+        Seq("key", "ts", "value", "batch"),
+        ManifestTable.partitionDir(Seq("p_date")), lit(0), None)))
+      ManifestTable.commitReplace(spark, sink, Seq.empty, added.map(_._1.path))
     }
     assert(ManifestTable.liveFiles(spark, sink).size == 4)
     val rowsBefore = Incremental.readSink(spark, sink).orderBy("key")

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Incremental, ManifestTable}
@@ -19,14 +18,29 @@ class ManifestStatsSpec extends SparkSpec {
   /** Commit `ranges` as one file each of longs [lo, hi] on column `seq`. */
   private def tableWithFiles(root: String, ranges: Seq[(Long, Long)]): Unit =
     ranges.foreach { case (lo, hi) =>
-      val staging = s"$root/_staging/${java.util.UUID.randomUUID()}"
-      (lo to hi).toDF("seq").withColumn("payload", col("seq") * 10)
-        .coalesce(1).write.mode(SaveMode.Overwrite).parquet(staging)
-      val added = ManifestTable.publishFiles(spark, root, staging)
-      val meta = ManifestTable.footerMeta(
-        spark, ManifestTable.dataDir(root), added, Seq("seq"))
-      ManifestTable.commitEntries(spark, root, Seq.empty, meta.map(_._1))
+      val written = ManifestTable.writeFiles(spark, root, Seq(ManifestTable.WriteSet(
+        (lo to hi).toDF("seq").withColumn("payload", col("seq") * 10),
+        Seq("seq", "payload"), lit(""), lit(0), None, Seq("seq"))))
+      ManifestTable.commitEntries(spark, root, Seq.empty, written.map(_._1))
     }
+
+  /** Per-file (min, max) of INT64 column `c` from the parquet footer of
+    * `file`, or None when no row group carries a non-null value.
+    */
+  private def footerRange(file: String, c: String): Option[(Long, Long)] = {
+    import scala.jdk.CollectionConverters._
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(file), spark.sparkContext.hadoopConfiguration))
+    try {
+      val chunks = r.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala)
+        .filter(_.getPath.toDotString == c).map(_.getStatistics)
+        .filter(_.hasNonNullValue)
+      if (chunks.isEmpty) None
+      else Some((chunks.map(_.genericGetMin.asInstanceOf[java.lang.Long].longValue).min,
+        chunks.map(_.genericGetMax.asInstanceOf[java.lang.Long].longValue).max))
+    } finally r.close()
+  }
 
   test("readWhere plans only the files whose stats intersect the range") {
     val root = Files.createTempDirectory("graft_stats").toString + "/t"
@@ -50,10 +64,8 @@ class ManifestStatsSpec extends SparkSpec {
 
   test("files without stats are never pruned; bare-path manifests still read") {
     val root = Files.createTempDirectory("graft_stats2").toString + "/t"
-    val staging = s"$root/_staging/${java.util.UUID.randomUUID()}"
-    (0L to 9L).toDF("seq").coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(staging)
-    val added = ManifestTable.publishFiles(spark, root, staging)
+    val added = ManifestTable.writeFiles(spark, root, Seq(ManifestTable.WriteSet(
+      (0L to 9L).toDF("seq"), Seq("seq"), lit(""), lit(0), None))).map(_._1.path)
     // pre-stats manifest: bare paths, no stats column
     ManifestTable.commitReplace(spark, root, Seq.empty, added)
 
@@ -99,6 +111,50 @@ class ManifestStatsSpec extends SparkSpec {
     // skipping still works on the compacted snapshot
     assert(ManifestTable.readWhere(spark, root, "seq", 0L, 299L).count() == 300L)
     assert(ManifestTable.readWhere(spark, root, "seq", 5000L, 6000L).count() == 0L)
+
+    // a timestamp sink: the rewrite keeps its ts stats, so the watermark
+    // stays metadata-only after compaction
+    val sink = Files.createTempDirectory("graft_stats4ts").toString + "/t"
+    Incremental.syncTick(Seq(
+      (1L, sqlTs("2024-01-01 10:00:00"), "b1"),
+      (2L, sqlTs("2024-01-01 10:00:00"), "b1")).toDF("key", "ts", "batch"),
+      sink, Seq("key"), Seq("batch"), "ts", "2 HOURS")
+    val us = sqlTs("2024-01-01 10:00:00").getTime * 1000L
+    assert(ManifestTable.liveEntries(spark, sink).map(_.stats) ==
+      Seq(Map("ts" -> (us, us))))
+    graft.operators.Layout.compactTable(spark, sink, partitionCols = Seq("p_date"))
+    assert(ManifestTable.liveEntries(spark, sink).map(_.stats) ==
+      Seq(Map("ts" -> (us, us))))
+    var wm: Option[java.sql.Timestamp] = None
+    assert(jobsOf { wm = Incremental.sinkWatermark(spark, sink, "ts") }.isEmpty)
+    assert(wm.contains(sqlTs("2024-01-01 10:00:00")))
+    assert(Incremental.readSink(spark, sink).count() == 2L)
+  }
+
+  test("writeFiles stats equal the parquet footer min/max; an all-null " +
+    "column gets no entry") {
+    val root = Files.createTempDirectory("graft_stats5").toString + "/t"
+    // four files (two dirs x two splits): n and ts range per file, and
+    // `sparse` null everywhere in split 1
+    val rows = spark.range(0, 400).toDF("id")
+      .withColumn("n", (col("id") * 7) % 1000 - 300)
+      .withColumn("ts", timestamp_micros(col("id") * 1000003L))
+      .withColumn("sparse", when(col("id") % 2 === 0, col("id")))
+      .withColumn("d", (col("id") % 2).cast("string"))
+      .withColumn("s", (col("id") / 200).cast("int"))
+    val written = ManifestTable.writeFiles(spark, root, Seq(ManifestTable.WriteSet(
+      rows, Seq("id", "n", "ts", "sparse"), concat(lit("d="), col("d")),
+      col("s"), None, Seq("n", "ts", "sparse"))))
+    assert(written.size == 4 && written.map(_._2).sum == 400L)
+    written.foreach { case (e, _) =>
+      val file = s"${ManifestTable.dataDir(root)}/${e.path}"
+      Seq("n", "ts", "sparse").foreach { c =>
+        assert(e.stats.get(c) == footerRange(file, c), s"$c of ${e.path}")
+      }
+      assert(e.stats.contains("n") && e.stats.contains("ts"))
+      // odd ids land in d=1, where `sparse` is all null
+      assert(e.stats.contains("sparse") == e.path.startsWith("d=0/"))
+    }
   }
 
   test("syncTick commits ts stats; sinkWatermark resolves from metadata alone") {

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 
+import graft.operators.Incremental
 import graft.streaming.StreamingOhlc
 import graft.streaming.StreamingOhlc.TradeEvent
 
@@ -68,18 +69,17 @@ class StreamingSpec extends SparkSpec {
       q.awaitTermination()
     }
     runOnce()
-    assert(spark.read.parquet(sinkDir).count() == 2)
+    assert(Incremental.readSink(spark, sinkDir).count() == 2)
 
     // a second file arrives; checkpoint resumes past the first
     Seq(trade("2024-01-01 10:05:00", 999.0, 2), trade("2024-01-01 10:10:00", 102.0, 3))
       .toDS().write.mode("append").parquet(srcDir)
     runOnce()
-    val rows = spark.read.parquet(sinkDir)
-    // trade 2 appears twice across batch files (append sink); latest batch wins
+    val rows = Incremental.readSink(spark, sinkDir)
+    // the sink upserts: trade 2 appears once, the latest batch's version
     val t2 = rows.filter(org.apache.spark.sql.functions.col("trade_id") === 2L)
-      .orderBy(org.apache.spark.sql.functions.col("__batch_id").desc)
       .collect()
-    assert(t2.head.getAs[Double]("price") == 999.0)
+    assert(t2.length == 1 && t2.head.getAs[Double]("price") == 999.0)
     assert(rows.select("trade_id").distinct().count() == 3)
   }
 
