@@ -129,9 +129,9 @@ object Corpus {
     * broadcast of budgets; stage 7 is the range-partitioned rank stamp and
     * ONE window keyed on shard — at production, `nShards` is O(loader
     * workers), so the packing window parallelizes across shards. The
-    * multiply-referenced frames (`red`, `gated`, `toks`) are persisted —
-    * Catalyst duplicates unpersisted common subtrees, and each feeds 2–3
-    * consumers (same caller-clearCache lifecycle as the Dedup persists).
+    * multiply-referenced frames (`red`, `gated`, `toks`, `kept`) are
+    * stage cuts (`stageCut`: cached, plan-truncated) — Catalyst duplicates
+    * uncached common subtrees, and each feeds 2–3 consumers.
     */
   def corpusPipeline(docs: DataFrame,
                      minQuality: Double = 0.70,
@@ -329,10 +329,8 @@ object Corpus {
     // bare semi-join against it would drop the other splits as an invisible
     // join side effect). Same doc_id hash as contaminationScores' internal
     // split, so the two agree row-for-row.
-    val train = gated.join(
-      Sampling.trainValTestSplit(gated, col("doc_id"))
-        .filter(col("split") === "train").select(col("doc_id")),
-      Seq("doc_id"), "left_semi")
+    val train = Sampling.trainValTestSplit(gated, col("doc_id"))
+      .filter(col("split") === "train").drop("split")
     // the held-out shingle set: staged sidecar or derived from this
     // snapshot's gated set — identical by determinism. The FRESH path
     // shares ONE persisted docShingleSets frame between the held-out
@@ -400,7 +398,7 @@ object Corpus {
     * decisions.
     *
     * Scale shape: nine 1-row count aggregates over the pipeline's shared
-    * DAG; the multiply-consumed frames are persisted by the tail exactly
+    * DAG; the multiply-consumed frames are the tail's stage cuts exactly
     * as in the build, and the stage-1 chain is persisted here (each count
     * is a separate action — unpersisted, the quality regexes would re-run
     * once per downstream stage).

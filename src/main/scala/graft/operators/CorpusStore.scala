@@ -15,7 +15,8 @@ import org.apache.spark.storage.StorageLevel
   *   (first arrival wins) → exact-vs-store dedup (the batch md5s probed
   *   against the kept md5s AND the dropped-doc tombstones, file-pruned) →
   *   near-dup-vs-store dedup (band-key probe + exact-Jaccard verification
-  *   of the candidate pairs, file-pruned) → within-batch near-dup
+  *   of the candidate pairs against their stored texts, file-pruned) →
+  *   within-batch near-dup
   *   components → ONE write job of the keepers' rows plus their dedup
   *   state, made live by ONE atomic commit. Filter then verify: the
   *   driver decides every document's fate from batch-bounded key sets
@@ -25,7 +26,7 @@ import org.apache.spark.storage.StorageLevel
   *   per-shard training manifest rebuilt from the accumulated keepers
   *   through the SAME stage 2–7 tail as [[Corpus.corpusPipeline]].
   *
-  * PHYSICAL LAYOUT — the 100 TB design. One [[ManifestTable]] holds FOUR
+  * PHYSICAL LAYOUT — the 100 TB design. One [[ManifestTable]] holds THREE
   * row kinds, each under its own partition prefix, all committed in ONE
   * atomic snapshot (so dedup state and the document set can never
   * disagree, and a crash between "two stores" cannot orphan either):
@@ -41,22 +42,19 @@ import org.apache.spark.storage.StorageLevel
   *     byte-stable under marker-less replay. With them, every md5 the
   *     store ever processed past the quality gate is either kept or
   *     tombstoned, so exact redelivery always drops at the exact stage.
-  *   - `p_kind=band/p_b=<band bucket>` (doc_id, band_id, band_val) — the
-  *     LSH band postings, bucketed by (band_id, hash(band_val)) so a
-  *     tick's band prune plans only over the buckets the batch's band
-  *     values hash to — the [[IvfStore]] `p_cell` inverted-file pattern
-  *     applied to LSH.
-  *   - `p_kind=sh/p_b=<doc_id bucket>` (doc_id, shingles) — the exact
-  *     shingle sets for candidate verification, bucketed by doc_id so the
-  *     verification fetch plans only over the candidates' buckets instead
-  *     of joining a full corpus-wide shingle scan.
+  *   - `p_kind=band/p_b=<band bucket>` (doc_id, band_id, band_val,
+  *     text_md5) — the LSH band postings, bucketed by (band_id,
+  *     hash(band_val)) so a tick's band prune plans only over the buckets
+  *     the batch's band values hash to — the [[IvfStore]] `p_cell`
+  *     inverted-file pattern applied to LSH. A candidate's md5 leads to
+  *     its doc row, whose text verification re-shingles.
   *
   * Scale shape: per-tick INPUT is O(touched buckets), not O(store) — the
   * store is never rewritten (appends only), never reshuffled (the batch's
-  * md5s, band keys and candidate ids filter the pruned scans as literal
-  * sets), and the text-scale columns (text, shingles) are only read from
-  * partitions the batch actually touches (spec-asserted: every tick
-  * scan's file list ⊆ the batch-touched partitions). Per-doc tick cost is
+  * md5s, band keys and candidate md5s filter the pruned scans as literal
+  * sets), and the text column is only read from the md5 buckets the batch
+  * and its candidates touch (spec-asserted: every tick scan's file list ⊆
+  * the touched partitions). Per-doc tick cost is
   * O(store/buckets) bytes instead of O(store). The bucket counts are
   * sized to the data: a creation tick gives every kind the smallest power
   * of two of buckets that holds its keepers at [[TargetRowsPerFile]] rows
@@ -122,12 +120,14 @@ object CorpusStore {
 
   // ---- physical layout: bucket partitions for file-pruned tick scans ----
 
-  /** The bucket-EXPRESSION version this binary computes. Bumped only if
-    * the hash expressions below ever change shape; a store written under a
-    * different expression version fails loudly at open instead of silently
-    * pruning against wrong directories.
+  /** The bucket-EXPRESSION version this binary computes. Bumped when the
+    * hash expressions below or the kinds they lay out change shape; a store
+    * written under a different expression version fails loudly at open
+    * instead of silently pruning against wrong directories (or, for
+    * version 1, which had a shingle kind and md5-less band postings,
+    * silently missing near-dups).
     */
-  val BucketExprVersion = 1
+  val BucketExprVersion = 2
 
   /** The store's physical bucket layout — PERSISTED PER SNAPSHOT as the
     * `#meta:layout=` line of every commit, never a compile-time constant.
@@ -142,7 +142,6 @@ object CorpusStore {
     * - `md5Buckets`: buckets for the md5-keyed kinds (doc, tomb).
     * - `bandValBuckets`: band-value buckets PER band id (the band kind has
     *   NumBands × this dirs).
-    * - `shingleBuckets`: doc_id buckets for the shingle kind.
     *
     * A creation tick without an explicit or staged choice takes
     * [[sizedLayout]] of its keepers; a growing store raises the counts with
@@ -150,31 +149,30 @@ object CorpusStore {
     * store/buckets.
     */
   case class StoreLayout(md5Buckets: Int, bandValBuckets: Int,
-                         shingleBuckets: Int,
                          exprVersion: Int = BucketExprVersion) {
-    require(md5Buckets > 0 && bandValBuckets > 0 && shingleBuckets > 0,
+    require(md5Buckets > 0 && bandValBuckets > 0,
       s"bucket counts must be positive: $this")
     private[graft] def render: String =
       s"""{"md5Buckets":$md5Buckets,"bandValBuckets":$bandValBuckets,""" +
-        s""""shingleBuckets":$shingleBuckets,"exprVersion":$exprVersion}"""
+        s""""exprVersion":$exprVersion}"""
   }
 
   /** Rows one bucket file of a kind should hold: about one 128 MB file of
     * ~2 KB documents. Each kind holds one row per document (the band kind
     * one per document per band id, in a bucket space per band id), so one
-    * count sizes all three.
+    * count sizes both bucket counts.
     */
   private[graft] val TargetRowsPerFile = 1 << 16
 
   /** The layout a creation tick that keeps `keepers` documents commits when
     * its caller does not choose: every count the smallest power of two
-    * >= ceil(keepers / [[TargetRowsPerFile]]) — 1/1/1 for any store below
+    * >= ceil(keepers / [[TargetRowsPerFile]]) — 1/1 for any store below
     * the target.
     */
   private[graft] def sizedLayout(keepers: Long): StoreLayout = {
     val need = math.max(1L, (keepers + TargetRowsPerFile - 1) / TargetRowsPerFile)
     val n = (1L << (64 - java.lang.Long.numberOfLeadingZeros(need - 1))).toInt
-    StoreLayout(n, n, n)
+    StoreLayout(n, n)
   }
 
   private[graft] def md5Bucket(c: Column, l: StoreLayout): Column =
@@ -184,8 +182,6 @@ object CorpusStore {
     bandId.cast("int") * l.bandValBuckets +
       pmod(conv(substring(bandVal, 1, 4), 16, 10).cast("int"),
         lit(l.bandValBuckets))
-  private[graft] def shingleBucket(id: Column, l: StoreLayout): Column =
-    pmod(id, lit(l.shingleBuckets)).cast("int")
 
   // ---- layout: in each commit's meta; staged before the first commit ---
 
@@ -211,15 +207,16 @@ object CorpusStore {
       require(m.nonEmpty, s"layout $where is missing \"$k\": $s")
       m.get.group(1).toInt
     }
-    val l = StoreLayout(field("md5Buckets"), field("bandValBuckets"),
-      field("shingleBuckets"), field("exprVersion"))
-    if (l.exprVersion != BucketExprVersion)
+    val version = field("exprVersion")
+    if (version != BucketExprVersion)
       throw new IllegalStateException(
         s"store layout $where was written by bucket-expression version " +
-          s"${l.exprVersion}; this binary computes version $BucketExprVersion " +
-          "— reading it would file-prune against wrong directories. " +
-          "Migrate with a compact(rebucketTo = ...) run by a matching binary.")
-    l
+          s"$version; this binary computes version $BucketExprVersion — " +
+          (if (version == 1) "it predates the shingle-free format (its band " +
+            "postings carry no text_md5). Rebuild it by ticking its documents."
+          else "reading it would file-prune against wrong directories. " +
+            "Migrate with a compact(rebucketTo = ...) run by a matching binary."))
+    StoreLayout(field("md5Buckets"), field("bandValBuckets"), version)
   }
 
   private def readStagedLayout(spark: SparkSession,
@@ -297,17 +294,13 @@ object CorpusStore {
     StructField("doc_id", LongType), StructField("lang", StringType),
     StructField("source", StringType), StructField("text", StringType),
     StructField("text_md5", StringType), StructField("tick", StringType)))
-  private val shSchema = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("shingles", ArrayType(StringType))))
   private val bandSchema = StructType(Seq(
     StructField("doc_id", LongType), StructField("band_id", IntegerType),
-    StructField("band_val", StringType)))
+    StructField("band_val", StringType), StructField("text_md5", StringType)))
   private val tombSchema = StructType(Seq(StructField("text_md5", StringType)))
 
   private def kindSchema(kind: String): StructType = kind match {
     case "doc" => docSchema
-    case "sh" => shSchema
     case "band" => bandSchema
     case "tomb" => tombSchema
     case other => throw new IllegalArgumentException(s"unknown kind: $other")
@@ -349,13 +342,11 @@ object CorpusStore {
     "p_b=(\\d+)/".r.findFirstMatchIn(path).map(_.group(1).toInt)
 
   /** The column each kind's per-file Bloom sidecar indexes — the key the
-    * tick reads probe by. The shingle kind probes by doc_id: its fetch is
-    * keyed by the candidate doc_ids the band join surfaced, and within a
-    * candidate's bucket dir most files hold OTHER docs' shingle rows — the
-    * same mostly-miss shape the md5/band probes skip on.
+    * tick reads probe by. The doc kind serves both the exact probe (batch
+    * md5s) and the near-dup verification fetch (candidate md5s).
     */
   private val BloomKeyOf = Map("doc" -> "text_md5", "tomb" -> "text_md5",
-    "band" -> "band_val", "sh" -> "doc_id")
+    "band" -> "band_val")
 
   /** The single column a kind's files can be index-pruned BY (bucket dir +
     * Bloom sidecar agree on it) — what [[graft.plans.StorePruneRule]] keys
@@ -406,27 +397,21 @@ object CorpusStore {
 
   /** The `p_b` bucket a KEY lands in, computed DRIVER-SIDE for the
     * optimizer's literal-predicate prune ([[graft.plans.StorePruneRule]]).
-    * Mirrors [[md5Bucket]]/[[shingleBucket]] with the same Catalyst
-    * operators evaluated eagerly (Substring→Conv→Cast→Pmod; Pmod→Cast) —
+    * Mirrors [[md5Bucket]] with the same Catalyst operators evaluated
+    * eagerly (Substring→Conv→Cast→Pmod) —
     * the distributed and driver forms can never drift apart because they
     * are the same expression classes, and the spec pins the equivalence on
     * real keys anyway. Soundness for garbage keys is free: a key the store
     * never wrote matches no row, so ANY bucket answer for it prunes
     * correctly; only keys that exist must agree with the writer, and those
-    * are well-formed (lowercase-hex md5s / decimal doc_ids).
+    * are well-formed (lowercase-hex md5s).
     */
   private[graft] def bucketForKey(kind: String, l: StoreLayout,
-                                  key: String): Int = {
-    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal, Pmod}
-    kind match {
-      case "doc" | "tomb" => hexPmod(key, l.md5Buckets)
-      case "sh" =>
-        Cast(Pmod(Literal(key.toLong), Literal(l.shingleBuckets.toLong)),
-          IntegerType).eval(null).asInstanceOf[Int]
-      case other =>
-        throw new IllegalArgumentException(
-          s"kind $other has no single-key bucket expression")
-    }
+                                  key: String): Int = kind match {
+    case "doc" | "tomb" => hexPmod(key, l.md5Buckets)
+    case other =>
+      throw new IllegalArgumentException(
+        s"kind $other has no single-key bucket expression")
   }
 
   /** The band kind's compound bucket, driver-side — [[bandBucket]]'s twin
@@ -764,19 +749,23 @@ object CorpusStore {
     try body finally sc.setJobDescription(prev)
   }
 
+  /** [[Dedup.withShingleBands]]' band-value columns, in band id order. */
+  private val BandCols = (0 until Dedup.NumBands).map(b => col(s"band_$b"))
+
   /** The store's band postings among `rows` grouped per (band_id,
-    * band_val), as that bucket's doc_ids when it holds at most `cap` of
-    * them — the skew cap of [[Dedup.capBuckets]] as ONE job (an RDD
+    * band_val), as that bucket's (doc_id, text_md5) postings when it holds
+    * at most `cap` — the skew cap of [[Dedup.capBuckets]] as ONE job (an RDD
     * aggregate: one shuffle, no AQE map-stage job). Exact under the file
     * prune: a Bloom prune only skips files that cannot hold the value, so
     * every posting of a probed bucket is in `rows` and its count is the
     * store's full bucket size. Over-cap buckets come back absent.
     */
   private def cappedBuckets(rows: DataFrame, cap: Int)
-      : Map[(Int, String), Seq[Long]] =
-    rows.select(col("band_id"), col("band_val"), col("doc_id")).rdd
-      .map(r => (r.getInt(0), r.getString(1)) -> r.getLong(2))
-      .aggregateByKey((0L, List.empty[Long]))(
+      : Map[(Int, String), Seq[(Long, String)]] =
+    rows.select(col("band_id"), col("band_val"), col("doc_id"),
+        col("text_md5")).rdd
+      .map(r => (r.getInt(0), r.getString(1)) -> (r.getLong(2), r.getString(3)))
+      .aggregateByKey((0L, List.empty[(Long, String)]))(
         { case ((n, ids), id) => (n + 1, if (n >= cap) Nil else id :: ids) },
         { case ((n1, a), (n2, b)) =>
           (n1 + n2, if (n1 + n2 > cap) Nil else a ::: b) })
@@ -796,9 +785,9 @@ object CorpusStore {
     *   - exact: one scan of the Bloom-pruned doc and tomb files filtered
     *     by the batch md5s; the touched md5s drop (no job on creation).
     *   - near: one aggregate of the Bloom-pruned store band postings
-    *     under the batch's band keys (ids of buckets within the cap); the
-    *     candidate pairs form on the driver and one job verifies them
-    *     against the batch frame and the Bloom-pruned shingle rows.
+    *     under the batch's band keys (ids and md5s of buckets within the
+    *     cap); the candidate pairs form on the driver and one job verifies
+    *     them against the batch frame and the md5-pruned candidate doc rows.
     *   - fold: within-batch pairs from equal band values among the
     *     survivors (buckets within the cap, the [[Dedup.bandPairs]] rule),
     *     verified in one job; a driver union-find keeps each component's
@@ -842,34 +831,36 @@ object CorpusStore {
     // try/finally: an at-least-once caller CATCHES and retries a failed
     // tick, so a mid-tick exception must not strand this attempt's cache
     // in executor storage (the IvfStore.build discipline)
-    val bandCols = (0 until Dedup.NumBands).map(b => col(s"band_$b"))
     try {
       val gated = phase(spark, op, "gate")(
-        batch.select(col("doc_id") +: col("text_md5") +: bandCols: _*).collect())
+        batch.select(col("doc_id") +: col("text_md5") +: BandCols: _*).collect())
       val nQuality = gated.length.toLong
       val nRaw = raw.get("n").asInstanceOf[Long]
       // band values per doc (null for a shingle-less doc)
       val bandsOf = gated.map(r =>
-        r.getLong(0) -> bandCols.indices.map(b => r.getString(2 + b))).toMap
+        r.getLong(0) -> BandCols.indices.map(b => r.getString(2 + b))).toMap
       // within-batch exact dedup: first arrival (min doc_id) per md5
       val firstOf =
         gated.groupMapReduce(_.getString(1))(_.getLong(0))(math.min)
-      // exact-vs-store: every md5 the store kept OR tombstoned drops.
-      // Bucket dirs, then the per-file Bloom sidecars, bound the scan to
-      // files that may hold a batch md5 (the same bucket expression the
-      // write side uses, evaluated driver-side)
+      // the rows of an md5-keyed kind whose text_md5 is among `md5s`:
+      // bucket dirs, then the per-file Bloom sidecars, bound the scan to
+      // files that may hold one (the same bucket expression the write side
+      // uses, evaluated driver-side); None when no file may
+      def md5Rows(kind: String, l: StoreLayout,
+                  md5s: Seq[String]): Option[DataFrame] = {
+        val files = bloomPrunedKindFiles(spark, root, kind,
+          md5s.groupBy(bucketForKey(kind, l, _)))
+        if (files.isEmpty) None
+        else Some(readKindFiles(spark, root, files, kindSchema(kind))
+          .filter(col("text_md5").isin(md5s: _*)))
+      }
+      // exact-vs-store: every md5 the store kept OR tombstoned drops
       val exactNew = phase(spark, op, "exact") {
-        val reads = stored.toSeq.flatMap { l =>
-          val byBucket = firstOf.keys.toSeq.groupBy(bucketForKey("doc", l, _))
-          Seq("doc", "tomb")
-            .map(k => k -> bloomPrunedKindFiles(spark, root, k, byBucket))
-        }.filter(_._2.nonEmpty)
-          .map { case (k, files) => readKindFiles(spark, root, files,
-            kindSchema(k)).select(col("text_md5")) }
+        val reads = stored.toSeq.flatMap(l => Seq("doc", "tomb")
+          .flatMap(md5Rows(_, l, firstOf.keys.toSeq)))
+          .map(_.select(col("text_md5")))
         val seen = if (reads.isEmpty) Set.empty[String]
-          else reads.reduce(_ union _)
-            .filter(col("text_md5").isin(firstOf.keys.toSeq: _*))
-            .collect().map(_.getString(0)).toSet
+          else reads.reduce(_ union _).collect().map(_.getString(0)).toSet
         firstOf.collect { case (m, id) if !seen(m) => id }.toSeq.sorted
       }
       val nExactNew = exactNew.size.toLong
@@ -878,8 +869,8 @@ object CorpusStore {
         for (id <- ids; (v, b) <- bandsOf(id).zipWithIndex if v != null)
           yield (b, v) -> id
       // near-dup-vs-store: candidates from the store's band postings under
-      // the batch's band keys, verified against the candidates' shingle
-      // rows — every store read two-level pruned
+      // the batch's band keys, verified against the shingles of the
+      // candidates' stored texts — every store read two-level pruned
       val nearDups = stored match {
         case Some(l) if exactNew.nonEmpty => phase(spark, op, "near") {
           val keys = bandKeys(exactNew)
@@ -887,15 +878,16 @@ object CorpusStore {
           val files = bloomPrunedKindFiles(spark, root, "band", probes
             .groupMap { case (b, v) => bandBucketForKey(b, v, l) }(_._2))
           val buckets =
-            if (files.isEmpty) Map.empty[(Int, String), Seq[Long]]
+            if (files.isEmpty) Map.empty[(Int, String), Seq[(Long, String)]]
             else cappedBuckets(readKindFiles(spark, root, files, bandSchema)
               .filter(col("band_val").isin(probes.map(_._2): _*)), cap)
-          val pairs = keys.flatMap { case (k, id) =>
+          val cands = keys.flatMap { case (k, id) =>
             buckets.getOrElse(k, Nil).map(id -> _) }.distinct
-          val sh = readKindFiles(spark, root, bloomPrunedKindFiles(spark, root,
-            "sh", pairs.map(_._2).distinct.map(_.toString)
-              .groupBy(bucketForKey("sh", l, _))), shSchema)
-          Dedup.verifiedPairs(pairs, batch, sh, threshold).map(_._1).toSet
+          val pairs = cands.map { case (id, (c, _)) => id -> c }.distinct
+          md5Rows("doc", l, cands.map(_._2._2).distinct).toSeq
+            .flatMap(docs => Dedup.verifiedPairs(pairs, batch,
+              Dedup.docShingles(docs), threshold))
+            .map(_._1).toSet
         }
         case _ => Set.empty[Long]
       }
@@ -919,8 +911,8 @@ object CorpusStore {
       // data a layout change could corrupt, so last-writer-wins is safe
       val layout = stored.orElse(layoutIfNew).orElse(readStagedLayout(spark, root))
         .getOrElse(sizedLayout(keepers.size))
-      // keepers' doc rows + their dedup state (shingles for verification,
-      // band postings for the prune) + the dropped docs' tombstones: ONE
+      // keepers' doc rows + their band postings (each carrying its md5, the
+      // verification fetch's key) + the dropped docs' tombstones: ONE
       // write job straight into data/ (one file per touched bucket per
       // kind, each with its Bloom sidecar)
       val written =
@@ -930,20 +922,19 @@ object CorpusStore {
           ManifestTable.writeFiles(spark, root, Seq(
             kindSet("doc", kept.withColumn("tick", lit(stamp)),
               md5Bucket(col("text_md5"), layout)),
-            kindSet("sh", kept, shingleBucket(col("doc_id"), layout)),
-            kindSet("band", Dedup.explodeBands(kept, bandCols),
+            kindSet("band",
+              Dedup.explodeBands(kept, BandCols, Seq("doc_id", "text_md5")),
               bandBucket(col("band_id"), col("band_val"), layout)),
             kindSet("tomb", batch.filter(col("doc_id").isin(tombs: _*)),
               md5Bucket(col("text_md5"), layout))))
         }
       val nKept = rowsOf(written, "doc")
-      // the write must hold exactly the driver's decisions: one doc and
-      // one shingle row per keeper, one tombstone per other exact-new doc
-      // (band is exempt: shingle-less keepers emit none)
-      require(nKept == keepers.size && rowsOf(written, "sh") == nKept &&
-          rowsOf(written, "tomb") == tombs.size,
+      // the write must hold exactly the driver's decisions: one doc row
+      // per keeper, one tombstone per other exact-new doc (band is exempt:
+      // shingle-less keepers emit none)
+      require(nKept == keepers.size && rowsOf(written, "tomb") == tombs.size,
         s"store write inconsistent with the tick (keepers=${keepers.size}, " +
-          s"tombstones=${tombs.size}, written=${Seq("doc", "sh", "band", "tomb")
+          s"tombstones=${tombs.size}, written=${Seq("doc", "band", "tomb")
             .map(k => s"$k:${rowsOf(written, k)}").mkString(",")})")
       // zero keepers AND zero tombstones commit NOTHING: replay without a
       // marker must leave the version untouched, not mint empty snapshots
@@ -1089,18 +1080,15 @@ object CorpusStore {
     def bucketExpr(kind: String): Column = kind match {
       case "doc" | "tomb" => md5Bucket(col("text_md5"), target)
       case "band" => bandBucket(col("band_id"), col("band_val"), target)
-      case "sh"   => shingleBucket(col("doc_id"), target)
     }
     // sub-split hash key: any uniformly-distributed row key of the kind
     def subKey(kind: String): Column = kind match {
       case "doc" | "tomb" => col("text_md5")
       case "band" => col("band_val")
-      case "sh"   => col("doc_id")
     }
     def targetBucketCount(kind: String): Int = kind match {
       case "doc" | "tomb" => target.md5Buckets
       case "band" => Dedup.NumBands * target.bandValBuckets
-      case "sh"   => target.shingleBuckets
     }
 
     // per kind: (replaced bucket dirs, its write set, files read)
@@ -1147,7 +1135,7 @@ object CorpusStore {
       }
     }
     val plans = phase(spark, "compact", "plan")(
-      Seq("doc", "sh", "band", "tomb").flatMap(planOf))
+      Seq("doc", "band", "tomb").flatMap(planOf))
     val replacedDirs = plans.flatMap(_._1)
     val nRewrittenIn = plans.map(_._3).sum
     if (replacedDirs.isEmpty && !rebucket)
@@ -1167,14 +1155,15 @@ object CorpusStore {
 
   /** What [[forget]] did: the committed version (unchanged when there was
     * nothing to do), documents purged, tombstones added for requested md5s
-    * not already blocked, and live files rewritten across the three kinds.
+    * not already blocked, and live files rewritten across the doc and band
+    * kinds.
     */
   case class ForgetReport(version: Long, nPurgedDocs: Long,
                           nNewTombstones: Long, nFilesRewritten: Int)
 
   /** CONTENT PURGE (right-to-be-forgotten): remove every document whose
-    * `text_md5` is in `md5s` from the live snapshot — doc rows, shingle
-    * rows, and band postings — and tombstone ALL the requested md5s so an
+    * `text_md5` is in `md5s` from the live snapshot — doc rows and band
+    * postings — and tombstone ALL the requested md5s so an
     * exact redelivery of the purged text can never re-enter. One atomic
     * commit: the affected files (located through the same two-level
     * bucket+Bloom index the tick reads use, so a purge touches O(requests)
@@ -1187,9 +1176,9 @@ object CorpusStore {
     * Semantics a caller must know:
     *   - EXACT copies never return (tombstoned — including md5s the store
     *     had never seen, so a purge can pre-block a text). NEAR duplicates
-    *     of the purged content MAY enter later: purging the shingle/band
-    *     rows is the point (they derive from the content), and with them
-    *     goes the store's ability to recognize its near-neighbors.
+    *     of the purged content MAY enter later: purging the text and band
+    *     rows is the point (the bands derive from the content), and with
+    *     them goes the store's ability to recognize its near-neighbors.
     *   - The purge is LOGICAL at commit time and physical after retention:
     *     prior snapshot versions still reference the old files until
     *     [[ManifestTable.vacuum]] ages them out (same reader-lag contract
@@ -1264,20 +1253,16 @@ object CorpusStore {
     if (victimIds.isEmpty && newTombs.isEmpty)
       return ForgetReport(prev, 0L, 0L, 0)
 
-    // the victims' dedup state: shingle rows (by doc_id bucket) and the
-    // band postings derived from them with the SAME kernels the tick
-    // used, so the located band rows are exactly the stored ones
+    // the victims' band postings: their keys derive from the victim doc
+    // rows located above with the SAME kernels the tick used, so the
+    // located band rows are exactly the stored ones
     val idVictim = col("doc_id").isin(victimIds: _*)
-    val shHits =
-      if (victimIds.isEmpty) Map.empty[String, (Long, Long, Seq[Long])]
-      else victimFiles(shortlist("sh", victimIds.map(_.toString)), "sh",
-        idVictim)
     val bandKeys =
-      if (shHits.isEmpty) Array.empty[(Int, String)]
-      else locate(Dedup.explodedBands(Dedup.rawSignatures(
-          readKindFiles(spark, root, shHits.keys.toSeq, shSchema)
-            .filter(idVictim)),
-        Dedup.NumHashes / Dedup.NumBands)
+      if (docHits.isEmpty) Array.empty[(Int, String)]
+      else locate(Dedup.explodeBands(Dedup.withShingleBands(
+          readKindFiles(spark, root, docHits.keys.toSeq, docSchema)
+            .filter(docVictim).select(col("doc_id"), col("text"))),
+        BandCols)
         .select(col("band_id"), col("band_val"))
         .collect()).map(r => (r.getInt(0), r.getString(1))).distinct
     val bandByBucket: Map[Int, Seq[String]] = bandKeys.toSeq
@@ -1289,7 +1274,7 @@ object CorpusStore {
     // ONE write job: the affected files rewritten without the victim rows
     // (same buckets) plus the new tombstones, then ONE commit flips all
     import spark.implicits._
-    val rewrites = Seq(("doc", docHits, docVictim), ("sh", shHits, idVictim),
+    val rewrites = Seq(("doc", docHits, docVictim),
       ("band", bandHits, idVictim)).filter(_._2.nonEmpty)
     val written = phase(spark, "forget", "write")(
       ManifestTable.writeFiles(spark, root,
@@ -1568,7 +1553,7 @@ object CorpusStore {
     val v = ManifestTable.currentVersion(spark, root).getOrElse(
       throw new IllegalStateException(s"no committed snapshot at $root"))
     val live = ManifestTable.liveFiles(spark, root)
-    val kinds = Seq("doc", "tomb", "band", "sh").map { k =>
+    val kinds = Seq("doc", "tomb", "band").map { k =>
       val files = live.filter(_.startsWith(s"p_kind=$k/"))
       val perBucket = files.groupBy(bucketOfPath).values.map(_.size)
       KindHealth(k, files.size.toLong, perBucket.size.toLong,

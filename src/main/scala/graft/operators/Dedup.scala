@@ -62,7 +62,7 @@ object Dedup {
   }
 
   /** `keep` columns of `docs` plus the doc's distinct shingle set. */
-  private def docShingles(docs: DataFrame,
+  private[operators] def docShingles(docs: DataFrame,
                           keep: Seq[Column] = Seq(col("doc_id"))): DataFrame =
     // token array staged BEFORE the shingle lambda (the TextOps.tokens()
     // evaluation contract): with the split captured in the lambda, slice
@@ -224,14 +224,17 @@ object Dedup {
     explodeBands(sigs,
       (0 until NumHashes / rowsPerBand).map(bandHash(_, rowsPerBand)))
 
-  /** [[explodedBands]] from per-band value columns (band id = position). */
-  private[operators] def explodeBands(df: DataFrame,
-                                      bands: Seq[Column]): DataFrame = {
+  /** [[explodedBands]] from per-band value columns (band id = position),
+    * with `keep` columns of `df` on every row.
+    */
+  private[operators] def explodeBands(df: DataFrame, bands: Seq[Column],
+                                      keep: Seq[String] = Seq("doc_id"))
+      : DataFrame = {
     val bandCols = bands.zipWithIndex.map { case (v, b) =>
       struct(lit(b).as("band_id"), v.as("band_hash")) }
-    df.select(col("doc_id"), explode(array(bandCols: _*)).as("band"))
-      .select(col("doc_id"), col("band.band_id").as("band_id"),
-        col("band.band_hash").as("band_val"))
+    df.select(keep.map(col) :+ explode(array(bandCols: _*)).as("band"): _*)
+      .select(keep.map(col) ++ Seq(col("band.band_id").as("band_id"),
+        col("band.band_hash").as("band_val")): _*)
       .filter(col("band_val").isNotNull)
   }
 

@@ -28,18 +28,6 @@ class CorpusStoreBloomSpec extends SparkSpec {
       .groupBy(_.getInt(1))
       .map { case (b, rows) => b -> rows.toSeq.map(_.getString(0)) }
 
-  /** (doc_id → bucket) map for sh-kind probes, via the store's own expr. */
-  private def idKeysByBucket(ids: Seq[Long],
-                             lay: StoreLayout): Map[Int, Seq[String]] = {
-    import spark.implicits._
-    ids.toDF("doc_id")
-      .select(col("doc_id"),
-        CorpusStore.shingleBucket(col("doc_id"), lay).as("b"))
-      .collect()
-      .groupBy(_.getInt(1))
-      .map { case (b, rows) => b -> rows.toSeq.map(_.getLong(0).toString) }
-  }
-
   test("every probed kind's live file has a bloom sidecar; fresh keys " +
     "skip whole buckets' files, present keys never skip theirs") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
@@ -49,47 +37,19 @@ class CorpusStoreBloomSpec extends SparkSpec {
       // must shrink are one touched bucket's files, not the whole kind
       (0 until 2).foreach { i =>
         CorpusStore.tick(docs.filter(col("doc_id") % 3 === i), root,
-          tickId = Some(s"w$i"), layoutIfNew = Some(StoreLayout(16, 16, 16)))
+          tickId = Some(s"w$i"), layoutIfNew = Some(StoreLayout(16, 16)))
       }
       val lay = CorpusStore.layoutOf(spark, root)
       val files = ManifestTable.liveFiles(spark, root)
-      Seq("doc", "band", "sh").foreach { kind =>
+      Seq("doc", "band").foreach { kind =>
         val of = files.filter(_.startsWith(s"p_kind=$kind/"))
         assert(of.nonEmpty && of.forall(f =>
           ManifestTable.readBloom(spark, root, f).nonEmpty),
           s"$kind files missing bloom sidecars")
       }
 
-      // the sh kind probes by doc_id (the verification fetch's key): a
-      // kept doc's shingle file survives the prune and the pruned read
-      // surfaces its row; doc_ids the store never kept skip everything
-      // their buckets hold
-      val keptId = CorpusStore.docs(spark, root)
-        .orderBy("doc_id").limit(1).collect()(0).getLong(0)
-      val shHit = CorpusStore.bloomPrunedKindFiles(spark, root, "sh",
-        idKeysByBucket(Seq(keptId), lay))
-      assert(shHit.nonEmpty, "kept doc's shingle file was bloom-skipped")
-      val ddSh = ManifestTable.dataDir(root)
-      assert(!spark.read.option("basePath", ddSh)
-        .parquet(shHit.map(f => s"$ddSh/$f"): _*)
-        .filter(col("doc_id") === keptId).isEmpty,
-        "pruned shingle read lost the kept doc's rows")
-      // not exactly-empty: ~20 probes at fpp 0.01 can legitimately hit a
-      // false positive under a different partitioning or hash seed, and a
-      // false positive costs one spurious file read, not correctness. The
-      // claim is the PRUNE: nearly all dir-pruned files are skipped.
-      val neverIds = idKeysByBucket(1000000L until 1000020L, lay)
-      val shDirPruned = CorpusStore.prunedKindFiles(spark, root, "sh",
-        neverIds.keySet)
-      val shBloomPruned = CorpusStore.bloomPrunedKindFiles(spark, root, "sh",
-        neverIds)
-      assert(shDirPruned.nonEmpty, "sh probe buckets unexpectedly empty")
-      assert(shBloomPruned.size <= math.max(1, shDirPruned.size / 4),
-        s"never-kept doc_ids read ${shBloomPruned.size} of " +
-          s"${shDirPruned.size} dir-pruned shingle files — sh blooms not " +
-          "skipping")
-
-      // a PRESENT key (a store doc's md5): its file must survive the
+      // a PRESENT key (a store doc's md5 — the exact probe's key and the
+      // near-dup verification fetch's): its file must survive the
       // bloom prune, and reading the pruned set must surface the key —
       // the no-false-negative half, the one dedup correctness rests on.
       // Taken from the store's own rows, so the probe is present by
@@ -118,8 +78,10 @@ class CorpusStoreBloomSpec extends SparkSpec {
       val bloomPruned = CorpusStore.bloomPrunedKindFiles(spark, root, "doc",
         freshKeys)
       assert(dirPruned.nonEmpty, "probe buckets unexpectedly empty")
-      // same fraction bound as the sh probe above: no exactly-empty
-      // requirement riding on false-positive luck
+      // not exactly-empty: ~20 probes at fpp 0.01 can legitimately hit a
+      // false positive under a different partitioning or hash seed, and a
+      // false positive costs one spurious file read, not correctness. The
+      // claim is the PRUNE: nearly all dir-pruned files are skipped.
       assert(bloomPruned.size <= math.max(1, dirPruned.size / 4),
         s"fresh-key probe read ${bloomPruned.size} of ${dirPruned.size} " +
           "dir-pruned files — blooms not skipping")
@@ -133,12 +95,12 @@ class CorpusStoreBloomSpec extends SparkSpec {
     try {
       (0 until 3).foreach { i =>
         CorpusStore.tick(docs.filter(col("doc_id") % 3 === i), root,
-          tickId = Some(s"w$i"), layoutIfNew = Some(StoreLayout(16, 16, 16)))
+          tickId = Some(s"w$i"), layoutIfNew = Some(StoreLayout(16, 16)))
       }
       def checkProbes(): Unit = {
         val lay = CorpusStore.layoutOf(spark, root)
         val files = ManifestTable.liveFiles(spark, root)
-        Seq("doc", "band", "sh").foreach { kind =>
+        Seq("doc", "band").foreach { kind =>
           val of = files.filter(_.startsWith(s"p_kind=$kind/"))
           assert(of.nonEmpty && of.forall(f =>
             ManifestTable.readBloom(spark, root, f).nonEmpty),
@@ -165,7 +127,7 @@ class CorpusStoreBloomSpec extends SparkSpec {
       CorpusStore.compact(spark, root, targetBytes = 1L << 30)
       checkProbes()
       CorpusStore.compact(spark, root,
-        rebucketTo = Some(StoreLayout(32, 32, 32)))
+        rebucketTo = Some(StoreLayout(32, 32)))
       checkProbes()
       // dedup state still sound through both rewrites: a semantic replay
       // of already-ingested docs commits nothing
@@ -186,7 +148,7 @@ class CorpusStoreBloomSpec extends SparkSpec {
       while (it.hasNext)
         onDisk += qualified.toUri.relativize(it.next().getPath.toUri).getPath
       val probedLive = ManifestTable.liveFiles(spark, root)
-        .filter(f => Seq("doc", "tomb", "band", "sh")
+        .filter(f => Seq("doc", "tomb", "band")
           .exists(k => f.startsWith(s"p_kind=$k/"))).toSet
       assert(onDisk.map(_.stripSuffix(".bloom")) == probedLive,
         s"vacuum left sidecars out of step with live files: " +

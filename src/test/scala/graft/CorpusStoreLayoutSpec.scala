@@ -55,8 +55,7 @@ class CorpusStoreLayoutSpec extends SparkSpec {
 
   private val KindCols = Map(
     "doc" -> Seq("doc_id", "lang", "source", "text", "text_md5", "tick"),
-    "sh" -> Seq("doc_id", "shingles"),
-    "band" -> Seq("doc_id", "band_id", "band_val"),
+    "band" -> Seq("doc_id", "band_id", "band_val", "text_md5"),
     "tomb" -> Seq("text_md5"))
 
   /** The kind's bucket expression under `l` — the read-side mirror of the
@@ -65,14 +64,13 @@ class CorpusStoreLayoutSpec extends SparkSpec {
   private def bucketExpr(kind: String, l: StoreLayout) = kind match {
     case "doc" | "tomb" => CorpusStore.md5Bucket(col("text_md5"), l)
     case "band" => CorpusStore.bandBucket(col("band_id"), col("band_val"), l)
-    case "sh"   => CorpusStore.shingleBucket(col("doc_id"), l)
   }
 
   test("rebucket migration: rows, dedup state, and replay survive; dirs " +
     "agree with the new layout; old-layout assertions throw") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-    val layoutA = StoreLayout(8, 8, 8)
-    val layoutB = StoreLayout(32, 32, 32)
+    val layoutA = StoreLayout(8, 8)
+    val layoutB = StoreLayout(32, 32)
     val root = java.nio.file.Files.createTempDirectory("graft_rebucket").toString
     val twin = java.nio.file.Files.createTempDirectory("graft_rebucket_twin").toString
     try {
@@ -116,8 +114,8 @@ class CorpusStoreLayoutSpec extends SparkSpec {
       // the state the rebucket carried is not just present but CORRECT
       // under the new pruned scans
       // fresh ids; texts = a store doc's text plus a suffix → a mix of
-      // near-dup drops (exercising the pruned band/shingle reads under
-      // layoutB) and genuine keepers
+      // near-dup drops (exercising the pruned band and verification reads
+      // under layoutB) and genuine keepers
       val wave3 = docs.filter(col("doc_id") % n === 1)
         .withColumn("doc_id", col("doc_id") + 100000L)
         .withColumn("text", org.apache.spark.sql.functions.concat(
@@ -165,7 +163,7 @@ class CorpusStoreLayoutSpec extends SparkSpec {
       // pinned to 16 buckets a kind: cold buckets need more than one
       def tick(batch: DataFrame, id: String) =
         CorpusStore.tick(batch, root, tickId = Some(id), minQuality = 0.0,
-          threshold = 0.999, layoutIfNew = Some(StoreLayout(16, 16, 16)))
+          threshold = 0.999, layoutIfNew = Some(StoreLayout(16, 16)))
       tick(docs.filter(col("doc_id") % 3 === 0), "w0")
       val lay = CorpusStore.layoutOf(spark, root)
       val rest = docs.filter(col("doc_id") % 3 =!= 0)
@@ -254,8 +252,9 @@ class CorpusStoreLayoutSpec extends SparkSpec {
       // wrong directories, so open throws with the migration instruction.
       // The layout's only channel is the commit's own #meta:layout line
       // (atomic with the snapshot), so that is what gets tampered.
-      rewrite(manifestPath(root, v))(
-        _.replace("\"exprVersion\":1", "\"exprVersion\":2"))
+      val cur = CorpusStore.BucketExprVersion
+      rewrite(manifestPath(root, v))(_.replace(s"\"exprVersion\":$cur",
+        s"\"exprVersion\":${cur + 1}"))
       val ex = intercept[IllegalStateException] {
         CorpusStore.layoutOf(spark, root)
       }
@@ -277,10 +276,45 @@ class CorpusStoreLayoutSpec extends SparkSpec {
     } finally spark.catalog.clearCache()
   }
 
+  test("a store in the format with a shingle kind (expression version 1) " +
+    "fails loudly at tick, read and forget") {
+    import spark.implicits._
+    def wave(w: Int): DataFrame = (0 until 6).map { i =>
+      (w * 100L + i, "en", "web", s"version one wave $w doc $i " +
+        (0 until 25).map(j => s"v${w}_${i}_$j").mkString(" "))
+    }.toDF("doc_id", "lang", "source", "text")
+    val root = java.nio.file.Files.createTempDirectory("graft_layv1").toString
+    try {
+      val r = CorpusStore.tick(wave(0), root, tickId = Some("w0"),
+        minQuality = 0.0)
+      val v = ManifestTable.currentVersion(spark, root).get
+      val victim = CorpusStore.read(spark, root).select("text_md5").head()
+        .getString(0)
+      // the layout line such a store committed: three bucket counts
+      val l = CorpusStore.sizedLayout(r.nKept)
+      rewrite(manifestPath(root, v))(_.replace(l.render,
+        s"""{"md5Buckets":${l.md5Buckets},"bandValBuckets":""" +
+          s"""${l.bandValBuckets},"shingleBuckets":${l.md5Buckets},""" +
+          """"exprVersion":1}"""))
+      Seq[(String, () => Any)](
+        "tick" -> (() => CorpusStore.tick(wave(1), root, tickId = Some("w1"),
+          minQuality = 0.0)),
+        "read" -> (() => CorpusStore.read(spark, root)),
+        "forget" -> (() => CorpusStore.forget(spark, root, Seq(victim))))
+        .foreach { case (op, run) =>
+          val ex = intercept[IllegalStateException](run())
+          assert(ex.getMessage.contains("predates the shingle-free format"),
+            s"$op: ${ex.getMessage}")
+        }
+      assert(ManifestTable.currentVersion(spark, root).contains(v),
+        "an op on a version-1 store committed")
+    } finally spark.catalog.clearCache()
+  }
+
   test("caller-supplied layouts must carry this binary's expression " +
     "version — a mislabeled sidecar must never persist") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-    val bad = StoreLayout(8, 8, 8, exprVersion = 2)
+    val bad = StoreLayout(8, 8, exprVersion = CorpusStore.BucketExprVersion + 1)
     val root = java.nio.file.Files.createTempDirectory("graft_layver").toString
     try {
       // at creation: the tick must throw BEFORE any commit
@@ -303,7 +337,7 @@ class CorpusStoreLayoutSpec extends SparkSpec {
 
   test("a creation layout chosen by a zero-commit tick is not lost") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-    val chosen = StoreLayout(4, 4, 4)
+    val chosen = StoreLayout(4, 4)
     val root = java.nio.file.Files.createTempDirectory("graft_layzero").toString
     try {
       // every document fails the quality gate: the tick processes, drops
@@ -335,7 +369,7 @@ class CorpusStoreLayoutSpec extends SparkSpec {
       // asserting a different layout on the now-existing store throws
       intercept[IllegalArgumentException] {
         CorpusStore.tick(docs.filter(col("doc_id") % 7 === 2), root,
-          layoutIfNew = Some(StoreLayout(8, 8, 8)))
+          layoutIfNew = Some(StoreLayout(8, 8)))
       }
     } finally spark.catalog.clearCache()
   }
@@ -358,8 +392,8 @@ class CorpusStoreLayoutSpec extends SparkSpec {
     try {
       val r0 = tick(root, 0)
       assert(r0.nKept > 0 && CorpusStore.sizedLayout(r0.nKept) ==
-        StoreLayout(1, 1, 1), s"a small creation tick is one bucket: $r0")
-      assert(metaLayout(root).contains(StoreLayout(1, 1, 1).render))
+        StoreLayout(1, 1), s"a small creation tick is one bucket: $r0")
+      assert(metaLayout(root).contains(StoreLayout(1, 1).render))
       // one file per kind (the band kind: one per band id)
       ManifestTable.liveFiles(spark, root).groupBy(_.split('/').head)
         .foreach { case (kind, files) =>
@@ -368,16 +402,16 @@ class CorpusStoreLayoutSpec extends SparkSpec {
           assert(files.size <= cap, s"$kind wrote ${files.size} files")
         }
       tick(root, 1)
-      assert(metaLayout(root).contains(StoreLayout(1, 1, 1).render),
+      assert(metaLayout(root).contains(StoreLayout(1, 1).render),
         "a later tick re-sized the committed layout")
-      CorpusStore.compact(spark, root, rebucketTo = Some(StoreLayout(4, 4, 4)))
+      CorpusStore.compact(spark, root, rebucketTo = Some(StoreLayout(4, 4)))
       val r2 = tick(root, 2)
       assert(r2.nKept == 12L && metaLayout(root)
-        .contains(StoreLayout(4, 4, 4).render),
+        .contains(StoreLayout(4, 4).render),
         s"a tick after the rebucket left the grown layout: $r2")
 
-      tick(pinned, 0, Some(StoreLayout(2, 2, 2)))
-      assert(metaLayout(pinned).contains(StoreLayout(2, 2, 2).render),
+      tick(pinned, 0, Some(StoreLayout(2, 2)))
+      assert(metaLayout(pinned).contains(StoreLayout(2, 2).render),
         "an explicit creation layout lost to the sizing rule")
     } finally spark.catalog.clearCache()
   }
@@ -406,8 +440,8 @@ class CorpusStoreLayoutSpec extends SparkSpec {
   test("the layout lives only in each commit's meta: no tick, forget or " +
     "rebucket writes _layout/, and a commit without #meta:layout throws") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-    val created = StoreLayout(8, 8, 8)
-    val rebucketed = StoreLayout(32, 32, 32)
+    val created = StoreLayout(8, 8)
+    val rebucketed = StoreLayout(32, 32)
     val root = java.nio.file.Files.createTempDirectory("graft_laymeta").toString
     val layoutDir = new org.apache.hadoop.fs.Path(s"$root/_layout")
     val fs = layoutDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -453,13 +487,13 @@ class CorpusStoreLayoutSpec extends SparkSpec {
   test("production-bucket-count migration: 16 -> 512 rebucket keeps the " +
     "layout math honest at the counts a 100 TB store would run") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-    val big = StoreLayout(512, 512, 512)
+    val big = StoreLayout(512, 512)
     val root = java.nio.file.Files.createTempDirectory("graft_rb512").toString
     try {
       val n = 3
       (0 until n).foreach { i =>
         CorpusStore.tick(docs.filter(col("doc_id") % n === i), root,
-          tickId = Some(s"w$i"), layoutIfNew = Some(StoreLayout(16, 16, 16)))
+          tickId = Some(s"w$i"), layoutIfNew = Some(StoreLayout(16, 16)))
       }
       val docsBefore = CorpusStore.docs(spark, root).count()
       val t0 = System.nanoTime()
@@ -492,7 +526,7 @@ class CorpusStoreLayoutSpec extends SparkSpec {
         }
       }
       // sidecar coverage: every probed-kind live file kept a bloom
-      Seq("doc", "band", "sh").foreach { kind =>
+      Seq("doc", "band").foreach { kind =>
         val of = live.filter(_.startsWith(s"p_kind=$kind/"))
         assert(of.nonEmpty && of.forall(f =>
           ManifestTable.readBloom(spark, root, f).nonEmpty),

@@ -43,7 +43,7 @@ class CorpusStoreSoakSpec extends SparkSpec {
       // production-shaped layout: buckets >> per-batch touch count, so a
       // ~16-doc batch touches a small fixed set of dirs however large the
       // store gets
-      val layout = StoreLayout(64, 64, 64)
+      val layout = StoreLayout(64, 64)
       val perTick = (0 until n).map { i =>
         // settle the async listener bus so bytes attribute to THIS tick
         Thread.sleep(250)
@@ -183,7 +183,7 @@ class CorpusStoreSoakSpec extends SparkSpec {
     spark.sparkContext.addSparkListener(listener)
     try {
       val n = 100
-      val layout = StoreLayout(64, 64, 64)
+      val layout = StoreLayout(64, 64)
       def du(f: java.io.File): Long =
         if (f.isFile) f.length
         else Option(f.listFiles).map(_.map(du).sum).getOrElse(0L)

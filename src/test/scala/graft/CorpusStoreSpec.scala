@@ -131,7 +131,7 @@ class CorpusStoreSpec extends SparkSpec {
       // pinned to 16 buckets a kind: a bucket prune needs buckets to skip
       (0 until 2).foreach { i =>
         CorpusStore.tick(docs.filter(col("doc_id") % 3 === i), root,
-          tickId = Some(s"w$i"), layoutIfNew = Some(StoreLayout(16, 16, 16)))
+          tickId = Some(s"w$i"), layoutIfNew = Some(StoreLayout(16, 16)))
       }
       val dd = ManifestTable.dataDir(root)
       // resolve the layout FROM the store — the spec exercises the same
@@ -183,17 +183,25 @@ class CorpusStoreSpec extends SparkSpec {
       assert(sameRows(prunedBands, expectBands),
         "pruned band read diverged from the bucket expression")
 
-      // shingle-fetch prune: candidate doc_ids map to their bucket dirs
-      val shBuckets = Set(2L % lay.shingleBuckets,
-        5L % lay.shingleBuckets).map(_.toInt)
-      val shPruned = pruned("sh", shBuckets)
-      assert(shPruned.size < all("sh").size && shPruned.nonEmpty)
-      val prunedSh = spark.read.option("basePath", dd)
-        .parquet(shPruned.map(f => s"$dd/$f"): _*).select("doc_id")
-      assert(prunedSh.filter(
-        !CorpusStore.shingleBucket(col("doc_id"), lay)
-          .isin(shBuckets.toSeq: _*))
-        .isEmpty, "shingle bucket dirs hold out-of-bucket rows")
+      // verification-fetch prune: candidates' md5s (carried by their band
+      // postings; here two store docs' postings) map to doc bucket dirs
+      // that hold only in-bucket rows
+      val candMd5s = CorpusStore.bands(spark, root)
+        .select("doc_id", "text_md5").distinct().orderBy("doc_id").limit(2)
+        .collect().map(_.getString(1)).toSeq
+      assert(candMd5s.size == 2, s"fixture drifted: $candMd5s")
+      val candBuckets =
+        candMd5s.map(CorpusStore.bucketForKey("doc", lay, _)).toSet
+      val docPruned = pruned("doc", candBuckets)
+      assert(docPruned.size < all("doc").size && docPruned.nonEmpty)
+      val prunedDocs = spark.read.option("basePath", dd)
+        .parquet(docPruned.map(f => s"$dd/$f"): _*).select("text_md5")
+      assert(prunedDocs.filter(
+        !CorpusStore.md5Bucket(col("text_md5"), lay)
+          .isin(candBuckets.toSeq: _*))
+        .isEmpty, "doc bucket dirs hold out-of-bucket rows")
+      assert(prunedDocs.filter(col("text_md5").isin(candMd5s: _*)).count() ==
+        candMd5s.size, "the pruned doc read lost a candidate's row")
     } finally spark.catalog.clearCache()
   }
 

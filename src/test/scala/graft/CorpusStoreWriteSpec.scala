@@ -24,7 +24,7 @@ class CorpusStoreWriteSpec extends SparkSpec {
   private def sf0001Docs = Tables.documents(spark, "/root/testdata/sf0.001")
 
   private val keyOf = Map("doc" -> "text_md5", "tomb" -> "text_md5",
-    "band" -> "band_val", "sh" -> "doc_id")
+    "band" -> "band_val")
 
   private def fsOf(root: String) =
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -84,7 +84,7 @@ class CorpusStoreWriteSpec extends SparkSpec {
       val c0 = counts
       assert(r0.nKept > 0 && r0.nExactNew > r0.nKept,
         s"create tick must keep and tombstone something: $r0")
-      assert(c0("doc") == r0.nKept && c0("sh") == r0.nKept &&
+      assert(c0("doc") == r0.nKept &&
         c0("tomb") == r0.nExactNew - r0.nKept, s"create tick: $c0 vs $r0")
 
       val r1 = CorpusStore.tick(docs.filter(col("doc_id") % 2 === 1), root,
@@ -92,7 +92,6 @@ class CorpusStoreWriteSpec extends SparkSpec {
       checkSidecars(root, "second tick")
       val c1 = counts
       assert(c1("doc") == c0("doc") + r1.nKept &&
-        c1("sh") == c0("sh") + r1.nKept &&
         c1("tomb") == c0("tomb") + r1.nExactNew - r1.nKept,
         s"second tick: $c1 vs $c0 + $r1")
 
@@ -105,7 +104,7 @@ class CorpusStoreWriteSpec extends SparkSpec {
       checkSidecars(root, "forget")
       val c2 = counts
       assert(f.nPurgedDocs == 2L, s"forget: $f")
-      assert(c2("doc") == c1("doc") - 2 && c2("sh") == c1("sh") - 2 &&
+      assert(c2("doc") == c1("doc") - 2 &&
         c2("band") == c1("band") - victimBands &&
         c2("tomb") == c1("tomb") + f.nNewTombstones,
         s"forget: $c2 vs $c1, $victimBands victim band rows, $f")
@@ -114,7 +113,7 @@ class CorpusStoreWriteSpec extends SparkSpec {
       checkSidecars(root, "compact")
       assert(counts == c2, "compaction changed the committed rows")
       CorpusStore.compact(spark, root,
-        rebucketTo = Some(StoreLayout(32, 32, 32)))
+        rebucketTo = Some(StoreLayout(32, 32)))
       checkSidecars(root, "rebucket")
       assert(counts == c2, "rebucket changed the committed rows")
     } finally spark.catalog.clearCache()

@@ -121,7 +121,7 @@ class StoreChangesSpec extends SparkSpec {
     // diff must span only the latest commit — the retention-reach contract
     // the last test pins.)
     CorpusStore.compact(spark, root,
-      rebucketTo = Some(StoreLayout(32, 32, 32)))
+      rebucketTo = Some(StoreLayout(32, 32)))
     val v2 = ManifestTable.currentVersion(spark, root).get
     assert(v2 > v1)
     val (changes2, _) = changesOf(root, v1, v2)

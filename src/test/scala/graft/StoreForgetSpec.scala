@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions.{col, md5}
 import graft.operators.{CorpusStore, ManifestTable}
 
 /** [[CorpusStore.forget]] — the content purge. The hard claims: victims
-  * vanish from all three kinds, nothing else moves (file-for-file), exact
+  * vanish from the doc and band kinds, nothing else moves (file-for-file), exact
   * redelivery can never resurrect a purged text, pre-blocking works, and
   * the operation is idempotent.
   */
@@ -44,7 +44,7 @@ class StoreForgetSpec extends SparkSpec {
       before.filterNot(_.getAs[Long]("doc_id") == vId)
         .map(_.toString).sorted.toSeq)
 
-    // dedup state purged: no shingle rows, no band postings for the victim
+    // dedup state purged: no band postings for the victim, by id or md5
     val liveAfter = ManifestTable.liveFiles(spark, root)
     val dd = ManifestTable.dataDir(root)
     def kindRows(kind: String) = {
@@ -53,8 +53,8 @@ class StoreForgetSpec extends SparkSpec {
       else spark.read.option("basePath", dd)
         .parquet(fs.map(f => s"$dd/$f"): _*)
     }
-    assert(kindRows("sh").filter(col("doc_id") === vId).count() === 0L)
     assert(kindRows("band").filter(col("doc_id") === vId).count() === 0L)
+    assert(kindRows("band").filter(col("text_md5") === vMd5).count() === 0L)
     // and the md5 is tombstoned
     assert(kindRows("tomb").filter(col("text_md5") === vMd5).count() === 1L)
 

@@ -15,11 +15,10 @@ class StoreLayoutSizingSpec extends AnyFunSuite {
     val t = CorpusStore.TargetRowsPerFile.toLong
     def n(keepers: Long): Int = {
       val l = CorpusStore.sizedLayout(keepers)
-      assert(l.md5Buckets == l.bandValBuckets &&
-        l.md5Buckets == l.shingleBuckets, s"counts differ: $l")
+      assert(l.md5Buckets == l.bandValBuckets, s"counts differ: $l")
       l.md5Buckets
     }
-    assert(CorpusStore.sizedLayout(0L) == StoreLayout(1, 1, 1))
+    assert(CorpusStore.sizedLayout(0L) == StoreLayout(1, 1))
     assert(Seq(1L, 170L, t - 1, t).map(n) == Seq(1, 1, 1, 1))
     assert(Seq(t + 1, 2 * t, 2 * t + 1, 4 * t, 5 * t).map(n) ==
       Seq(2, 2, 4, 4, 8))

@@ -18,13 +18,13 @@ import graft.plans.GraftExtensions
 class StorePruneRuleSpec extends SparkSpec {
 
   // pinned to 16 buckets a kind: the prune assertions need more than one
-  // bucket to prune between (the sizing rule gives this store 1/1/1)
+  // bucket to prune between (the sizing rule gives this store 1/1)
   private lazy val root: String = {
     val r = java.nio.file.Files.createTempDirectory("graft_prune").toString
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     (0 until 2).foreach { i =>
       CorpusStore.tick(docs.filter(col("doc_id") % 2 === i), r,
-        tickId = Some(s"w$i"), layoutIfNew = Some(StoreLayout(16, 16, 16)))
+        tickId = Some(s"w$i"), layoutIfNew = Some(StoreLayout(16, 16)))
     }
     GraftExtensions.install(spark)
     r
@@ -56,14 +56,14 @@ class StorePruneRuleSpec extends SparkSpec {
       assert(CorpusStore.bucketForKey("doc", lay, k) === viaDf(k),
         s"md5 bucket drifted for $k")
     }
-    import spark.implicits._
-    val ids = Seq(0L, 1L, 7L, 123L, 99999L)
-    val shViaDf = ids.toDF("doc_id")
-      .select(col("doc_id"), CorpusStore.shingleBucket(col("doc_id"), lay).as("b"))
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    ids.foreach { id =>
-      assert(CorpusStore.bucketForKey("sh", lay, id.toString) === shViaDf(id),
-        s"shingle bucket drifted for $id")
+    val bandViaDf = CorpusStore.bands(spark, root).limit(20)
+      .select(col("band_id"), col("band_val"),
+        CorpusStore.bandBucket(col("band_id"), col("band_val"), lay).as("b"))
+      .collect()
+    assert(bandViaDf.nonEmpty, "fixture store has no band postings")
+    bandViaDf.foreach { r =>
+      assert(CorpusStore.bandBucketForKey(r.getInt(0), r.getString(1), lay) ===
+        r.getInt(2), s"band bucket drifted for (${r.getInt(0)}, ${r.getString(1)})")
     }
   }
 
