@@ -610,14 +610,6 @@ object Corpus {
     scoreTrainSets(sets, heldFromSets(sets), flagAt)
   }
 
-  /** The held-out half of [[contaminationScores]]: the distinct `k`-token
-    * shingle set of the val/test split. Split out so a versioned store
-    * ([[CorpusStore]]'s model sidecars) can materialize it once per corpus
-    * snapshot and feed [[contaminationScoresWith]] on later refreshes.
-    */
-  def heldOutShingles(docs: DataFrame, k: Int = 8): DataFrame =
-    heldFromSets(docShingleSets(docs, k))
-
   /** The held-out distinct shingle set off a prebuilt [[docShingleSets]]
     * frame — shared so the self-deriving scorer computes the sets once.
     */

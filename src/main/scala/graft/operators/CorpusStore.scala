@@ -47,7 +47,11 @@ import org.apache.spark.storage.StorageLevel
   *     hash(band_val)) so a tick's band prune plans only over the buckets
   *     the batch's band values hash to — the [[IvfStore]] `p_cell`
   *     inverted-file pattern applied to LSH. A candidate's md5 leads to
-  *     its doc row, whose text verification re-shingles.
+  *     its doc row, whose text verification re-shingles. Both md5 columns
+  *     are stored as 16-byte binary (random hex does not compress, so the
+  *     hex strings cost twice the bytes); [[bands]] decodes them to the
+  *     lowercase hex every other md5 column holds, and the store's own
+  *     reads filter on the binary column ([[encodeBands]]/[[decodeBands]]).
   *
   * Scale shape: per-tick INPUT is O(touched buckets), not O(store) — the
   * store is never rewritten (appends only), never reshuffled (the batch's
@@ -125,9 +129,10 @@ object CorpusStore {
     * written under a different expression version fails loudly at open
     * instead of silently pruning against wrong directories (or, for
     * version 1, which had a shingle kind and md5-less band postings,
-    * silently missing near-dups).
+    * silently missing near-dups; or, for version 2, whose band postings
+    * held their md5s as hex strings, reading them as 16-byte binary).
     */
-  val BucketExprVersion = 2
+  val BucketExprVersion = 3
 
   /** The store's physical bucket layout — PERSISTED PER SNAPSHOT as the
     * `#meta:layout=` line of every commit, never a compile-time constant.
@@ -212,10 +217,14 @@ object CorpusStore {
       throw new IllegalStateException(
         s"store layout $where was written by bucket-expression version " +
           s"$version; this binary computes version $BucketExprVersion — " +
-          (if (version == 1) "it predates the shingle-free format (its band " +
-            "postings carry no text_md5). Rebuild it by ticking its documents."
-          else "reading it would file-prune against wrong directories. " +
-            "Migrate with a compact(rebucketTo = ...) run by a matching binary."))
+          (version match {
+            case 1 => "it predates the shingle-free format (its band " +
+              "postings carry no text_md5). Rebuild it by ticking its documents."
+            case 2 => "it has its band postings stored as hex strings, not " +
+              "16-byte binary. Rebuild it by ticking its documents."
+            case _ => "reading it would file-prune against wrong directories. " +
+              "Migrate with a compact(rebucketTo = ...) run by a matching binary."
+          }))
     StoreLayout(field("md5Buckets"), field("bandValBuckets"), version)
   }
 
@@ -296,7 +305,7 @@ object CorpusStore {
     StructField("text_md5", StringType), StructField("tick", StringType)))
   private val bandSchema = StructType(Seq(
     StructField("doc_id", LongType), StructField("band_id", IntegerType),
-    StructField("band_val", StringType), StructField("text_md5", StringType)))
+    StructField("band_val", BinaryType), StructField("text_md5", BinaryType)))
   private val tombSchema = StructType(Seq(StructField("text_md5", StringType)))
 
   private def kindSchema(kind: String): StructType = kind match {
@@ -305,6 +314,55 @@ object CorpusStore {
     case "tomb" => tombSchema
     case other => throw new IllegalArgumentException(s"unknown kind: $other")
   }
+
+  /** The band kind's two md5 columns, stored as the 16 bytes of their
+    * lowercase hex. These helpers are the store's only conversions: the
+    * tick's write encodes its hex postings, [[bands]] and the tick's
+    * candidate aggregate decode stored rows, and forget and compact move
+    * stored rows unchanged. Bucket expressions, Bloom probes and
+    * driver-side keys stay hex ([[md5Bytes]] converts a probe key).
+    */
+  private val BandMd5Cols = Seq("band_val", "text_md5")
+  private def encodeBands(rows: DataFrame): DataFrame =
+    rows.withColumns(BandMd5Cols.map(c => c -> unhex(col(c))).toMap)
+  private def decodeBands(rows: DataFrame): DataFrame =
+    rows.withColumns(BandMd5Cols.map(c => c -> decodeMd5(col(c))).toMap)
+
+  private val HexUpper = "ABCDEF"
+  private val HexLower = "abcdef"
+
+  /** Lowercase hex of a binary md5. `translate`, not `lower`: Spark's
+    * `lower` maps case through ICU, whose first use in a JVM took about
+    * 1.4 s (a 1,000-row select in a fresh session: 1,754 ms, against
+    * 342 ms with `translate`), paid by a store's creation tick.
+    */
+  private def decodeMd5(c: Column): Column =
+    translate(hex(c), HexUpper, HexLower)
+
+  /** The stored binary column inside a [[decodeMd5]] expression, which
+    * equals the hex key that column's bucket and Bloom probe are computed
+    * from — how [[graft.plans.StorePruneRule]] sees a predicate on a
+    * [[bands]] column as one on the stored key.
+    */
+  private[graft] object DecodedMd5 {
+    import org.apache.spark.sql.catalyst.expressions.{Expression, Hex, Literal, StringTranslate}
+    def unapply(e: Expression): Option[Expression] = e match {
+      case StringTranslate(Hex(c), Literal(from, _), Literal(to, _))
+          if c.dataType == BinaryType && String.valueOf(from) == HexUpper &&
+            String.valueOf(to) == HexLower => Some(c)
+      case _ => None
+    }
+  }
+
+  /** A hex md5 as the 16 bytes a band-kind column and its Bloom sidecar
+    * hold; throws on a malformed key.
+    */
+  private def md5Bytes(hex: String): Array[Byte] =
+    java.util.HexFormat.of().parseHex(hex)
+
+  /** [[bandBucket]] of a stored (binary) band row. */
+  private def storedBandBucket(l: StoreLayout): Column =
+    bandBucket(col("band_id"), decodeMd5(col("band_val")), l)
 
   /** A kind's data schema plus the store's two partition columns — the
     * USER-SPECIFIED schema every store read passes to the parquet source.
@@ -464,9 +522,13 @@ object CorpusStore {
     val blooms = ManifestTable.readBlooms(spark, root, shortlist)
     shortlist.filter { f =>
       val ks = byBucket(bucketOfPath(f).get)
+      // a band sidecar hashed its keys' 16 raw bytes, the others UTF-8 hex
+      val bytes: String => Array[Byte] =
+        if (f.startsWith("p_kind=band/")) md5Bytes
+        else _.getBytes(java.nio.charset.StandardCharsets.UTF_8)
       blooms(f) match {
         case None     => true
-        case Some(bf) => ks.exists(bf.mightContainString)
+        case Some(bf) => ks.exists(k => bf.mightContainBinary(bytes(k)))
       }
     }
   }
@@ -575,8 +637,9 @@ object CorpusStore {
     read(spark, root).select(col("doc_id"), col("lang"), col("source"),
       col("text"))
 
-  /** The live band postings (doc_id, band_id, band_val) — the
-    * investigative "which documents share this band" surface. Tagged for
+  /** The live band postings (doc_id, band_id, band_val, text_md5), with
+    * both md5 columns decoded to lowercase hex — the investigative "which
+    * documents share this band" surface. Tagged for
     * [[graft.plans.StorePruneRule]]: with the rule installed, a query
     * pinning BOTH `band_id` and `band_val` to literals plans over the
     * compound band bucket's pruned files only (bucket dir +
@@ -586,8 +649,8 @@ object CorpusStore {
     require(ManifestTable.currentVersion(spark, root).nonEmpty,
       s"no committed snapshot at $root")
     requireStoreLayout(root, ManifestTable.liveFiles(spark, root))
-    readKindFiles(spark, root, kindFiles(spark, root, "band"), bandSchema,
-      pruneTags(root, "band", layoutOf(spark, root)))
+    decodeBands(readKindFiles(spark, root, kindFiles(spark, root, "band"),
+      bandSchema, pruneTags(root, "band", layoutOf(spark, root))))
   }
 
   /** Tick ids that have committed (one FS listing — observability; the
@@ -752,17 +815,18 @@ object CorpusStore {
   /** [[Dedup.withShingleBands]]' band-value columns, in band id order. */
   private val BandCols = (0 until Dedup.NumBands).map(b => col(s"band_$b"))
 
-  /** The store's band postings among `rows` grouped per (band_id,
+  /** The store's band postings among stored `rows` grouped per (band_id,
     * band_val), as that bucket's (doc_id, text_md5) postings when it holds
     * at most `cap` — the skew cap of [[Dedup.capBuckets]] as ONE job (an RDD
-    * aggregate: one shuffle, no AQE map-stage job). Exact under the file
-    * prune: a Bloom prune only skips files that cannot hold the value, so
-    * every posting of a probed bucket is in `rows` and its count is the
-    * store's full bucket size. Over-cap buckets come back absent.
+    * aggregate: one shuffle, no AQE map-stage job), keyed and valued in
+    * hex. Exact under the file prune: a Bloom prune only skips files that
+    * cannot hold the value, so every posting of a probed bucket is in
+    * `rows` and its count is the store's full bucket size. Over-cap
+    * buckets come back absent.
     */
   private def cappedBuckets(rows: DataFrame, cap: Int)
       : Map[(Int, String), Seq[(Long, String)]] =
-    rows.select(col("band_id"), col("band_val"), col("doc_id"),
+    decodeBands(rows).select(col("band_id"), col("band_val"), col("doc_id"),
         col("text_md5")).rdd
       .map(r => (r.getInt(0), r.getString(1)) -> (r.getLong(2), r.getString(3)))
       .aggregateByKey((0L, List.empty[(Long, String)]))(
@@ -880,7 +944,8 @@ object CorpusStore {
           val buckets =
             if (files.isEmpty) Map.empty[(Int, String), Seq[(Long, String)]]
             else cappedBuckets(readKindFiles(spark, root, files, bandSchema)
-              .filter(col("band_val").isin(probes.map(_._2): _*)), cap)
+              .filter(col("band_val").isin(probes.map(p => md5Bytes(p._2)): _*)),
+              cap)
           val cands = keys.flatMap { case (k, id) =>
             buckets.getOrElse(k, Nil).map(id -> _) }.distinct
           val pairs = cands.map { case (id, (c, _)) => id -> c }.distinct
@@ -912,9 +977,9 @@ object CorpusStore {
       val layout = stored.orElse(layoutIfNew).orElse(readStagedLayout(spark, root))
         .getOrElse(sizedLayout(keepers.size))
       // keepers' doc rows + their band postings (each carrying its md5, the
-      // verification fetch's key) + the dropped docs' tombstones: ONE
-      // write job straight into data/ (one file per touched bucket per
-      // kind, each with its Bloom sidecar)
+      // verification fetch's key; both md5s binary) + the dropped docs'
+      // tombstones: ONE write job straight into data/ (one file per
+      // touched bucket per kind, each with its Bloom sidecar)
       val written =
         if (exactNew.isEmpty) Seq.empty[(ManifestTable.FileEntry, Long)]
         else phase(spark, op, "write") {
@@ -922,9 +987,9 @@ object CorpusStore {
           ManifestTable.writeFiles(spark, root, Seq(
             kindSet("doc", kept.withColumn("tick", lit(stamp)),
               md5Bucket(col("text_md5"), layout)),
-            kindSet("band",
-              Dedup.explodeBands(kept, BandCols, Seq("doc_id", "text_md5")),
-              bandBucket(col("band_id"), col("band_val"), layout)),
+            kindSet("band", encodeBands(
+              Dedup.explodeBands(kept, BandCols, Seq("doc_id", "text_md5"))),
+              storedBandBucket(layout)),
             kindSet("tomb", batch.filter(col("doc_id").isin(tombs: _*)),
               md5Bucket(col("text_md5"), layout))))
         }
@@ -1079,7 +1144,7 @@ object CorpusStore {
 
     def bucketExpr(kind: String): Column = kind match {
       case "doc" | "tomb" => md5Bucket(col("text_md5"), target)
-      case "band" => bandBucket(col("band_id"), col("band_val"), target)
+      case "band" => storedBandBucket(target)
     }
     // sub-split hash key: any uniformly-distributed row key of the kind
     def subKey(kind: String): Column = kind match {

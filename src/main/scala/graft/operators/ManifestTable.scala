@@ -20,7 +20,7 @@ import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetWriteSupport}
 import org.apache.spark.sql.functions.{col, concat_ws, lit, udf}
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.{LongType, StringType, StructType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{BinaryType, LongType, StringType, StructType, TimestampNTZType, TimestampType}
 import org.apache.spark.util.sketch.BloomFilter
 
 /** A commit lost its race: the target manifest version was taken (or the
@@ -259,11 +259,13 @@ object ManifestTable {
           n += 1
           val kc = keyCols(set)
           if (kc >= 0 && keys != null && !r.isNullAt(kc)) {
-            // the bytes `putString` hashes: a string's UTF-8, else its text
-            keys += (if (schemas(set)(kc).dataType == StringType)
-              r.getUTF8String(kc).getBytes
-            else r.get(kc, schemas(set)(kc).dataType).toString
-              .getBytes(StandardCharsets.UTF_8))
+            // the bytes [[readBackKeys]] yields: a string's UTF-8, a
+            // binary's raw bytes, else its text
+            keys += (schemas(set)(kc).dataType match {
+              case StringType => r.getUTF8String(kc).getBytes
+              case BinaryType => r.getBinary(kc)
+              case dt => r.get(kc, dt).toString.getBytes(StandardCharsets.UTF_8)
+            })
             if (keys.size > BloomBufferedKeys) keys = null
           }
           var j = 0
@@ -316,10 +318,11 @@ object ManifestTable {
     dropFiles(fsOf(spark, root), dataBase, bloomBase, rels)
   }
 
-  /** Feed `f` the UTF-8 bytes of every non-null `key` value of parquet file
-    * `path` (a string column's bytes, any other type's decimal text — the
-    * `cast("string")` form), reading that one column only — the sidecar's
-    * key stream for a file too large to buffer its keys while writing.
+  /** Feed `f` the bytes of every non-null `key` value of parquet file
+    * `path` (a string or binary column's raw bytes, any other type's
+    * decimal text — the `cast("string")` form), reading that one column
+    * only — the sidecar's key stream for a file too large to buffer its
+    * keys while writing.
     */
   private[graft] def readBackKeys(conf: org.apache.hadoop.conf.Configuration,
                                   path: Path, key: String)

@@ -233,7 +233,10 @@ class StorePruneRule(spark: SparkSession) extends Rule[LogicalPlan] {
     * plan's actual pairs, so the prune stays sound: every file holding a
     * matching (id, val) row is in a kept bucket with its val probed.
     * Either column unrestricted → no prune (a band_val alone cannot
-    * resolve a bucket dir).
+    * resolve a bucket dir). The band kind stores band_val as binary and
+    * [[CorpusStore.bands]] decodes it to hex, so the optimizer hands this
+    * rule the decode pushed below that projection (`decode(band_val) =
+    * lit`); [[keySet]] sees through it.
     */
   private def bandPrune(cond: Expression, root: String,
                         layout: CorpusStore.StoreLayout,
@@ -308,23 +311,36 @@ class StorePruneRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
   private def keySet(e: Expression, keyCol: String): Option[Set[String]] =
     e match {
-      case EqualTo(a: AttributeReference, Literal(v, _)) if a.name == keyCol =>
+      case EqualTo(KeyAttr(a), Literal(v, _)) if a.name == keyCol =>
         render(v).map(Set(_))
-      case EqualTo(Literal(v, _), a: AttributeReference) if a.name == keyCol =>
+      case EqualTo(Literal(v, _), KeyAttr(a)) if a.name == keyCol =>
         render(v).map(Set(_))
-      case EqualNullSafe(a: AttributeReference, Literal(v, _))
+      case EqualNullSafe(KeyAttr(a), Literal(v, _))
           if a.name == keyCol => render(v).map(Set(_))
-      case EqualNullSafe(Literal(v, _), a: AttributeReference)
+      case EqualNullSafe(Literal(v, _), KeyAttr(a))
           if a.name == keyCol => render(v).map(Set(_))
-      case In(a: AttributeReference, vs)
+      case In(KeyAttr(a), vs)
           if a.name == keyCol && vs.forall(_.isInstanceOf[Literal]) =>
         sequence(vs.map { case Literal(v, _) => render(v) })
-      case InSet(a: AttributeReference, vs) if a.name == keyCol =>
+      case InSet(KeyAttr(a), vs) if a.name == keyCol =>
         sequence(vs.toSeq.map(render))
       case Or(l, r) =>
         for { a <- keySet(l, keyCol); b <- keySet(r, keyCol) } yield a ++ b
       case _ => None
     }
+
+  /** A key column as a predicate compares it: the attribute itself, or a
+    * stored binary column under the store's hex decode
+    * ([[CorpusStore.DecodedMd5]]), which equals the hex key its bucket and
+    * Bloom probe are computed from.
+    */
+  private object KeyAttr {
+    def unapply(e: Expression): Option[AttributeReference] = e match {
+      case a: AttributeReference => Some(a)
+      case CorpusStore.DecodedMd5(a: AttributeReference) => Some(a)
+      case _ => None
+    }
+  }
 
   private def sequence(vs: Seq[Option[String]]): Option[Set[String]] =
     if (vs.forall(_.nonEmpty)) Some(vs.flatten.toSet) else None

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.functions.{col, lit, md5}
+import org.apache.spark.sql.functions.{col, lit, md5, unhex}
 
 import graft.operators.{CorpusStore, ManifestTable}
 import graft.operators.CorpusStore.StoreLayout
@@ -184,6 +184,28 @@ class CorpusStoreBloomSpec extends SparkSpec {
     }
     assert(fresh.count(bf.get.mightContainString) < 20,
       "fresh keys not rejected — filter is not discriminating")
+
+    // a BINARY key column (the band kind's 16-byte md5s): the buffered
+    // sidecar hashes each value's raw bytes — the bytes the read-back path
+    // yields for a file too large to buffer — so a stored key probes
+    // positive as binary and both paths build the same filter
+    val addedBin = ManifestTable.writeFiles(spark, root, Seq(ManifestTable.WriteSet(
+      (0L to 99L).toDF("seq")
+        .withColumn("k", unhex(md5(col("seq").cast("string")))),
+      Seq("seq", "k"), lit("bin"), lit(0), Some("k")))).map(_._1.path)
+    assert(addedBin.size == 1, s"one group must write one file: $addedBin")
+    ManifestTable.commitReplace(spark, root, Seq.empty, addedBin)
+    val bfBin = ManifestTable.readBloom(spark, root, addedBin.head)
+    assert(bfBin.nonEmpty, "binary-key sidecar did not round-trip")
+    assert(bfBin.get.mightContainBinary(mdig.digest("3".getBytes("UTF-8"))),
+      "a stored binary key probed negative")
+    val readBack = org.apache.spark.util.sketch.BloomFilter.create(100L, 0.01)
+    ManifestTable.readBackKeys(spark.sparkContext.hadoopConfiguration,
+      new org.apache.hadoop.fs.Path(
+        s"${ManifestTable.dataDir(root)}/${addedBin.head}"), "k")(
+      readBack.putBinary)
+    assert(readBack == bfBin.get,
+      "the buffered binary-key sidecar differs from the read-back one")
 
     // a committed file that never got a sidecar reads None, so the prune
     // keeps it (skipping must be provably safe)

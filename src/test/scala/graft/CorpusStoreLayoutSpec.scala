@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.{col, hex, lit, lower}
 
 import graft.operators.{CorpusStore, ManifestTable}
 import graft.operators.CorpusStore.StoreLayout
@@ -59,11 +59,13 @@ class CorpusStoreLayoutSpec extends SparkSpec {
     "tomb" -> Seq("text_md5"))
 
   /** The kind's bucket expression under `l` — the read-side mirror of the
-    * write-side `p_b` derivation in tick/compact.
+    * write-side `p_b` derivation in tick/compact (a raw band file holds
+    * band_val as 16 bytes; the bucket is of its hex).
     */
   private def bucketExpr(kind: String, l: StoreLayout) = kind match {
     case "doc" | "tomb" => CorpusStore.md5Bucket(col("text_md5"), l)
-    case "band" => CorpusStore.bandBucket(col("band_id"), col("band_val"), l)
+    case "band" =>
+      CorpusStore.bandBucket(col("band_id"), lower(hex(col("band_val"))), l)
   }
 
   test("rebucket migration: rows, dedup state, and replay survive; dirs " +
@@ -276,26 +278,29 @@ class CorpusStoreLayoutSpec extends SparkSpec {
     } finally spark.catalog.clearCache()
   }
 
-  test("a store in the format with a shingle kind (expression version 1) " +
-    "fails loudly at tick, read and forget") {
+  /** A store of synthetic documents whose commit's `#meta:layout` line is
+    * rewritten by `tamper` (the layout line it committed → an older
+    * format's): `tick`, `read` and `forget` must each throw an
+    * IllegalStateException naming what that format lacks, and commit
+    * nothing.
+    */
+  private def olderFormatFailsLoudly(name: String,
+                                     tamper: StoreLayout => String,
+                                     lacks: String): Unit = {
     import spark.implicits._
     def wave(w: Int): DataFrame = (0 until 6).map { i =>
-      (w * 100L + i, "en", "web", s"version one wave $w doc $i " +
+      (w * 100L + i, "en", "web", s"$name wave $w doc $i " +
         (0 until 25).map(j => s"v${w}_${i}_$j").mkString(" "))
     }.toDF("doc_id", "lang", "source", "text")
-    val root = java.nio.file.Files.createTempDirectory("graft_layv1").toString
+    val root = java.nio.file.Files.createTempDirectory(s"graft_lay$name").toString
     try {
       val r = CorpusStore.tick(wave(0), root, tickId = Some("w0"),
         minQuality = 0.0)
       val v = ManifestTable.currentVersion(spark, root).get
       val victim = CorpusStore.read(spark, root).select("text_md5").head()
         .getString(0)
-      // the layout line such a store committed: three bucket counts
       val l = CorpusStore.sizedLayout(r.nKept)
-      rewrite(manifestPath(root, v))(_.replace(l.render,
-        s"""{"md5Buckets":${l.md5Buckets},"bandValBuckets":""" +
-          s"""${l.bandValBuckets},"shingleBuckets":${l.md5Buckets},""" +
-          """"exprVersion":1}"""))
+      rewrite(manifestPath(root, v))(_.replace(l.render, tamper(l)))
       Seq[(String, () => Any)](
         "tick" -> (() => CorpusStore.tick(wave(1), root, tickId = Some("w1"),
           minQuality = 0.0)),
@@ -303,12 +308,28 @@ class CorpusStoreLayoutSpec extends SparkSpec {
         "forget" -> (() => CorpusStore.forget(spark, root, Seq(victim))))
         .foreach { case (op, run) =>
           val ex = intercept[IllegalStateException](run())
-          assert(ex.getMessage.contains("predates the shingle-free format"),
-            s"$op: ${ex.getMessage}")
+          assert(ex.getMessage.contains(lacks), s"$op: ${ex.getMessage}")
         }
       assert(ManifestTable.currentVersion(spark, root).contains(v),
-        "an op on a version-1 store committed")
+        s"an op on a $name store committed")
     } finally spark.catalog.clearCache()
+  }
+
+  test("a store in the format with a shingle kind (expression version 1) " +
+    "fails loudly at tick, read and forget") {
+    // the layout line such a store committed: three bucket counts
+    olderFormatFailsLoudly("v1", l =>
+      s"""{"md5Buckets":${l.md5Buckets},"bandValBuckets":""" +
+        s"""${l.bandValBuckets},"shingleBuckets":${l.md5Buckets},""" +
+        """"exprVersion":1}""",
+      "predates the shingle-free format")
+  }
+
+  test("a store with hex-string band postings (expression version 2) " +
+    "fails loudly at tick, read and forget") {
+    // the layout line such a store committed: today's counts, version 2
+    olderFormatFailsLoudly("v2", l => l.copy(exprVersion = 2).render,
+      "band postings stored as hex strings")
   }
 
   test("caller-supplied layouts must carry this binary's expression " +

@@ -57,9 +57,13 @@ class CorpusStoreWriteSpec extends SparkSpec {
         val in = fs.open(side)
         val onDisk = try in.readAllBytes().toSeq finally in.close()
         val file = spark.read.parquet(s"$dd/$f")
-        val keys = file.select(col(key).cast("string")).collect().map(_.getString(0))
+        // a string key hashes its UTF-8, a binary one (band) its raw bytes
+        val keys = file.select(col(key)).collect().map(r => r.get(0) match {
+          case b: Array[Byte] => b
+          case s: String => s.getBytes("UTF-8")
+        })
         val rebuilt = BloomFilter.create(math.max(keys.length.toLong, 16L), 0.01)
-        keys.foreach(rebuilt.putString)
+        keys.foreach(rebuilt.putBinary)
         assert(onDisk == bytesOf(rebuilt),
           s"$stage: sidecar of $f differs from its rebuilt filter")
         val readBack = BloomFilter.create(math.max(keys.length.toLong, 16L), 0.01)
