@@ -176,9 +176,10 @@ object Corpus {
                                 nShards: Int = 8,
                                 seqBudget: Long = 1024L,
                                 seed: String = "graft"): DataFrame = {
-    // fail fast, not just in pipelineTail: the ingest fold below checkpoints
-    // EAGERLY per wave, so deferring to the tail's require would run the
-    // whole fold before rejecting a bad shard count
+    // fail fast, not just in pipelineTail: the ingest fold below runs its
+    // Spark jobs when called (it decides the keepers on the driver), so
+    // deferring to the tail's require would run the whole fold before
+    // rejecting a bad shard count
     require(nShards >= 1, s"nShards must be >= 1, got $nShards")
     pipelineTail(incrementalSurvivorStages(docs, nWaves, minQuality)._3,
       perplexityThreshold, flagAt, totalBudget, nShards, seqBudget, seed)
@@ -283,12 +284,13 @@ object Corpus {
     * downstream plans to ~100 KB, while the RDD itself stays cached
     * (localCheckpoint persists MEMORY_AND_DISK) exactly like the persist
     * it replaces. `eager = false` keeps materialization inside the first
-    * consuming action — nothing moves out of the benched region. Same
-    * fault-tolerance trade as the ingest fold's localCheckpoint
-    * ([[Dedup.sequentialIngest]]): truncated lineage is unrecoverable
-    * under executor loss — not for dynamic-allocation/preemptible
-    * clusters; cache lifecycle passes from the session's clearCache to
-    * GC + ContextCleaner (the sequentialIngest precedent).
+    * consuming action — nothing moves out of the benched region.
+    * FAULT-TOLERANCE TRADE, explicit: the blocks live executor-local with
+    * lineage truncated, so an executor loss (decommission, dynamic
+    * allocation, spot preemption) makes them unrecoverable and fails the
+    * query instead of recomputing — not for dynamic-allocation or
+    * preemptible clusters. Cache lifecycle passes from the session's
+    * clearCache to GC + ContextCleaner.
     */
   private def stageCut(df: DataFrame): DataFrame =
     df.localCheckpoint(false)

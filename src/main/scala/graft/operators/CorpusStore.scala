@@ -727,7 +727,7 @@ object CorpusStore {
     * semantic replay, never to loss or duplication.
     *
     * `retainSnapshots` is the per-tick vacuum's retention window — it
-    * bounds how far back [[manifestAt]] can reproduce a training manifest
+    * bounds how far back [[manifest]] can reproduce a training manifest
     * (only the retained versions stay readable). The default keeps the
     * current and previous snapshot; a deployment that needs deeper
     * training-reproducibility raises it (disk cost: the store is
@@ -812,9 +812,6 @@ object CorpusStore {
     try body finally sc.setJobDescription(prev)
   }
 
-  /** [[Dedup.withShingleBands]]' band-value columns, in band id order. */
-  private val BandCols = (0 until Dedup.NumBands).map(b => col(s"band_$b"))
-
   /** The store's band postings among stored `rows` grouped per (band_id,
     * band_val), as that bucket's (doc_id, text_md5) postings when it holds
     * at most `cap` — the skew cap of [[Dedup.capBuckets]] as ONE job (an RDD
@@ -855,7 +852,8 @@ object CorpusStore {
     *   - fold: within-batch pairs from equal band values among the
     *     survivors (buckets within the cap, the [[Dedup.bandPairs]] rule),
     *     verified in one job; a driver union-find keeps each component's
-    *     minimum id.
+    *     minimum id. Near and fold are [[Dedup.waveKeepers]], the decision
+    *     [[Dedup.sequentialIngest]] makes over postings held in memory.
     *   - write: ONE [[ManifestTable.writeFiles]] job whose sets filter the
     *     batch frame by the literal keeper and tombstone id sets.
     */
@@ -897,12 +895,12 @@ object CorpusStore {
     // in executor storage (the IvfStore.build discipline)
     try {
       val gated = phase(spark, op, "gate")(
-        batch.select(col("doc_id") +: col("text_md5") +: BandCols: _*).collect())
+        batch.select(col("doc_id") +: col("text_md5") +: Dedup.BandCols: _*).collect())
       val nQuality = gated.length.toLong
       val nRaw = raw.get("n").asInstanceOf[Long]
       // band values per doc (null for a shingle-less doc)
       val bandsOf = gated.map(r =>
-        r.getLong(0) -> BandCols.indices.map(b => r.getString(2 + b))).toMap
+        r.getLong(0) -> Dedup.BandCols.indices.map(b => r.getString(2 + b))).toMap
       // within-batch exact dedup: first arrival (min doc_id) per md5
       val firstOf =
         gated.groupMapReduce(_.getString(1))(_.getLong(0))(math.min)
@@ -928,47 +926,31 @@ object CorpusStore {
         firstOf.collect { case (m, id) if !seen(m) => id }.toSeq.sorted
       }
       val nExactNew = exactNew.size.toLong
-      // (band_id, band_val) keys of `ids`; shingle-less docs have none
-      def bandKeys(ids: Seq[Long]): Seq[((Int, String), Long)] =
-        for (id <- ids; (v, b) <- bandsOf(id).zipWithIndex if v != null)
-          yield (b, v) -> id
-      // near-dup-vs-store: candidates from the store's band postings under
-      // the batch's band keys, verified against the shingles of the
-      // candidates' stored texts — every store read two-level pruned
-      val nearDups = stored match {
-        case Some(l) if exactNew.nonEmpty => phase(spark, op, "near") {
-          val keys = bandKeys(exactNew)
-          val probes = keys.map(_._1).distinct
-          val files = bloomPrunedKindFiles(spark, root, "band", probes
-            .groupMap { case (b, v) => bandBucketForKey(b, v, l) }(_._2))
-          val buckets =
-            if (files.isEmpty) Map.empty[(Int, String), Seq[(Long, String)]]
+      // the near-dup decision (Dedup.waveKeepers): store candidates from
+      // the band postings under the batch's band keys, verified against
+      // the shingles of the candidates' stored texts — every store read
+      // two-level pruned — then the within-batch components
+      val keepers = Dedup.waveKeepers[(Long, String)](
+        exactNew.map(id => id -> bandsOf(id)), cap,
+        probes => stored match {
+          case Some(l) => phase(spark, op, "near") {
+            val files = bloomPrunedKindFiles(spark, root, "band", probes
+              .groupMap { case (b, v) => bandBucketForKey(b, v, l) }(_._2))
+            if (files.isEmpty) Map.empty
             else cappedBuckets(readKindFiles(spark, root, files, bandSchema)
               .filter(col("band_val").isin(probes.map(p => md5Bytes(p._2)): _*)),
               cap)
-          val cands = keys.flatMap { case (k, id) =>
-            buckets.getOrElse(k, Nil).map(id -> _) }.distinct
-          val pairs = cands.map { case (id, (c, _)) => id -> c }.distinct
+          }
+          case None => Map.empty
+        },
+        cands => stored.toSeq.flatMap(l => phase(spark, op, "near") {
           md5Rows("doc", l, cands.map(_._2._2).distinct).toSeq
-            .flatMap(docs => Dedup.verifiedPairs(pairs, batch,
+            .flatMap(docs => Dedup.verifiedPairs(
+              cands.map { case (id, (c, _)) => id -> c }.distinct, batch,
               Dedup.docShingles(docs), threshold))
-            .map(_._1).toSet
-        }
-        case _ => Set.empty[Long]
-      }
-      // within-batch near-dup components over the survivors: pairs share a
-      // band bucket of at most `cap` survivors; each verified component
-      // keeps its minimum doc_id
-      val keepers = phase(spark, op, "fold") {
-        val survivors = exactNew.filterNot(nearDups)
-        val pairs = bandKeys(survivors).groupMap(_._1)(_._2).values
-          .filter(_.size <= cap)
-          .flatMap(g => for (a <- g; b <- g if a < b) yield (a, b))
-          .toSeq.distinct
-        val label = Dedup.minLabels(
-          Dedup.verifiedPairs(pairs, batch, batch, threshold))
-        survivors.filter(id => label.getOrElse(id, id) == id)
-      }
+        }),
+        pairs => phase(spark, op, "fold")(
+          Dedup.verifiedPairs(pairs, batch, batch, threshold)))
       val tombs = exactNew.filterNot(keepers.toSet)
       // a creation tick's layout: the most recent EXPLICIT choice — the
       // caller's, else an earlier zero-commit creation tick's staged one —
@@ -988,7 +970,7 @@ object CorpusStore {
             kindSet("doc", kept.withColumn("tick", lit(stamp)),
               md5Bucket(col("text_md5"), layout)),
             kindSet("band", encodeBands(
-              Dedup.explodeBands(kept, BandCols, Seq("doc_id", "text_md5"))),
+              Dedup.explodeBands(kept, Dedup.BandCols, Seq("doc_id", "text_md5"))),
               storedBandBucket(layout)),
             kindSet("tomb", batch.filter(col("doc_id").isin(tombs: _*)),
               md5Bucket(col("text_md5"), layout))))
@@ -1327,7 +1309,7 @@ object CorpusStore {
       else locate(Dedup.explodeBands(Dedup.withShingleBands(
           readKindFiles(spark, root, docHits.keys.toSeq, docSchema)
             .filter(docVictim).select(col("doc_id"), col("text"))),
-        BandCols)
+        Dedup.BandCols)
         .select(col("band_id"), col("band_val"))
         .collect()).map(r => (r.getInt(0), r.getString(1))).distinct
     val bandByBucket: Map[Int, Seq[String]] = bandKeys.toSeq
@@ -1413,6 +1395,18 @@ object CorpusStore {
     * (identical output to the all-at-once incremental build when the
     * ticks were its arrival waves; spec-asserted).
     *
+    * `version` pins a store snapshot (default: the current one) — the
+    * byte-reproducible rebuild of the manifest a past loader refresh saw
+    * (the tail is a deterministic function of the snapshot's rows, and a
+    * snapshot's files are immutable while the retention window holds
+    * them). The training-reproducibility read: "which exact (shard, bin)
+    * packing did version v train on". RETENTION BOUND: only versions
+    * inside the per-tick vacuum's window stay readable — with [[tick]]'s
+    * default (`ManifestTable.RetainSnapshots` = 2) that is the current and
+    * previous version only; anything older fails loudly. Pass a larger
+    * `retainSnapshots` to [[tick]] when loaders need to reproduce deeper
+    * history.
+    *
     * Cache lifecycle: unlike [[tick]], which releases its own caches, the
     * tail keeps its multiply-consumed stage frames alive past the call. Its
     * persisted frames follow the session-cache contract (a long-running
@@ -1430,14 +1424,26 @@ object CorpusStore {
     * caller's action, under the caller's description.
     */
   def manifest(spark: SparkSession, root: String,
+               version: Option[Long] = None,
                perplexityThreshold: Double = 3.5,
                flagAt: Double = 0.2,
                totalBudget: Long = 20000L,
                nShards: Int = 8,
                seqBudget: Long = 1024L,
                seed: String = "graft"): DataFrame =
-    phase(spark, "manifest", "plan")(Corpus.pipelineTail(docs(spark, root),
-      perplexityThreshold, flagAt, totalBudget, nShards, seqBudget, seed))
+    phase(spark, "manifest", "plan") {
+      val rows = version match {
+        case None => docs(spark, root)
+        case Some(v) =>
+          val files = ManifestTable.filesOf(spark, root, v)
+            .filter(_.startsWith("p_kind=doc/"))
+          require(files.nonEmpty, s"no doc files in snapshot v$v at $root")
+          readKindFiles(spark, root, files, docSchema)
+            .select(col("doc_id"), col("lang"), col("source"), col("text"))
+      }
+      Corpus.pipelineTail(rows, perplexityThreshold, flagAt, totalBudget,
+        nShards, seqBudget, seed)
+    }
 
   /** [[manifest]] with the tail's corpus-dependent models STAGED per store
     * snapshot version (the [[CentroidStore]] versioned-sidecar pattern
@@ -1489,35 +1495,6 @@ object CorpusStore {
         ManifestTable.versions(spark, root).toSet)
     }
     m
-  }
-
-  /** [[manifest]] over a PINNED store snapshot — the byte-reproducible
-    * rebuild of the manifest a past loader refresh saw (the tail is a
-    * deterministic function of the snapshot's rows, and a snapshot's files
-    * are immutable while the retention window holds them). The training-
-    * reproducibility read: "which exact (shard, bin) packing did version v
-    * train on".
-    *
-    * RETENTION BOUND: only versions inside the per-tick vacuum's window
-    * stay readable — with [[tick]]'s default (`ManifestTable.RetainSnapshots`
-    * = 2) that is the current and previous version only; anything older
-    * fails the readAt require. Pass a larger `retainSnapshots` to [[tick]]
-    * when loaders need to reproduce deeper history.
-    */
-  def manifestAt(spark: SparkSession, root: String, version: Long,
-                 perplexityThreshold: Double = 3.5,
-                 flagAt: Double = 0.2,
-                 totalBudget: Long = 20000L,
-                 nShards: Int = 8,
-                 seqBudget: Long = 1024L,
-                 seed: String = "graft"): DataFrame = {
-    val files = ManifestTable.filesOf(spark, root, version)
-      .filter(_.startsWith("p_kind=doc/"))
-    require(files.nonEmpty, s"no doc files in snapshot v$version at $root")
-    phase(spark, "manifest", "plan")(Corpus.pipelineTail(
-      readKindFiles(spark, root, files, docSchema)
-        .select(col("doc_id"), col("lang"), col("source"), col("text")),
-      perplexityThreshold, flagAt, totalBudget, nShards, seqBudget, seed))
   }
 
   /** [[read]] pinned at a RETAINED snapshot version — the doc rows exactly

@@ -119,14 +119,6 @@ object Dedup {
         bandHash(b, NumHashes / NumBands).as(s"band_$b"))): _*)
   }
 
-  /** Banded-LSH pairs + exact-Jaccard verification over a prebuilt
-    * [[shingleSignatures]] frame.
-    */
-  private[operators] def pairsFromShingleSigs(ss: DataFrame, rowsPerBand: Int,
-                                              threshold: Double, cap: Int): DataFrame =
-    verifyJaccard(bandPairs(explodedBands(ss, rowsPerBand), cap, "doc_a", "doc_b"),
-      ss.select(col("doc_id"), col("shingles")), threshold)
-
   /** Band hash over `rowsPerBand` consecutive signatures.
     * concat (NOT concat_ws): null sigs — a doc with < ShingleK tokens — must
     * propagate to a null band like the oracle's `||`, so shingle-less docs
@@ -257,7 +249,8 @@ object Dedup {
   private def lshVerifiedPairs(docs: DataFrame, rowsPerBand: Int,
                                threshold: Double, cap: Int): DataFrame = {
     val ss = shingleSignatures(docs).persist(StorageLevel.MEMORY_AND_DISK)
-    pairsFromShingleSigs(ss, rowsPerBand, threshold, cap)
+    verifyJaccard(bandedCandidates(ss, rowsPerBand, cap),
+      ss.select(col("doc_id"), col("shingles")), threshold)
   }
 
   /** MinHash LSH candidate pairs + exact-Jaccard verification: docs sharing
@@ -392,8 +385,9 @@ object Dedup {
   }
 
   /** Default a RELIABLE checkpoint location when the session has none.
-    * `localCheckpoint` stores blocks executor-local — on a 1000-executor job
-    * one lost executor kills the iteration mid-flight; `checkpoint()` writes
+    * An executor-local checkpoint would lose its blocks with the executor
+    * — on a 1000-executor job one lost executor kills the iteration
+    * mid-flight; `checkpoint()` writes
     * to this (HDFS-compatible on a cluster — set it to a durable path there;
     * local temp under local[n]) and survives stage retries.
     */
@@ -460,7 +454,7 @@ object Dedup {
     * smaller root id, which keeps every set's root equal to its minimum
     * member by induction — so each node on an edge maps to exactly the
     * label min-label propagation converges to. Pure; shared by
-    * [[connectedComponents]]' local path and [[CorpusStore.tick]]'s fold.
+    * [[connectedComponents]]' local path and [[waveKeepers]].
     */
   private[operators] def minLabels(edges: Iterable[(Long, Long)])
       : Map[Long, Long] = {
@@ -544,19 +538,26 @@ object Dedup {
     */
   def incrementalNearDups(batchDocs: DataFrame, corpusSigs: DataFrame,
                           threshold: Double = 0.5,
-                          cap: Int = MaxBucketSize): DataFrame =
-    incrementalNearDupsFromSigs(
-      shingleSignatures(batchDocs).persist(StorageLevel.MEMORY_AND_DISK),
-      corpusSigs, threshold, cap)
-
-  /** [[incrementalNearDups]] off an already-built (and ideally persisted or
-    * staged) batch signature frame — the form [[ingestTick]] calls so the
-    * batch's tokenize→shingle→md5 pass runs exactly once per tick.
-    */
-  private[operators] def incrementalNearDupsFromSigs(
-      batchSigs: DataFrame, corpusSigs: DataFrame,
-      threshold: Double, cap: Int): DataFrame = {
-    val verified = incrementalVerified(batchSigs, corpusSigs, threshold, cap)
+                          cap: Int = MaxBucketSize): DataFrame = {
+    val batchSigs =
+      shingleSignatures(batchDocs).persist(StorageLevel.MEMORY_AND_DISK)
+    val rowsPerBand = NumHashes / NumBands
+    val batchBands = explodedBands(batchSigs, rowsPerBand)
+    val corpusBands = explodedBands(corpusSigs, rowsPerBand)
+    // no distinct() on the broadcast build side: LEFT SEMI ignores
+    // build-side duplicates (the broadcast hash relation dedups keys on
+    // build), so the dedup exchange+aggregate would be a wasted stage
+    val touched = corpusBands.join(
+      broadcast(batchBands.select(col("band_id"), col("band_val"))),
+      Seq("band_id", "band_val"), "leftsemi")
+    val capped = capBuckets(touched, Seq("band_id", "band_val"), cap)
+    val candidates = batchBands.as("n")
+      .join(capped.as("c"), Seq("band_id", "band_val"))
+      .select(col("n.doc_id").as("new_id"), col("c.doc_id").as("dup_of"))
+    val verified = verifyCandidates(
+      spreadDistinct(candidates, "new_id", "dup_of"),
+      batchSigs.select(col("doc_id"), col("shingles")),
+      corpusSigs.select(col("doc_id"), col("shingles")), threshold)
     val best = org.apache.spark.sql.expressions.Window
       .partitionBy(col("new_id"))
       .orderBy(col("jaccard").desc, col("dup_of"))
@@ -567,37 +568,9 @@ object Dedup {
         col("jaccard"))
   }
 
-  /** Verified batch-vs-corpus near-dup matches (all pairs, unranked) — the
-    * shared core of [[incrementalNearDupsFromSigs]] (which ranks to the
-    * best match per new doc) and [[ingestTick]] (which only needs the
-    * distinct duplicated ids, so the ranking window would be wasted work
-    * on every ingest tick).
-    */
-  private def incrementalVerified(
-      batchSigs: DataFrame, corpusSigs: DataFrame,
-      threshold: Double, cap: Int): DataFrame = {
-    val rowsPerBand = NumHashes / NumBands
-    val batchBands = explodedBands(batchSigs, rowsPerBand)
-    val corpusBands = explodedBands(corpusSigs, rowsPerBand)
-    // no distinct() on the broadcast build side: LEFT SEMI ignores
-    // build-side duplicates (the broadcast hash relation dedups keys on
-    // build), so the dedup exchange+aggregate was a wasted stage per call —
-    // the same argument as the ingest fold's anti-join distinct removal
-    val touched = corpusBands.join(
-      broadcast(batchBands.select(col("band_id"), col("band_val"))),
-      Seq("band_id", "band_val"), "leftsemi")
-    val capped = capBuckets(touched, Seq("band_id", "band_val"), cap)
-    val candidates = batchBands.as("n")
-      .join(capped.as("c"), Seq("band_id", "band_val"))
-      .select(col("n.doc_id").as("new_id"), col("c.doc_id").as("dup_of"))
-    verifyCandidates(spreadDistinct(candidates, "new_id", "dup_of"),
-      batchSigs.select(col("doc_id"), col("shingles")),
-      corpusSigs.select(col("doc_id"), col("shingles")), threshold)
-  }
-
   /** Exact-Jaccard verification of asymmetric (new_id, dup_of) candidate
     * pairs against two (doc_id, shingles) frames — the tail of
-    * [[incrementalVerified]]. Same null-union guard as the self-join
+    * [[incrementalNearDups]]. Same null-union guard as the self-join
     * family; `candidates` must arrive spread on the pair key
     * ([[spreadDistinct]]), so no second exchange here.
     */
@@ -650,45 +623,71 @@ object Dedup {
         .keys.collect().toSeq.distinct
     }
 
-  /** One tick of the dedup-ingest loop: drop batch docs that near-dup the
-    * store ([[incrementalNearDupsFromSigs]]), then dedup the survivors
-    * AGAINST EACH OTHER (banded pairs + connected components, keep each
-    * component's minimum doc_id) — without the within-batch step two copies
-    * of a new document would both enter the store. Returns the keepers'
-    * full signature rows, ready to append to the store. `storeSigs = None`
-    * is the bootstrap tick (empty store → within-batch dedup only). Cache
-    * lifecycle: the caller's session owns the `rem` persist.
+  /** The most documents one [[waveKeepers]] call decides: the driver
+    * holds each one's id, band values and band keys, and its candidate
+    * pairs. A larger arrival stream is split into ticks of
+    * [[CorpusStore.tick]], whose other driver-side sets are bounded by
+    * the batch as well.
     */
-  private def ingestTick(batchSigs: DataFrame,
-                         storeSigs: Option[DataFrame],
-                         threshold: Double,
-                         cap: Int): DataFrame = {
-    val rem = storeSigs match {
-      case Some(store) =>
-        // ids only — the best-match ranking of the public operator is
-        // wasted work here, any verified match disqualifies the doc. No
-        // distinct(): LEFT ANTI ignores probe-side duplicates, so the
-        // dedup exchange+aggregate was a wasted shuffle stage per wave
-        val dupIds = incrementalVerified(batchSigs, store, threshold, cap)
-          .select(col("new_id").as("doc_id"))
-        batchSigs.join(dupIds, Seq("doc_id"), "left_anti")
-          .persist(StorageLevel.MEMORY_AND_DISK)
-      case None => batchSigs
-    }
-    val nonCanonical = connectedComponents(
-      pairsFromShingleSigs(rem, NumHashes / NumBands, threshold, cap)
-        .select(col("doc_a"), col("doc_b")))
-      .filter(col("node") =!= col("component"))
-      .select(col("node").as("doc_id"))
-    rem.join(nonCanonical, Seq("doc_id"), "left_anti")
+  val MaxWaveDocs = 1000000
+
+  /** [[withShingleBands]]' band-value columns, in band id order. */
+  private[operators] val BandCols = (0 until NumBands).map(b => col(s"band_$b"))
+
+  /** THE near-dup ingest decision for one arrival wave, greedy and first
+    * arrival wins — FILTER THEN VERIFY on the driver, shared by
+    * [[CorpusStore.tick]] (store postings and shingles read from its
+    * pruned files) and [[sequentialIngest]] (both held in memory):
+    *
+    *   1. every wave doc with a verified store match drops. Its candidates
+    *      are the store postings under its band keys, from buckets of at
+    *      most `cap` store postings (the [[capBuckets]] rule over the
+    *      whole store);
+    *   2. the survivors pair up within the wave when they share a band
+    *      bucket of at most `cap` survivors (the [[bandPairs]] rule), and
+    *      each verified component keeps its minimum id ([[minLabels]]).
+    *
+    * `wave` holds the candidate ids with their [[NumBands]] band values
+    * (null for a shingle-less doc, which never pairs). `storeBuckets`
+    * returns the store's postings of the given band keys, over-cap buckets
+    * absent; `verifyStore` and `verifyWave` return the (wave id, store
+    * posting) and (wave id, wave id) pairs whose exact shingle Jaccard
+    * reaches the threshold. The store side runs whenever the wave is
+    * non-empty, so a caller's lookup and verifier see every probe. Returns
+    * the keepers in wave order.
+    */
+  private[operators] def waveKeepers[P](
+      wave: Seq[(Long, Seq[String])], cap: Int,
+      storeBuckets: Seq[(Int, String)] => Map[(Int, String), Seq[P]],
+      verifyStore: Seq[(Long, P)] => Seq[(Long, Long)],
+      verifyWave: Seq[(Long, Long)] => Seq[(Long, Long)]): Seq[Long] = {
+    require(wave.size <= MaxWaveDocs, s"a dedup wave of ${wave.size} " +
+      s"documents exceeds MaxWaveDocs ($MaxWaveDocs); split it into ticks")
+    if (wave.isEmpty) return Seq.empty
+    val bandsOf = wave.toMap
+    // (band_id, band_val) keys of `ids`; shingle-less docs have none
+    def bandKeys(ids: Seq[Long]): Seq[((Int, String), Long)] =
+      for (id <- ids; (v, b) <- bandsOf(id).zipWithIndex if v != null)
+        yield (b, v) -> id
+    val keys = bandKeys(wave.map(_._1))
+    val buckets = storeBuckets(keys.map(_._1).distinct)
+    val dups = verifyStore(keys.flatMap { case (k, id) =>
+      buckets.getOrElse(k, Nil).map(id -> _) }.distinct).map(_._1).toSet
+    val survivors = wave.map(_._1).filterNot(dups)
+    val pairs = bandKeys(survivors).groupMap(_._1)(_._2).values
+      .filter(_.size <= cap)
+      .flatMap(g => for (a <- g; b <- g if a < b) yield (a, b))
+      .toSeq.distinct
+    val label = minLabels(verifyWave(pairs))
+    survivors.filter(id => label.getOrElse(id, id) == id)
   }
 
-  /** Sequential dedup ingest, pure-DataFrame form: split `docs` into
-    * `nBatches` arrival waves by `doc_id % nBatches` and run [[ingestTick]]
-    * for each in order — every wave is deduplicated against everything kept
-    * so far plus itself, exactly the greedy first-arrival-wins contract of
-    * a corpus that grows batch by batch. Output: (doc_id, batch_id) of the
-    * kept documents.
+  /** Sequential dedup ingest: split `docs` into `nBatches` arrival waves
+    * by `doc_id % nBatches` and decide each in order with [[waveKeepers]]
+    * — every wave is deduplicated against everything kept so far plus
+    * itself, exactly the greedy first-arrival-wins contract of a corpus
+    * that grows batch by batch. Output: (doc_id, batch_id) of the kept
+    * documents.
     *
     * NEAR-dup scope only: exact copies of shingle-less docs (< [[ShingleK]]
     * tokens) pass through — they have null bands and never co-bucket, so
@@ -696,52 +695,58 @@ object Dedup {
     * dedup of tiny docs runs an explicit text-keyed pass first, as
     * [[Corpus.corpusPipelineIncremental]] does.
     *
-    * Scale: each tick's keepers are persisted and the store is their union,
-    * so tick i re-reads cached signature partitions, never recomputes the
-    * history. Each wave persists ITS OWN signature slice (measured
-    * deliberately: a single all-waves signature cache re-scanned by every
-    * per-wave reference read slower at sf0.1 than per-wave slices — the
-    * slice cache is what each tick's 3–4 references actually touch).
-    * Keeper lineage truncation is `localCheckpoint` (eager, cut to cached
-    * blocks), not a durable checkpoint: the fold is a single-plan
-    * in-memory loop whose keepers are metadata-sized, and the per-wave
-    * durable write+re-read was pure fixed cost. EVERY wave truncates,
-    * including the last — the keepers union is replicated across each
-    * downstream consumer's plan (a funnel repeats it once per stage), and
-    * one untruncated ingest DAG embedded there multiplies plan-STRING
-    * rendering (listener events, AQE re-planning) into minutes of driver
-    * CPU at sf0.1; measured, not hypothetical. FAULT-TOLERANCE TRADE,
-    * explicit: localCheckpoint blocks live executor-local with lineage
-    * truncated, so an executor loss (decommission, dynamic allocation,
-    * spot preemption) makes them unrecoverable and fails the ingest job
-    * instead of recomputing — this in-memory form must not run with
-    * dynamic allocation or preemptible executors. The crash-tolerant
-    * production form of the same loop is [[CorpusStore.tick]]
-    * (each tick appends one atomic commit — durable by construction);
-    * this in-memory form exists for single-plan use and as
-    * the oracle-checkable contract the store-backed loop is spec-tested
-    * against.
+    * Per wave, ONE persisted [[withShingleBands]] frame, collected once as
+    * (doc_id, band values); the store's postings are the earlier keepers'
+    * band keys held on the driver with full bucket counts, and the pairs
+    * verify through [[verifiedPairs]] against this wave's frame and the
+    * earlier waves' frames — at most one collect and two verification
+    * jobs per wave. The keepers come back as a driver-built frame, so
+    * nothing downstream holds this loop's lineage or its caches, which
+    * are released on return.
+    *
+    * Scale: the driver holds every wave's ids and band keys and every
+    * kept bucket's count, and each wave is bounded by [[MaxWaveDocs]]. This
+    * is the single-plan form and the contract the store is spec-tested
+    * against; the unbounded, crash-tolerant production path is
+    * [[CorpusStore.tick]] (one atomic commit per tick, postings read from
+    * the store's pruned files, never held).
     */
   def sequentialIngest(docs: DataFrame, nBatches: Int = 3,
                        threshold: Double = 0.5,
                        cap: Int = MaxBucketSize): DataFrame = {
     require(nBatches >= 1, s"nBatches must be >= 1, got $nBatches")
-    ensureCheckpointDir(docs)
-    var store: Option[DataFrame] = None
-    val kept = (0 until nBatches).map { i =>
-      val batchSigs = shingleSignatures(
-        docs.filter(col("doc_id") % nBatches === i))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      // LAZY localCheckpoint: the plan truncation (the point of the
-      // checkpoint — see the scaladoc) happens at construction either way;
-      // eager=false just folds the keeper materialization into the next
-      // consuming action instead of paying a dedicated job per wave
-      val keep = ingestTick(batchSigs, store, threshold, cap)
-        .localCheckpoint(false)
-      store = Some(store.map(_.union(keep)).getOrElse(keep))
-      keep.select(col("doc_id"), lit(i.toLong).as("batch_id"))
-    }
-    kept.reduce(_.union(_))
+    val spark = docs.sparkSession
+    import spark.implicits._
+    // the keepers' band postings: (bucket size, ids), the ids dropped once
+    // the bucket is over the cap — it can never come back under it
+    val postings =
+      scala.collection.mutable.Map.empty[(Int, String), (Long, List[Long])]
+    val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    try {
+      (0 until nBatches).flatMap { i =>
+        val earlier = frames.reduceOption(_ union _)
+        // text dropped before the persist: later reads need only ids,
+        // shingles and band values
+        val frame = withShingleBands(docs.filter(col("doc_id") % nBatches === i)
+            .select(col("doc_id"), col("text")))
+          .drop("text").persist(StorageLevel.MEMORY_AND_DISK)
+        frames += frame
+        val wave = frame.select(col("doc_id") +: BandCols: _*).collect()
+          .map(r => r.getLong(0) -> BandCols.indices.map(b => r.getString(1 + b)))
+          .sortBy(_._1).toSeq
+        val keepers = waveKeepers[Long](wave, cap,
+          keys => keys.flatMap(k => postings.get(k)
+            .collect { case (n, ids) if n <= cap => k -> ids }).toMap,
+          pairs => earlier.toSeq.flatMap(verifiedPairs(pairs, frame, _, threshold)),
+          pairs => verifiedPairs(pairs, frame, frame, threshold))
+        val bandsOf = wave.toMap
+        for (id <- keepers; (v, b) <- bandsOf(id).zipWithIndex if v != null) {
+          val (n, ids) = postings.getOrElse((b, v), (0L, Nil))
+          postings((b, v)) = (n + 1, if (n >= cap) Nil else id :: ids)
+        }
+        keepers.map(_ -> i.toLong)
+      }.toDF("doc_id", "batch_id")
+    } finally frames.foreach(_.unpersist())
   }
 
   /** Canonical-document selection per near-dup group — the step a corpus

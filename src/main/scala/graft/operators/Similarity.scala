@@ -451,7 +451,7 @@ object Similarity {
     // Lifecycle follows the module policy (session clearCache between
     // queries), same as the batch persist above.
     // no distinct() on the broadcast build side — LEFT SEMI ignores
-    // build-side duplicates (the [[Dedup.incrementalVerified]] precedent)
+    // build-side duplicates (the [[Dedup.incrementalNearDups]] precedent)
     val touched = signBands(cb).join(
       broadcast(batchBands.select(col("band_id"), col("band_val"))),
       Seq("band_id", "band_val"), "leftsemi")

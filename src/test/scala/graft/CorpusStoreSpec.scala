@@ -33,9 +33,9 @@ class CorpusStoreSpec extends SparkSpec {
 
       // time travel: the pinned-snapshot rebuild reproduces the manifest
       // exactly as it stood at version 2, after version 3 landed
-      assert(CorpusStore.manifestAt(spark, root, 2L)
+      assert(CorpusStore.manifest(spark, root, version = Some(2L))
         .orderBy("shard", "bin").collect().toSeq == midManifest,
-        "manifestAt(v2) diverged from the manifest computed at v2")
+        "manifest at pinned v2 diverged from the manifest computed at v2")
       // funnel counts are internally consistent per tick
       reports.foreach { r =>
         assert(r.nRaw >= r.nQuality && r.nQuality >= r.nExactNew

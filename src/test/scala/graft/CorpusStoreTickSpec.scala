@@ -9,8 +9,9 @@ import graft.operators.{CorpusStore, Dedup, ManifestTable}
 /** The tick decides every document's fate on the driver from key sets
   * (md5s, band keys, candidate pairs) and lets Spark only compute batch
   * features, probe pruned store files and verify pairs. These specs pin
-  * that the decisions equal the in-memory sequential fold for every skew
-  * cap and threshold, and that the tick stays a handful of jobs.
+  * that the decisions equal the in-memory sequential fold and a plain
+  * collections reference for every skew cap and threshold, and that the
+  * tick stays a handful of jobs.
   */
 @graft.tags.Slow
 class CorpusStoreTickSpec extends SparkSpec {
@@ -87,6 +88,50 @@ class CorpusStoreTickSpec extends SparkSpec {
         .orderBy(col("doc_id") % nWaves, col("doc_id"))))
       .filter(col("__rn") === 1).drop("__rn")
 
+  /** Keepers of the greedy wave fold, decided in plain Scala collections
+    * from each document's shingle set and band values (computed by Spark),
+    * independent of the kernel the tick and the fold share: per wave, a
+    * doc drops when a store bucket it shares holds at most `cap` earlier
+    * keepers and one of them reaches `threshold` in exact Jaccard; the
+    * survivors link when they share a bucket of at most `cap` survivors
+    * and reach `threshold`, and each linked component keeps its minimum id.
+    */
+  private def referenceFold(docs: DataFrame, cap: Int,
+                            threshold: Double): Set[Long] = {
+    val feats = Dedup.minhashSignatures(docs)
+      .join(Dedup.shingleSignatures(docs).select("doc_id", "shingles"), "doc_id")
+      .select(col("doc_id") +: col("shingles") +:
+        (0 until Dedup.NumBands).map(b => col(s"band_$b")): _*)
+      .collect().map { r =>
+        val sh = Option(r.getSeq[String](1)).getOrElse(Seq.empty).toSet
+        val keys = (0 until Dedup.NumBands)
+          .flatMap(b => Option(r.getString(2 + b)).map(b -> _))
+        r.getLong(0) -> (sh, keys)
+      }.toMap
+    def similar(a: Long, b: Long): Boolean = {
+      val (sa, sb) = (feats(a)._1, feats(b)._1)
+      val union = (sa ++ sb).size
+      union > 0 && (sa & sb).size.toDouble / union >= threshold
+    }
+    def buckets(ids: Seq[Long]): Map[(Int, String), Seq[Long]] =
+      ids.flatMap(id => feats(id)._2.map(_ -> id)).groupMap(_._1)(_._2)
+    (0 until nWaves).foldLeft(Vector.empty[Long]) { (kept, w) =>
+      val store = buckets(kept)
+      val survivors = feats.keys.filter(_ % nWaves == w).toSeq.sorted
+        .filterNot(id => feats(id)._2.exists(k =>
+          store.get(k).exists(g => g.size <= cap && g.exists(similar(id, _)))))
+      val links = buckets(survivors).values.filter(_.size <= cap).toSeq
+        .flatMap(g => for (a <- g; b <- g if a != b && similar(a, b)) yield a -> b)
+        .groupMap(_._1)(_._2)
+      def component(id: Long): Set[Long] = Iterator
+        .iterate((Set(id), Set(id))) { case (seen, frontier) =>
+          val next = frontier.flatMap(links.getOrElse(_, Nil)) -- seen
+          (seen ++ next, next)
+        }.dropWhile(_._2.nonEmpty).next()._1
+      kept ++ survivors.filter(id => component(id).min == id)
+    }.toSet
+  }
+
   test("keepers and tombstones after every wave equal the sequential fold " +
     "for cap 1, 2 and the default, at thresholds 0.45 and 0.5") {
     val docs = corpus.cache()
@@ -108,6 +153,10 @@ class CorpusStoreTickSpec extends SparkSpec {
         assert(kept.keySet == expected, s"$what: keepers diverged from the " +
           s"sequential fold: extra ${kept.keySet -- expected}, " +
           s"missing ${expected -- kept.keySet}")
+        val reference = referenceFold(exact, cap, threshold)
+        assert(expected == reference, s"$what: the sequential fold diverged " +
+          s"from the collections reference: extra ${expected -- reference}, " +
+          s"missing ${reference -- expected}")
         val dd = ManifestTable.dataDir(root)
         val tombs = spark.read
           .parquet(CorpusStore.kindFiles(spark, root, "tomb").map(f => s"$dd/$f"): _*)

@@ -177,6 +177,20 @@ class DedupTextSpec extends SparkSpec {
       "the batch bucket keys must broadcast — the corpus side never shuffles for the prune")
   }
 
+  test("sequentialIngest runs at most 5 Spark jobs per wave") {
+    // per wave: the persisted frame's collect (the input's repartition map
+    // stage, the cache stage, the result) and at most one verification job
+    // against the store and one within the wave; the keepers come back as
+    // a driver-built frame, so counting them runs nothing of the fold
+    val input = Tables.documents(spark, "/root/testdata/sf0.001")
+    try for (n <- Seq(1, 3)) {
+      var kept: org.apache.spark.sql.DataFrame = null
+      val jobs = jobsOf { kept = Dedup.sequentialIngest(input, n) }
+      assert(jobs.size <= 5 * n, s"$n waves ran ${jobs.size} jobs")
+      assert(kept.count() > 0 && kept.select("batch_id").distinct().count() == n)
+    } finally spark.catalog.clearCache()
+  }
+
   test("langId picks marker-language, priority order on ties, und on none") {
     val d = docs(
       (1L, "the house of cards"), // en markers: the, of
