@@ -255,8 +255,8 @@ object CorpusStore {
           "was edited")), where)
   }
 
-  /** The layout governing the CURRENT snapshot — what every tick and
-    * pruned read resolves (never a compile-time constant). Before the
+  /** The layout governing the CURRENT snapshot (never a compile-time
+    * constant; an operation takes its [[Snapshot]]'s). Before the
     * first commit it is the staged creation choice; a store with neither
     * has no layout yet (its creation tick sizes one) and throws, as does a
     * layout with a foreign expression version (see [[BucketExprVersion]]).
@@ -269,23 +269,30 @@ object CorpusStore {
       case Some(v) => committedLayoutAt(spark, root, v)
     }
 
-  /** The layout version `prev` of the store committed, which a tick must
-    * use (None before the first commit). A caller asserting a layout
-    * against an existing store that disagrees is a configuration error —
-    * the one path that used to be a silent dedup miss.
+  /** One committed version as a store operation sees it: its live files
+    * and the layout its own commit recorded. An operation resolves one and
+    * takes both from it: v's files bucketed under v+1's layout (a rebucket
+    * in between) would prune away rows v holds.
     */
-  private def storedLayout(spark: SparkSession, root: String,
-                           prev: Option[Long],
-                           ifNew: Option[StoreLayout]): Option[StoreLayout] = {
-    ifNew.foreach(requireCurrentExprVersion(_, "tick(layoutIfNew)"))
-    prev.map { v =>
-      val persisted = committedLayoutAt(spark, root, v)
-      ifNew.foreach(l => require(l == persisted,
-        s"store at $root is laid out as $persisted but the tick asserted " +
-          s"$l; changing a live store's layout is compact(rebucketTo = ...)"))
-      persisted
-    }
+  private case class Snapshot(version: Long, files: Seq[String],
+                              layout: StoreLayout) {
+    def kind(k: String): Seq[String] = files.filter(_.startsWith(s"p_kind=$k/"))
   }
+
+  /** Snapshot `version`, format guard first ([[requireStoreLayout]]): a
+    * root not written by the store fails on that, not on a missing layout.
+    */
+  private def snapshotAt(spark: SparkSession, root: String,
+                         version: Long): Snapshot = {
+    val files = ManifestTable.filesOf(spark, root, version)
+    requireStoreLayout(root, files)
+    Snapshot(version, files, committedLayoutAt(spark, root, version))
+  }
+
+  /** The current snapshot: one `_manifests` listing, then [[snapshotAt]]. */
+  private def currentSnapshot(spark: SparkSession, root: String): Snapshot =
+    snapshotAt(spark, root, ManifestTable.currentVersion(spark, root).getOrElse(
+      throw new IllegalStateException(s"no committed snapshot at $root")))
 
   /** A CALLER-supplied layout (tick's `layoutIfNew`, compact's
     * `rebucketTo`) must carry this binary's expression version — parseLayout
@@ -364,31 +371,13 @@ object CorpusStore {
   private def storedBandBucket(l: StoreLayout): Column =
     bandBucket(col("band_id"), decodeMd5(col("band_val")), l)
 
-  /** A kind's data schema plus the store's two partition columns — the
-    * USER-SPECIFIED schema every store read passes to the parquet source.
-    * Without it, `spark.read.parquet(files…)` INFERS the schema by reading
-    * file footers — a distributed `mergeSchemasInParallel` job over the
-    * whole file list, paid once per read call. The store owns its schemas
-    * (the readKindFiles scaladoc's own argument), so inference was pure
-    * fixed cost: thread dumps of the first sf0.1 store build showed the
-    * driver parked in `ParquetFileFormat.inferSchema` across the tick's
-    * reads (r16). Partition columns ride in the schema so `p_kind`/`p_b`
-    * stay available to the callers that repartition on them.
+  /** The store's two partition columns: part of every kind's read schema
+    * ([[readKindFiles]]), so the rewrites keep each row in its bucket;
+    * [[read]], [[bands]] and [[readAt]] drop them.
     */
-  private def withPartCols(s: StructType): StructType =
-    StructType(s.fields ++ Seq(
-      StructField("p_kind", StringType), StructField("p_b", IntegerType)))
-
-  /** An explicit kind file list WITH its `p_kind`/`p_b` partition columns
-    * — the rewrite reads, which keep each row in its bucket. Explicit
-    * schema: no footer-reading inference job (see [[withPartCols]]).
-    */
-  private def readWithParts(spark: SparkSession, root: String,
-                            files: Seq[String], kind: String): DataFrame = {
-    val dd = ManifestTable.dataDir(root)
-    spark.read.schema(withPartCols(kindSchema(kind))).option("basePath", dd)
-      .parquet(files.map(f => s"$dd/$f"): _*)
-  }
+  private val PartCols = Seq(
+    StructField("p_kind", StringType), StructField("p_b", IntegerType))
+  private val PartColNames = PartCols.map(_.name)
 
   /** Live files of one kind (manifest-listed, no directory walk). */
   private[graft] def kindFiles(spark: SparkSession, root: String,
@@ -543,32 +532,17 @@ object CorpusStore {
     kindFiles(spark, root, kind)
       .filter(f => buckets.exists(b => f.startsWith(s"p_kind=$kind/p_b=$b/")))
 
-  /** Scan an explicit kind file list; an empty list yields a correctly
-    * typed empty frame from the kind's static schema (the store owns its
-    * schemas, so no schema-donor file is needed — a tomb-only first
-    * commit, for instance, has no doc file to borrow from). The non-empty
-    * read is pinned to the SAME static column order: different commit
-    * paths (tick append, compaction, forget's rewrite) physically lay the
-    * columns out in whatever order their plan produced, and Spark's
-    * multi-file schema resolution donates the order of an arbitrary file —
-    * without the select, [[read]]'s column order flipped run-to-run on
-    * stores touched by more than one writer path.
+  /** One kind's `files` with its partition columns, read with the kind's
+    * static schema through [[ManifestTable.readFiles]]: no schema-inference
+    * job, columns in schema order whichever writer path (tick, forget,
+    * compact) laid a file out, and a typed empty frame for an empty list (a
+    * tomb-only first commit has no doc file to borrow a schema from).
     */
   private def readKindFiles(spark: SparkSession, root: String,
-                            files: Seq[String], schema: StructType,
+                            files: Seq[String], kind: String,
                             tags: Map[String, String] = Map.empty): DataFrame =
-    if (files.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else {
-      val dd = ManifestTable.dataDir(root)
-      // explicit user schema (data + partition columns): no footer-reading
-      // schema-inference job per read (see [[withPartCols]])
-      spark.read.schema(withPartCols(schema))
-        .option("basePath", dd).options(tags)
-        .parquet(files.map(f => s"$dd/$f"): _*)
-        .select(schema.fieldNames.map(col).toIndexedSeq: _*)
-    }
+    ManifestTable.readFiles(spark, root, files,
+      Some(StructType(kindSchema(kind).fields ++ PartCols)), tags = tags)
 
   /** The relation-option tags [[read]] stamps on a snapshot scan so
     * [[graft.plans.StorePruneRule]] can recognize it and prune its file
@@ -602,23 +576,22 @@ object CorpusStore {
     fsOf(spark, root).exists(markerPath(root, ns, id))
 
   /** The kept documents of the latest snapshot (doc kind: doc_id, lang,
-    * source, text, text_md5, tick). Guards the format boundary: a root
-    * whose live files carry no `p_kind=` prefix was written by something
-    * other than this store (e.g. a plain [[ManifestTable]]) — reading it
-    * as an empty doc frame would silently re-ingest everything on the
-    * next tick, so it throws instead.
+    * source, text, text_md5, tick). One resolved version supplies both the
+    * doc files and the layout the scan is tagged with (one `_manifests`
+    * listing). Guards the format boundary: a root whose live files carry no
+    * `p_kind=` prefix was written by something other than this store (e.g.
+    * a plain [[ManifestTable]]) — reading it as an empty doc frame would
+    * silently re-ingest everything on the next tick, so it throws instead.
     */
   def read(spark: SparkSession, root: String): DataFrame = {
-    require(ManifestTable.currentVersion(spark, root).nonEmpty,
-      s"no committed snapshot at $root")
-    val live = ManifestTable.liveFiles(spark, root)
-    requireStoreLayout(root, live)
-    readKindFiles(spark, root, kindFiles(spark, root, "doc"), docSchema,
-      pruneTags(root, "doc", layoutOf(spark, root)))
+    val snap = currentSnapshot(spark, root)
+    readKindFiles(spark, root, snap.kind("doc"), "doc",
+      pruneTags(root, "doc", snap.layout)).drop(PartColNames: _*)
   }
 
-  /** Format-boundary guard shared by [[read]], [[readAt]] and
-    * [[changesBetween]]: a non-empty file set with no `p_kind=` prefix was
+  /** Format-boundary guard of every snapshot a store op resolves
+    * ([[snapshotAt]]), [[readAt]] and [[changesBetween]]: a non-empty file
+    * set with no `p_kind=` prefix was
     * written by something other than this store (a plain [[ManifestTable]],
     * or an incompatible format version). Silently treating it as an empty
     * snapshot would make an incremental consumer on a mistyped root
@@ -639,18 +612,17 @@ object CorpusStore {
 
   /** The live band postings (doc_id, band_id, band_val, text_md5), with
     * both md5 columns decoded to lowercase hex — the investigative "which
-    * documents share this band" surface. Tagged for
+    * documents share this band" surface. Like [[read]], files and tagged
+    * layout come from one resolved version. Tagged for
     * [[graft.plans.StorePruneRule]]: with the rule installed, a query
     * pinning BOTH `band_id` and `band_val` to literals plans over the
     * compound band bucket's pruned files only (bucket dir +
     * band_val Bloom probes), not the whole band kind.
     */
   def bands(spark: SparkSession, root: String): DataFrame = {
-    require(ManifestTable.currentVersion(spark, root).nonEmpty,
-      s"no committed snapshot at $root")
-    requireStoreLayout(root, ManifestTable.liveFiles(spark, root))
-    decodeBands(readKindFiles(spark, root, kindFiles(spark, root, "band"),
-      bandSchema, pruneTags(root, "band", layoutOf(spark, root))))
+    val snap = currentSnapshot(spark, root)
+    decodeBands(readKindFiles(spark, root, snap.kind("band"), "band",
+      pruneTags(root, "band", snap.layout)).drop(PartColNames: _*))
   }
 
   /** Tick ids that have committed (one FS listing — observability; the
@@ -874,10 +846,16 @@ object CorpusStore {
     if (tickId.exists(id => markerExists(spark, root, "_ticks", id)))
       return (TickReport(prev.getOrElse(0L), 0L, 0L, 0L, 0L,
         replaySkipped = true), Array.empty)
-    // the store's OWN layout: every probe's bucket expression goes through
-    // it. A creation tick probes nothing, so it decides its layout at the
-    // write, once its keepers are known
-    val stored = storedLayout(spark, root, prev, layoutIfNew)
+    // the snapshot the tick reads and commits against: every probe's file
+    // list and bucket expression come from it. A creation tick probes
+    // nothing, so it decides its layout at the write, once its keepers are
+    // known. A layout the caller asserts against an existing store that
+    // disagrees is a configuration error, not a silent dedup miss
+    layoutIfNew.foreach(requireCurrentExprVersion(_, "tick(layoutIfNew)"))
+    val snap = prev.map(snapshotAt(spark, root, _))
+    for (l <- layoutIfNew; s <- snap) require(l == s.layout,
+      s"store at $root is laid out as ${s.layout} but the tick asserted " +
+        s"$l; changing a live store's layout is compact(rebucketTo = ...)")
     val stamp = tickId.getOrElse("untracked")
     val op = s"tick $stamp"
 
@@ -908,18 +886,18 @@ object CorpusStore {
       // bucket dirs, then the per-file Bloom sidecars, bound the scan to
       // files that may hold one (the same bucket expression the write side
       // uses, evaluated driver-side); None when no file may
-      def md5Rows(kind: String, l: StoreLayout,
+      def md5Rows(kind: String, s: Snapshot,
                   md5s: Seq[String]): Option[DataFrame] = {
-        val files = bloomPrunedKindFiles(spark, root, kind,
-          md5s.groupBy(bucketForKey(kind, l, _)))
+        val files = pruneRelFilesByBucket(spark, root, s.kind(kind),
+          md5s.groupBy(bucketForKey(kind, s.layout, _)))
         if (files.isEmpty) None
-        else Some(readKindFiles(spark, root, files, kindSchema(kind))
+        else Some(readKindFiles(spark, root, files, kind)
           .filter(col("text_md5").isin(md5s: _*)))
       }
       // exact-vs-store: every md5 the store kept OR tombstoned drops
       val exactNew = phase(spark, op, "exact") {
-        val reads = stored.toSeq.flatMap(l => Seq("doc", "tomb")
-          .flatMap(md5Rows(_, l, firstOf.keys.toSeq)))
+        val reads = snap.toSeq.flatMap(s => Seq("doc", "tomb")
+          .flatMap(md5Rows(_, s, firstOf.keys.toSeq)))
           .map(_.select(col("text_md5")))
         val seen = if (reads.isEmpty) Set.empty[String]
           else reads.reduce(_ union _).collect().map(_.getString(0)).toSet
@@ -932,19 +910,19 @@ object CorpusStore {
       // two-level pruned — then the within-batch components
       val keepers = Dedup.waveKeepers[(Long, String)](
         exactNew.map(id => id -> bandsOf(id)), cap,
-        probes => stored match {
-          case Some(l) => phase(spark, op, "near") {
-            val files = bloomPrunedKindFiles(spark, root, "band", probes
-              .groupMap { case (b, v) => bandBucketForKey(b, v, l) }(_._2))
+        probes => snap match {
+          case Some(s) => phase(spark, op, "near") {
+            val files = pruneRelFilesByBucket(spark, root, s.kind("band"), probes
+              .groupMap { case (b, v) => bandBucketForKey(b, v, s.layout) }(_._2))
             if (files.isEmpty) Map.empty
-            else cappedBuckets(readKindFiles(spark, root, files, bandSchema)
+            else cappedBuckets(readKindFiles(spark, root, files, "band")
               .filter(col("band_val").isin(probes.map(p => md5Bytes(p._2)): _*)),
               cap)
           }
           case None => Map.empty
         },
-        cands => stored.toSeq.flatMap(l => phase(spark, op, "near") {
-          md5Rows("doc", l, cands.map(_._2._2).distinct).toSeq
+        cands => snap.toSeq.flatMap(s => phase(spark, op, "near") {
+          md5Rows("doc", s, cands.map(_._2._2).distinct).toSeq
             .flatMap(docs => Dedup.verifiedPairs(
               cands.map { case (id, (c, _)) => id -> c }.distinct, batch,
               Dedup.docShingles(docs), threshold))
@@ -956,7 +934,8 @@ object CorpusStore {
       // caller's, else an earlier zero-commit creation tick's staged one —
       // else sized from its keepers. Before the first commit there is no
       // data a layout change could corrupt, so last-writer-wins is safe
-      val layout = stored.orElse(layoutIfNew).orElse(readStagedLayout(spark, root))
+      val layout = snap.map(_.layout).orElse(layoutIfNew)
+        .orElse(readStagedLayout(spark, root))
         .getOrElse(sizedLayout(keepers.size))
       // keepers' doc rows + their band postings (each carrying its md5, the
       // verification fetch's key; both md5s binary) + the dropped docs'
@@ -1117,12 +1096,11 @@ object CorpusStore {
     rebucketTo.foreach(requireCurrentExprVersion(_, "compact(rebucketTo)"))
     val fs = fsOf(spark, root)
     val dd = ManifestTable.dataDir(root)
-    val prev = ManifestTable.currentVersion(spark, root)
-    require(prev.nonEmpty, s"no committed snapshot at $root")
-    val cur = layoutOf(spark, root)
-    val target = rebucketTo.getOrElse(cur)
-    val rebucket = target != cur
-    val live = ManifestTable.liveFiles(spark, root)
+    // the plan's files and its current layout: one version
+    val snap = currentSnapshot(spark, root)
+    val target = rebucketTo.getOrElse(snap.layout)
+    val rebucket = target != snap.layout
+    val live = snap.files
 
     def bucketExpr(kind: String): Column = kind match {
       case "doc" | "tomb" => md5Bucket(col("text_md5"), target)
@@ -1141,8 +1119,7 @@ object CorpusStore {
     // per kind: (replaced bucket dirs, its write set, files read)
     def planOf(kind: String)
         : Option[(Seq[String], ManifestTable.WriteSet, Int)] = {
-      val files = live.filter(_.startsWith(s"p_kind=$kind/"))
-      val sized = files.map(f => f -> fs.getFileStatus(
+      val sized = snap.kind(kind).map(f => f -> fs.getFileStatus(
         new org.apache.hadoop.fs.Path(s"$dd/$f")).getLen)
       // bucket dir ("p_kind=doc/p_b=3") → its files with sizes
       val byBucket = sized.groupBy(_._1.split('/').take(2).mkString("/"))
@@ -1156,7 +1133,7 @@ object CorpusStore {
       if (rewrite.isEmpty) None
       else {
         val inFiles = rewrite.values.flatten.map(_._1).toSeq
-        val df = readWithParts(spark, root, inFiles, kind)
+        val df = readKindFiles(spark, root, inFiles, kind)
         val (bucket, nSub: Column) =
           if (rebucket) {
             // per-target-bucket bytes are unknown until the hash runs;
@@ -1242,6 +1219,12 @@ object CorpusStore {
   def forget(spark: SparkSession, root: String, md5s: Seq[String],
              retainSnapshots: Int = ManifestTable.RetainSnapshots)
       : ForgetReport = {
+    val keys = forgetKeys(md5s)
+    forgetAt(spark, root, currentSnapshot(spark, root), keys, retainSnapshots)
+  }
+
+  /** A purge request's md5s, lowercased and distinct. */
+  private def forgetKeys(md5s: Seq[String]): Seq[String] = {
     val keys = md5s.map(_.toLowerCase).distinct
     require(keys.nonEmpty, "forget of an empty md5 set")
     // fail loud on malformed hashes — a purge that silently no-ops on a
@@ -1250,19 +1233,17 @@ object CorpusStore {
       s"not an md5 hex digest: $k"))
     require(keys.size <= 100000,
       s"forget batch too large (${keys.size}); split into <=100000-key calls")
-    val prev = ManifestTable.currentVersion(spark, root).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $root"))
-    val layout = layoutOf(spark, root)
-    requireCurrentExprVersion(layout, "forget")
-    def relName(abs: String): String = {
-      val i = abs.lastIndexOf("p_kind=")
-      require(i >= 0, s"not a store data file: $abs")
-      abs.substring(i)
-    }
+    keys
+  }
+
+  /** [[forget]] of `keys` against the resolved snapshot `snap`. */
+  private def forgetAt(spark: SparkSession, root: String, snap: Snapshot,
+                       keys: Seq[String], retainSnapshots: Int): ForgetReport = {
+    val layout = snap.layout
     def locate[T](body: => T): T = phase(spark, "forget", "locate")(body)
     def shortlist(kind: String, ks: Seq[String]): Seq[String] =
-      pruneRelFiles(spark, root, kind, layout, kindFiles(spark, root, kind), ks)
-        .getOrElse(kindFiles(spark, root, kind))
+      pruneRelFiles(spark, root, kind, layout, snap.kind(kind), ks)
+        .getOrElse(snap.kind(kind))
 
     /** Of `files`, each one holding a `victim` row: file → (its rows, its
       * victim rows, the victims' doc_ids). One aggregate per kind, as ONE
@@ -1272,14 +1253,15 @@ object CorpusStore {
     def victimFiles(files: Seq[String], kind: String, victim: Column)
         : Map[String, (Long, Long, Seq[Long])] =
       if (files.isEmpty) Map.empty
-      else locate(readWithParts(spark, root, files, kind)
+      else locate(readKindFiles(spark, root, files, kind)
         .select(input_file_name(), coalesce(victim, lit(false)), col("doc_id"))
         .rdd.map { r =>
           val ids = if (r.getBoolean(1)) List(r.getLong(2)) else Nil
           r.getString(0) -> (1L, ids.size.toLong, ids) }
         .reduceByKey((a, b) => (a._1 + b._1, a._2 + b._2, a._3 ::: b._3))
         .filter(_._2._2 > 0)
-        .collect()).map { case (f, v) => relName(f) -> v }.toMap
+        .collect()).map { case (f, v) =>
+          ManifestTable.manifestPathOf(spark, root, f) -> v }.toMap
 
     // victim documents, through the index
     val docVictim = col("text_md5").isin(keys: _*)
@@ -1292,13 +1274,13 @@ object CorpusStore {
     val tombShort = shortlist("tomb", keys)
     val already =
       if (tombShort.isEmpty) Set.empty[String]
-      else locate(readKindFiles(spark, root, tombShort, tombSchema)
+      else locate(readKindFiles(spark, root, tombShort, "tomb")
         .filter(col("text_md5").isin(keys: _*))
         .collect()).map(_.getString(0)).toSet
     val newTombs = keys.filterNot(already.contains)
 
     if (victimIds.isEmpty && newTombs.isEmpty)
-      return ForgetReport(prev, 0L, 0L, 0)
+      return ForgetReport(snap.version, 0L, 0L, 0)
 
     // the victims' band postings: their keys derive from the victim doc
     // rows located above with the SAME kernels the tick used, so the
@@ -1307,7 +1289,7 @@ object CorpusStore {
     val bandKeys =
       if (docHits.isEmpty) Array.empty[(Int, String)]
       else locate(Dedup.explodeBands(Dedup.withShingleBands(
-          readKindFiles(spark, root, docHits.keys.toSeq, docSchema)
+          readKindFiles(spark, root, docHits.keys.toSeq, "doc")
             .filter(docVictim).select(col("doc_id"), col("text"))),
         Dedup.BandCols)
         .select(col("band_id"), col("band_val"))
@@ -1316,7 +1298,7 @@ object CorpusStore {
       .groupBy { case (id, v) => bandBucketForKey(id, v, layout) }
       .map { case (b, kvs) => b -> kvs.map(_._2).distinct }
     val bandHits = victimFiles(pruneRelFilesByBucket(spark, root,
-      kindFiles(spark, root, "band"), bandByBucket), "band", idVictim)
+      snap.kind("band"), bandByBucket), "band", idVictim)
 
     // ONE write job: the affected files rewritten without the victim rows
     // (same buckets) plus the new tombstones, then ONE commit flips all
@@ -1326,7 +1308,7 @@ object CorpusStore {
     val written = phase(spark, "forget", "write")(
       ManifestTable.writeFiles(spark, root,
         rewrites.map { case (kind, hits, victim) =>
-          kindSet(kind, readWithParts(spark, root, hits.keys.toSeq, kind)
+          kindSet(kind, readKindFiles(spark, root, hits.keys.toSeq, kind)
             .filter(!victim), col("p_b"))
         } ++ (if (newTombs.isEmpty) Nil
           else Seq(kindSet("tomb", newTombs.toDF("text_md5"),
@@ -1371,23 +1353,19 @@ object CorpusStore {
                       md5s: Seq[String],
                       retainSnapshots: Int = ManifestTable.RetainSnapshots)
       : ForgetReport = {
-    val keys = md5s.map(_.toLowerCase).distinct
-    require(keys.nonEmpty, "forget of an empty md5 set")
-    keys.foreach(k => require(k.matches("[0-9a-f]{32}"),
-      s"not an md5 hex digest: $k"))
-    if (ManifestTable.currentVersion(spark, root).nonEmpty) {
-      val layout = layoutOf(spark, root)
-      val docShort = pruneRelFiles(spark, root, "doc", layout,
-        kindFiles(spark, root, "doc"), keys)
-        .getOrElse(kindFiles(spark, root, "doc"))
-      val victimIds =
-        if (docShort.isEmpty) Seq.empty[Long]
-        else readKindFiles(spark, root, docShort, docSchema)
-          .filter(col("text_md5").isin(keys: _*))
-          .select(col("doc_id")).collect().map(_.getLong(0)).toSeq
-      if (victimIds.nonEmpty) IvfStore.forget(spark, ivfRoot, victimIds)
-    }
-    forget(spark, root, md5s, retainSnapshots)
+    val keys = forgetKeys(md5s)
+    // one snapshot for both halves: the index purge resolves its victims
+    // from the doc rows the corpus purge then removes
+    val snap = currentSnapshot(spark, root)
+    val docShort = pruneRelFiles(spark, root, "doc", snap.layout,
+      snap.kind("doc"), keys).getOrElse(snap.kind("doc"))
+    val victimIds =
+      if (docShort.isEmpty) Seq.empty[Long]
+      else readKindFiles(spark, root, docShort, "doc")
+        .filter(col("text_md5").isin(keys: _*))
+        .select(col("doc_id")).collect().map(_.getLong(0)).toSeq
+    if (victimIds.nonEmpty) IvfStore.forget(spark, ivfRoot, victimIds)
+    forgetAt(spark, root, snap, keys, retainSnapshots)
   }
 
   /** The packed (shard, bin) training manifest over the accumulated
@@ -1438,7 +1416,7 @@ object CorpusStore {
           val files = ManifestTable.filesOf(spark, root, v)
             .filter(_.startsWith("p_kind=doc/"))
           require(files.nonEmpty, s"no doc files in snapshot v$v at $root")
-          readKindFiles(spark, root, files, docSchema)
+          readKindFiles(spark, root, files, "doc")
             .select(col("doc_id"), col("lang"), col("source"), col("text"))
       }
       Corpus.pipelineTail(rows, perplexityThreshold, flagAt, totalBudget,
@@ -1507,8 +1485,8 @@ object CorpusStore {
   def readAt(spark: SparkSession, root: String, version: Long): DataFrame = {
     val files = ManifestTable.filesOf(spark, root, version)
     requireStoreLayout(root, files)
-    readKindFiles(spark, root,
-      files.filter(_.startsWith("p_kind=doc/")), docSchema)
+    readKindFiles(spark, root, files.filter(_.startsWith("p_kind=doc/")), "doc")
+      .drop(PartColNames: _*)
   }
 
   /** Change data feed between two retained snapshots: the document-level
@@ -1557,9 +1535,9 @@ object CorpusStore {
     val fromF = docFiles(fromVersion)
     val toF = docFiles(toVersion)
     def changedRows(own: Set[String], other: Set[String], tag: String) =
-      readKindFiles(spark, root, (own -- other).toSeq.sorted, docSchema)
-        .join(readKindFiles(spark, root, (other -- own).toSeq.sorted,
-            docSchema).select(col("text_md5")),
+      readKindFiles(spark, root, (own -- other).toSeq.sorted, "doc")
+        .join(readKindFiles(spark, root, (other -- own).toSeq.sorted, "doc")
+          .select(col("text_md5")),
           Seq("text_md5"), "left_anti")
         .select(col("doc_id"), col("lang"), col("source"), col("text_md5"))
         .withColumn("change", lit(tag))
@@ -1592,16 +1570,17 @@ object CorpusStore {
     * collapses back to ~1 after.
     */
   def health(spark: SparkSession, root: String): StoreHealth = {
-    val v = ManifestTable.currentVersion(spark, root).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $root"))
-    val live = ManifestTable.liveFiles(spark, root)
+    // one listing gives the retained versions and the current one
+    val versions = ManifestTable.versions(spark, root)
+    val snap = snapshotAt(spark, root, versions.lastOption.getOrElse(
+      throw new IllegalStateException(s"no committed snapshot at $root")))
     val kinds = Seq("doc", "tomb", "band").map { k =>
-      val files = live.filter(_.startsWith(s"p_kind=$k/"))
+      val files = snap.kind(k)
       val perBucket = files.groupBy(bucketOfPath).values.map(_.size)
       KindHealth(k, files.size.toLong, perBucket.size.toLong,
         if (perBucket.isEmpty) 0L else perBucket.max.toLong)
     }
-    StoreHealth(v, ManifestTable.versions(spark, root).size,
-      committedTicks(spark, root).size, layoutOf(spark, root), kinds)
+    StoreHealth(snap.version, versions.size,
+      committedTicks(spark, root).size, snap.layout, kinds)
   }
 }

@@ -33,11 +33,6 @@ object Incremental {
   def readSink(spark: SparkSession, sinkPath: String): DataFrame =
     ManifestTable.read(spark, sinkPath)
 
-  private def livePartitions(spark: SparkSession, sinkPath: String): Seq[String] =
-    ManifestTable.liveFiles(spark, sinkPath)
-      .map(f => f.takeWhile(_ != '/'))
-      .filter(_.startsWith("p_date=")).distinct
-
   /** S6: the sink's resume point. Fast path: when EVERY live file carries
     * manifest min/max stats for `tsCol` (taken by [[mergeAndCommit]]'s
     * writing tasks), the watermark is the max of the file maxes — pure
@@ -56,18 +51,15 @@ object Incremental {
       ts.setNanos((Math.floorMod(us, 1000000L) * 1000L).toInt)
       return Some(ts)
     }
-    val parts = livePartitions(spark, sinkPath)
-    if (parts.isEmpty) None
-    else {
-      val latest = parts.max // p_date=YYYY-MM-DD sorts lexically = temporally
-      val files = ManifestTable.liveFiles(spark, sinkPath)
-        .filter(_.startsWith(latest + "/"))
-        .map(f => s"${ManifestTable.dataDir(sinkPath)}/$f")
-      spark.read.option("basePath", ManifestTable.dataDir(sinkPath))
-        .parquet(files: _*)
-        .agg(max(col(tsCol))).collect().headOption
-        .flatMap(r => Option(r.getTimestamp(0)))
-    }
+    // p_date=YYYY-MM-DD sorts lexically = temporally
+    val files = entries.map(_.path)
+    files.map(_.takeWhile(_ != '/')).filter(_.startsWith("p_date="))
+      .maxOption.flatMap { latest =>
+        ManifestTable.readFiles(spark, sinkPath,
+            files.filter(_.startsWith(latest + "/")))
+          .agg(max(col(tsCol))).collect().headOption
+          .flatMap(r => Option(r.getTimestamp(0)))
+      }
   }
 
   /** Per-tick outcome, mirroring the reference's inserted-vs-updated
@@ -120,9 +112,6 @@ object Incremental {
       if (batchDates.isEmpty) return SyncStats(0L, 0L, 0L)
 
       val live = ManifestTable.liveFiles(spark, sinkPath)
-      def read(files: Seq[String]): DataFrame =
-        spark.read.option("basePath", ManifestTable.dataDir(sinkPath))
-          .parquet(files.map(f => s"${ManifestTable.dataDir(sinkPath)}/$f"): _*)
       // partitions to rewrite: the batch's own dates, plus — only when the
       // key does not pin the date — those holding an existing version of a
       // batch key (a revision may move a row across the date boundary, and
@@ -130,7 +119,7 @@ object Incremental {
       // full-sink read left; keyed-on-ts sinks never pay it.
       val touchedDates =
         if (live.isEmpty || keyCols.contains(tsCol)) batchDates
-        else (batchDates ++ datesOf(read(live)
+        else (batchDates ++ datesOf(ManifestTable.readFiles(spark, sinkPath, live)
           .join(broadcast(batch.select(keyCols.map(col): _*).distinct()),
             keyCols, "left_semi"))).distinct
       val touched = touchedDates.map(d => s"p_date=$d")
@@ -141,7 +130,8 @@ object Incremental {
       val fromBatch = batch.withColumn("__new", lit(true))
       val rows =
         if (existing.isEmpty) fromBatch
-        else read(existing).withColumn("__new", lit(false)).unionByName(fromBatch)
+        else ManifestTable.readFiles(spark, sinkPath, existing)
+          .withColumn("__new", lit(false)).unionByName(fromBatch)
 
       // LWW per key, with presence flags over the whole key group: a key
       // the batch carries is an update when the sink already held it

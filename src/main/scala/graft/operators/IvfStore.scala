@@ -207,22 +207,15 @@ object IvfStore {
         at < ids.length && ids(at) <= mx
       }).map(_.path)
     if (candidates.isEmpty) return IvfForgetReport(pv, 0L, 0)
-    val dd = ManifestTable.dataDir(pr)
-    def relName(abs: String): String = {
-      val i = abs.lastIndexOf("p_cell=")
-      require(i >= 0, s"not a postings data file: $abs")
-      abs.substring(i)
-    }
     val idsDf = broadcast(ids.toSeq.toDF("vec_id"))
-    def readRel(files: Seq[String]): DataFrame =
-      spark.read.option("basePath", dd).parquet(files.map(f => s"$dd/$f"): _*)
     // level 2: of the candidates, the files that actually hold a victim
-    val victimFiles = readRel(candidates)
+    val victimFiles = ManifestTable.readFiles(spark, pr, candidates)
       .join(idsDf, Seq("vec_id"), "left_semi")
       .select(input_file_name().as("f")).distinct()
-      .collect().map(r => relName(r.getString(0))).toSeq.sorted
+      .collect().map(r => ManifestTable.manifestPathOf(spark, pr, r.getString(0)))
+      .toSeq.sorted
     if (victimFiles.isEmpty) return IvfForgetReport(pv, 0L, 0)
-    val touched = readRel(victimFiles)
+    val touched = ManifestTable.readFiles(spark, pr, victimFiles)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val nPurged = touched.join(idsDf, Seq("vec_id"), "left_semi").count()
@@ -289,15 +282,12 @@ object IvfStore {
             val at = if (i >= 0) i else -i - 1
             at < sorted.length && sorted(at) <= mx
           })
-        kept.nonEmpty && {
-          val dd = ManifestTable.dataDir(postingsRoot(root))
-          !spark.read.option("basePath", dd)
-            .parquet(kept.map(e => s"$dd/${e.path}"): _*)
+        kept.nonEmpty &&
+          !ManifestTable.readFiles(spark, postingsRoot(root), kept.map(_.path))
             .select(col("vec_id"))
             .join(broadcast(sorted.toSeq.toDF("vec_id")), Seq("vec_id"),
               "left_semi")
             .isEmpty
-        }
     }
   }
 
@@ -339,7 +329,8 @@ object IvfStore {
     val entries = ManifestTable.entriesOf(spark, postingsRoot(root), pv)
     val qFiles = ManifestTable
       .pruneEntries(entries, "vec_id", 0L, nQueries - 1L).map(_.path)
-    val q = readFiles(spark, root, qFiles, entries.map(_.path))
+    val q = ManifestTable.readFiles(spark, postingsRoot(root), qFiles,
+        pinned = entries.map(_.path))
       .filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("v").as("qv"))
     annIvfPinned(spark, root, pv, q, k, nProbe)
@@ -367,29 +358,10 @@ object IvfStore {
     // members) just contribute no files; like the self-contained form, the
     // affected query returns no rows rather than erroring.
     val files = allFiles.filter(f => probed.exists(c => f.startsWith(s"p_cell=$c/")))
-    val members = readFiles(spark, root, files, allFiles)
+    val members = ManifestTable.readFiles(spark, postingsRoot(root), files,
+        pinned = allFiles)
       .select(col("vec_id"), col("v"), col("centroid_id"))
     val q = qProbes.toDF("query_id", "qv", "probe_cid")
     Similarity.ivfSearchKernel(members, q, k)
-  }
-
-  /** Scan an explicit postings file list — empty lists yield a correctly
-    * typed EMPTY frame via a limit(0) scan over a file of THE SAME pinned
-    * snapshot (`pinnedFiles` = the resolved version's full file list; a
-    * current-version fallback here would break the snapshot pin — a tick
-    * committing mid-search could supply the schema file, and a follow-up
-    * vacuum could delete it before the read).
-    */
-  private def readFiles(spark: SparkSession, root: String, files: Seq[String],
-                        pinnedFiles: Seq[String]): DataFrame = {
-    val dataDir = ManifestTable.dataDir(postingsRoot(root))
-    if (files.nonEmpty)
-      spark.read.option("basePath", dataDir)
-        .parquet(files.map(f => s"$dataDir/$f"): _*)
-    else {
-      require(pinnedFiles.nonEmpty, s"no postings files at $root")
-      spark.read.option("basePath", dataDir)
-        .parquet(s"$dataDir/${pinnedFiles.head}").limit(0)
-    }
   }
 }

@@ -13,7 +13,7 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.ColumnIOFactory
 import org.apache.parquet.schema.{MessageType, PrimitiveType}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
 import org.apache.spark.sql.execution.SQLExecution
@@ -57,7 +57,10 @@ final class CommitConflictException(msg: String)
   * Read side: the manifest IS the file listing — no recursive directory
   * listing, which at 100 TB (millions of files on object storage) is itself
   * the scan-planning bottleneck this format removes. Readers pin a snapshot:
-  * a concurrent commit cannot make them see a torn mix of versions.
+  * a concurrent commit cannot make them see a torn mix of versions. Every
+  * table built on the format turns a resolved version's files into a frame
+  * through [[readFiles]], and maps a scanned file back to its manifest path
+  * through [[manifestPathOf]].
   *
   * Single writer assumed for store-level housekeeping (vacuum — the
   * reference's collectors are single-flow too), but the COMMIT itself is
@@ -616,9 +619,59 @@ object ManifestTable {
       case Some(v) => filesOf(spark, root, v)
     }
 
-  /** Read the latest snapshot. Explicit file list + basePath keeps partition
-    * inference (`p_date=...` dirs) while never listing directories.
+  // ---- read side: every table turns manifest paths into a frame here ----
+
+  /** THE explicit-file read of every manifest table: `files` (paths
+    * relative to `data/`, usually one resolved version's files or a pruned
+    * subset) scanned under `data/` with `basePath`, so `c=v` directories
+    * parse into partition columns and no directory is listed.
+    *
+    * `schema` is the table's static schema, partition columns included (a
+    * store kind's columns plus `p_kind`/`p_b`). Without one, Spark infers
+    * the schema from file footers — a `mergeSchemasInParallel` job per read
+    * call (thread dumps of the first sf0.1 store build showed the driver
+    * parked in `ParquetFileFormat.inferSchema` across a tick's reads). With
+    * one, building the frame runs no job, its columns are the schema's in
+    * its order whichever writer path laid a file out, and an empty `files`
+    * reads as a typed empty frame. A table without one (sync sinks, IVF
+    * postings) reads an empty `files` as a `limit(0)` scan over a donor,
+    * the first of `pinned`: the caller's resolved version's files, never a
+    * fresh listing, whose donor a concurrent commit and vacuum could delete
+    * before the scan. `tags` ride as relation options
+    * ([[graft.plans.StorePruneRule]] finds a store scan by them).
     */
+  def readFiles(spark: SparkSession, root: String, files: Seq[String],
+                schema: Option[StructType] = None,
+                pinned: Seq[String] = Seq.empty,
+                tags: Map[String, String] = Map.empty): DataFrame = {
+    if (files.isEmpty && schema.nonEmpty)
+      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema.get)
+    val scanned = if (files.nonEmpty) files else pinned.take(1)
+    require(scanned.nonEmpty, s"no data files to read at $root")
+    val dd = dataDir(root)
+    val df = schema.foldLeft(spark.read)(_.schema(_))
+      .option("basePath", dd).options(tags)
+      .parquet(scanned.map(f => s"$dd/$f"): _*)
+    schema match {
+      case Some(s) => df.select(s.fieldNames.map(col).toIndexedSeq: _*)
+      case None => if (files.isEmpty) df.limit(0) else df
+    }
+  }
+
+  /** The manifest path (relative to `data/`) of one of the table's data
+    * files, given as the absolute URI Spark reports for it
+    * (`input_file_name()`, a relation's `inputFiles`) — the inverse of
+    * [[readFiles]]'s path mapping. Throws for a file outside `data/`.
+    */
+  def manifestPathOf(spark: SparkSession, root: String, abs: String): String = {
+    val base = fsOf(spark, root).makeQualified(new Path(dataDir(root)))
+      .toUri.getPath.stripSuffix("/") + "/"
+    val path = new java.net.URI(abs).getPath
+    require(path.startsWith(base), s"$abs is not a data file of $root")
+    path.substring(base.length)
+  }
+
+  /** Read the latest snapshot. */
   def read(spark: SparkSession, root: String): DataFrame = {
     val v = currentVersion(spark, root)
     require(v.nonEmpty, s"no committed snapshot at $root")
@@ -631,8 +684,7 @@ object ManifestTable {
   def readAt(spark: SparkSession, root: String, version: Long): DataFrame = {
     val files = filesOf(spark, root, version)
     require(files.nonEmpty, s"no committed snapshot v$version at $root")
-    spark.read.option("basePath", dataDir(root))
-      .parquet(files.map(f => s"${dataDir(root)}/$f"): _*)
+    readFiles(spark, root, files)
   }
 
   /** Entries whose stats CANNOT rule out rows with `statCol` in [lo, hi] —
@@ -650,22 +702,15 @@ object ManifestTable {
     * applies the row-level predicate; this only shrinks the file list the
     * scan plans over — at 100 TB the difference between touching a day and
     * touching the whole table. Falls back to the full listing semantics
-    * when no file carries stats.
+    * when no file carries stats; with every file pruned, the frame is
+    * empty and typed by a donor file of the same snapshot.
     */
   def readWhere(spark: SparkSession, root: String, statCol: String,
                 lo: Long, hi: Long): DataFrame = {
     val entries = liveEntries(spark, root)
     require(entries.nonEmpty, s"no committed snapshot at $root")
-    val kept = pruneEntries(entries, statCol, lo, hi)
-    if (kept.isEmpty)
-      // every file pruned: preserve the schema with an empty scan over one
-      // file (cheapest way to a correctly-typed empty frame)
-      spark.read.option("basePath", dataDir(root))
-        .parquet(s"${dataDir(root)}/${entries.head.path}")
-        .limit(0)
-    else
-      spark.read.option("basePath", dataDir(root))
-        .parquet(kept.map(e => s"${dataDir(root)}/${e.path}"): _*)
+    readFiles(spark, root, pruneEntries(entries, statCol, lo, hi).map(_.path),
+      pinned = entries.map(_.path))
   }
 
   /** Atomically commit the next snapshot = previous live files minus

@@ -61,8 +61,7 @@ class StorePruneRule(spark: SparkSession) extends Rule[LogicalPlan] {
       val kind = hfs.options("graft.store.kind")
       val layout = CorpusStore.parseLayout(hfs.options("graft.store.layout"),
         s"relation tag at $root")
-      val byRel: Map[String, String] = hfs.location.inputFiles.toSeq
-        .flatMap(abs => relOf(abs).map(_ -> abs)).toMap
+      val byRel = manifestPaths(root, hfs)
       val pruned: Option[Seq[String]] = CorpusStore.bloomKeyOf(kind) match {
         case Some(keyCol) =>
           keysOf(cond, keyCol) match {
@@ -163,8 +162,7 @@ class StorePruneRule(spark: SparkSession) extends Rule[LogicalPlan] {
     val root = hfs.options("graft.store.root")
     val layout = CorpusStore.parseLayout(hfs.options("graft.store.layout"),
       s"relation tag at $root")
-    val byRel: Map[String, String] = hfs.location.inputFiles.toSeq
-      .flatMap(abs => relOf(abs).map(_ -> abs)).toMap
+    val byRel = manifestPaths(root, hfs)
     // zero probe keys: the equi-join can match nothing — empty scan
     if (keys.isEmpty)
       return Some(j.copy(
@@ -270,13 +268,13 @@ class StorePruneRule(spark: SparkSession) extends Rule[LogicalPlan] {
       case _ => None
     }
 
-  /** The manifest-relative name of an absolute store file URI (everything
-    * from its `p_kind=` partition dir on), None if it has none.
+  /** The relation's files keyed by their manifest paths — the names the
+    * store's prune works on.
     */
-  private def relOf(abs: String): Option[String] = {
-    val i = abs.lastIndexOf("p_kind=")
-    if (i < 0) None else Some(abs.substring(i))
-  }
+  private def manifestPaths(root: String,
+                            hfs: HadoopFsRelation): Map[String, String] =
+    hfs.location.inputFiles.toSeq
+      .map(abs => ManifestTable.manifestPathOf(spark, root, abs) -> abs).toMap
 
   /** The relation copy over the pruned file list: a fresh file index on
     * exactly those paths (same options, so `basePath` keeps partition

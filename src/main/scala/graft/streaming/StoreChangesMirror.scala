@@ -61,21 +61,14 @@ object StoreChangesMirror {
       ManifestTable.commitMeta(spark, root, v).get("mirror_buckets")
         .map(_.toInt))
 
+  /** `files` of the mirror at `root` (a typed empty frame for none), read
+    * with the stored schema — [[MirrorSchema]] plus the `p_b` partition
+    * column — through [[ManifestTable.readFiles]], then without `p_b`.
+    */
   private def readFiles(spark: SparkSession, root: String,
                         files: Seq[String]): DataFrame =
-    if (files.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], MirrorSchema)
-    else {
-      val dd = ManifestTable.dataDir(root)
-      // explicit user schema (+ the p_b partition column): skips the
-      // footer-reading schema-inference job per read — the mirror owns its
-      // schema (the CorpusStore.readKindFiles rationale)
-      spark.read
-        .schema(StructType(MirrorSchema.fields :+
-          StructField("p_b", org.apache.spark.sql.types.IntegerType)))
-        .option("basePath", dd).parquet(files.map(f => s"$dd/$f"): _*)
-        .select(MirrorSchema.fieldNames.map(col).toIndexedSeq: _*)
-    }
+    ManifestTable.readFiles(spark, root, files, Some(StructType(
+      MirrorSchema.fields :+ StructField("p_b", IntegerType)))).drop("p_b")
 
   /** The current mirror contents — what must equal
     * `CorpusStore.read(...)`'s keyed view once the stream drains.

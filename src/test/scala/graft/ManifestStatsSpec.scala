@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 import graft.operators.{Incremental, ManifestTable}
 import graft.operators.ManifestTable.FileEntry
@@ -60,6 +61,7 @@ class ManifestStatsSpec extends SparkSpec {
     val none = ManifestTable.readWhere(spark, root, "seq", 1000L, 2000L)
     assert(none.count() == 0L)
     assert(none.columns.toSeq == Seq("seq", "payload"))
+    assert(none.schema.map(_.dataType) == Seq(LongType, LongType))
   }
 
   test("files without stats are never pruned; bare-path manifests still read") {

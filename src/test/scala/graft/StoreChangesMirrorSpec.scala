@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{LongType, StringType}
 
 import graft.operators.{CorpusStore, ManifestTable}
 import graft.streaming.StoreChangesMirror
@@ -105,6 +106,22 @@ class StoreChangesMirrorSpec extends SparkSpec {
     // untouched buckets' files carried forward byte-identical (same paths)
     assert((before diff after).forall(_.startsWith(changedDirs.head + "/")),
       "files outside the touched bucket were rewritten")
+
+    // the mirror reads with its static schema: no job while the frame is
+    // built, the same columns in the same order after a rewrite, and a
+    // mirror with no files reads as a typed empty frame
+    val columns = Seq("doc_id" -> LongType, "lang" -> StringType,
+      "source" -> StringType, "text_md5" -> StringType)
+    Seq(mirror, java.nio.file.Files.createTempDirectory("graft_mirr_none")
+        .toString).foreach { m =>
+      var df: DataFrame = null
+      val jobs = jobsOf { df = StoreChangesMirror.read(spark, m) }
+      assert(jobs.isEmpty, s"building the mirror read of $m ran jobs: $jobs")
+      assert(df.schema.map(f => f.name -> f.dataType) == columns,
+        s"the mirror read of $m has columns ${df.schema}")
+    }
+    assert(StoreChangesMirror.read(spark, java.nio.file.Files
+      .createTempDirectory("graft_mirr_empty").toString).isEmpty)
   }
 
   test("an aged-out from-version fails the batch loudly, never a silent " +

@@ -168,6 +168,49 @@ class StorePruneRuleSpec extends SparkSpec {
       .filter(col("doc_id") === 900001L).count() === 1L)
   }
 
+  test("a read tags its scan with its own files' layout: a rebucket " +
+    "committed while the read resolves its snapshot loses no lookup row") {
+    // the store is opened through a scheme that counts version lookups
+    // (`_manifests` listings) and can commit between two of them
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.listhook.impl", classOf[ListHookFs].getName)
+    GraftExtensions.install(spark)
+    val dir = java.nio.file.Files.createTempDirectory("graft_prune_mixed")
+      .toString
+    val r = s"listhook:$dir"
+    import spark.implicits._
+    val docs = (0 until 40).map { i =>
+      (i.toLong, "en", "web", s"mixed snapshot doc $i " +
+        (0 until 30).map(j => s"m${i}_$j").mkString(" "))
+    }.toDF("doc_id", "lang", "source", "text")
+    CorpusStore.tick(docs, r, tickId = Some("m0"), minQuality = 0.0,
+      layoutIfNew = Some(StoreLayout(1, 1)))
+    // a key the rebucket moves out of bucket 0, where every file of the
+    // 1-bucket snapshot sits
+    val wider = StoreLayout(4, 4)
+    val (k, id) = CorpusStore.read(spark, r).select("text_md5", "doc_id")
+      .collect().map(row => (row.getString(0), row.getLong(1))).sorted
+      .find { case (m, _) => CorpusStore.bucketForKey("doc", wider, m) != 0 }
+      .get
+    // the rebucket commits just before the read's fourth version lookup,
+    // where a read that looks the layout up apart from its file list
+    // would make it; a read with fewer lookups sees the store move after
+    // its frame is built instead. The rebucket opens the store by its
+    // plain path: its deep vacuum's recursive listing needs the `file:`
+    // scheme
+    ListHookFs.before(4)(
+      CorpusStore.compact(spark, dir, rebucketTo = Some(wider)))
+    val listedBefore = ListHookFs.manifestListings.get
+    val frame = CorpusStore.read(spark, r)
+    val listings = ListHookFs.manifestListings.get - listedBefore
+    ListHookFs.runPending()
+    assert(CorpusStore.layoutOf(spark, r) == wider, "the rebucket did not land")
+    assert(frame.filter(col("text_md5") === k).select(col("doc_id"))
+      .collect().map(_.getLong(0)).toSeq === Seq(id),
+      "the lookup lost a row its snapshot's files hold")
+    assert(listings === 1, s"one read looked the version up $listings times")
+  }
+
   test("band compound lookup: band_id AND band_val literals prune to the " +
     "compound bucket with identical results; band_val alone does not prune") {
     val lay = CorpusStore.layoutOf(spark, root)
